@@ -820,3 +820,183 @@ def test_drift_by_segment_rejects_unsegmented(spark, lineitem):
     v = wsp.profile(lineitem.select("l_quantity"))
     with pytest.raises(ValueError, match="SEGMENTED"):
         drift_by_segment(v, v)
+
+
+# ------------------------------------------------- one-pass store drift
+def _old_rank(sk, value):
+    """Per-call masked-sum rank: the formula ``KllSketch.ranks`` must
+    reproduce bit for bit."""
+    items, weights = sk._weighted_items()
+    return float(weights[items <= value].sum() / weights.sum())
+
+
+def _old_pmf(sk, splits):
+    out, prev = [], 0.0
+    for x in [_old_rank(sk, sp) for sp in splits]:
+        out.append(max(x - prev, 0.0))
+        prev = x
+    out.append(max(1.0 - prev, 0.0))
+    return out
+
+
+def test_vectorized_ranks_pin_ks_psi_hellinger():
+    import math
+
+    rng = np.random.default_rng(11)
+    for i in range(6):
+        a, b = KllSketch(64 << (i % 3)), KllSketch(64 << (i % 3))
+        a.update_batch(rng.normal(0, 1, 3_000 + 4_000 * i))
+        b.update_batch(rng.normal(0.1 * i, 1 + 0.2 * i, 5_000))
+        probes = np.concatenate([rng.normal(0, 2, 50), [-1e9, 1e9]])
+        assert a.ranks(probes).tolist() == [_old_rank(a, v) for v in probes]
+        # KS: the per-quantile walk with one rank call per probe
+        d_old = 0.0
+        for q in [j / 100.0 for j in range(1, 100)]:
+            for probe in (a.quantile(q), b.quantile(q)):
+                d_old = max(d_old, abs(_old_rank(a, probe)
+                                       - _old_rank(b, probe)))
+        assert drift.ks_test_from_sketches(a, b)[0] == d_old
+        # PSI over reference-range bins, Hellinger over combined range
+        lo, hi = b.min_value, b.max_value
+        splits = [lo + (hi - lo) * j / 10 for j in range(1, 10)]
+        psi_old = sum((max(x, 1e-4) - max(y, 1e-4))
+                      * math.log(max(x, 1e-4) / max(y, 1e-4))
+                      for x, y in zip(_old_pmf(a, splits),
+                                      _old_pmf(b, splits)))
+        assert drift.psi_from_sketches(a, b) == psi_old
+        lo = min(a.min_value, b.min_value)
+        hi = max(a.max_value, b.max_value)
+        splits = [lo + (hi - lo) * j / 30 for j in range(1, 30)]
+        h_old = math.sqrt(0.5 * sum(
+            (math.sqrt(x) - math.sqrt(y)) ** 2
+            for x, y in zip(_old_pmf(a, splits), _old_pmf(b, splits))))
+        assert drift.hellinger_from_sketches(a, b) == h_old
+    empty = KllSketch()
+    assert math.isnan(empty.rank(0.0))
+    assert all(math.isnan(x) for x in empty.cdf([0.0, 1.0])[:2])
+
+
+def test_merge_blobs_use_given_sizes():
+    from whylogs_spark.core.sketches import merge_fi_blobs, merge_kll_blobs
+
+    rng = np.random.default_rng(12)
+    parts = []
+    for _ in range(3):
+        sk = KllSketch(256)
+        sk.update_batch(rng.normal(0, 1, 2_000))
+        parts.append(sk.serialize())
+    merged = merge_kll_blobs(parts + [None], 64)
+    assert merged.k == 64 and merged.n == 6_000
+    fis = []
+    for j in range(3):
+        fi = FrequentStringsSketch(128, 128)
+        fi.update_batch([f"v{j}{k}" for k in range(20)] * 3)
+        fis.append(fi.serialize())
+    mfi = merge_fi_blobs([None] + fis, 8, 2)
+    assert mfi.capacity == 8 and mfi.max_len == 2
+    assert mfi.n == 180 and len(mfi.counts) <= 8
+
+
+@pytest.fixture(scope="module")
+def drift_store(spark, lineitem, tmp_path_factory):
+    """One unsegmented and one segmented dataset, one batch a day:
+    day 1 is the base frame, day 2 shifts l_quantity, day 3 repeats
+    the base frame."""
+    import datetime as dt
+
+    from whylogs_spark.io.store import ProfileStore
+
+    store = ProfileStore(str(tmp_path_factory.mktemp("drift_store")))
+    base = lineitem.select("l_returnflag", "l_linestatus", "l_quantity",
+                           "l_extendedprice")
+    shifted = base.selectExpr("l_returnflag", "l_linestatus",
+                              "l_quantity + 30 AS l_quantity",
+                              "l_extendedprice")
+    for day, frame in enumerate((base, shifted, base), start=1):
+        ts = dt.datetime(2024, 3, day, tzinfo=dt.timezone.utc)
+        store.write(wsp.profile(frame), "flat", ts)
+        store.write(wsp.profile(frame, segment_by=["l_returnflag"]),
+                    "seg", ts)
+    return store
+
+
+_DAY = "2024-03-0{}".format
+
+
+def test_store_drift_between_matches_view_scorers(spark, drift_store):
+    scorers = {"default": drift.calculate_drift_scores,
+               "psi": drift.psi_scores,
+               "hellinger": drift.hellinger_scores,
+               "wasserstein": drift.wasserstein_scores}
+    ref = drift_store.get(spark, "flat", _DAY(1), _DAY(1))
+    tgt = drift_store.get(spark, "flat", _DAY(2), _DAY(2))
+    sref = drift_store.get(spark, "seg", _DAY(1), _DAY(1))
+    stgt = drift_store.get(spark, "seg", _DAY(2), _DAY(2))
+
+    def same(got, want):
+        assert [(s.column, s.algorithm, s.category) for s in got] == \
+            [(s.column, s.algorithm, s.category) for s in want]
+        for g, w in zip(got, want):
+            assert g.statistic == pytest.approx(w.statistic, abs=1e-12)
+            if w.p_value is None:
+                assert g.p_value is None
+            else:
+                assert g.p_value == pytest.approx(w.p_value, abs=1e-12)
+
+    for algo, fn in scorers.items():
+        got = drift_store.drift_between(spark, "flat", _DAY(1), _DAY(1),
+                                        _DAY(2), _DAY(2), algorithm=algo)
+        want = fn(tgt, ref)
+        numeric = {"l_quantity", "l_extendedprice"}
+        assert {s.column for s in got} == (
+            numeric | {"l_returnflag", "l_linestatus"}
+            if algo == "default" else numeric)
+        same(got, want)
+        seg = drift_store.drift_between(spark, "seg", _DAY(1), _DAY(1),
+                                        _DAY(2), _DAY(2), algorithm=algo,
+                                        by_segment=True)
+        seg_want = drift.drift_by_segment(stgt, sref, algorithm=algo)
+        assert [s.segment for s in seg] == [s.segment for s in seg_want]
+        assert len({s.segment for s in seg}) == 3
+        same(seg, seg_want)
+    # an unsegmented query of a segmented store has no overall sketches
+    assert drift_store.drift_between(spark, "seg", _DAY(1), _DAY(1),
+                                     _DAY(2), _DAY(2)) == []
+
+
+def test_store_drift_between_overlap_feeds_both_sides(spark, drift_store):
+    # identical windows: both sides merge the same batches in the same
+    # pinned order, so KS is exactly zero (chi2 up to float rounding)
+    same = drift_store.drift_between(spark, "flat", _DAY(1), _DAY(2),
+                                     _DAY(1), _DAY(2))
+    assert len(same) == 4
+    for s in same:
+        assert s.category == "NO_DRIFT"
+        assert s.statistic == 0.0 if s.algorithm == "ks" \
+            else s.statistic < 1e-20
+    # days 1-2 vs days 2-3: the shared shifted day 2 must sit on both
+    # sides, leaving base+shifted against shifted+base — no drift. Were
+    # it on one side only, the +30 shift would read as DRIFT.
+    by = {s.column: s for s in drift_store.drift_between(
+        spark, "flat", _DAY(1), _DAY(2), _DAY(2), _DAY(3))}
+    assert by["l_quantity"].category == "NO_DRIFT"
+    assert by["l_quantity"].statistic < 0.05
+    one_sided = {s.column: s for s in drift_store.drift_between(
+        spark, "flat", _DAY(1), _DAY(1), _DAY(2), _DAY(3))}
+    assert one_sided["l_quantity"].category == "DRIFT"
+
+
+def test_store_drift_between_job_count_and_replay(spark, drift_store):
+    tracker = spark.sparkContext.statusTracker()
+
+    def job_ids():
+        return set(tracker.getJobIdsForGroup())
+
+    args = (spark, "flat", _DAY(1), _DAY(2), _DAY(2), _DAY(3))
+    last = max(job_ids(), default=-1)
+    first = drift_store.drift_between(*args)
+    launched = {j for j in job_ids() if j > last}
+    assert 1 <= len(launched) <= 3, sorted(launched)
+    again = drift_store.drift_between(*args)
+    assert [(s.column, s.statistic, s.p_value) for s in first] == \
+        [(s.column, s.statistic, s.p_value) for s in again]

@@ -140,6 +140,23 @@ def test_histogram_from_kll(lineitem):
     assert bins[0][0] <= bins[-1][1]
 
 
+def test_profile_leaves_no_cached_rdd(spark, lineitem):
+    """The sketch half is collected into local rows, so a profile and
+    its materialization leave the session's persisted RDDs as they
+    were — unsegmented and segmented alike."""
+    jsc = spark.sparkContext._jsc
+    before = len(jsc.getPersistentRDDs())
+    frame = lineitem.select("l_returnflag", "l_quantity")
+    # kll + mg unsegmented; kll of l_quantity in each of 3 segments
+    for view, n_sketches in (
+            (wsp.profile(frame), 2),
+            (wsp.profile(frame, segment_by=["l_returnflag"]), 3)):
+        view.to_pandas()
+        sketches = view.df.filter("component IN ('kll', 'mg')").collect()
+        assert len(sketches) == n_sketches
+    assert len(jsc.getPersistentRDDs()) == before
+
+
 def test_profile_diff(lineitem):
     import whylogs_spark as wsp
 

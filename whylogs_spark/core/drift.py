@@ -22,8 +22,9 @@ from __future__ import annotations
 import json
 import math
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Iterable, Iterator, List, Optional, Sequence, Tuple
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -152,6 +153,56 @@ def student_t_sf(t: float, dof: float) -> float:
     return p if t >= 0 else 1.0 - p
 
 
+# ------------------------------------------------------------ sketch tables
+# A sketch table holds one profile segment's drift inputs: serialized
+# sketches by component and column, {"kll": {column: blob}, "mg": {...}}.
+# Every sketch scorer reads two of them (target, reference), whether they
+# come from two views or from one pass over a profile store.
+SketchTable = Dict[str, Dict[str, bytes]]
+
+SKETCH_COMPONENTS = {"kll": KllSketch, "mg": FrequentStringsSketch}
+
+
+def sketch_tables(rows: Iterable) -> Dict[str, SketchTable]:
+    """Rows carrying (segment, column, component, b) -> {segment: table};
+    a later row for the same key replaces an earlier one."""
+    out: Dict[str, SketchTable] = {}
+    for r in rows:
+        out.setdefault(r["segment"], {}).setdefault(
+            r["component"], {})[r["column"]] = bytes(r["b"])
+    return out
+
+
+def _view_tables(view: ProfileView,
+                 overall: bool = True) -> Dict[str, SketchTable]:
+    """The view's sketch tables from ONE collect of its kll + mg rows
+    (only the overall ``{}`` segment unless ``overall=False``)."""
+    df = view.df.filter(
+        F.col("component").isin(*SKETCH_COMPONENTS)
+        & F.col("b").isNotNull())
+    if overall:
+        df = df.filter(F.col("segment") == "{}")
+    return sketch_tables(
+        df.select("segment", "column", "component", "b").collect())
+
+
+def _overall_tables(target: ProfileView, reference: ProfileView
+                    ) -> Tuple[SketchTable, SketchTable]:
+    return (_view_tables(target).get("{}", {}),
+            _view_tables(reference).get("{}", {}))
+
+
+def _aligned(t: SketchTable, r: SketchTable, component: str,
+             skip: Iterable[str] = ()) -> Iterator[tuple]:
+    """(column, target sketch, reference sketch) for every column both
+    tables carry a ``component`` sketch for, in column order — the
+    reference's column alignment (column_drift_algorithms.py:500-515)."""
+    cls = SKETCH_COMPONENTS[component]
+    tc, rc = t.get(component, {}), r.get(component, {})
+    for col in sorted((tc.keys() & rc.keys()) - set(skip)):
+        yield col, cls.deserialize(tc[col]), cls.deserialize(rc[col])
+
+
 # ------------------------------------------------------------------ KS test
 def ks_test_from_sketches(
     a: KllSketch, b: KllSketch, quantiles: Optional[List[float]] = None
@@ -161,12 +212,11 @@ def ks_test_from_sketches(
     if a.n == 0 or b.n == 0:
         return float("nan"), float("nan")
     qs = quantiles or [i / 100.0 for i in range(1, 100)]
-    d_max = 0.0
-    for q in qs:
-        for probe in (a.quantile(q), b.quantile(q)):
-            d = abs(a.rank(probe) - b.rank(probe))
-            if d > d_max:
-                d_max = d
+    # probe every quantile of both sides; one sort per sketch serves
+    # all the rank lookups
+    probes = np.column_stack((a.quantiles(qs), b.quantiles(qs))).ravel()
+    d_max = max(float(np.abs(a.ranks(probes) - b.ranks(probes)).max()),
+                0.0)
     # Cap each side's effective sample size at the sketch's resolution:
     # a k-sized KLL carries ~1/k normalized rank-error std, the same D
     # fluctuation as a true sample of ~k^2/5 points. Claiming the raw n
@@ -257,12 +307,14 @@ def psi_scores(
 ) -> List["DriftScore"]:
     """Per-column sketch PSI between two profiles (numeric columns
     with KLL present on both sides), mirroring ``hellinger_scores``."""
+    return _psi_table(*_overall_tables(target, reference), n_bins,
+                      epsilon)
+
+
+def _psi_table(t: SketchTable, r: SketchTable, n_bins: int = 10,
+               epsilon: float = 1e-4) -> List["DriftScore"]:
     out = []
-    t_kll = _sketches_by_column(target, "kll")
-    r_kll = _sketches_by_column(reference, "kll")
-    for col in sorted(set(t_kll) & set(r_kll)):
-        a = KllSketch.deserialize(t_kll[col])
-        b = KllSketch.deserialize(r_kll[col])
+    for col, a, b in _aligned(t, r, "kll"):
         v = psi_from_sketches(a, b, n_bins, epsilon)
         out.append(DriftScore(col, "psi", v, None, _categorize_psi(v)))
     return out
@@ -293,12 +345,14 @@ def wasserstein_scores(
     scale-dependent, so the drift category uses the RANGE-NORMALIZED
     value (W1 / combined value range, in [0, 1]) with the Hellinger
     bands; the statistic field stays in the column's own units."""
+    return _wasserstein_table(*_overall_tables(target, reference),
+                              n_quantiles)
+
+
+def _wasserstein_table(t: SketchTable, r: SketchTable,
+                       n_quantiles: int = 200) -> List["DriftScore"]:
     out = []
-    t_kll = _sketches_by_column(target, "kll")
-    r_kll = _sketches_by_column(reference, "kll")
-    for col in sorted(set(t_kll) & set(r_kll)):
-        a = KllSketch.deserialize(t_kll[col])
-        b = KllSketch.deserialize(r_kll[col])
+    for col, a, b in _aligned(t, r, "kll"):
         v = wasserstein_from_sketches(a, b, n_quantiles)
         if a.n and b.n:
             span = max(a.max_value, b.max_value) \
@@ -466,13 +520,6 @@ def _categorize_dist(d: float, drift_thr: float = 0.5,
     return "NO_DRIFT"
 
 
-def _sketches_by_column(view: ProfileView, component: str) -> Dict[str, bytes]:
-    rows = view.df.filter(
-        (view.df.component == component) & (view.df.segment == "{}")
-    ).select("column", "b").collect()
-    return {r["column"]: bytes(r["b"]) for r in rows if r["b"] is not None}
-
-
 def calculate_drift_scores(
     target: ProfileView, reference: ProfileView,
     with_thresholds: bool = True,
@@ -480,19 +527,15 @@ def calculate_drift_scores(
     """Score drift per shared column: KS for numeric (KLL present),
     chi-square for categorical (FI present). Mirrors the column alignment
     of the reference (column_drift_algorithms.py:500-515)."""
+    return _ks_chi2_table(*_overall_tables(target, reference))
+
+
+def _ks_chi2_table(t: SketchTable, r: SketchTable) -> List[DriftScore]:
     out: List[DriftScore] = []
-    t_kll = _sketches_by_column(target, "kll")
-    r_kll = _sketches_by_column(reference, "kll")
-    for col in sorted(set(t_kll) & set(r_kll)):
-        a = KllSketch.deserialize(t_kll[col])
-        b = KllSketch.deserialize(r_kll[col])
+    for col, a, b in _aligned(t, r, "kll"):
         d, p = ks_test_from_sketches(a, b)
         out.append(DriftScore(col, "ks", d, p, _categorize_p(p)))
-    t_fi = _sketches_by_column(target, "mg")
-    r_fi = _sketches_by_column(reference, "mg")
-    for col in sorted((set(t_fi) & set(r_fi)) - set(t_kll)):
-        a = FrequentStringsSketch.deserialize(t_fi[col])
-        b = FrequentStringsSketch.deserialize(r_fi[col])
+    for col, a, b in _aligned(t, r, "mg", skip=t.get("kll", {})):
         stat, p = chi2_from_frequent_items(b, a)
         out.append(DriftScore(col, "chi2", stat, p, _categorize_p(p)))
     return out
@@ -595,12 +638,13 @@ def exact_drift_scores(
 def hellinger_scores(
     target: ProfileView, reference: ProfileView, n_bins: int = 30
 ) -> List[DriftScore]:
+    return _hellinger_table(*_overall_tables(target, reference), n_bins)
+
+
+def _hellinger_table(t: SketchTable, r: SketchTable,
+                     n_bins: int = 30) -> List[DriftScore]:
     out = []
-    t_kll = _sketches_by_column(target, "kll")
-    r_kll = _sketches_by_column(reference, "kll")
-    for col in sorted(set(t_kll) & set(r_kll)):
-        a = KllSketch.deserialize(t_kll[col])
-        b = KllSketch.deserialize(r_kll[col])
+    for col, a, b in _aligned(t, r, "kll"):
         h = hellinger_from_sketches(a, b, n_bins)
         out.append(DriftScore(col, "hellinger", h, None,
                               _categorize_dist(h)))
@@ -851,14 +895,25 @@ def schema_diff(target: "ProfileView", reference: "ProfileView"):
 
 
 # one registry for every algorithm-selectable surface
-# (ProfileStore.drift_between, drift_by_segment): adding an algorithm
-# here propagates everywhere
+# (ProfileStore.drift_between, drift_by_segment): algorithm -> scorer of
+# two sketch tables (target, reference); adding an algorithm here
+# propagates everywhere
 DRIFT_SCORERS = {
-    "default": calculate_drift_scores,
-    "psi": psi_scores,
-    "hellinger": hellinger_scores,
-    "wasserstein": wasserstein_scores,
+    "default": _ks_chi2_table,
+    "psi": _psi_table,
+    "hellinger": _hellinger_table,
+    "wasserstein": _wasserstein_table,
 }
+
+
+def drift_scorer(algorithm: str):
+    """The sketch-table scorer registered for ``algorithm``."""
+    scorer = DRIFT_SCORERS.get(algorithm)
+    if scorer is None:
+        raise ValueError(
+            f"algorithm must be one of {sorted(DRIFT_SCORERS)}, "
+            f"got {algorithm!r}")
+    return scorer
 
 
 @dataclass
@@ -885,60 +940,45 @@ def drift_by_segment(
     runs the same sketch tests segment by segment.
 
     ``algorithm`` as in ``ProfileStore.drift_between`` (default =
-    KS/chi2, or psi / hellinger / wasserstein). Work is driver-side
-    over the already-tiny profile rows: one filtered view per shared
-    segment, reusing the existing scorers unchanged. Segmentation for
-    drift monitoring is low-cardinality by design; ``max_segments``
-    guards against accidentally segmenting by a high-cardinality key
-    (raise it deliberately if you really have more).
+    KS/chi2, or psi / hellinger / wasserstein). Each view costs ONE
+    collect of its kll + mg rows (every segment's sketch table at
+    once); the per-segment scoring is driver-side over those tables.
+    Segmentation for drift monitoring is low-cardinality by design;
+    ``max_segments`` guards against accidentally segmenting by a
+    high-cardinality key (raise it deliberately if you really have
+    more).
     """
-    scorer = DRIFT_SCORERS.get(algorithm)
-    if scorer is None:
-        raise ValueError(
-            f"algorithm must be one of {sorted(DRIFT_SCORERS)}, "
-            f"got {algorithm!r}")
-    # cache both profile frames: the per-segment loop issues several
-    # collects per segment, and under merge-on-read (the store path)
-    # each would otherwise re-run the whole profile merge
-    t_df = target.df.cache()
-    r_df = reference.df.cache()
-    try:
-        segs = lambda df: {
-            r["segment"] for r in df.select("segment").distinct()
-            .collect()}
-        shared = sorted((segs(t_df) & segs(r_df)) - {"{}"})
-        if not shared:
-            raise ValueError(
-                "no shared non-overall segments: drift_by_segment "
-                "needs SEGMENTED profiles on both sides "
-                "(profile(df, segment_by=[...])); for unsegmented "
-                "profiles use the overall scorers "
-                "(calculate_drift_scores / drift_between)")
-        if len(shared) > max_segments:
-            raise ValueError(
-                f"{len(shared)} shared segments exceeds max_segments="
-                f"{max_segments}; drift segmentation should be "
-                "low-cardinality (raise max_segments deliberately)")
-        from .profiler import ProfileView as _PV
+    scorer = drift_scorer(algorithm)
+    return score_segments(
+        _view_tables(target, overall=False),
+        _view_tables(reference, overall=False), scorer, max_segments)
 
-        out: List[SegmentDriftScore] = []
-        for s in shared:
-            # rebrand the segment as the overall one so every
-            # existing scorer reads it unchanged
-            tv = _PV(t_df.filter(F.col("segment") == s)
-                     .withColumn("segment", F.lit("{}")),
-                     target.config)
-            rv = _PV(r_df.filter(F.col("segment") == s)
-                     .withColumn("segment", F.lit("{}")),
-                     reference.config)
-            for d in scorer(tv, rv):
-                out.append(SegmentDriftScore(
-                    s, d.column, d.algorithm, d.statistic, d.p_value,
-                    d.category))
-        return out
-    finally:
-        t_df.unpersist()
-        r_df.unpersist()
+
+def score_segments(
+    target: Dict[str, SketchTable],
+    reference: Dict[str, SketchTable],
+    scorer,
+    max_segments: int = 100,
+) -> List[SegmentDriftScore]:
+    """Run ``scorer`` on every shared non-overall segment of two
+    {segment: sketch table} maps, in segment order."""
+    shared = sorted((target.keys() & reference.keys()) - {"{}"})
+    if not shared:
+        raise ValueError(
+            "no shared non-overall segments: drift_by_segment "
+            "needs SEGMENTED profiles with KLL / frequent-items "
+            "sketches on both sides (profile(df, segment_by=[...])); "
+            "for unsegmented profiles use the overall scorers "
+            "(calculate_drift_scores / drift_between)")
+    if len(shared) > max_segments:
+        raise ValueError(
+            f"{len(shared)} shared segments exceeds max_segments="
+            f"{max_segments}; drift segmentation should be "
+            "low-cardinality (raise max_segments deliberately)")
+    return [
+        SegmentDriftScore(s, d.column, d.algorithm, d.statistic,
+                          d.p_value, d.category)
+        for s in shared for d in scorer(target[s], reference[s])]
 
 
 def adjust_pvalues(

@@ -54,7 +54,8 @@ from .planner import (
     SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, SketchPlan, _q_name,
     plan_dataframe,
 )
-from .sketches import FrequentStringsSketch, KllSketch
+from .sketches import (FrequentStringsSketch, KllSketch, merge_fi_blobs,
+                       merge_kll_blobs)
 from .util import cut_derived_lineage as _cut_derived_lineage
 from .util import ensure_parallelism as _ensure_parallelism
 
@@ -444,20 +445,14 @@ def _sketch_long(
         component = pdf["component"].iloc[0]
         out = []
         if component == "kll":
-            sk = KllSketch(kll_k)
-            for blob in pdf["b"]:
-                if blob is not None:
-                    sk.merge(KllSketch.deserialize(bytes(blob)))
+            sk = merge_kll_blobs(pdf["b"], kll_k)
             out.append((seg, colname, metric, "kll", None, None, None,
                         sk.serialize()))
             for q, v in zip(quantiles, sk.quantiles(quantiles)):
                 out.append((seg, colname, metric, _q_name(q), None,
                             float(v), None, None))
         else:
-            sk = FrequentStringsSketch(fi_cap, fi_maxlen)
-            for blob in pdf["b"]:
-                if blob is not None:
-                    sk.merge(FrequentStringsSketch.deserialize(bytes(blob)))
+            sk = merge_fi_blobs(pdf["b"], fi_cap, fi_maxlen)
             out.append((seg, colname, metric, "mg", None, None, None,
                         sk.serialize()))
             items = [
@@ -545,56 +540,62 @@ def profile(
 
         sketches = plan_wide_sketches(
             df.schema, columns, segment_cols, config)
-        sketch_df = None
-        fut = None
-        if sketches:
-            from concurrent.futures import ThreadPoolExecutor
-
-            sketch_df = _sketch_long(
-                df, sketches, segment_cols, config).cache()
-            fut = ThreadPoolExecutor(max_workers=1).submit(sketch_df.count)
-        rows = wide_native_rows(df, columns, segment_cols, config)
-        long_df = _local_profile_df(df.sparkSession, rows)
-        if sketch_df is not None:
-            fut.result()
-            long_df = long_df.unionByName(sketch_df)
+        long_df = _with_sketch_rows(
+            df, sketches, segment_cols, config,
+            lambda: _local_profile_df(df.sparkSession, wide_native_rows(
+                df, columns, segment_cols, config)))
         return ProfileView(long_df, config, dataset_timestamp,
                            metadata=metadata)
 
     aggs, sketches = plan_dataframe(df.schema, columns, segment_cols, config)
-    if segment_cols:
-        sketch_df = None
-        fut = None
-        if sketches:
-            from concurrent.futures import ThreadPoolExecutor
-
-            sketch_df = _sketch_long(
-                df, sketches, segment_cols, config).cache()
-            pool = ThreadPoolExecutor(max_workers=1)
-            fut = pool.submit(sketch_df.count)
-        long_df = _segmented_native_long(df, aggs, segment_cols)
-        if sketch_df is not None:
-            fut.result()
-            long_df = long_df.unionByName(sketch_df)
-        return ProfileView(long_df, config, dataset_timestamp,
-                           metadata=metadata)
-
-    # Unsegmented: native tiers are collected eagerly (driver reshape);
-    # run the python sketch pass concurrently and cache its (tiny) result.
-    sketch_df = None
-    fut = None
-    if sketches:
-        from concurrent.futures import ThreadPoolExecutor
-
-        sketch_df = _sketch_long(df, sketches, segment_cols, config).cache()
-        pool = ThreadPoolExecutor(max_workers=1)
-        fut = pool.submit(sketch_df.count)
-    long_df = _native_long_collected(df, aggs)
-    if sketch_df is not None:
-        fut.result()
-        long_df = long_df.unionByName(sketch_df)
+    # native tiers are collected eagerly and reshaped driver-side
+    native = ((lambda: _segmented_native_long(df, aggs, segment_cols))
+              if segment_cols else
+              (lambda: _native_long_collected(df, aggs)))
+    long_df = _with_sketch_rows(df, sketches, segment_cols, config, native)
     return ProfileView(long_df, config, dataset_timestamp,
                        metadata=metadata)
+
+
+def _with_sketch_rows(
+    df: DataFrame,
+    sketches: List[SketchPlan],
+    segment_cols: List[str],
+    cfg: MetricConfig,
+    native,
+) -> DataFrame:
+    """Union of the native half (``native()``) and the python sketch
+    half of a profile; the sketch pass runs on a second driver thread
+    while the native tiers run.
+
+    The sketch rows are COLLECTED and rebuilt as local rows, like the
+    native rows: one row per segment x column x component, so a view
+    never re-runs the sketch pass and ``profile()`` leaves nothing
+    cached behind. Past ``_SEGMENT_COLLECT_LIMIT`` segments (where the
+    native half also goes distributed) the sketch half stays a lazy
+    frame."""
+    if not sketches:
+        return native()
+    from concurrent.futures import ThreadPoolExecutor
+
+    spark = df.sparkSession
+
+    def sketch_half() -> DataFrame:
+        sketch_df = _sketch_long(df, sketches, segment_cols, cfg)
+        if not segment_cols:
+            return _local_profile_df(spark, sketch_df.collect())
+        # rows per segment: kll + its quantiles, or mg + items
+        cap = _SEGMENT_COLLECT_LIMIT * len(sketches) * (
+            2 + len(cfg.quantiles))
+        rows = sketch_df.limit(cap + 1).collect()
+        if len(rows) > cap:
+            return sketch_df
+        return _local_profile_df(spark, rows)
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(sketch_half)
+        long_df = native()
+        return long_df.unionByName(fut.result())
 
 
 def profile_partitions(
@@ -881,10 +882,7 @@ def _merge_profile_df(allp: DataFrame, cfg: MetricConfig) -> DataFrame:
                 emit("max", d=float(maxs["d"].max()))
             kll = by_comp.get("kll")
             if kll is not None:
-                sk = KllSketch(kll_k)
-                for blob in kll["b"]:
-                    if blob is not None:
-                        sk.merge(KllSketch.deserialize(bytes(blob)))
+                sk = merge_kll_blobs(kll["b"], kll_k)
                 emit("kll", b=sk.serialize())
                 for q, v in zip(quantiles, sk.quantiles(quantiles)):
                     emit(_q_name(q), d=float(v))
@@ -923,10 +921,7 @@ def _merge_profile_df(allp: DataFrame, cfg: MetricConfig) -> DataFrame:
         elif metric == "frequent_items":
             mg = by_comp.get("mg")
             if mg is not None:
-                sk = FrequentStringsSketch(fi_cap, fi_maxlen)
-                for blob in mg["b"]:
-                    if blob is not None:
-                        sk.merge(FrequentStringsSketch.deserialize(bytes(blob)))
+                sk = merge_fi_blobs(mg["b"], fi_cap, fi_maxlen)
                 emit("mg", b=sk.serialize())
                 items = [
                     {"value": v, "est": e, "lower": lo, "upper": hi}

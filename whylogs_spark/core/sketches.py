@@ -249,26 +249,29 @@ class KllSketch:
     def quantile(self, q: float) -> float:
         return self.quantiles([q])[0]
 
+    def ranks(self, values: Sequence[float]) -> np.ndarray:
+        """Approximate normalized ranks (fraction <= value) of many
+        values off ONE sort of the levels: a binary search over the
+        cumulative weights per value. Weights are powers of two, so the
+        cumulative sums are exact and each rank equals the masked-sum
+        form bit for bit."""
+        v = np.asarray(values, dtype=np.float64)
+        if self.n == 0:
+            return np.full(v.shape, np.nan)
+        items, weights = self._weighted_items()
+        cum = np.concatenate(([0.0], np.cumsum(weights)))
+        return cum[np.searchsorted(items, v, side="right")] / cum[-1]
+
     def rank(self, value: float) -> float:
         """Approximate normalized rank of `value` (fraction <= value)."""
-        if self.n == 0:
-            return float("nan")
-        items, weights = self._weighted_items()
-        mask = items <= value
-        return float(weights[mask].sum() / weights.sum())
+        return float(self.ranks([value])[0])
 
     def cdf(self, split_points: Sequence[float]) -> List[float]:
-        return [self.rank(sp) for sp in split_points] + [1.0]
+        return self.ranks(split_points).tolist() + [1.0]
 
     def pmf(self, split_points: Sequence[float]) -> List[float]:
-        c = [self.rank(sp) for sp in split_points]
-        prev = 0.0
-        out = []
-        for x in c:
-            out.append(max(x - prev, 0.0))
-            prev = x
-        out.append(max(1.0 - prev, 0.0))
-        return out
+        c = np.concatenate(([0.0], self.ranks(split_points), [1.0]))
+        return np.maximum(np.diff(c), 0.0).tolist()
 
     # ------------------------------------------------------------------ serde
     def serialize(self) -> bytes:
@@ -404,17 +407,25 @@ class FrequentStringsSketch:
         return sk
 
 
-def merge_kll_blobs(blobs: Iterable[Optional[bytes]]) -> bytes:
-    acc = KllSketch()
+def merge_kll_blobs(blobs: Iterable[Optional[bytes]], k: int) -> KllSketch:
+    """Merge serialized KLL sketches, in iteration order, into a fresh
+    ``KllSketch(k)``; null blobs are skipped. The order is part of the
+    result (compaction coin flips), so callers that need a replayable
+    answer pass the blobs in a pinned order."""
+    acc = KllSketch(k)
     for b in blobs:
-        if b:
-            acc.merge(KllSketch.deserialize(b))
-    return acc.serialize()
+        if b is not None:
+            acc.merge(KllSketch.deserialize(bytes(b)))
+    return acc
 
 
-def merge_fi_blobs(blobs: Iterable[Optional[bytes]]) -> bytes:
-    acc = FrequentStringsSketch()
+def merge_fi_blobs(blobs: Iterable[Optional[bytes]], capacity: int,
+                   max_len: int) -> FrequentStringsSketch:
+    """Merge serialized frequent-items sketches into a fresh
+    ``FrequentStringsSketch(capacity, max_len)``; null blobs are
+    skipped."""
+    acc = FrequentStringsSketch(capacity, max_len)
     for b in blobs:
-        if b:
-            acc.merge(FrequentStringsSketch.deserialize(b))
-    return acc.serialize()
+        if b is not None:
+            acc.merge(FrequentStringsSketch.deserialize(bytes(b)))
+    return acc

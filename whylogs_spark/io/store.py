@@ -94,10 +94,9 @@ class ProfileStore:
     ):
         """Drift scores between two stored date ranges of a dataset —
         the monitoring question ("did last week move vs the month
-        before?") straight off the store: two partition-pruned
-        merge-on-read loads + the sketch drift tests. Returns the
-        per-column ``DriftScore`` list; requires profiles written with
-        sketch metrics (the default config).
+        before?") straight off the store. Returns the per-column
+        ``DriftScore`` list; requires profiles written with sketch
+        metrics (the default config).
 
         ``algorithm``: "default" = KS for numeric + chi2 for
         categorical (``calculate_drift_scores``); "psi" = sketch PSI
@@ -109,20 +108,64 @@ class ProfileStore:
         ``by_segment=True`` (for SEGMENTED stored profiles) localizes
         the answer: the same algorithm per shared segment
         (``core.drift.drift_by_segment``) — returns
-        ``SegmentDriftScore`` rows instead."""
-        from ..core.drift import DRIFT_SCORERS, drift_by_segment
+        ``SegmentDriftScore`` rows instead.
 
-        # validate BEFORE the two partition-pruned loads: a typo'd
-        # algorithm should not cost two store reads first
-        if algorithm not in DRIFT_SCORERS:
-            raise ValueError(
-                f"algorithm must be one of {sorted(DRIFT_SCORERS)}, "
-                f"got {algorithm!r}")
-        ref = self.get(spark, dataset_id, baseline_from, baseline_to)
-        tgt = self.get(spark, dataset_id, target_from, target_to)
+        Query shape: ONE partition-pruned scan over both date ranges
+        that keeps only the sketch components the tests read (``kll``
+        and ``mg`` rows). Each row is tagged with the window(s) its
+        date falls in — a batch inside both windows feeds both sides —
+        and one groupBy(side, segment, column, component) merges the
+        blobs executor-side in ascending ``dataset_ts`` order, so the
+        answer replays identically. One collect returns two merged
+        sketch tables (2 x segments x columns rows, however many
+        batches the windows hold); the scoring is driver-side."""
+        import pandas as pd
+
+        from ..core.drift import (SKETCH_COMPONENTS, drift_scorer,
+                                  score_segments, sketch_tables)
+        from ..core.sketches import merge_fi_blobs, merge_kll_blobs
+
+        # validate BEFORE the scan: a typo'd algorithm should not cost
+        # a store read first
+        scorer = drift_scorer(algorithm)
+        date = F.col("date")
+        in_ref = (date >= baseline_from) & (date <= baseline_to)
+        in_tgt = (date >= target_from) & (date <= target_to)
+        df = self._read(spark).filter(
+            (F.col("dataset_id") == dataset_id) & (in_ref | in_tgt)
+            & F.col("component").isin(*SKETCH_COMPONENTS)
+            & F.col("b").isNotNull())
+        if not by_segment:
+            df = df.filter(F.col("segment") == "{}")
+        sides = F.array_compact(F.array(
+            F.when(in_ref, F.lit("ref")), F.when(in_tgt, F.lit("tgt"))))
+        tagged = df.select(
+            F.explode(sides).alias("side"), "segment", "column",
+            "component", F.to_timestamp("dataset_ts").alias("ts"), "b")
+
+        kll_k = self.config.effective_kll_k
+        fi_cap = self.config.fi_capacity
+        fi_maxlen = self.config.max_frequent_item_size
+
+        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+            # pinned order: batch time, then blob bytes for equal times
+            pdf = pdf.sort_values(["ts", "b"], kind="stable")
+            if pdf["component"].iloc[0] == "kll":
+                sk = merge_kll_blobs(pdf["b"], kll_k)
+            else:
+                sk = merge_fi_blobs(pdf["b"], fi_cap, fi_maxlen)
+            return pdf.iloc[:1][["side", "segment", "column",
+                                 "component"]].assign(b=sk.serialize())
+
+        rows = (tagged.groupBy("side", "segment", "column", "component")
+                .applyInPandas(merge, "side string, segment string, "
+                               "column string, component string, b binary")
+                .collect())
+        tgt, ref = (sketch_tables(r for r in rows if r["side"] == side)
+                    for side in ("tgt", "ref"))
         if by_segment:
-            return drift_by_segment(tgt, ref, algorithm=algorithm)
-        return DRIFT_SCORERS[algorithm](tgt, ref)
+            return score_segments(tgt, ref, scorer)
+        return scorer(tgt.get("{}", {}), ref.get("{}", {}))
 
     def compact(
         self,
@@ -607,7 +650,7 @@ class ProfileStore:
         """
         import pandas as pd
 
-        from ..core.sketches import KllSketch
+        from ..core.sketches import merge_kll_blobs
 
         if window < 1:
             raise ValueError(f"window must be >= 1: {window}")
@@ -650,10 +693,7 @@ class ProfileStore:
 
         def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("__rn")
-            sk = KllSketch(kll_k)
-            for blob in pdf["b"]:
-                if blob is not None:
-                    sk.merge(KllSketch.deserialize(bytes(blob)))
+            sk = merge_kll_blobs(pdf["b"], kll_k)
             end_row = pdf[pdf["__rn"] == pdf["__end"].iloc[0]]
             ts = end_row["dataset_ts"].iloc[0] if len(end_row) \
                 else pdf["dataset_ts"].iloc[-1]
