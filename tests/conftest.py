@@ -232,6 +232,27 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def launched_jobs(spark):
+    """``launched_jobs(fn)`` -> ``(fn(), ids)``: the IDs of every Spark
+    job started during the call, read from the status tracker's job-ID
+    sets before and after it (job IDs are sequential per context)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def known():
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        return (set(tracker.getJobIdsForGroup())
+                | set(tracker.getJobIdsForGroup(group)))
+
+    def run(fn):
+        last = max(known(), default=-1)
+        result = fn()
+        return result, set(range(last + 1, max(known(), default=last) + 1))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def lineitem(spark):
     return spark.read.parquet(f"{SF_DIR}/lineitem.parquet")

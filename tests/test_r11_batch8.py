@@ -1,14 +1,12 @@
-"""Round-11 batch 8: multiclass report, temperature scaling,
-two-model uplift — vs numpy references."""
+"""Round-11 batch 8: multiclass report and temperature scaling — vs
+numpy references."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from whylogs_spark.ops.multiclass import (multiclass_report,
                                           temperature_scaling,
                                           temperature_score_cols)
-from whylogs_spark.ops.uplift import two_model_uplift, uplift_score_col
 
 RNG = np.random.RandomState(61)
 
@@ -96,56 +94,3 @@ class TestTemperatureScaling:
         df = spark.createDataFrame([(0, 1.0)], "y int, s0 double")
         with pytest.raises(ValueError):
             temperature_scaling(df, ["s0"], "y")
-
-
-class TestTwoModelUplift:
-    def test_recovers_heterogeneous_effect(self, spark):
-        # true uplift depends on x: high for x>0, ~none for x<0
-        n = 6000
-        x = RNG.normal(0, 1, n)
-        tr = (RNG.uniform(size=n) < 0.5).astype(float)
-        base_p = 1 / (1 + np.exp(-(0.2 * x - 0.5)))
-        lift = np.where(x > 0, 0.3, 0.0)
-        y = (RNG.uniform(size=n) < np.clip(base_p + tr * lift, 0, 1)
-             ).astype(float)
-        df = spark.createDataFrame(
-            [(float(a), float(b), float(c))
-             for a, b, c in zip(x, tr, y)],
-            "x double, tr double, y double")
-        m = two_model_uplift(df, "tr", "y", ["x"])
-        assert m["n_treat"] + m["n_ctrl"] == n
-        scored = df.withColumn("u", uplift_score_col(m, ["x"]))
-        hi = scored.filter(F.col("x") > 0.5).agg(
-            F.avg("u")).collect()[0][0]
-        lo = scored.filter(F.col("x") < -0.5).agg(
-            F.avg("u")).collect()[0][0]
-        # the model must rank high-x rows as higher uplift
-        assert hi > lo + 0.1
-        assert 0.1 < hi < 0.6
-
-    def test_threaded_arm_fits_equal_sequential(self, spark):
-        # r13: the two arm fits run on driver threads — each arm's
-        # Newton-step aggregate sequence is unchanged, so the
-        # coefficients must be IDENTICAL to direct sequential
-        # fit_logistic calls on the same arm filters
-        from whylogs_spark.ops.causal import fit_logistic
-        n = 800
-        x = RNG.normal(0, 1, n)
-        tr = (np.arange(n) % 2).astype(float)
-        y = (RNG.uniform(size=n)
-             < 1 / (1 + np.exp(-(0.4 * x + 0.3 * tr)))).astype(float)
-        df = spark.createDataFrame(
-            [(float(a), float(b), float(c))
-             for a, b, c in zip(x, tr, y)],
-            "x double, tr double, y double")
-        m = two_model_uplift(df, "tr", "y", ["x"])
-        t = F.col("tr").cast("double")
-        seq_t = fit_logistic(df.filter(t == 1.0), "y", ["x"])
-        seq_c = fit_logistic(df.filter(t == 0.0), "y", ["x"])
-        assert m["n_treat"] == seq_t["n"]
-        assert m["n_ctrl"] == seq_c["n"]
-        for got, ref in ((m["treatment"], seq_t), (m["control"],
-                                                   seq_c)):
-            assert abs(got["intercept"] - ref["intercept"]) < 1e-9
-            for c in ["x"]:
-                assert abs(got["coef"][c] - ref["coef"][c]) < 1e-9

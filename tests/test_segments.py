@@ -152,3 +152,50 @@ def test_segment_key_rendering_parity_across_paths(spark):
         sketch = {r["segment"] for r in v.df.filter(
             "component='kll'").select("segment").distinct().collect()}
         assert sketch <= native, (native, sketch)
+
+
+def _rows_by_key(view):
+    rows = view.df.collect()
+    out = {(r["segment"], r["column"], r["metric"], r["component"]):
+           (r["n"], r["d"], r["s"], None if r["b"] is None else bytes(r["b"]))
+           for r in rows}
+    assert len(out) == len(rows)
+    return out
+
+
+def test_past_limit_fallback_matches_collected(spark, monkeypatch):
+    """Past ``_SEGMENT_COLLECT_LIMIT`` segments the native frames are
+    exploded JVM-side instead of collected; the rows must not change."""
+    from whylogs_spark.core import profiler
+
+    df = spark.createDataFrame(
+        [(i % 6, float(i % 17) * 0.5, f"s{i % 7}", i % 5)
+         for i in range(600)],
+        "k int, x double, s string, i int").coalesce(1)
+    collected = wsp.profile(df, segment_by=["k"])
+    monkeypatch.setattr(profiler, "_SEGMENT_COLLECT_LIMIT", 2)
+    fallback = wsp.profile(df, segment_by=["k"])
+    plan = fallback.df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Generate" in plan and "Generate" not in (
+        collected.df._jdf.queryExecution().optimizedPlan().toString())
+    want = _rows_by_key(collected)
+    assert len({seg for seg, *_ in want}) == 6
+    assert _rows_by_key(fallback) == want
+
+
+def test_partition_view_query_runs_no_extra_jobs(lineitem, launched_jobs):
+    """A profile_partitions view holds collected sketch rows, like a
+    profile() view: querying it does not re-run the sketch pass."""
+    from whylogs_spark.core.profiler import profile_partitions
+
+    cols = ["l_quantity", "l_shipmode"]
+    part = profile_partitions(
+        lineitem, {"by_flag": ["l_returnflag"]}, columns=cols)["by_flag"]
+    ref = wsp.profile(lineitem, segment_by=["l_returnflag"], columns=cols)
+
+    def query(view):
+        return view.df.filter("column = 'l_quantity'").collect()
+
+    _, part_jobs = launched_jobs(lambda: query(part))
+    _, ref_jobs = launched_jobs(lambda: query(ref))
+    assert len(part_jobs) <= len(ref_jobs), (part_jobs, ref_jobs)

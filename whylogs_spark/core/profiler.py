@@ -8,16 +8,23 @@ python/whylogs/core/dataset_profile.py:107) and for its Spark integration
 
 Execution shape (designed for 100 TB, not 60k rows):
 
-1. NATIVE PASS — one ``df.groupBy(segments).agg(*exprs)``: all exact
+1. NATIVE PASS — ``df.groupBy(segments).agg(*exprs)``: all exact
    counters, min/max, mean/M2, and DataSketches HLL run JVM-side with
-   whole-stage codegen + map-side partial aggregation. Output is
-   #segments rows regardless of input size.
+   whole-stage codegen + map-side partial aggregation. One job per
+   tier (the interpreted object tier apart from the codegen tier); an
+   ungrouped profile also cuts each tier into column chunks. The jobs
+   run concurrently, each returns #segments rows regardless of input
+   size, and one reshape turns them into long-form rows driver-side —
+   up to 20k segments; past that the same aggregate frames are
+   exploded JVM-side instead.
 2. SKETCH PASS (only for KLL quantiles / frequent-items, which Spark has
    no built-in mergeable equivalent for) — ``mapInArrow`` builds ONE
    sketch per (partition x segment x column), so the only shuffled data
    is a few KB of sketch bytes per partition, then a tiny
    ``groupBy(...).applyInPandas`` union. This mirrors the reference's
    partial+merge design (profiler.py:70-73) but never shuffles raw rows.
+   It runs concurrently with the native pass, and its rows are
+   collected the same way.
 
 The result is a LONG-FORM PROFILE DataFrame — profiles are data, not
 opaque blobs (contrast with the reference's protobuf binary,
@@ -40,12 +47,13 @@ table — see ``merge_profiles``.
 from __future__ import annotations
 
 import json
+from functools import partial, reduce
 from typing import Dict, Iterable, Iterator, List, Optional
 
 import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -58,6 +66,7 @@ from .sketches import (FrequentStringsSketch, KllSketch, merge_fi_blobs,
                        merge_kll_blobs)
 from .util import cut_derived_lineage as _cut_derived_lineage
 from .util import ensure_parallelism as _ensure_parallelism
+from .util import run_concurrent
 
 PROFILE_SCHEMA = T.StructType(
     [
@@ -99,45 +108,108 @@ def _segment_json_py(keys: List[str], values: Iterable) -> str:
     return json.dumps(d, separators=(",", ":"), ensure_ascii=False)
 
 
-
-
 # --------------------------------------------------------------------- native
-def _long_structs(aggs: List[PlannedAgg]) -> List[Column]:
-    """One struct literal per emitted component, typed-slot aligned.
+#: (slot, Spark type, python cast) of the four typed value slots
+_SLOTS = ((SLOT_N, T.LongType(), int), (SLOT_D, T.DoubleType(), float),
+          (SLOT_S, T.StringType(), None), (SLOT_B, T.BinaryType(), bytes))
 
-    A component's value is its agg alias, or ``derive(col(derive_from))``
-    for post-agg projections (hll estimate/bounds, quantile array items).
+_SEGMENT_COLLECT_LIMIT = 20_000
+
+
+def _native_work(aggs: List[PlannedAgg], by_column: bool) -> List[tuple]:
+    """The native pass's job split: ``[(tier, chunk of aggs)]``.
+
+    One job per tier: a TypedImperative aggregate (hll_sketch_agg,
+    percentile_approx) turns its whole Aggregate node into interpreted
+    ObjectHashAggregateExec, so the object tier runs apart and the
+    codegen tier keeps whole-stage codegen. With ``by_column`` (an
+    ungrouped profile) each tier is cut into chunks of whole columns (a
+    derived agg stays with its base): >= 6 columns per chunk and at most
+    ~8 chunks per tier, so the Catalyst analysis and codegen of a wide
+    plan run on parallel threads over column-pruned scans while the job
+    count stays bounded.
     """
+    tiers: Dict[str, List[PlannedAgg]] = {}
+    for a in aggs:
+        tiers.setdefault(a.tier, []).append(a)
+    work: List[tuple] = []
+    for tier, tier_aggs in sorted(tiers.items()):
+        if not by_column:
+            work.append((tier, tier_aggs))
+            continue
+        by_col: Dict[str, List[PlannedAgg]] = {}
+        for a in tier_aggs:
+            by_col.setdefault(a.column, []).append(a)
+        cols = list(by_col)
+        step = max(6, -(-len(cols) // 8))
+        work += [(tier, [a for c in cols[i:i + step] for a in by_col[c]])
+                 for i in range(0, len(cols), step)]
+    return work
 
-    def null_slot(slot: str) -> Column:
-        dt = {SLOT_N: T.LongType(), SLOT_D: T.DoubleType(),
-              SLOT_S: T.StringType(), SLOT_B: T.BinaryType()}[slot]
-        return F.lit(None).cast(dt)
 
+def _native_frame(grouped: GroupedData, chunk: List[PlannedAgg],
+                  keys: List[Column], key_aggs=()) -> DataFrame:
+    """One job's aggregate frame: the ``keys`` columns, then every
+    emitted component of ``chunk`` under its alias (base aggregates as
+    they come out, derived ones projected from their base).
+    ``key_aggs`` are extra aggregates the keys read (``grouping_id()``).
+    """
+    base = [a for a in chunk if a.expr is not None]
+    wide = grouped.agg(*key_aggs, *[a.expr.alias(a.alias) for a in base])
+    return wide.select(
+        *keys, *[F.col(a.alias) for a in base if a.emit],
+        *[a.derive(F.col(a.derive_from)).alias(a.alias)
+          for a in chunk if a.derive is not None])
+
+
+def _native_pass(df: DataFrame, aggs: List[PlannedAgg], group, keys,
+                 key_aggs=(), by_column: bool = False) -> List[tuple]:
+    """Build one :func:`_native_frame` per :func:`_native_work` job over
+    ``group(df)`` and collect them concurrently (up to
+    ``_SEGMENT_COLLECT_LIMIT + 1`` rows each) -> ``[(chunk, frame,
+    row dicts)]``."""
+
+    def job(tier, chunk):
+        # the interpreted object tier gets cores for its partial-agg
+        # stage; codegen'd aggs chew through one unsplittable local file
+        # faster than the round-robin shuffle that would split it
+        src = _ensure_parallelism(df) if tier == "object" else df
+        frame = _native_frame(group(src), chunk, keys, key_aggs)
+        rows = frame.limit(_SEGMENT_COLLECT_LIMIT + 1).collect()
+        return chunk, frame, [r.asDict() for r in rows]
+
+    return run_concurrent(df.sparkSession, [
+        partial(job, tier, chunk)
+        for tier, chunk in _native_work(aggs, by_column)])
+
+
+def _component_rows(seg: str, chunk: List[PlannedAgg],
+                    row: dict) -> Iterator[tuple]:
+    """Long-form profile rows of one collected native row."""
+    for a in chunk:
+        if not a.emit:
+            continue
+        v = a.const if a.const is not None else row.get(a.alias)
+        yield (seg, a.column, a.metric, a.component, *(
+            None if v is None or slot != a.slot else cast(v) if cast else v
+            for slot, _, cast in _SLOTS))
+
+
+def _long_structs(aggs: List[PlannedAgg]) -> List[Column]:
+    """One struct per emitted component over a :func:`_native_frame`,
+    typed-slot aligned: its alias column, or its constant."""
     structs = []
     for a in aggs:
         if not a.emit:
             continue
-        if a.const is not None:
-            value = F.lit(a.const)
-        elif a.derive is not None:
-            value = a.derive(F.col(a.derive_from))
-        else:
-            value = F.col(a.alias)
-        fields = [
+        value = F.lit(a.const) if a.const is not None else F.col(a.alias)
+        structs.append(F.struct(
             F.lit(a.column).alias("column"),
             F.lit(a.metric).alias("metric"),
             F.lit(a.component).alias("component"),
-        ]
-        for slot, dt in ((SLOT_N, T.LongType()), (SLOT_D, T.DoubleType()),
-                         (SLOT_S, T.StringType()), (SLOT_B, T.BinaryType())):
-            if slot == a.slot:
-                fields.append(value.cast(dt).alias(slot))
-            else:
-                fields.append(null_slot(slot).alias(slot))
-        structs.append(F.struct(*fields))
+            *[(value if slot == a.slot else F.lit(None)).cast(dt).alias(slot)
+              for slot, dt, _ in _SLOTS]))
     return structs
-
 
 
 def _local_profile_df(spark, rows):
@@ -152,189 +224,25 @@ def _local_profile_df(spark, rows):
     return spark.createDataFrame(
         sc.parallelize(rows, numSlices=n), PROFILE_SCHEMA)
 
-def _native_long_one_tier(
-    df: DataFrame, aggs: List[PlannedAgg], segment_cols: List[str]
-) -> DataFrame:
-    if aggs and aggs[0].tier == "object":
-        # interpreted ObjectHashAggregate: make sure the partial-agg stage
-        # actually has cores to run on (codegen'd declarative aggs chew
-        # through a single unsplittable local file faster than the
-        # round-robin shuffle that would parallelize them)
-        df = _ensure_parallelism(df)
-    exprs = [a.expr.alias(a.alias) for a in aggs if a.expr is not None]
-    if segment_cols:
-        wide = df.groupBy(*segment_cols).agg(*exprs)
-    else:
-        wide = df.agg(*exprs)
-    seg = _segment_json_col(segment_cols).alias("segment")
-    structs = _long_structs(aggs)
-    return wide.select(
-        seg, F.explode(F.array(*structs)).alias("r")
-    ).select("segment", "r.*")
 
-
-def _native_long(
-    df: DataFrame, aggs: List[PlannedAgg], segment_cols: List[str]
-) -> DataFrame:
-    """Run the codegen tier and the object tier as SEPARATE aggregation
-    passes and union the long outputs.
-
-    Rationale: one TypedImperative aggregate (hll_sketch_agg,
-    percentile_approx) in an Aggregate node downgrades the whole node to
-    interpreted ObjectHashAggregateExec. Two passes keep ~75% of the
-    expressions in whole-stage codegen; the extra column-pruned parquet
-    scan is far cheaper than losing codegen on everything.
-    """
-    tiers: Dict[str, List[PlannedAgg]] = {}
-    for a in aggs:
-        tiers.setdefault(a.tier, []).append(a)
-    parts = [
-        _native_long_one_tier(df, tier_aggs, segment_cols)
-        for _, tier_aggs in sorted(tiers.items())
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-_SEGMENT_COLLECT_LIMIT = 20_000
-
-
-def _segmented_native_long(
-    df: DataFrame, aggs: List[PlannedAgg], segment_cols: List[str]
-) -> DataFrame:
-    """Segmented profiles: if the number of segments is modest (it
-    almost always is — the reference caps segmentation at 10 partitions
-    and warns on high-cardinality keys), collect the wide per-segment agg
-    rows and reshape driver-side, avoiding the O(seconds) plan-compile of
-    the 1000+-expression explode projection. Past the limit, fall back to
-    the fully-distributed explode path.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = df.sparkSession
-    tiers: Dict[str, List[PlannedAgg]] = {}
-    for a in aggs:
-        tiers.setdefault(a.tier, []).append(a)
-
-    def run_tier(item):
-        tier, tier_aggs = item
-        base = [a for a in tier_aggs if a.expr is not None]
-        src = _ensure_parallelism(df) if tier == "object" else df
-        wide = src.groupBy(*segment_cols).agg(
-            *[a.expr.alias(a.alias) for a in base])
-        derived = [a for a in tier_aggs if a.derive is not None]
-        seg = _segment_json_col(segment_cols).alias("__segment")
-        sel = [seg] + [F.col(a.alias) for a in base if a.emit] + [
-            a.derive(F.col(a.derive_from)).alias(a.alias) for a in derived
-        ]
-        rows = wide.select(*sel).limit(_SEGMENT_COLLECT_LIMIT + 1).collect()
-        return tier_aggs, rows
-
-    with ThreadPoolExecutor(max_workers=max(len(tiers), 1)) as pool:
-        results = list(pool.map(run_tier, sorted(tiers.items())))
-
-    if any(len(rows) > _SEGMENT_COLLECT_LIMIT for _, rows in results):
-        return _native_long(df, aggs, segment_cols)  # distributed fallback
-
-    out_rows: List[tuple] = []
-    for tier_aggs, rows in results:
-        for row in rows:
-            rd = row.asDict()
-            seg = rd["__segment"]
-            for a in tier_aggs:
-                if not a.emit:
-                    continue
-                v = a.const if a.const is not None else rd.get(a.alias)
-                slots = {"n": None, "d": None, "s": None, "b": None}
-                if v is not None:
-                    if a.slot == SLOT_N:
-                        v = int(v)
-                    elif a.slot == SLOT_D:
-                        v = float(v)
-                    elif a.slot == SLOT_B:
-                        v = bytes(v)
-                    slots[a.slot] = v
-                out_rows.append((
-                    seg, a.column, a.metric, a.component,
-                    slots["n"], slots["d"], slots["s"], slots["b"],
-                ))
-    return _local_profile_df(spark, out_rows)
-
-
-def _native_long_collected(
-    df: DataFrame, aggs: List[PlannedAgg]
-) -> DataFrame:
-    """Unsegmented fast path: aggregate wide, collect the single row,
-    reshape driver-side.
-
-    The explode-to-long projection used for segmented profiles costs
-    seconds of Catalyst/codegen time for ~1200 expressions operating on
-    ONE row; a flat select + driver reshape is plan-size O(#aggs) and the
-    collected payload is a few KB of profile components.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = df.sparkSession
-    tiers: Dict[str, List[PlannedAgg]] = {}
-    for a in aggs:
-        tiers.setdefault(a.tier, []).append(a)
-
-    # Chunk each tier by source column (a derived agg always lives with
-    # its derive_from base, which the planner emits for the same column).
-    # Each chunk is an independent Spark job, so Catalyst analysis +
-    # whole-stage-codegen compile — the dominant cost for a 200-agg plan
-    # over ONE local file — happens in parallel threads. Column pruning
-    # keeps each chunk's parquet scan narrow.
-    work: List[tuple] = []
-    for tier, tier_aggs in sorted(tiers.items()):
-        by_col: Dict[str, List[PlannedAgg]] = {}
-        for a in tier_aggs:
-            by_col.setdefault(a.column, []).append(a)
-        cols = list(by_col)
-        # ≥6 columns per chunk, but never more than ~8 chunks per tier:
-        # each chunk is a Spark job, and for very wide frames per-job
-        # overhead would dominate (400 cols at 6/chunk = 67 jobs/tier).
-        # ~8 keeps the thread pool busy while bounding both job count and
-        # the per-job codegen unit size.
-        chunk_cols = max(6, -(-len(cols) // 8))
-        for i in range(0, len(cols), chunk_cols):
-            chunk = [a for c in cols[i:i + chunk_cols] for a in by_col[c]]
-            work.append((tier, chunk))
-
-    def run_chunk(item):
-        tier, tier_aggs = item
-        base = [a for a in tier_aggs if a.expr is not None]
-        src = _ensure_parallelism(df) if tier == "object" else df
-        wide = src.agg(*[a.expr.alias(a.alias) for a in base])
-        derived = [a for a in tier_aggs if a.derive is not None]
-        sel = [F.col(a.alias) for a in base if a.emit] + [
-            a.derive(F.col(a.derive_from)).alias(a.alias) for a in derived
-        ]
-        return tier_aggs, wide.select(*sel).collect()[0].asDict()
-
-    out_rows: List[tuple] = []
-    with ThreadPoolExecutor(max_workers=max(min(len(work), 8), 1)) as pool:
-        for tier_aggs, row in pool.map(run_chunk, work):
-            for a in tier_aggs:
-                if not a.emit:
-                    continue
-                v = a.const if a.const is not None else row.get(a.alias)
-                slots = {"n": None, "d": None, "s": None, "b": None}
-                if v is not None:
-                    if a.slot == SLOT_N:
-                        v = int(v)
-                    elif a.slot == SLOT_D:
-                        v = float(v)
-                    elif a.slot == SLOT_B:
-                        v = bytes(v)
-                    slots[a.slot] = v
-                out_rows.append((
-                    "{}", a.column, a.metric, a.component,
-                    slots["n"], slots["d"], slots["s"], slots["b"],
-                ))
-    return _local_profile_df(spark, out_rows)
+def _native_long(df: DataFrame, aggs: List[PlannedAgg],
+                 segment_cols: List[str]) -> DataFrame:
+    """The native half of ``profile()``: collected and reshaped
+    driver-side up to ``_SEGMENT_COLLECT_LIMIT`` segments; past that the
+    same frames are exploded JVM-side into a lazy union."""
+    jobs = _native_pass(
+        df, aggs, lambda src: src.groupBy(*segment_cols),
+        [_segment_json_col(segment_cols).alias("__segment")],
+        by_column=not segment_cols)
+    if any(len(rows) > _SEGMENT_COLLECT_LIMIT for _, _, rows in jobs):
+        return reduce(DataFrame.unionByName, [
+            frame.select(F.col("__segment").alias("segment"),
+                         F.explode(F.array(*_long_structs(chunk)))
+                         .alias("r")).select("segment", "r.*")
+            for chunk, frame, _ in jobs])
+    return _local_profile_df(df.sparkSession, [
+        out for chunk, _, rows in jobs for row in rows
+        for out in _component_rows(row["__segment"], chunk, row)])
 
 
 # --------------------------------------------------------------------- sketch
@@ -540,18 +448,13 @@ def profile(
 
         sketches = plan_wide_sketches(
             df.schema, columns, segment_cols, config)
-        long_df = _with_sketch_rows(
-            df, sketches, segment_cols, config,
-            lambda: _local_profile_df(df.sparkSession, wide_native_rows(
-                df, columns, segment_cols, config)))
-        return ProfileView(long_df, config, dataset_timestamp,
-                           metadata=metadata)
-
-    aggs, sketches = plan_dataframe(df.schema, columns, segment_cols, config)
-    # native tiers are collected eagerly and reshaped driver-side
-    native = ((lambda: _segmented_native_long(df, aggs, segment_cols))
-              if segment_cols else
-              (lambda: _native_long_collected(df, aggs)))
+        native = lambda: _local_profile_df(  # noqa: E731
+            df.sparkSession,
+            wide_native_rows(df, columns, segment_cols, config))
+    else:
+        aggs, sketches = plan_dataframe(
+            df.schema, columns, segment_cols, config)
+        native = partial(_native_long, df, aggs, segment_cols)
     long_df = _with_sketch_rows(df, sketches, segment_cols, config, native)
     return ProfileView(long_df, config, dataset_timestamp,
                        metadata=metadata)
@@ -565,19 +468,15 @@ def _with_sketch_rows(
     native,
 ) -> DataFrame:
     """Union of the native half (``native()``) and the python sketch
-    half of a profile; the sketch pass runs on a second driver thread
-    while the native tiers run.
+    half of a profile, run concurrently.
 
-    The sketch rows are COLLECTED and rebuilt as local rows, like the
+    The sketch rows are collected and rebuilt as local rows, like the
     native rows: one row per segment x column x component, so a view
-    never re-runs the sketch pass and ``profile()`` leaves nothing
-    cached behind. Past ``_SEGMENT_COLLECT_LIMIT`` segments (where the
-    native half also goes distributed) the sketch half stays a lazy
-    frame."""
+    never re-runs the sketch pass and leaves nothing cached behind.
+    Past ``_SEGMENT_COLLECT_LIMIT`` segments the sketch half stays a
+    lazy frame."""
     if not sketches:
         return native()
-    from concurrent.futures import ThreadPoolExecutor
-
     spark = df.sparkSession
 
     def sketch_half() -> DataFrame:
@@ -592,10 +491,8 @@ def _with_sketch_rows(
             return sketch_df
         return _local_profile_df(spark, rows)
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(sketch_half)
-        long_df = native()
-        return long_df.unionByName(fut.result())
+    native_df, sketch_df = run_concurrent(spark, [native, sketch_half])
+    return native_df.unionByName(sketch_df)
 
 
 def profile_partitions(
@@ -612,15 +509,13 @@ def profile_partitions(
     ``grouping_id()`` attributes each output row to its partition. Native
     metric tiers each run one grouping-sets aggregate; the KLL/FI sketch
     pass (which has no grouping-sets equivalent) runs per partition on
-    its own (cheap: sketch bytes only).
+    its own (cheap: sketch bytes only) and is collected like
+    ``profile()``'s.
 
     Returns {partition_name -> ProfileView}.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from .datatypes import flatten_struct_columns
 
-    spark = df.sparkSession
     part_items = list(partitions.items())
     all_cols: List[str] = []
     for _, cols in part_items:
@@ -640,74 +535,39 @@ def profile_partitions(
     df, columns = flatten_struct_columns(df, columns, all_cols)
     df = _cut_derived_lineage(df)
     aggs, sketches = plan_dataframe(df.schema, columns, all_cols, config)
-    tiers: Dict[str, List[PlannedAgg]] = {}
-    for a in aggs:
-        tiers.setdefault(a.tier, []).append(a)
-
-    def run_tier(item):
-        tier, tier_aggs = item
-        base = [a for a in tier_aggs if a.expr is not None]
-        src = _ensure_parallelism(df) if tier == "object" else df
-        gdf = src.groupingSets(sets_exprs, *[F.col(c) for c in all_cols])
-        wide = gdf.agg(
-            F.grouping_id().alias("__gid"),
-            *[a.expr.alias(a.alias) for a in base])
-        derived = [a for a in tier_aggs if a.derive is not None]
-        # segment values cast JVM-side (same rendering as
-        # _segment_json_col / _sketch_long) so boolean/float keys don't
-        # diverge from the narrow path when stringified in python
-        sel = (
-            [F.col("__gid")]
-            + [F.coalesce(F.col(c).cast(T.StringType()),
-                          F.lit(_NULL_SENTINEL)).alias(c)
-               for c in all_cols]
-            + [F.col(a.alias) for a in base if a.emit]
-            + [a.derive(F.col(a.derive_from)).alias(a.alias)
-               for a in derived]
-        )
-        rows = wide.select(*sel).limit(_SEGMENT_COLLECT_LIMIT + 1).collect()
-        if len(rows) > _SEGMENT_COLLECT_LIMIT:
-            raise ValueError(
-                "profile_partitions: too many segments to collect; "
-                "profile each partition separately")
-        return tier_aggs, rows
+    # segment values cast JVM-side (same rendering as _segment_json_col /
+    # _sketch_long) so boolean/float keys don't diverge from the narrow
+    # path when stringified in python
+    keys = [F.col("__gid")] + [
+        F.coalesce(F.col(c).cast(T.StringType()),
+                   F.lit(_NULL_SENTINEL)).alias(c)
+        for c in all_cols]
+    jobs = _native_pass(
+        df, aggs,
+        lambda src: src.groupingSets(sets_exprs,
+                                     *[F.col(c) for c in all_cols]),
+        keys, key_aggs=[F.grouping_id().alias("__gid")])
+    if any(len(rows) > _SEGMENT_COLLECT_LIMIT for _, _, rows in jobs):
+        raise ValueError(
+            "profile_partitions: too many segments to collect; "
+            "profile each partition separately")
 
     rows_by_part: Dict[str, List[tuple]] = {p: [] for p, _ in part_items}
-    with ThreadPoolExecutor(max_workers=max(len(tiers), 1)) as pool:
-        for tier_aggs, rows in pool.map(run_tier, sorted(tiers.items())):
-            for r in rows:
-                gid = r["__gid"]
-                for pname, cols in part_items:
-                    if gid_for_part[pname] != gid:
-                        continue
-                    seg = _segment_json_py(cols, [r[c] for c in cols])
-                    for a in tier_aggs:
-                        if not a.emit:
-                            continue
-                        v = (a.const if a.const is not None
-                             else r[a.alias])
-                        slots = {"n": None, "d": None, "s": None, "b": None}
-                        if v is not None:
-                            if a.slot == SLOT_N:
-                                v = int(v)
-                            elif a.slot == SLOT_D:
-                                v = float(v)
-                            elif a.slot == SLOT_B:
-                                v = bytes(v)
-                            slots[a.slot] = v
-                        rows_by_part[pname].append((
-                            seg, a.column, a.metric, a.component,
-                            slots["n"], slots["d"], slots["s"], slots["b"],
-                        ))
+    for chunk, _, rows in jobs:
+        for row in rows:
+            for pname, cols in part_items:
+                if gid_for_part[pname] == row["__gid"]:
+                    seg = _segment_json_py(cols, [row[c] for c in cols])
+                    rows_by_part[pname].extend(
+                        _component_rows(seg, chunk, row))
 
-    out: Dict[str, ProfileView] = {}
-    for pname, cols in part_items:
-        long_df = _local_profile_df(spark, rows_by_part[pname])
-        if sketches:
-            long_df = long_df.unionByName(
-                _sketch_long(df, sketches, cols, config))
-        out[pname] = ProfileView(long_df, config)
-    return out
+    spark = df.sparkSession
+    long_dfs = run_concurrent(spark, [
+        partial(_with_sketch_rows, df, sketches, cols, config,
+                partial(_local_profile_df, spark, rows_by_part[pname]))
+        for pname, cols in part_items])
+    return {pname: ProfileView(long_df, config)
+            for (pname, _), long_df in zip(part_items, long_dfs)}
 
 
 def merge_profiles(views: List["ProfileView"]) -> "ProfileView":

@@ -3,9 +3,11 @@
 from __future__ import annotations
 
 import re
-from typing import Optional
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, List, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 #: In-memory bytes of input one task should own when round-robin
 #: repartitioning an under-partitioned source (override per session
@@ -235,3 +237,23 @@ def ensure_parallelism(df: DataFrame,
     if nparts * 2 <= target:
         return df.repartition(target)
     return df
+
+
+def run_concurrent(spark: SparkSession,
+                   thunks: Sequence[Callable[[], object]]) -> List[object]:
+    """Run independent Spark-launching thunks on at most 8 driver threads
+    and return their results in order; a failure raises.
+
+    Each thunk gets its own ``inheritable_thread_target(spark)`` copy of
+    the caller's local properties: its jobs carry the caller's job group
+    and tags, and no two threads share the object a query writes its
+    SQL execution id to."""
+
+    def wrap(thunk):
+        inherit = inheritable_thread_target(spark)
+        # pinned-thread mode off: returns the session, nothing to inherit
+        return thunk if inherit is spark else inherit(thunk)
+
+    with ThreadPoolExecutor(max_workers=max(1, min(len(thunks), 8))) as pool:
+        futures = [pool.submit(wrap(t)) for t in thunks]
+        return [f.result() for f in futures]

@@ -39,6 +39,7 @@ through a double on its way into a distinct-count or min/max.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Dict, Iterable, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -49,6 +50,7 @@ from .configs import MetricConfig
 from .datatypes import ValueType, value_type_of
 from .planner import (SketchPlan, _ALL_TYPE_BUCKETS, _TYPE_BUCKET, _q_name,
                       _numeric_view, _string_view, qcol)
+from .util import run_concurrent
 
 _CLASSED = (ValueType.INTEGRAL, ValueType.FRACTIONAL, ValueType.BOOLEAN,
             ValueType.STRING, ValueType.TEMPORAL)
@@ -192,8 +194,6 @@ def wide_native_rows(
 ) -> List[tuple]:
     """Run the per-class unpivoted aggregations; return long-form profile
     rows (segment, column, metric, component, n, d, s, b)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from .profiler import (  # lazy: avoid import cycle
         _NULL_SENTINEL, _segment_json_py,
     )
@@ -287,12 +287,10 @@ def wide_native_rows(
                     F.coalesce(F.sum("p"), F.lit(0)).alias("nonnull")))
         return None, cols, agg.limit(collect_limit + 1).collect()
 
-    work = list(by_class.items())
-    with ThreadPoolExecutor(max_workers=max(len(work) + 1, 1)) as pool:
-        futs = [pool.submit(run_class, item) for item in work]
-        if presence_only:
-            futs.append(pool.submit(run_presence, presence_only))
-        results = [f.result() for f in futs]
+    thunks = [partial(run_class, item) for item in by_class.items()]
+    if presence_only:
+        thunks.append(partial(run_presence, presence_only))
+    results = run_concurrent(df.sparkSession, thunks)
 
     vt_of = dict(fields)
     out: List[tuple] = []

@@ -15,6 +15,7 @@ directly with ``uplift_curve``.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Dict, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -36,8 +37,7 @@ def two_model_uplift(
     Score new rows with :func:`uplift_score_col`; evaluate the score
     with ``ops.abtest.uplift_curve`` / ``auuc``.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
+    from whylogs_spark.core.util import run_concurrent
     from whylogs_spark.ops.causal import fit_logistic
 
     t = F.col(treat_col).cast("double")
@@ -47,12 +47,10 @@ def two_model_uplift(
     # lets one arm's jobs back-fill executors idled by the other's
     # step barrier. Each fit's own aggregate sequence (and therefore
     # its coefficients) is byte-identical to the sequential form.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        ft = pool.submit(fit_logistic, df.filter(t == 1.0), label_col,
-                         feature_cols, max_iter)
-        fc = pool.submit(fit_logistic, df.filter(t == 0.0), label_col,
-                         feature_cols, max_iter)
-        mt, mc = ft.result(), fc.result()
+    mt, mc = run_concurrent(df.sparkSession, [
+        partial(fit_logistic, df.filter(t == arm), label_col,
+                feature_cols, max_iter)
+        for arm in (1.0, 0.0)])
     return {"treatment": mt, "control": mc,
             "n_treat": mt["n"], "n_ctrl": mc["n"]}
 

@@ -31,7 +31,7 @@ from ..core.configs import DEFAULT_CONFIG, MetricConfig
 from ..core.planner import plan_dataframe
 from ..core.profiler import (
     PROFILE_SCHEMA, ProfileView, _long_structs, _merge_profile_df,
-    _segment_json_col, profile,
+    _native_frame, _segment_json_col, profile,
 )
 
 
@@ -59,7 +59,6 @@ def streaming_profile(
     aggs, _ = plan_dataframe(stream_df.schema, cols, segs, cfg)
     # streaming keeps a single mixed-tier aggregate: one state store
     # beats codegen purity here
-    exprs = [a.expr.alias(a.alias) for a in aggs if a.expr is not None]
     win = F.window(F.col(ts_col), window_duration)
     # parquet event times arrive as TIMESTAMP_NTZ; watermarks require
     # TIMESTAMP, so normalize first (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE)
@@ -68,14 +67,14 @@ def streaming_profile(
     ).withWatermark(ts_col, watermark)
     # group on the real window column so the state store can evict closed
     # windows by watermark; window bounds surface as plain columns
-    wide = wdf.groupBy(win.alias("__w"), *segs).agg(*exprs)
-    structs = _long_structs(aggs)
-    return wide.select(
+    keys = ["window_start", "window_end", "segment"]
+    wide = _native_frame(wdf.groupBy(win.alias("__w"), *segs), aggs, [
         F.col("__w.start").cast("string").alias("window_start"),
         F.col("__w.end").cast("string").alias("window_end"),
-        _segment_json_col(segs).alias("segment"),
-        F.explode(F.array(*structs)).alias("r"),
-    ).select("window_start", "window_end", "segment", "r.*")
+        _segment_json_col(segs).alias("segment")])
+    return wide.select(
+        *keys, F.explode(F.array(*_long_structs(aggs))).alias("r")
+    ).select(*keys, "r.*")
 
 
 class RollingProfileSink:
