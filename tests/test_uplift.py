@@ -3,6 +3,7 @@ Spark jobs."""
 
 from functools import partial
 from threading import Barrier
+from time import sleep
 
 import numpy as np
 import pytest
@@ -122,3 +123,24 @@ def test_concurrent_thunks_do_not_share_local_properties(spark):
     assert run_concurrent(spark, [partial(thunk, 0), partial(thunk, 1)]) \
         == ["0", "1"]
     assert sc.getLocalProperty("whylogs.test.owner") is None
+
+
+def test_run_concurrent_raises_first_failure_after_every_thunk(spark):
+    finished = []
+
+    def fail(exc, delay):
+        sleep(delay)
+        finished.append(type(exc).__name__)
+        raise exc
+
+    def slow_ok():
+        sleep(0.3)
+        finished.append("ok")
+        return 1
+
+    with pytest.raises(ValueError, match="first") as info:
+        run_concurrent(spark, [partial(fail, ValueError("first"), 0.1),
+                               partial(fail, KeyError("second"), 0.0),
+                               slow_ok])
+    assert sorted(finished) == ["KeyError", "ValueError", "ok"]
+    assert [n for n in info.value.__notes__ if "KeyError('second')" in n]

@@ -177,13 +177,12 @@ def _view_tables(view: ProfileView,
                  overall: bool = True) -> Dict[str, SketchTable]:
     """The view's sketch tables from ONE collect of its kll + mg rows
     (only the overall ``{}`` segment unless ``overall=False``)."""
-    df = view.df.filter(
-        F.col("component").isin(*SKETCH_COMPONENTS)
-        & F.col("b").isNotNull())
+    where = {"component": list(SKETCH_COMPONENTS)}
     if overall:
-        df = df.filter(F.col("segment") == "{}")
-    return sketch_tables(
-        df.select("segment", "column", "component", "b").collect())
+        where["segment"] = "{}"
+    rows = view.table(**where).select(
+        ["segment", "column", "component", "b"]).to_pylist()
+    return sketch_tables(r for r in rows if r["b"] is not None)
 
 
 def _overall_tables(target: ProfileView, reference: ProfileView

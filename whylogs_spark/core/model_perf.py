@@ -212,11 +212,9 @@ def _class_score_sketches(view, score_col, label_col, pos_value,
         return _json.dumps({label_col: v}, separators=(",", ":"),
                            ensure_ascii=False)
 
-    rows = view.df.filter(
-        (F.col("column") == score_col)
-        & (F.col("component") == "kll")
-        & F.col("segment").isin([seg(pos_value), seg(neg_value)])
-    ).select("segment", "b").collect()
+    rows = view.table(
+        column=score_col, component="kll",
+        segment=[seg(pos_value), seg(neg_value)]).to_pylist()
     blobs = {r["segment"]: r["b"] for r in rows if r["b"] is not None}
     if seg(pos_value) not in blobs or seg(neg_value) not in blobs:
         return None

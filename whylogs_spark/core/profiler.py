@@ -26,9 +26,13 @@ Execution shape (designed for 100 TB, not 60k rows):
    It runs concurrently with the native pass, and its rows are
    collected the same way.
 
-The result is a LONG-FORM PROFILE DataFrame — profiles are data, not
-opaque blobs (contrast with the reference's protobuf binary,
-python/whylogs/core/view/dataset_profile_view.py:264):
+Both passes return a few rows per segment x column, so ``profile()``
+keeps its result on the driver as ONE Arrow table in the long-form
+layout below; ``ProfileView.df`` is built from it lazily, through Arrow
+(JVM-side tasks only). Past 20k segments the view wraps the lazy
+frames instead. Either way the result is a LONG-FORM PROFILE —
+profiles are data, not opaque blobs (contrast with the reference's
+protobuf binary, python/whylogs/core/view/dataset_profile_view.py:264):
 
     segment  STRING  (JSON object of segment key -> value, '{}' if none)
     column   STRING
@@ -48,14 +52,16 @@ from __future__ import annotations
 
 import json
 from functools import partial, reduce
-from typing import Dict, Iterable, Iterator, List, Optional
+from typing import Dict, Iterable, Iterator, List, Optional, Union
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .configs import DEFAULT_CONFIG, MetricConfig
 from .planner import (
@@ -80,6 +86,15 @@ PROFILE_SCHEMA = T.StructType(
         T.StructField("b", T.BinaryType()),
     ]
 )
+
+_PROFILE_ARROW = to_arrow_schema(PROFILE_SCHEMA)
+
+#: rows per partition of a view's DataFrame built from its local table: a
+#: profile is a few hundred KB, and spreading it over one near-empty
+#: partition per core made every downstream materialization (store
+#: writes, unions, collects) pay ~0.3 s of per-task overhead per empty
+#: slice (measured on the store_quantile_series bench row)
+_SLICE_ROWS = 20_000
 
 _NULL_SENTINEL = "None"  # segment key for null values (reference uses the
 # pandas groupby NaN-safe path, segment_processing.py:77-88)
@@ -212,23 +227,28 @@ def _long_structs(aggs: List[PlannedAgg]) -> List[Column]:
     return structs
 
 
-def _local_profile_df(spark, rows):
-    """Bounded driver-built long-form profile rows -> DataFrame in ONE
-    slice per ~20k rows instead of one per core: a profile is a few
-    hundred KB, and spreading it over 32 near-empty partitions made
-    every downstream materialization (store writes, unions, collects)
-    pay ~0.3 s of per-task overhead per empty slice (r13, measured on
-    the store_quantile_series row)."""
-    n = max(1, -(-len(rows) // 20_000))
-    sc = spark.sparkContext
-    return spark.createDataFrame(
-        sc.parallelize(rows, numSlices=n), PROFILE_SCHEMA)
+def _profile_table(rows: Iterable[tuple]) -> pa.Table:
+    """Long-form profile rows -> one Arrow table with PROFILE_SCHEMA's
+    Arrow types, built column by column (a nullable ``n`` stays int64;
+    a pandas round trip would make it float64 and round values past
+    2**53)."""
+    cols = list(zip(*rows)) or [()] * len(_PROFILE_ARROW)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, _PROFILE_ARROW)],
+        schema=_PROFILE_ARROW)
+
+
+def _table_df(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """A local profile table as a DataFrame over the driver's Arrow
+    rows (JVM-only tasks), one partition per ``_SLICE_ROWS`` rows."""
+    return spark.createDataFrame(table, PROFILE_SCHEMA).coalesce(
+        max(1, -(-table.num_rows // _SLICE_ROWS)))
 
 
 def _native_long(df: DataFrame, aggs: List[PlannedAgg],
-                 segment_cols: List[str]) -> DataFrame:
-    """The native half of ``profile()``: collected and reshaped
-    driver-side up to ``_SEGMENT_COLLECT_LIMIT`` segments; past that the
+                 segment_cols: List[str]) -> Union[pa.Table, DataFrame]:
+    """The native half of ``profile()``: collected and reshaped into a
+    local table up to ``_SEGMENT_COLLECT_LIMIT`` segments; past that the
     same frames are exploded JVM-side into a lazy union."""
     jobs = _native_pass(
         df, aggs, lambda src: src.groupBy(*segment_cols),
@@ -240,9 +260,9 @@ def _native_long(df: DataFrame, aggs: List[PlannedAgg],
                          F.explode(F.array(*_long_structs(chunk)))
                          .alias("r")).select("segment", "r.*")
             for chunk, frame, _ in jobs])
-    return _local_profile_df(df.sparkSession, [
+    return _profile_table(
         out for chunk, _, rows in jobs for row in rows
-        for out in _component_rows(row["__segment"], chunk, row)])
+        for out in _component_rows(row["__segment"], chunk, row))
 
 
 # --------------------------------------------------------------------- sketch
@@ -448,16 +468,14 @@ def profile(
 
         sketches = plan_wide_sketches(
             df.schema, columns, segment_cols, config)
-        native = lambda: _local_profile_df(  # noqa: E731
-            df.sparkSession,
-            wide_native_rows(df, columns, segment_cols, config))
+        native = partial(wide_native_rows, df, columns, segment_cols, config)
     else:
         aggs, sketches = plan_dataframe(
             df.schema, columns, segment_cols, config)
         native = partial(_native_long, df, aggs, segment_cols)
-    long_df = _with_sketch_rows(df, sketches, segment_cols, config, native)
-    return ProfileView(long_df, config, dataset_timestamp,
-                       metadata=metadata)
+    long = _with_sketch_rows(df, sketches, segment_cols, config, native)
+    return ProfileView(long, config, dataset_timestamp, metadata=metadata,
+                       spark=df.sparkSession)
 
 
 def _with_sketch_rows(
@@ -466,32 +484,37 @@ def _with_sketch_rows(
     segment_cols: List[str],
     cfg: MetricConfig,
     native,
-) -> DataFrame:
-    """Union of the native half (``native()``) and the python sketch
-    half of a profile, run concurrently.
+) -> Union[pa.Table, DataFrame]:
+    """The native half (``native()``, a local table or a lazy frame)
+    followed by the python sketch half of a profile, run concurrently.
 
-    The sketch rows are collected and rebuilt as local rows, like the
-    native rows: one row per segment x column x component, so a view
-    never re-runs the sketch pass and leaves nothing cached behind.
-    Past ``_SEGMENT_COLLECT_LIMIT`` segments the sketch half stays a
-    lazy frame."""
+    The sketch rows are collected into a local table like the native
+    rows: one row per segment x column x component, so a view never
+    re-runs the sketch pass and leaves nothing cached behind. Past
+    ``_SEGMENT_COLLECT_LIMIT`` segments the sketch half stays a lazy
+    frame; when either half is lazy the result is their lazy union."""
     if not sketches:
         return native()
     spark = df.sparkSession
 
-    def sketch_half() -> DataFrame:
+    def sketch_half() -> Union[pa.Table, DataFrame]:
         sketch_df = _sketch_long(df, sketches, segment_cols, cfg)
         if not segment_cols:
-            return _local_profile_df(spark, sketch_df.collect())
+            return _profile_table(sketch_df.collect())
         # rows per segment: kll + its quantiles, or mg + items
         cap = _SEGMENT_COLLECT_LIMIT * len(sketches) * (
             2 + len(cfg.quantiles))
         rows = sketch_df.limit(cap + 1).collect()
         if len(rows) > cap:
             return sketch_df
-        return _local_profile_df(spark, rows)
+        return _profile_table(rows)
 
-    native_df, sketch_df = run_concurrent(spark, [native, sketch_half])
+    halves = run_concurrent(spark, [native, sketch_half])
+    if all(isinstance(h, pa.Table) for h in halves):
+        return pa.concat_tables(halves)
+    native_df, sketch_df = (
+        _table_df(spark, h) if isinstance(h, pa.Table) else h
+        for h in halves)
     return native_df.unionByName(sketch_df)
 
 
@@ -562,12 +585,12 @@ def profile_partitions(
                         _component_rows(seg, chunk, row))
 
     spark = df.sparkSession
-    long_dfs = run_concurrent(spark, [
+    longs = run_concurrent(spark, [
         partial(_with_sketch_rows, df, sketches, cols, config,
-                partial(_local_profile_df, spark, rows_by_part[pname]))
+                partial(_profile_table, rows_by_part[pname]))
         for pname, cols in part_items])
-    return {pname: ProfileView(long_df, config)
-            for (pname, _), long_df in zip(part_items, long_dfs)}
+    return {pname: ProfileView(long, config, spark=spark)
+            for (pname, _), long in zip(part_items, longs)}
 
 
 def merge_profiles(views: List["ProfileView"]) -> "ProfileView":
@@ -827,17 +850,28 @@ def _merge_profile_df(allp: DataFrame, cfg: MetricConfig) -> DataFrame:
 
 # ----------------------------------------------------------------------- view
 class ProfileView:
-    """Immutable handle on a long-form profile DataFrame.
+    """Immutable handle on a long-form profile.
 
     Equivalent of the reference's DatasetProfileView
-    (python/whylogs/core/view/dataset_profile_view.py:50) — but the profile
-    IS a DataFrame: write it with ``.df.write.parquet``, query it with SQL.
+    (python/whylogs/core/view/dataset_profile_view.py:50). A view made by
+    ``profile()`` or ``read_why1`` keeps its rows on the driver as one
+    Arrow table: summaries, component lookups and diffs read it with no
+    Spark job, and ``df`` is built from it on first use. A view over a
+    query (``ProfileStore.get``, ``merge_profiles``, a profile past 20k
+    segments) holds a lazy DataFrame. Either way the profile IS a
+    DataFrame: write it with ``.df.write.parquet``, query it with SQL.
     """
 
-    def __init__(self, df: DataFrame, config: MetricConfig = DEFAULT_CONFIG,
+    def __init__(self, df: Union[DataFrame, pa.Table],
+                 config: MetricConfig = DEFAULT_CONFIG,
                  dataset_timestamp=None, creation_timestamp=None,
-                 metadata: Optional[Dict[str, str]] = None):
-        self.df = df
+                 metadata: Optional[Dict[str, str]] = None,
+                 spark: Optional[SparkSession] = None):
+        if isinstance(df, pa.Table):
+            self._table, self._df = df, None
+        else:
+            self._table, self._df = None, df
+        self._spark = spark
         self.config = config
         # DatasetProperties parity (reference: dataset_profile.py:26 —
         # dataset/creation timestamps + tags/metadata; serialized by the
@@ -850,9 +884,52 @@ class ProfileView:
             or _dt.datetime.now(_dt.timezone.utc))
         self.metadata: Dict[str, str] = dict(metadata or {})
 
+    @property
+    def spark(self) -> SparkSession:
+        """The session the profile's DataFrame belongs to."""
+        if self._df is not None:
+            return self._df.sparkSession
+        return self._spark or SparkSession.active()
+
+    @property
+    def df(self) -> DataFrame:
+        """The profile as a DataFrame (built from the local table on
+        first use)."""
+        if self._df is None:
+            self._df = _table_df(self.spark, self._table)
+        return self._df
+
+    @df.setter
+    def df(self, df: DataFrame) -> None:
+        self._df, self._table = df, None
+
     def cache(self) -> "ProfileView":
-        self.df = self.df.cache()
+        if self._table is None:
+            self.df = self.df.cache()
         return self
+
+    def table(self, **where) -> pa.Table:
+        """The rows whose columns equal ``where``'s values (a list, tuple
+        or set matches any of its values) as an Arrow table in
+        PROFILE_SCHEMA's layout. A local view filters its table; a lazy
+        one pushes the filter into ``df`` and collects through Arrow."""
+        def multi(v):
+            return isinstance(v, (list, tuple, set, frozenset))
+
+        if self._table is None:
+            df = self.df
+            for col, v in where.items():
+                df = df.filter(F.col(col).isin(list(v)) if multi(v)
+                               else F.col(col) == v)
+            if df.columns != PROFILE_SCHEMA.names:
+                df = df.select(*PROFILE_SCHEMA.names)
+            return df.toArrow()
+        t = self._table
+        for col, v in where.items():
+            t = t.filter(pc.is_in(t[col], value_set=pa.array(
+                list(v), t.schema.field(col).type)) if multi(v)
+                else pc.equal(t[col], v))
+        return t
 
     def merge(self, other: "ProfileView") -> "ProfileView":
         return merge_profiles([self, other])
@@ -861,7 +938,7 @@ class ProfileView:
     def to_pandas(self) -> pd.DataFrame:
         """Wide summary: one row per (segment, column), one col per
         metric/component (reference: dataset_profile_view.py:461)."""
-        pdf = self.df.toPandas()
+        pdf = self.table().to_pandas()
         if pdf.empty:
             return pd.DataFrame()
         pdf["key"] = pdf["metric"] + "/" + pdf["component"]
@@ -881,14 +958,10 @@ class ProfileView:
         unsegmented key '{}'; pass segment=None to match any segment
         (first one wins — only deterministic for single-segment
         profiles)."""
-        cond = (
-            (F.col("column") == column)
-            & (F.col("metric") == metric)
-            & (F.col("component") == component)
-        )
+        where = dict(column=column, metric=metric, component=component)
         if segment is not None:
-            cond = cond & (F.col("segment") == segment)
-        rows = self.df.filter(cond).collect()
+            where["segment"] = segment
+        rows = self.table(**where).slice(0, 1).to_pylist()
         if not rows:
             return None
         r = rows[0]
@@ -923,8 +996,8 @@ class ProfileView:
         report numeric component deltas (reference: profile comparison in
         viz/notebook_profile_viz.py summary-drift report; the join-on-
         column alignment mirrors column_drift_algorithms.py:500-515)."""
-        a = self.df.toPandas()
-        b = other.df.toPandas()
+        a = self.table().to_pandas()
+        b = other.table().to_pandas()
         keys = ["segment", "column", "metric", "component"]
         for pdf in (a, b):
             pdf["value"] = pdf["n"].where(pdf["n"].notna(), pdf["d"])

@@ -47,42 +47,6 @@ def counts_table(df: DataFrame, columns: Optional[List[str]] = None) -> DataFram
     return wide.select(F.explode(F.array(*structs)).alias("r")).select("r.*")
 
 
-def numeric_table(
-    df: DataFrame, columns: Optional[List[str]] = None, ndigits: int = 4
-) -> DataFrame:
-    """(col_name, n_num, mean, stddev, vmin, vmax) per numeric column."""
-    cols = columns or [
-        f.name
-        for f in df.schema.fields
-        if value_type_of(f.dataType)
-        in (ValueType.INTEGRAL, ValueType.FRACTIONAL)
-    ]
-    aggs = []
-    for i, c in enumerate(cols):
-        v = F.col(c).cast(T.DoubleType())
-        v = F.when(~F.isnan(v), v)
-        aggs += [
-            F.count(v).alias(f"n_{i}"),
-            F.round(F.avg(v), ndigits).alias(f"mean_{i}"),
-            F.round(F.stddev_samp(v), ndigits).alias(f"sd_{i}"),
-            F.round(F.min(v), ndigits).alias(f"mn_{i}"),
-            F.round(F.max(v), ndigits).alias(f"mx_{i}"),
-        ]
-    wide = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("col_name"),
-            F.col(f"n_{i}").alias("n_num"),
-            F.col(f"mean_{i}").alias("mean"),
-            F.col(f"sd_{i}").alias("stddev"),
-            F.col(f"mn_{i}").alias("vmin"),
-            F.col(f"mx_{i}").alias("vmax"),
-        )
-        for i, c in enumerate(cols)
-    ]
-    return wide.select(F.explode(F.array(*structs)).alias("r")).select("r.*")
-
-
 def string_table(
     df: DataFrame, columns: Optional[List[str]] = None, ndigits: int = 4
 ) -> DataFrame:

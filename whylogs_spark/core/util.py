@@ -242,7 +242,11 @@ def ensure_parallelism(df: DataFrame,
 def run_concurrent(spark: SparkSession,
                    thunks: Sequence[Callable[[], object]]) -> List[object]:
     """Run independent Spark-launching thunks on at most 8 driver threads
-    and return their results in order; a failure raises.
+    and return their results in order.
+
+    Every thunk runs to its end. If any fail, the first failure in
+    submission order is raised with each later failure attached as a
+    note, so the caller sees its own exception type.
 
     Each thunk gets its own ``inheritable_thread_target(spark)`` copy of
     the caller's local properties: its jobs carry the caller's job group
@@ -256,4 +260,9 @@ def run_concurrent(spark: SparkSession,
 
     with ThreadPoolExecutor(max_workers=max(1, min(len(thunks), 8))) as pool:
         futures = [pool.submit(wrap(t)) for t in thunks]
-        return [f.result() for f in futures]
+    failures = [e for e in (f.exception() for f in futures) if e is not None]
+    if failures:
+        for other in failures[1:]:
+            failures[0].add_note(f"a concurrent thunk also failed: {other!r}")
+        raise failures[0]
+    return [f.result() for f in futures]

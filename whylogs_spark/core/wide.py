@@ -42,6 +42,7 @@ from __future__ import annotations
 from functools import partial
 from typing import Dict, Iterable, List, Optional, Tuple
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -191,11 +192,12 @@ def wide_native_rows(
     segment_cols: List[str],
     cfg: MetricConfig,
     collect_limit: int = 200_000,
-) -> List[tuple]:
-    """Run the per-class unpivoted aggregations; return long-form profile
-    rows (segment, column, metric, component, n, d, s, b)."""
+) -> pa.Table:
+    """Run the per-class unpivoted aggregations; return the long-form
+    profile rows (segment, column, metric, component, n, d, s, b) as a
+    local Arrow table."""
     from .profiler import (  # lazy: avoid import cycle
-        _NULL_SENTINEL, _segment_json_py,
+        _NULL_SENTINEL, _profile_table, _segment_json_py,
     )
 
     fields: List[Tuple[str, ValueType]] = []
@@ -360,4 +362,4 @@ def wide_native_rows(
                 emit(seg, col, "cardinality", "upper", d=fd(rd["upperb"]))
             else:
                 emit(seg, col, "cardinality", "est", d=fd(rd["est"]))
-    return out
+    return _profile_table(out)

@@ -230,9 +230,7 @@ def write_why1(view, path: str, compat: str = "full") -> None:
     """
     if compat not in ("full", "reference"):
         raise ValueError("compat must be 'full' or 'reference'")
-    import pandas as pd  # noqa: F401  (toPandas dependency)
-
-    pdf = view.df.toPandas()
+    pdf = view.table().to_pandas(integer_object_nulls=True)
     segs = set(pdf["segment"].unique())
     if segs - {"{}"}:
         raise ValueError(
@@ -242,7 +240,7 @@ def write_why1(view, path: str, compat: str = "full") -> None:
     from .fsio import write_bytes
 
     write_bytes(path, _profile_file_bytes(pdf, view, compat),
-                spark=view.df.sparkSession)
+                spark=view.spark)
 
 
 def _profile_file_bytes(pdf, view, compat: str,
@@ -393,7 +391,7 @@ def write_why1_segmented(view, dir_path: str,
 
     if compat not in ("full", "reference"):
         raise ValueError("compat must be 'full' or 'reference'")
-    pdf = view.df.toPandas()
+    pdf = view.table().to_pandas(integer_object_nulls=True)
     segs = sorted(set(pdf["segment"].unique()))
     if segs == ["{}"] or not segs:
         raise ValueError(
@@ -418,7 +416,7 @@ def write_why1_segmented(view, dir_path: str,
             pdf[pdf["segment"] == seg], view, compat,
             seg_tags=seg_tags, seg_meta=seg_meta)
         path = f"{dir_path.rstrip('/')}/segment_{i:05d}.bin"
-        write_bytes(path, data, spark=view.df.sparkSession)
+        write_bytes(path, data, spark=view.spark)
         paths_out.append(path)
     return paths_out
 
@@ -586,7 +584,7 @@ def read_why1(spark, path: str, columns: Optional[List[str]] = None,
               config=None):
     """Parse a WHY1 file into a ProfileView."""
     from ..core.configs import DEFAULT_CONFIG
-    from ..core.profiler import PROFILE_SCHEMA, ProfileView
+    from ..core.profiler import ProfileView, _profile_table
 
     import datetime as _dt
 
@@ -598,11 +596,10 @@ def read_why1(spark, path: str, columns: Optional[List[str]] = None,
         return _dt.datetime.fromtimestamp(ms / 1000.0, _dt.timezone.utc)
 
     return ProfileView(
-        spark.createDataFrame(rows, PROFILE_SCHEMA),
-        config or DEFAULT_CONFIG,
+        _profile_table(rows), config or DEFAULT_CONFIG,
         dataset_timestamp=from_ms(props["dataset_timestamp"]),
         creation_timestamp=from_ms(props["creation_timestamp"]),
-        metadata=props["metadata"])
+        metadata=props["metadata"], spark=spark)
 
 
 def read_why1_segmented(spark, paths, columns: Optional[List[str]] = None,
@@ -620,7 +617,7 @@ def read_why1_segmented(spark, paths, columns: Optional[List[str]] = None,
     import os
 
     from ..core.configs import DEFAULT_CONFIG
-    from ..core.profiler import PROFILE_SCHEMA, ProfileView
+    from ..core.profiler import ProfileView, _profile_table
 
     if isinstance(paths, str):
         d = paths
@@ -641,6 +638,5 @@ def read_why1_segmented(spark, paths, columns: Optional[List[str]] = None,
                     "the views before writing)")
             segs_seen.add(seg)
         rows.extend(seg_rows)
-    return ProfileView(
-        spark.createDataFrame(rows, PROFILE_SCHEMA),
-        config or DEFAULT_CONFIG)
+    return ProfileView(_profile_table(rows), config or DEFAULT_CONFIG,
+                       spark=spark)

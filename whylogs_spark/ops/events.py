@@ -1069,66 +1069,6 @@ def frequent_sequences(
     )
 
 
-def resample_timeseries(
-    df: DataFrame,
-    time_col: str = "ts",
-    value_col: str = "value",
-    key_cols: Optional[Sequence[str]] = None,
-    grain: str = "hour",
-    fill: str = "ffill",
-) -> DataFrame:
-    """Regularize an irregular event series onto a dense per-key
-    bucket spine: one row per (key, bucket) from the key's first to
-    its last observation, gaps filled — the resample step before any
-    fixed-step model (forecasting, autocorrelation, CUSUM) that
-    assumes evenly spaced points.
-
-    ``fill``: ``"ffill"`` carries the last observed bucket mean
-    forward (nulls before the first observation stay null —
-    resampling never invents a past), ``"zero"`` fills 0.0 (count
-    semantics), ``"none"`` leaves gaps null.  Returns ``(key...,
-    bucket_start, value, n_events, is_gap)``.
-
-    Scale shape: observations collapse to one partial-agged row per
-    (key, bucket); the dense spine is an in-plan ``sequence``
-    explode off each key's 1-row min/max aggregate (spine length =
-    the key's time span over the grain — pick the grain to match);
-    the gap fill is a per-key ROW window over the spine.  Skew bound
-    = one key's spine, never the raw events.
-    """
-    if fill not in ("ffill", "zero", "none"):
-        raise ValueError(f"fill must be ffill|zero|none: {fill}")
-    gsec = _grain_seconds(grain)
-    keys = list(key_cols or [])
-    v = F.col(value_col).cast("double")
-    base = df.filter(F.col(time_col).isNotNull()).select(
-        *keys, _bucket_idx(time_col, gsec).alias("__b"),
-        v.alias("__v"))
-    g = base.groupBy(*keys, "__b").agg(
-        F.avg("__v").alias("__val"),
-        F.count(F.lit(1)).alias("n_events"))
-    span = g.groupBy(*keys).agg(F.min("__b").alias("__lo"),
-                                F.max("__b").alias("__hi"))
-    spine = span.select(
-        *keys, F.explode(F.sequence(F.col("__lo"), F.col("__hi")))
-        .alias("__b"))
-    j = spine.join(g, keys + ["__b"], "left")
-    w = Window.partitionBy(*[F.col(c) for c in keys]) \
-        .orderBy(F.col("__b")) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    if fill == "ffill":
-        val = F.last("__val", ignorenulls=True).over(w)
-    elif fill == "zero":
-        val = F.coalesce(F.col("__val"), F.lit(0.0))
-    else:
-        val = F.col("__val")
-    return j.select(
-        *keys, _bucket_ts("__b", gsec).alias("bucket_start"),
-        val.alias("value"),
-        F.coalesce("n_events", F.lit(0)).alias("n_events"),
-        F.col("__val").isNull().alias("is_gap"))
-
-
 def time_weighted_average(
     df: DataFrame,
     time_col: str,

@@ -7,11 +7,12 @@ file that renders anywhere (notebook cell via IPython.display.HTML,
 file://, CI artifact) with zero dependencies.
 
 All rendering is driver-side over an already-computed ProfileView — a
-few KB of summary rows and sketch bytes per column. Each report runs
-at most TWO Spark actions (the summary ``toPandas`` and one batched
-collect of every KLL blob), never a job per column: an uncached view
-is a live aggregation plan, and re-executing it per histogram would
-turn a 50-column report into 50 profile computations.
+few KB of summary rows and sketch bytes per column. A profile report
+over a view that holds its rows locally (``profile()``, ``read_why1``)
+runs no Spark action at all; over a lazy view it runs at most TWO (the
+summary and one batched collect of every KLL blob), never a job per
+column: a lazy view is a live aggregation plan, and re-executing it per
+histogram would turn a 50-column report into 50 profile computations.
 """
 
 from __future__ import annotations
@@ -24,14 +25,10 @@ def _kll_histograms(view, n_bins: int = 30) -> Dict[tuple, list]:
     """(segment, column) -> histogram triples, from ONE collect of the
     view's KLL rows — segment-correct (a per-segment card gets its own
     segment's sketch, not the global one)."""
-    from pyspark.sql import functions as F
-
     from .core.sketches import KllSketch
 
-    rows = view.df.filter(
-        (F.col("metric") == "distribution")
-        & (F.col("component") == "kll")
-    ).select("segment", "column", "b").collect()
+    rows = view.table(metric="distribution", component="kll").select(
+        ["segment", "column", "b"]).to_pylist()
     out: Dict[tuple, list] = {}
     for r in rows:
         if r["b"] is None:
