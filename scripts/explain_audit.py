@@ -142,19 +142,13 @@ def main() -> None:
     # 5c. wide-mode profile: posexplode a primitive array per type
     # class -> partial agg by int column id -> tiny shuffle -> final
     # agg (O(1) plan size in width, no string group key)
-    from whylogs_spark.core.wide import (_class_aggs, _class_scalar,
-                                         _class_views)
     from whylogs_spark.core.datatypes import ValueType
-    stacked = li.select(F.posexplode(F.array(
-        *[_class_scalar(c, ValueType.FRACTIONAL)
-          for c in ("l_quantity", "l_extendedprice", "l_discount")]
-    )).alias("pos", "val")).select(
-        F.col("pos").alias("cid"), *_class_views(ValueType.FRACTIONAL))
-    wmode = stacked.groupBy("cid").agg(
-        *_class_aggs(ValueType.FRACTIONAL,
-                     wsp.MetricConfig(quantile_impl="none",
-                                      frequent_items_impl="none",
-                                      cardinality_impl="approx")))
+    from whylogs_spark.core.wide import class_frame
+    _, wmode = class_frame(
+        li, ValueType.FRACTIONAL,
+        ["l_quantity", "l_extendedprice", "l_discount"], [],
+        wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
+                         cardinality_impl="approx"))
     sections.append((
         "wide-mode class aggregation", wmode,
         {

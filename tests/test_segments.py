@@ -165,22 +165,27 @@ def _rows_by_key(view):
 
 def test_past_limit_fallback_matches_collected(spark, monkeypatch):
     """Past ``_SEGMENT_COLLECT_LIMIT`` segments the native frames are
-    exploded JVM-side instead of collected; the rows must not change."""
+    exploded JVM-side instead of collected, on the narrow and the wide
+    path alike; the rows must not change."""
     from whylogs_spark.core import profiler
 
     df = spark.createDataFrame(
         [(i % 6, float(i % 17) * 0.5, f"s{i % 7}", i % 5)
          for i in range(600)],
         "k int, x double, s string, i int").coalesce(1)
-    collected = wsp.profile(df, segment_by=["k"])
+    configs = [wsp.MetricConfig(),
+               wsp.MetricConfig(wide_column_threshold=1)]
+    collected = [wsp.profile(df, segment_by=["k"], config=cfg)
+                 for cfg in configs]
     monkeypatch.setattr(profiler, "_SEGMENT_COLLECT_LIMIT", 2)
-    fallback = wsp.profile(df, segment_by=["k"])
-    plan = fallback.df._jdf.queryExecution().optimizedPlan().toString()
-    assert "Generate" in plan and "Generate" not in (
-        collected.df._jdf.queryExecution().optimizedPlan().toString())
-    want = _rows_by_key(collected)
-    assert len({seg for seg, *_ in want}) == 6
-    assert _rows_by_key(fallback) == want
+    for cfg, view in zip(configs, collected):
+        fallback = wsp.profile(df, segment_by=["k"], config=cfg)
+        plan = fallback.df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Generate" in plan and "Generate" not in (
+            view.df._jdf.queryExecution().optimizedPlan().toString())
+        want = _rows_by_key(view)
+        assert len({seg for seg, *_ in want}) == 6
+        assert _rows_by_key(fallback) == want
 
 
 def test_partition_view_query_runs_no_extra_jobs(lineitem, launched_jobs):

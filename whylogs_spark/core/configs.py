@@ -41,9 +41,10 @@ class MetricConfig:
     #            | "approx" (approx_count_distinct, estimate only)
     cardinality_impl: str = "hll"
     # At/above this many profiled columns, switch to the wide path
-    # (unpivot per type class + groupBy(colname): O(1) plan size — see
-    # core/wide.py). Below it, the narrow per-column-expression path
-    # (vectorized per-column aggregates; plan cost amortizes over rows).
+    # (unpivot per type class + groupBy(segments, int column id): O(1)
+    # plan size — see core/wide.py). Below it, the narrow
+    # per-column-expression path (vectorized per-column aggregates; plan
+    # cost amortizes over rows).
     wide_column_threshold: int = 96
 
     @property

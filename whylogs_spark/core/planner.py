@@ -158,7 +158,6 @@ def plan_column(
     vt = value_type_of(dt)
     c = qcol(col)
     aggs: List[PlannedAgg] = []
-    sketches: List[SketchPlan] = []
 
     def add(metric: str, component: str, slot: str, expr: Column,
             tier: str = "codegen", emit: bool = True) -> str:
@@ -249,9 +248,6 @@ def plan_column(
                 add_derived(
                     "distribution", _q_name(q), SLOT_D, qalias,
                     _item_getter(i), tier="object")
-        elif cfg.quantile_impl == "kll":
-            sketches.append(
-                SketchPlan(col, "kll", nv, f"__kll__{aliases.next()}"))
 
     # ---- ints (reference: metrics.py:165)
     if vt == ValueType.INTEGRAL:
@@ -283,15 +279,6 @@ def plan_column(
                 F.approx_count_distinct(sv).cast(T.DoubleType()),
                 tier="codegen")
 
-    # ---- frequent items (reference: metrics.py:444)
-    if cfg.frequent_items_impl == "sketch" and vt in (
-        ValueType.INTEGRAL, ValueType.BOOLEAN, ValueType.STRING,
-        ValueType.TEMPORAL,
-    ):
-        sketches.append(
-            SketchPlan(col, "fi", _string_view(col, vt),
-                       f"__fi__{aliases.next()}"))
-
     # ---- registered custom metrics (reference plug-in surface:
     # @custom_metric/register_metric, metrics.py:60,156) — user-supplied
     # aggregate expressions run in the same codegen pass as built-ins
@@ -303,7 +290,27 @@ def plan_column(
         for comp in m.components:
             add(m.namespace, comp.component, comp.slot, comp.expr(c))
 
-    return aggs, sketches
+    return aggs, sketch_plans(col, vt, cfg, aliases)
+
+
+def sketch_plans(col: str, vt: ValueType, cfg: MetricConfig,
+                 aliases: "_AliasGen") -> List[SketchPlan]:
+    """The python-sketched metrics of one column, for both profile
+    paths: a KLL sketch of the numeric view for integral, fractional and
+    temporal columns (distribution quantiles, reference metrics.py:217)
+    and a frequent-items sketch of the string view for integral,
+    boolean, string and temporal ones (reference metrics.py:444)."""
+    out: List[SketchPlan] = []
+    if cfg.quantile_impl == "kll" and vt in (
+            ValueType.INTEGRAL, ValueType.FRACTIONAL, ValueType.TEMPORAL):
+        out.append(SketchPlan(col, "kll", _numeric_view(col, vt),
+                              f"__kll__{aliases.next()}"))
+    if cfg.frequent_items_impl == "sketch" and vt in (
+            ValueType.INTEGRAL, ValueType.BOOLEAN, ValueType.STRING,
+            ValueType.TEMPORAL):
+        out.append(SketchPlan(col, "fi", _string_view(col, vt),
+                              f"__fi__{aliases.next()}"))
+    return out
 
 
 def _q_name(q: float) -> str:
@@ -366,6 +373,15 @@ class _AliasGen:
         return f"a{self._i}"
 
 
+def profiled_fields(schema: T.StructType, columns: Optional[List[str]],
+                    segment_cols: List[str]) -> List[T.StructField]:
+    """The fields a profile covers: ``columns`` (all when None) minus
+    the segment keys, in schema order."""
+    return [f for f in schema.fields
+            if f.name not in segment_cols
+            and (columns is None or f.name in columns)]
+
+
 _PLAN_CACHE: dict = {}
 _PLAN_CACHE_MAX = 64
 
@@ -400,11 +416,7 @@ def plan_dataframe(
     gen = _AliasGen()
     aggs: List[PlannedAgg] = []
     sketches: List[SketchPlan] = []
-    for field in schema.fields:
-        if field.name in segment_cols:
-            continue
-        if columns is not None and field.name not in columns:
-            continue
+    for field in profiled_fields(schema, columns, segment_cols):
         a, s = plan_column(field.name, field.dataType, cfg, gen)
         aggs.extend(a)
         sketches.extend(s)

@@ -52,7 +52,7 @@ from __future__ import annotations
 
 import json
 from functools import partial, reduce
-from typing import Dict, Iterable, Iterator, List, Optional, Union
+from typing import Dict, Iterable, Iterator, List, NamedTuple, Optional, Union
 
 import pandas as pd
 import pyarrow as pa
@@ -66,7 +66,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from .configs import DEFAULT_CONFIG, MetricConfig
 from .planner import (
     SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, SketchPlan, _q_name,
-    plan_dataframe,
+    plan_dataframe, profiled_fields,
 )
 from .sketches import (FrequentStringsSketch, KllSketch, merge_fi_blobs,
                        merge_kll_blobs)
@@ -100,13 +100,16 @@ _NULL_SENTINEL = "None"  # segment key for null values (reference uses the
 # pandas groupby NaN-safe path, segment_processing.py:77-88)
 
 
-def _segment_json_col(segment_cols: List[str]) -> Column:
-    """JSON segment key built JVM-side; python side must build identically."""
+def _segment_json_col(segment_cols: List[str],
+                      values: Optional[List[str]] = None) -> Column:
+    """JSON segment key built JVM-side; python side must build identically.
+    ``values`` names the columns holding the keys' values when they are
+    not the keys themselves."""
     pairs = []
-    for s in segment_cols:
+    for s, v in zip(segment_cols, values or segment_cols):
         pairs.append(F.lit(s))
         pairs.append(
-            F.coalesce(F.col(s).cast(T.StringType()), F.lit(_NULL_SENTINEL))
+            F.coalesce(F.col(v).cast(T.StringType()), F.lit(_NULL_SENTINEL))
         )
     if not pairs:
         return F.lit("{}")
@@ -129,6 +132,27 @@ _SLOTS = ((SLOT_N, T.LongType(), int), (SLOT_D, T.DoubleType(), float),
           (SLOT_S, T.StringType(), None), (SLOT_B, T.BinaryType(), bytes))
 
 _SEGMENT_COLLECT_LIMIT = 20_000
+
+
+class _Job(NamedTuple):
+    """One native aggregate job: its planned aggregates, its frame (keyed
+    by ``__segment``), the frame's collected rows (None past the collect
+    limit) and, on the wide path, the profiled column names indexed by
+    the frame's ``cid`` key."""
+
+    chunk: List[PlannedAgg]
+    frame: DataFrame
+    rows: Optional[List[dict]]
+    names: Optional[List[str]] = None
+
+
+def _collect(frame: DataFrame,
+             rows_per_segment: int = 1) -> Optional[List[dict]]:
+    """``frame``'s rows as dicts, or None past ``_SEGMENT_COLLECT_LIMIT``
+    segments of ``rows_per_segment`` rows each."""
+    limit = _SEGMENT_COLLECT_LIMIT * rows_per_segment
+    rows = frame.limit(limit + 1).collect()
+    return None if len(rows) > limit else [r.asDict() for r in rows]
 
 
 def _native_work(aggs: List[PlannedAgg], by_column: bool) -> List[tuple]:
@@ -178,11 +202,10 @@ def _native_frame(grouped: GroupedData, chunk: List[PlannedAgg],
 
 
 def _native_pass(df: DataFrame, aggs: List[PlannedAgg], group, keys,
-                 key_aggs=(), by_column: bool = False) -> List[tuple]:
+                 key_aggs=(), by_column: bool = False) -> List[_Job]:
     """Build one :func:`_native_frame` per :func:`_native_work` job over
-    ``group(df)`` and collect them concurrently (up to
-    ``_SEGMENT_COLLECT_LIMIT + 1`` rows each) -> ``[(chunk, frame,
-    row dicts)]``."""
+    ``group(df)`` and collect them concurrently, up to
+    ``_SEGMENT_COLLECT_LIMIT`` rows each."""
 
     def job(tier, chunk):
         # the interpreted object tier gets cores for its partial-agg
@@ -190,36 +213,41 @@ def _native_pass(df: DataFrame, aggs: List[PlannedAgg], group, keys,
         # faster than the round-robin shuffle that would split it
         src = _ensure_parallelism(df) if tier == "object" else df
         frame = _native_frame(group(src), chunk, keys, key_aggs)
-        rows = frame.limit(_SEGMENT_COLLECT_LIMIT + 1).collect()
-        return chunk, frame, [r.asDict() for r in rows]
+        return _Job(chunk, frame, _collect(frame))
 
     return run_concurrent(df.sparkSession, [
         partial(job, tier, chunk)
         for tier, chunk in _native_work(aggs, by_column)])
 
 
-def _component_rows(seg: str, chunk: List[PlannedAgg],
-                    row: dict) -> Iterator[tuple]:
-    """Long-form profile rows of one collected native row."""
+def _component_rows(seg: str, chunk: List[PlannedAgg], row: dict,
+                    names: Optional[List[str]] = None) -> Iterator[tuple]:
+    """Long-form profile rows of one collected native row (its column
+    name is ``names[row["cid"]]`` when ``names`` is given)."""
+    column = names[row["cid"]] if names else None
     for a in chunk:
         if not a.emit:
             continue
         v = a.const if a.const is not None else row.get(a.alias)
-        yield (seg, a.column, a.metric, a.component, *(
+        yield (seg, a.column if column is None else column, a.metric,
+               a.component, *(
             None if v is None or slot != a.slot else cast(v) if cast else v
             for slot, _, cast in _SLOTS))
 
 
-def _long_structs(aggs: List[PlannedAgg]) -> List[Column]:
+def _long_structs(aggs: List[PlannedAgg],
+                  names: Optional[List[str]] = None) -> List[Column]:
     """One struct per emitted component over a :func:`_native_frame`,
-    typed-slot aligned: its alias column, or its constant."""
+    typed-slot aligned: its alias column, or its constant. With
+    ``names``, the column name is the frame's ``cid``-th name."""
+    column = F.array(*map(F.lit, names))[F.col("cid")] if names else None
     structs = []
     for a in aggs:
         if not a.emit:
             continue
         value = F.lit(a.const) if a.const is not None else F.col(a.alias)
         structs.append(F.struct(
-            F.lit(a.column).alias("column"),
+            (F.lit(a.column) if column is None else column).alias("column"),
             F.lit(a.metric).alias("metric"),
             F.lit(a.component).alias("component"),
             *[(value if slot == a.slot else F.lit(None)).cast(dt).alias(slot)
@@ -245,24 +273,31 @@ def _table_df(spark: SparkSession, table: pa.Table) -> DataFrame:
         max(1, -(-table.num_rows // _SLICE_ROWS)))
 
 
+def _long_form(jobs: List[_Job]) -> Union[pa.Table, DataFrame]:
+    """The native half of a profile: the jobs' collected rows reshaped
+    into a local table; when any job passed its collect limit
+    (``_SEGMENT_COLLECT_LIMIT`` segments), the jobs' frames exploded
+    JVM-side into a lazy union instead."""
+    if any(j.rows is None for j in jobs):
+        return reduce(DataFrame.unionByName, [
+            j.frame.select(F.col("__segment").alias("segment"),
+                           F.explode(F.array(*_long_structs(j.chunk,
+                                                            j.names)))
+                           .alias("r")).select("segment", "r.*")
+            for j in jobs])
+    return _profile_table(
+        out for j in jobs for row in j.rows
+        for out in _component_rows(row["__segment"], j.chunk, row,
+                                   j.names))
+
+
 def _native_long(df: DataFrame, aggs: List[PlannedAgg],
                  segment_cols: List[str]) -> Union[pa.Table, DataFrame]:
-    """The native half of ``profile()``: collected and reshaped into a
-    local table up to ``_SEGMENT_COLLECT_LIMIT`` segments; past that the
-    same frames are exploded JVM-side into a lazy union."""
-    jobs = _native_pass(
+    """The narrow path's native half: one ``groupBy(segments)`` pass."""
+    return _long_form(_native_pass(
         df, aggs, lambda src: src.groupBy(*segment_cols),
         [_segment_json_col(segment_cols).alias("__segment")],
-        by_column=not segment_cols)
-    if any(len(rows) > _SEGMENT_COLLECT_LIMIT for _, _, rows in jobs):
-        return reduce(DataFrame.unionByName, [
-            frame.select(F.col("__segment").alias("segment"),
-                         F.explode(F.array(*_long_structs(chunk)))
-                         .alias("r")).select("segment", "r.*")
-            for chunk, frame, _ in jobs])
-    return _profile_table(
-        out for chunk, _, rows in jobs for row in rows
-        for out in _component_rows(row["__segment"], chunk, row))
+        by_column=not segment_cols))
 
 
 # --------------------------------------------------------------------- sketch
@@ -411,7 +446,9 @@ def profile(
     dataset_timestamp=None,
     metadata: Optional[Dict[str, str]] = None,
 ) -> "ProfileView":
-    """Profile a DataFrame -> ProfileView (lazy long-form profile).
+    """Profile a DataFrame -> ProfileView holding the long-form profile
+    rows on the driver (a lazy frame past ``_SEGMENT_COLLECT_LIMIT``
+    segments).
 
     Equivalent of ``why.log(df)`` (+ segmentation when ``segment_by`` is
     given, reference: python/whylogs/api/logger/segment_processing.py:157).
@@ -458,10 +495,7 @@ def profile(
     # narrow path.
     from .registry import registered_metrics
 
-    n_profiled = sum(
-        1 for f in df.schema.fields
-        if f.name not in segment_cols
-        and (columns is None or f.name in columns))
+    n_profiled = len(profiled_fields(df.schema, columns, segment_cols))
     if (n_profiled >= config.wide_column_threshold
             and not registered_metrics()):
         from .wide import plan_wide_sketches, wide_native_rows
@@ -570,19 +604,19 @@ def profile_partitions(
         lambda src: src.groupingSets(sets_exprs,
                                      *[F.col(c) for c in all_cols]),
         keys, key_aggs=[F.grouping_id().alias("__gid")])
-    if any(len(rows) > _SEGMENT_COLLECT_LIMIT for _, _, rows in jobs):
+    if any(j.rows is None for j in jobs):
         raise ValueError(
             "profile_partitions: too many segments to collect; "
             "profile each partition separately")
 
     rows_by_part: Dict[str, List[tuple]] = {p: [] for p, _ in part_items}
-    for chunk, _, rows in jobs:
-        for row in rows:
+    for j in jobs:
+        for row in j.rows:
             for pname, cols in part_items:
                 if gid_for_part[pname] == row["__gid"]:
                     seg = _segment_json_py(cols, [row[c] for c in cols])
                     rows_by_part[pname].extend(
-                        _component_rows(seg, chunk, row))
+                        _component_rows(seg, j.chunk, row))
 
     spark = df.sparkSession
     longs = run_concurrent(spark, [
