@@ -1566,7 +1566,7 @@ def main() -> None:
 
     # 9z5o. QQ drift: two quantile walks -> broadcast cross join;
     # no partition-less sort of the raw data.  The production walks
-    # cut lineage at their entry (core/prefix.py cut_lineage), which
+    # cut lineage at their entry (core/util.py materialize), which
     # hides the parquet scan behind `Scan ExistingRDD` in explain() —
     # the scan-level assertions are therefore captured with the
     # kill-switch off (same logical plan, compiled into the

@@ -82,6 +82,8 @@ SLOW_TESTS = {
     "test_classify.py::test_classifier_matches_reference_model",
     "test_ops.py::test_minhash_detects_near_dups",
     "test_streaming.py::test_streaming_value_counts_topk_matches_batch",
+    "test_materialize.py::test_fits_release_their_base",
+    "test_materialize.py::test_pagerank_keeps_only_the_final_state",
     "test_abtest.py::test_ab_report_global_and_filters",
     "test_stats_assoc.py::test_mutual_information_extremes",
     "test_streaming.py::test_streaming_native_profile_matches_batch",

@@ -1,16 +1,17 @@
-"""r13 plan-shaping helpers: adaptive ensure_parallelism width,
-conditional lineage cut for derived profile inputs, and the
-iteration_base right-sizing used by every IRLS-style fit."""
+"""Plan-shaping helpers: adaptive ensure_parallelism width, and
+materialize — the conditional cut for derived profile inputs
+(formerly cut_derived_lineage) and the right-sized cut every
+IRLS-style fit takes of its base (formerly iteration_base)."""
 
 import pyspark.sql.functions as F
 import pytest
 
+from whylogs_spark.core import util
 from whylogs_spark.core.util import (
     MIN_ADAPTIVE_SLICES,
     _has_expensive_node,
-    cut_derived_lineage,
     ensure_parallelism,
-    iteration_base,
+    materialize,
     plan_size_estimate,
 )
 
@@ -47,11 +48,11 @@ def test_expensive_node_skips_cache_build_plan(spark, lineitem):
 
 
 def test_cut_derived_lineage_noop_on_scan(spark, lineitem):
-    out = cut_derived_lineage(lineitem)
+    out = materialize(lineitem, only_if_expensive=True)
     assert out is lineitem
 
 
-def test_cut_derived_lineage_skips_unbounded(spark, lineitem):
+def test_cut_derived_lineage_skips_unbounded(spark, lineitem, monkeypatch):
     # a row-EXPANDING derived plan (10x crossJoin replication) has an
     # expensive node but an unbounded estimate: materializing it costs
     # more than the column-pruned re-scans it would save — must NOT cut
@@ -60,27 +61,22 @@ def test_cut_derived_lineage_skips_unbounded(spark, lineitem):
         spark.range(10).select(F.col("id").alias("__rep"))).drop("__rep")
     est = plan_size_estimate(li10)
     if est is not None and est > 256 * 1024 * 1024:
-        assert cut_derived_lineage(li10) is li10
-    # and the cap is conf-overridable: shrink it so even a small
-    # derived frame is refused
+        assert materialize(li10, only_if_expensive=True) is li10
+    # shrink the cap so even a small derived frame is refused
     small = lineitem.select("l_orderkey").offset(10).limit(10)
-    spark.conf.set("spark.whylogs.checkpointMaxBytes", "0")
-    try:
-        assert cut_derived_lineage(small) is small
-    finally:
-        spark.conf.unset("spark.whylogs.checkpointMaxBytes")
-    assert cut_derived_lineage(small) is not small
-    # caller-asserted bounded inputs bypass the gate
-    spark.conf.set("spark.whylogs.checkpointMaxBytes", "0")
-    try:
-        assert cut_derived_lineage(small, bounded=True) is not small
-    finally:
-        spark.conf.unset("spark.whylogs.checkpointMaxBytes")
+    with monkeypatch.context() as m:
+        m.setattr(util, "CHECKPOINT_MAX_BYTES", 0)
+        assert materialize(small, only_if_expensive=True) is small
+    assert materialize(small, only_if_expensive=True) is not small
+    # an unconditional cut ignores the gate
+    with monkeypatch.context() as m:
+        m.setattr(util, "CHECKPOINT_MAX_BYTES", 0)
+        assert materialize(small) is not small
 
 
 def test_cut_derived_lineage_values_identical(spark, lineitem):
     sl = lineitem.select("l_orderkey", "l_quantity").offset(100).limit(50)
-    cut = cut_derived_lineage(sl)
+    cut = materialize(sl, only_if_expensive=True)
     assert cut is not sl
     a = sorted(r["l_orderkey"] for r in sl.collect())
     b = sorted(r["l_orderkey"] for r in cut.collect())
@@ -117,7 +113,7 @@ def test_iteration_base_right_sizes_and_cuts(spark, orders):
         (F.col("o_totalprice") / 1000.0).alias("__y"),
         (F.col("o_custkey") % 10).cast("double").alias("__x0"),
     ).repartition(4)
-    ck = iteration_base(base)
+    ck = materialize(base)
     # a few hundred KB of doubles must coalesce below the input width
     assert ck.rdd.getNumPartitions() <= 4
     # lineage is cut: the checkpointed plan has no shuffle left

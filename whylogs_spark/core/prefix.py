@@ -18,6 +18,13 @@ Requirement: ``order_cols`` must be a UNIQUE key of ``df`` (a range
 boundary between duplicate keys would split ties across partitions
 nondeterministically). Both AUC and KS satisfy this by construction —
 their walks run over groupBy(value)-collapsed DISTINCT values.
+
+Every walk materializes its input first (``core.util.materialize``):
+a pass consumes its input from TWO plan branches (local window +
+slice totals), so without the cut a CHAIN of passes doubles the
+upstream subtree per pass — ``cumulative_incidence`` at sf0.1 planned
+220 Exchange nodes and dozens of serialized broadcast rebuilds before
+the cut, and stays linear after it.
 """
 
 from __future__ import annotations
@@ -27,74 +34,11 @@ from typing import List, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .util import materialize
+
 #: Prefix for the emitted cumulative columns: running_sums(df, ..., ["x"])
 #: adds an inclusive running total named ``__cum_x``.
 CUM_PREFIX = "__cum_"
-
-
-def cut_lineage(df: DataFrame) -> DataFrame:
-    """Truncate the walk input's logical plan (lazy localCheckpoint).
-
-    Why (r13 optimization round, guide §3.3/§5 "materialising an
-    intermediate truncates the plan"): every two-phase pass consumes
-    its input from TWO plan branches (local window + slice totals), so
-    a CHAIN of passes doubles the upstream subtree per pass — measured
-    on ``cumulative_incidence`` at sf0.1, the physical plan carried
-    220 Exchange nodes and dozens of serialized single-task
-    BroadcastExchange rebuilds (52 s of "time to collect" in one cold
-    run) because the duplicated slice-rollup broadcasts stop deduping
-    across AQE stage boundaries.  Cutting lineage at each pass input
-    keeps every plan linear: one exchange, two broadcast builds per
-    pass, O(1) plan size however long the chain.
-
-    Why ``localCheckpoint(eager=False)`` and NOT ``.persist()``: the
-    cache manager keys entries by canonical plan, so a persisted
-    intermediate would be silently REUSED by the next identical
-    invocation in the same session — benchmark reps would measure
-    cache hits, which the bench contract forbids.  A local checkpoint
-    is a fresh RDD per invocation: every call recomputes from its
-    inputs.  ``eager=False`` adds no extra job (the first consuming
-    stage materializes it).  Trade-off at scale: the checkpointed
-    intermediate (the COLLAPSED distinct-value table the exchanges
-    already move) loses lineage, so an executor loss during the walk
-    fails the job instead of recomputing — the same trade the repo
-    already accepts for the Cox/PageRank iterates.
-
-    Eager by default (r13, measured): AQE materializes a walk's
-    shuffle and broadcast query stages CONCURRENTLY, and with a lazy
-    checkpoint every concurrent first consumer recomputes or blocks on
-    the same un-materialized blocks (BlockInfoManager write-lock
-    waits) — isolated A/B on this round's bench host:
-    ``outlier_bins_lineitem`` 26.1 -> 14.6 s wall (284 -> 186
-    stage-run-sec), ``schema_quality_survival`` 12.2 -> 9.7 s, from
-    flipping eager alone.  One synchronous 1-stage job per walk entry
-    materializes the blocks once; every consumer then reads.  Width is
-    right-sized first (``iteration_base``'s logic): a collapsed
-    distinct-value table of a few MB otherwise inherits 96-128
-    near-empty partitions from upstream unions and pays the fixed
-    per-task cost in every consumer stage.
-
-    Kill-switch: ``spark.whylogs.cutLineage=false`` disables the cut
-    for the session.  The production default is on; the switch exists
-    for plan auditing — the checkpoint compiles the SAME logical plan
-    (scan pushdown and pruning included) into the materializing job,
-    but ``explain()`` on the downstream frame only shows ``Scan
-    ExistingRDD``, so the audit captures the uncut plan to assert the
-    scan-level properties end to end (scripts/explain_audit.py).
-    ``spark.whylogs.cutLineageEager=false`` reverts to the lazy
-    first-consumer materialization.
-    """
-    try:
-        conf = df.sparkSession.conf
-        if str(conf.get("spark.whylogs.cutLineage",
-                        "true")).lower() == "false":
-            return df
-        eager = str(conf.get("spark.whylogs.cutLineageEager",
-                             "true")).lower() != "false"
-        from whylogs_spark.core.util import rightsize_width
-        return rightsize_width(df).localCheckpoint(eager=eager)
-    except Exception:
-        return df
 
 
 def require_exchange_reuse(df: DataFrame) -> None:
@@ -181,7 +125,7 @@ def grouped_running_sums(
     from operator import and_
 
     require_exchange_reuse(df)
-    df = cut_lineage(df)
+    df = materialize(df)
     part = [F.col(c) for c in group_cols]
     rp = df.repartitionByRange(
         *part, *[F.col(c) for c in order_cols]) \
@@ -232,7 +176,7 @@ def running_sums(
     global-window audit).
     """
     require_exchange_reuse(df)
-    df = cut_lineage(df)
+    df = materialize(df)
     order = [F.col(c).asc() for c in order_cols]
     rp = df.repartitionByRange(*[F.col(c) for c in order_cols]) \
         .withColumn("__slice", F.spark_partition_id())

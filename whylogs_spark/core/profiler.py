@@ -70,9 +70,8 @@ from .planner import (
 )
 from .sketches import (FrequentStringsSketch, KllSketch, merge_fi_blobs,
                        merge_kll_blobs)
-from .util import cut_derived_lineage as _cut_derived_lineage
 from .util import ensure_parallelism as _ensure_parallelism
-from .util import run_concurrent
+from .util import materialize, release, run_concurrent
 
 PROFILE_SCHEMA = T.StructType(
     [
@@ -479,7 +478,7 @@ def profile(
     # guide §3.3 "materialising an intermediate truncates the plan").
     # Plain scans / caches / projections stay un-checkpointed — each
     # chunk's column-pruned scan is cheaper than materializing.
-    df = _cut_derived_lineage(df)
+    df = materialize(df, only_if_expensive=True)
     try:
         df.sparkSession.conf.set("spark.sql.codegen.maxFields", "2048")
         # bigger Arrow batches => fewer python-side groupby/update rounds
@@ -508,6 +507,8 @@ def profile(
             df.schema, columns, segment_cols, config)
         native = partial(_native_long, df, aggs, segment_cols)
     long = _with_sketch_rows(df, sketches, segment_cols, config, native)
+    if isinstance(long, pa.Table):
+        release(df)
     return ProfileView(long, config, dataset_timestamp, metadata=metadata,
                        spark=df.sparkSession)
 
@@ -590,7 +591,7 @@ def profile_partitions(
     sets_exprs = [[F.col(c) for c in cols] for _, cols in part_items]
 
     df, columns = flatten_struct_columns(df, columns, all_cols)
-    df = _cut_derived_lineage(df)
+    df = materialize(df, only_if_expensive=True)
     aggs, sketches = plan_dataframe(df.schema, columns, all_cols, config)
     # segment values cast JVM-side (same rendering as _segment_json_col /
     # _sketch_long) so boolean/float keys don't diverge from the narrow
@@ -605,6 +606,7 @@ def profile_partitions(
                                      *[F.col(c) for c in all_cols]),
         keys, key_aggs=[F.grouping_id().alias("__gid")])
     if any(j.rows is None for j in jobs):
+        release(df)
         raise ValueError(
             "profile_partitions: too many segments to collect; "
             "profile each partition separately")
@@ -623,6 +625,8 @@ def profile_partitions(
         partial(_with_sketch_rows, df, sketches, cols, config,
                 partial(_profile_table, rows_by_part[pname]))
         for pname, cols in part_items])
+    if all(isinstance(long, pa.Table) for long in longs):
+        release(df)
     return {pname: ProfileView(long, config, spark=spark)
             for (pname, _), long in zip(part_items, longs)}
 

@@ -2,36 +2,37 @@
 
 from __future__ import annotations
 
+import logging
 import re
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, List, Optional, Sequence
 
 from pyspark import inheritable_thread_target
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-#: In-memory bytes of input one task should own when round-robin
-#: repartitioning an under-partitioned source (override per session
-#: with ``spark.whylogs.taskTargetBytes``).  ~2 MB of rows is a couple
-#: of seconds of Arrow sketch work — small enough to stay parallel,
-#: large enough that the fixed per-task Python-worker cost (~0.3 s
-#: measured on the r13 bench host, OPTIMIZATION_r13.md) stays a
-#: minority share.
+_log = logging.getLogger("whylogs_spark")
+
+#: In-memory bytes of input one task should own after a cut or a
+#: round-robin repartition.  ~2 MB of rows is a couple of seconds of
+#: Arrow sketch work — small enough to stay parallel, large enough that
+#: the fixed per-task Python-worker cost (~0.3 s measured on the r13
+#: bench host, OPTIMIZATION_r13.md) stays a minority share.
 TASK_TARGET_BYTES = 2 * 1024 * 1024
 
 #: Floor of the adaptive width: a wrong-small optimizer estimate costs
 #: at most a (true_size / 4)-way serialization, never a single task.
 MIN_ADAPTIVE_SLICES = 4
 
-#: Ceiling on what ``cut_derived_lineage`` will materialize (override
-#: with ``spark.whylogs.checkpointMaxBytes``).  The cut trades ONE
-#: materialization for N re-executions, which only pays when the
-#: intermediate is BOUNDED: a ~256 MB table writes to local block
-#: storage in ~1 s and is dwarfed by the multi-job upstream it saves,
-#: while an unbounded frame (a 10x row-expanding join, a full-width
-#: corpus) costs more to store than the column-pruned re-scans it
-#: replaces — measured 37x task-sec blowup on profile_scale_10x when
-#: the r13 cut fired on a crossJoin-replicated 6M-row frame.  Unknown
-#: estimate => no cut (the conservative pre-r13 behavior).
+#: Ceiling on what ``materialize(only_if_expensive=True)`` will cut.
+#: The cut trades ONE materialization for N re-executions, which only
+#: pays when the intermediate is BOUNDED: a ~256 MB table writes to
+#: local block storage in ~1 s and is dwarfed by the multi-job
+#: upstream it saves, while an unbounded frame (a 10x row-expanding
+#: join, a full-width corpus) costs more to store than the
+#: column-pruned re-scans it replaces — measured 37x task-sec blowup on
+#: profile_scale_10x when the cut fired on a crossJoin-replicated
+#: 6M-row frame.  Unknown estimate => no cut.
 CHECKPOINT_MAX_BYTES = 256 * 1024 * 1024
 
 #: Logical-plan node names whose re-execution is expensive (shuffles,
@@ -49,15 +50,20 @@ _EXPENSIVE_NODES = frozenset((
 
 _NODE_RE = re.compile(r"([A-Za-z]+)")
 
+#: Attribute :func:`materialize` sets on the frames it cuts; only
+#: those are released by :func:`release`.
+_CUT = "_whylogs_cut"
+
 
 def plan_size_estimate(df: DataFrame) -> Optional[int]:
     """Catalyst's in-memory size estimate of ``df`` in bytes, or
     ``None`` when the optimizer doesn't know (non-positive, or the
-    "unknown" sentinel of ~8 EB that defaultSizeInBytes produces)."""
+    "unknown" sentinel of ~8 EB that defaultSizeInBytes produces) or
+    the frame is streaming (no batch plan to estimate)."""
     try:
         sz = int(str(df._jdf.queryExecution().optimizedPlan()
                      .stats().sizeInBytes()))
-    except Exception:
+    except AnalysisException:
         return None
     if sz <= 0 or sz >= (1 << 50):
         return None
@@ -68,10 +74,10 @@ def _has_expensive_node(df: DataFrame) -> bool:
     """True when the optimized logical plan contains a node from
     ``_EXPENSIVE_NODES`` OUTSIDE any InMemoryRelation subtree (a cached
     input replays from block storage — its build plan is history, not
-    per-consumer cost)."""
+    per-consumer cost).  False for a streaming frame."""
     try:
         tree = df._jdf.queryExecution().optimizedPlan().treeString()
-    except Exception:
+    except AnalysisException:
         return False
     skip_indent = -1
     for line in tree.splitlines():
@@ -90,113 +96,85 @@ def _has_expensive_node(df: DataFrame) -> bool:
     return False
 
 
-def cut_derived_lineage(df: DataFrame, bounded: bool = False) -> DataFrame:
-    """Lazy ``localCheckpoint`` when (and only when) the input plan
-    carries shuffle / global-funnel / python work that every downstream
-    consumer job would otherwise RE-EXECUTE — the profiler fans one
-    input out to several concurrent chunk jobs plus the sketch pass, so
-    an expensive upstream is paid once instead of once per job.  A
-    plain scan / cache / projection / filter input is left alone (each
-    chunk's column-pruned scan is cheaper than materializing the full
-    width).  Same non-reuse contract as ``core.prefix.cut_lineage``:
-    a local checkpoint is a fresh RDD per invocation — nothing is
-    shared across calls, every invocation recomputes from its inputs.
+def materialize(df: DataFrame, *, only_if_expensive: bool = False,
+                lazy: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage with a ``localCheckpoint``: every consumer
+    then reads materialized blocks instead of re-executing the upstream
+    plan.  The library's only lineage cut.
 
-    Bounded-intermediate gate (r13): the cut fires only when Catalyst
-    can BOUND the frame (size estimate known and <=
-    ``spark.whylogs.checkpointMaxBytes``, default
-    ``CHECKPOINT_MAX_BYTES``).  A row-expanding join or a full-width
-    corpus plan costs more to materialize than the column-pruned
-    re-scans it would replace; an unknown estimate is treated as
-    unbounded.  ``bounded=True`` bypasses the gate — for call sites
-    whose input is bounded BY CONTRACT (e.g. the incremental-dedup
-    batch index: batch << history, and the index is strictly smaller
-    than the text it summarizes), where the caller knows the
-    materialize-vs-recompute trade better than a generic size cap.
+    Why a local checkpoint and NOT ``.persist()``: the cache manager
+    keys entries by canonical plan, so a persisted intermediate would be
+    silently REUSED by the next identical invocation in the same
+    session — benchmark reps would measure cache hits.  A local
+    checkpoint is a fresh RDD per call.  The trade at scale: the cut
+    frame loses lineage, so an executor loss fails the consuming job
+    instead of recomputing.
+
+    Width: with a credible size estimate the frame is coalesced (no
+    shuffle) to ``ceil(estimate / TASK_TARGET_BYTES)`` slices, floored
+    at ``max(MIN_ADAPTIVE_SLICES, cores // 4)``; a frame already
+    narrower keeps its width.  A small collapsed table otherwise
+    inherits its upstream's 32-128 near-empty partitions and pays the
+    fixed per-task cost in the materializing job AND every consumer
+    stage; the ``cores // 4`` floor keeps CPU-bearing consumers (the
+    iterative fits' link functions) from serializing — measured +60%
+    wall on a golden-section NLL loop at 2 slices.
+
+    ``only_if_expensive=True`` cuts only an input whose plan carries
+    shuffle / global-funnel / python work outside any cache AND whose
+    estimate is at most ``CHECKPOINT_MAX_BYTES``: a plain scan or
+    projection is left alone (each consumer's column-pruned scan is
+    cheaper than materializing the full width).
+
+    Eager by default: concurrent consumers of a lazy checkpoint each
+    recompute or block on the same un-materialized blocks (r13
+    measured ``outlier_bins_lineitem`` 26.1 -> 14.6 s from flipping
+    eager alone).  ``lazy=True`` is for operators that return an
+    unevaluated frame and promise no job at build time.
+
+    ``spark.whylogs.cutLineage=false`` disables every cut for the
+    session.  It exists for plan audits: ``explain()`` of a cut frame
+    shows only ``Scan ExistingRDD``, so the audit captures the uncut
+    plan to assert scan-level properties (scripts/explain_audit.py).
+    Iterative operators then re-derive every state, so leave it on
+    outside audits.  A streaming frame is returned as it is.  A frame
+    this function already cut is not cut again: it comes back as a new
+    handle on the same blocks, which :func:`release` leaves alone, so
+    only the caller that made a cut can release it.
     """
-    if not _has_expensive_node(df):
+    if vars(df).get(_CUT):
+        return type(df)(df._jdf, df.sparkSession)
+    if str(df.sparkSession.conf.get(
+            "spark.whylogs.cutLineage", "true")).lower() == "false":
         return df
-    if not bounded:
-        est = plan_size_estimate(df)
-        if est is None:
-            return df
-        try:
-            cap = int(df.sparkSession.conf.get(
-                "spark.whylogs.checkpointMaxBytes",
-                str(CHECKPOINT_MAX_BYTES)))
-        except Exception:
-            cap = CHECKPOINT_MAX_BYTES
-        if est > cap:
-            return df
-    try:
-        # eager like cut_lineage (r13 measured): the profiler fans its
-        # input out to CONCURRENT chunk jobs; a lazy checkpoint makes
-        # every concurrent first consumer block on (or recompute) the
-        # same un-materialized blocks.  One synchronous job
-        # materializes, all chunk jobs then read.
-        eager = str(df.sparkSession.conf.get(
-            "spark.whylogs.cutLineageEager", "true")).lower() != "false"
-        return rightsize_width(df).localCheckpoint(eager=eager)
-    except Exception:
+    if df.isStreaming:
+        _log.warning("materialize: streaming frame left uncut")
         return df
-
-
-def rightsize_width(df: DataFrame) -> DataFrame:
-    """Shuffle-free ``coalesce`` down to ``ceil(size /
-    spark.whylogs.taskTargetBytes)`` slices when the optimizer has a
-    credible size estimate, floored at ``max(MIN_ADAPTIVE_SLICES,
-    cores/4)`` so CPU-bearing consumers keep slots (see
-    ``iteration_base``).  Unknown or large estimates return ``df``
-    unchanged.  Shared by every lineage cut: a small collapsed table
-    otherwise inherits its upstream's partition count (32-128
-    near-empty slices after unions) and pays the fixed per-task cost
-    in the materialization job AND every consumer stage."""
+    if only_if_expensive and not _has_expensive_node(df):
+        return df
     est = plan_size_estimate(df)
-    if est is None:
+    if only_if_expensive and (est is None or est > CHECKPOINT_MAX_BYTES):
         return df
-    try:
-        tb = int(df.sparkSession.conf.get(
-            "spark.whylogs.taskTargetBytes", str(TASK_TARGET_BYTES)))
-    except Exception:
-        tb = TASK_TARGET_BYTES
-    target = max(1, -(-est // max(tb, 1)))
-    try:
+    if est is not None:
         cores = df.sparkSession.sparkContext.defaultParallelism
-        target = max(target, MIN_ADAPTIVE_SLICES, cores // 4)
-        if target < df.rdd.getNumPartitions():
-            return df.coalesce(target)
-    except Exception:
-        pass
-    return df
+        # coalesce never widens: a frame already at or below the target
+        # keeps its own partition count
+        df = df.coalesce(max(-(-est // TASK_TARGET_BYTES),
+                             MIN_ADAPTIVE_SLICES, cores // 4))
+    out = df.localCheckpoint(eager=not lazy)
+    setattr(out, _CUT, True)
+    return out
 
 
-def iteration_base(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Prepare the projected base frame of an iterative fit (IRLS /
-    Newton / golden-section): right-size its width, then cut lineage
-    with a ``localCheckpoint`` so the per-iteration aggregates replay
-    from materialized blocks instead of re-executing the upstream
-    plan.
-
-    Width: an iteration loop runs ``max_iter`` aggregate jobs over the
-    SAME small base — a few MB of projected doubles spread over one
-    partition per core pays ``iters x cores`` task launches of pure
-    overhead.  When the optimizer has a credible size estimate,
-    ``coalesce`` (no shuffle) down to ``ceil(size /
-    spark.whylogs.taskTargetBytes)`` slices first; unknown or large
-    estimates keep the input's width (the pre-r13 behavior).  Same
-    non-reuse contract as every other lineage cut in the repo: a fresh
-    checkpoint per invocation, nothing shared across calls.
-    """
-    # floor at a quarter of the slots (inside rightsize_width):
-    # iteration aggregates do real CPU work (exp/log link functions)
-    # per byte, and a purely size-derived width serializes it —
-    # measured +60% WALL on the golden-section NLL loop at 2 slices
-    # even as task-seconds fell 64%.  cores/4 keeps the wall flat and
-    # still cuts task launches 4x on a 32-slot host.
-    try:
-        return rightsize_width(df).localCheckpoint(eager=eager)
-    except Exception:
-        return df
+def release(*dfs: DataFrame) -> None:
+    """Drop the checkpoint blocks behind each frame :func:`materialize`
+    cut; any other frame, including the new handle it returns for an
+    input that was already cut, is left alone.  Call it only once no
+    result can still read the frame: a released cut fails every later
+    job that scans it."""
+    for df in dfs:
+        if vars(df).get(_CUT):
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def ensure_parallelism(df: DataFrame,
@@ -208,31 +186,23 @@ def ensure_parallelism(df: DataFrame,
 
     The repartition width is scale-adaptive (r13, guide §2): when the
     optimizer has a credible size estimate, target
-    ``clamp(ceil(size / spark.whylogs.taskTargetBytes),
-    MIN_ADAPTIVE_SLICES, defaultParallelism)`` so a 1 MB slice gets a
-    handful of tasks instead of one per core — each Python-stage task
-    costs ~0.3 s of fixed worker overhead, so width beyond the data is
-    pure waste.  Unknown estimate falls back to ``defaultParallelism``
-    (the pre-r13 behavior).
+    ``clamp(ceil(size / TASK_TARGET_BYTES), MIN_ADAPTIVE_SLICES,
+    defaultParallelism)`` so a 1 MB slice gets a handful of tasks
+    instead of one per core — each Python-stage task costs ~0.3 s of
+    fixed worker overhead, so width beyond the data is pure waste.
+    Unknown estimate falls back to ``defaultParallelism``.
     """
-    try:
-        sc = df.sparkSession.sparkContext
-        target = sc.defaultParallelism
-        nparts = df.rdd.getNumPartitions()
-    except Exception:
+    if df.isStreaming:
+        _log.warning("ensure_parallelism: streaming frame left as is")
         return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    nparts = df.rdd.getNumPartitions()
     if nparts * 2 > target:
         return df
     if est_bytes is None:
         est_bytes = plan_size_estimate(df)
     if est_bytes is not None:
-        try:
-            tb = int(df.sparkSession.conf.get(
-                "spark.whylogs.taskTargetBytes", str(TASK_TARGET_BYTES)))
-        except Exception:
-            tb = TASK_TARGET_BYTES
-        tb = max(tb, 1)
-        sized = max(MIN_ADAPTIVE_SLICES, -(-est_bytes // tb))
+        sized = max(MIN_ADAPTIVE_SLICES, -(-est_bytes // TASK_TARGET_BYTES))
         target = min(target, sized)
     if nparts * 2 <= target:
         return df.repartition(target)

@@ -195,55 +195,56 @@ def fit_logistic(
         *[x.alias(f"__x{i}") for i, x in enumerate(xs)])
     # Each Newton step is one full aggregate over `base`; without a
     # lineage cut every step RE-EXECUTES the upstream plan (scan +
-    # joins + any funnel) up to max_iter times.  Materialize the
-    # projected (p+1)-column base once, right-sized (r13, same pattern
-    # as the Cox / Huber fits); lazy so the first step pays for it.
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base)
-    # x0 = intercept column of ones
-    xcols = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(len(feats))]
+    # joins + any funnel) up to max_iter times.
+    from whylogs_spark.core.util import materialize, release
+    base = materialize(base)
+    try:
+        # x0 = intercept column of ones
+        xcols = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(len(feats))]
 
-    beta = np.zeros(p1)
-    n = None
-    converged = False
-    it = 0
-    ll = float("nan")
-    for it in range(1, max_iter + 1):
-        eta = None
-        for j in range(p1):
-            term = F.lit(float(beta[j])) * xcols[j]
-            eta = term if eta is None else eta + term
-        # clamp eta so exp never overflows; mu in (0, 1)
-        eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
-        mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-        w = mu * (1.0 - mu)
-        resid = F.col("__y") - mu
-        aggs = [F.count(F.lit(1)).cast("double").alias("__n"),
-                F.sum(F.col("__y") * eta - F.log(F.lit(1.0)
-                                                 + F.exp(eta)))
-                .alias("__ll")]
-        for j in range(p1):
-            aggs.append(F.sum(resid * xcols[j]).alias(f"__g{j}"))
-        for j in range(p1):
-            for kk in range(j, p1):
-                aggs.append(F.sum(w * xcols[j] * xcols[kk])
-                            .alias(f"__h{j}_{kk}"))
-        row = base.agg(*aggs).collect()[0]
-        n = int(row["__n"])
-        ll = float(row["__ll"])
-        if n == 0:
-            raise ValueError("fit_logistic: no usable rows")
-        grad = np.array([row[f"__g{j}"] for j in range(p1)])
-        hess = np.zeros((p1, p1))
-        for j in range(p1):
-            for kk in range(j, p1):
-                hess[j, kk] = hess[kk, j] = row[f"__h{j}_{kk}"]
-        hess += ridge * np.eye(p1)
-        step = np.linalg.solve(hess, grad)
-        beta = beta + step
-        if float(np.abs(step).max()) < tol:
-            converged = True
-            break
+        beta = np.zeros(p1)
+        n = None
+        converged = False
+        it = 0
+        ll = float("nan")
+        for it in range(1, max_iter + 1):
+            eta = None
+            for j in range(p1):
+                term = F.lit(float(beta[j])) * xcols[j]
+                eta = term if eta is None else eta + term
+            # clamp eta so exp never overflows; mu in (0, 1)
+            eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
+            mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
+            w = mu * (1.0 - mu)
+            resid = F.col("__y") - mu
+            aggs = [F.count(F.lit(1)).cast("double").alias("__n"),
+                    F.sum(F.col("__y") * eta - F.log(F.lit(1.0)
+                                                     + F.exp(eta)))
+                    .alias("__ll")]
+            for j in range(p1):
+                aggs.append(F.sum(resid * xcols[j]).alias(f"__g{j}"))
+            for j in range(p1):
+                for kk in range(j, p1):
+                    aggs.append(F.sum(w * xcols[j] * xcols[kk])
+                                .alias(f"__h{j}_{kk}"))
+            row = base.agg(*aggs).collect()[0]
+            n = int(row["__n"])
+            ll = float(row["__ll"])
+            if n == 0:
+                raise ValueError("fit_logistic: no usable rows")
+            grad = np.array([row[f"__g{j}"] for j in range(p1)])
+            hess = np.zeros((p1, p1))
+            for j in range(p1):
+                for kk in range(j, p1):
+                    hess[j, kk] = hess[kk, j] = row[f"__h{j}_{kk}"]
+            hess += ridge * np.eye(p1)
+            step = np.linalg.solve(hess, grad)
+            beta = beta + step
+            if float(np.abs(step).max()) < tol:
+                converged = True
+                break
+    finally:
+        release(base)
     return {
         "intercept": float(beta[0]),
         "coef": {c: float(beta[i + 1]) for i, c in enumerate(feats)},

@@ -190,8 +190,8 @@ def kmeans(
     # funnel upstream) cut its lineage once so the passes replay from
     # materialized blocks instead of re-executing the upstream
     # (r13; no-op for plain scans and caches).
-    from whylogs_spark.core.util import cut_derived_lineage
-    df = cut_derived_lineage(df)
+    from whylogs_spark.core.util import materialize
+    df = materialize(df, only_if_expensive=True)
     cents = ([list(c) for c in init_centroids] if init_centroids
              else kmeans_init(df, vec_col, id_col, k, quantize))
     _check_dim(df, vec_col, len(cents[0]))
@@ -294,8 +294,8 @@ def clustering_agreement(
           .groupBy("__c", "__y").agg(F.count(F.lit(1)).alias("__n")))
     # the cells/margins/purity/MI branches all reduce over the same
     # bounded contingency table — pay the data collapse once (r13)
-    from whylogs_spark.core.util import cut_derived_lineage
-    ct = cut_derived_lineage(ct)
+    from whylogs_spark.core.util import materialize
+    ct = materialize(ct, only_if_expensive=True)
     nd = F.col("__n").cast("double")
     cells = ct.agg(
         F.sum("__n").alias("n"),

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from whylogs_spark.core.util import ensure_parallelism
+from whylogs_spark.core.util import ensure_parallelism, materialize, release
 
 # Mixing constants for combining token hashes into n-gram hashes and the
 # (a*x + b) mod 2^64 permutation family (a odd => bijective). Seeded so
@@ -515,13 +515,13 @@ def connected_components(
     on node ids); labels jump along shortcuts from earlier rounds, so
     convergence is O(log(diameter)) rounds — the large-star/small-star
     shape of Kiveris et al. (2014) with both stars fused into the
-    groupBy-min. Each round localCheckpoints so lineage stays O(1).
+    groupBy-min. Each round is materialized so lineage stays O(1).
     """
     # materialize the (small) edge list once; both the driver path and
     # the distributed fallback read from this checkpoint, so the LSH +
     # verify pipeline upstream never recomputes
-    probe = pairs.select(F.col(id_a).alias("u"),
-                         F.col(id_b).alias("v")).localCheckpoint()
+    probe = materialize(pairs.select(F.col(id_a).alias("u"),
+                                     F.col(id_b).alias("v")))
     head = probe.limit(driver_edge_cap + 1).collect() \
         if driver_edge_cap else []
     if driver_edge_cap and len(head) <= driver_edge_cap:
@@ -547,21 +547,21 @@ def connected_components(
         rows = [(n, find(n)) for n in parent]
         spark = pairs.sparkSession
         schema = probe.schema
+        release(probe)
         return spark.createDataFrame(
             rows or [], f"node {schema[0].dataType.simpleString()}, "
                         f"component {schema[1].dataType.simpleString()}")
 
-    edges = (
+    edges = materialize(
         probe.union(probe.select(F.col("v").alias("u"),
                                  F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    release(probe)
+    labels = cut = materialize(
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         # label(u) <- min(label(u), min over neighbors v of label(v))
@@ -570,7 +570,7 @@ def connected_components(
             .groupBy(F.col("u").alias("node"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        updated = (
+        updated = materialize(
             labels.join(neigh, "node", "left")
             .select(
                 "node",
@@ -581,11 +581,14 @@ def connected_components(
                 (F.coalesce(F.col("nbr_min"), F.col("component"))
                  < F.col("component")).alias("__chg"),
             )
-        ).localCheckpoint()
+        )
+        release(cut)
+        cut = updated
         changed = updated.filter(F.col("__chg")).limit(1).count()
         labels = updated.drop("__chg")
         if changed == 0:
             break
+    release(edges)
     return labels
 
 
@@ -652,16 +655,16 @@ def minhash_dedup(
     # without the cut each would re-run the corpus-wide md5 groupBy —
     # measured as a 2x task-second regression on low-duplication
     # corpora where the collapse itself wins nothing
-    rep = keyed.groupBy("__tkey").agg(F.min(id_col).alias("__rep")) \
-        .localCheckpoint()
+    rep = materialize(
+        keyed.groupBy("__tkey").agg(F.min(id_col).alias("__rep")))
     id_to_rep = keyed.join(rep, "__tkey").select(id_col, "__rep")
     # broadcast the winner-id set into each consuming branch ONLY when
     # it is provably small: explicit broadcast hints are honored
     # unconditionally (AQE never demotes them), and on low-duplication
     # corpora `rep` is ~corpus-cardinality — an unconditional hint
     # would OOM the driver at exactly the web scale this op targets.
-    # rep is already materialized (localCheckpoint), so the count is a
-    # cheap cached scan; above the cap the planner picks the join.
+    # rep is already materialized, so the count is a cheap block scan;
+    # above the cap the planner picks the join.
     winners = rep.select(F.col("__rep").alias(id_col))
     if rep.count() <= 4_000_000:
         winners = F.broadcast(winners)
@@ -674,7 +677,7 @@ def minhash_dedup(
             pairs = _lsh_verified_pairs(
                 idx, idx, id_col, num_hashes, bands,
                 jaccard_threshold)
-            # connected_components localCheckpoints the edge list
+            # connected_components materializes the edge list
             # EAGERLY, so every idx-dependent job has run by the time
             # it returns and the unpersist below is safe
             comp = connected_components(pairs, "id_a", "id_b")
@@ -1465,7 +1468,7 @@ def incremental_dedup(
         # times. The table is bounded at n_bits/64 rows (~2 MB at the
         # 2^23 default), so materializing it once is the right trade
         # (measured 2.5x on the bench's incremental_dedup_bloom row).
-        bloom = bloom.localCheckpoint(eager=True)
+        bloom = materialize(bloom)
         probed = bloom_might_contain(b, bloom, "__fp", bloom_bits,
                                      bloom_hashes, "__maybe")
         clean = probed.filter(~F.col("__maybe")).drop("__maybe")
@@ -1532,15 +1535,10 @@ def incremental_minhash_dedup(
                                 shingle_words, impl))
     # The batch index feeds FIVE plan branches (in-batch banding + its
     # two verify joins, the history probe keys, and the batch shingle
-    # side): cut its lineage so the Arrow minhash pass runs once, not
-    # five times (r13; conditional — a persisted-index batch is a plain
-    # scan and stays uncut).  batch << history by contract, so
-    # materializing the batch index is bounded.
-    from whylogs_spark.core.util import cut_derived_lineage
-    # bounded=True: batch << history by contract, and the index
-    # (signatures + shingle hashes) is strictly smaller than the text
-    # it summarizes — the generic checkpoint size cap doesn't apply
-    b_idx = cut_derived_lineage(b_idx, bounded=True)
+    # side): cut its lineage so the minhash pass runs once, not five
+    # times.  No size gate: batch << history by contract, and the index
+    # is strictly smaller than the text it summarizes.
+    b_idx = materialize(b_idx)
     if idx_cols <= set(history.columns):
         # persisted index: each consumer below reads the column it
         # needs, pruned at the scan — nothing to materialize
@@ -1810,12 +1808,12 @@ def minhash_recall_estimate(
     # deterministic hash sample, deterministically capped (ordered by
     # the same hash -> TakeOrderedAndProject, no global sort)
     hsh = F.abs(F.xxhash64(F.col(id_col).cast("string"), F.lit(7411)))
-    # localCheckpoint: the (small) sample feeds TWO branches — the
+    # materialized: the (small) sample feeds TWO branches — the
     # shingle ground truth and the production LSH pipeline — so the
     # corpus scan + top-k selection must not run twice (same idiom as
-    # connected_components' edge-list checkpoint)
-    sample = (df.filter(hsh % 1000 < sample_per_mille)
-              .orderBy(hsh).limit(max_sample).localCheckpoint())
+    # connected_components' edge-list cut)
+    sample = materialize(df.filter(hsh % 1000 < sample_per_mille)
+                         .orderBy(hsh).limit(max_sample))
 
     # ground truth: exact Jaccard over the same shingle hash sets the
     # signatures are built from

@@ -320,12 +320,12 @@ def quantile_normalize(
         (F.sum("__val") / F.lit(float(len(columns)))).alias("__ref"))
     prof = running_sums(profile, ["__pos"], ["__ref"])
     # S(pos) inclusive prefix of the reference profile
-    # lazy checkpoint: the S table is consumed by 2k join branches
-    # (hi and lo-1 per column); materialize it once, but only when
-    # the plan actually executes — no job at plan-build time
-    prof = prof.select(
-        "__pos", F.col("__cum___ref").alias("__S")) \
-        .localCheckpoint(eager=False)
+    # lazy cut: the S table is consumed by 2k join branches (hi and
+    # lo-1 per column); materialize it once, but only when the plan
+    # actually executes — no job at plan-build time
+    from whylogs_spark.core.util import materialize
+    prof = materialize(prof.select(
+        "__pos", F.col("__cum___ref").alias("__S")), lazy=True)
 
     out = base
     for c in columns:

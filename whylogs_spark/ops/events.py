@@ -1383,7 +1383,7 @@ def interarrival_stats(
 
     Scale shape: ONE window pass keyed by the entity columns
     (partitioned lag — never a global sort), materialized once
-    (``localCheckpoint``) and consumed by two bounded reductions —
+    (``core.util.materialize``) and consumed by two bounded reductions —
     the moment rollup (one exchange down to <= groups rows, variance
     from explicit sum/sumsq so the DuckDB oracle replays the exact
     same IEEE ops) and the exact-quantile walk (the house grouped
@@ -1412,9 +1412,9 @@ def interarrival_stats(
     # for gaps (any session-timezone shift cancels in the difference)
     us = F.unix_micros(t.cast("timestamp"))
     gap = (us - F.lag(us).over(w)).cast("double") / F.lit(1000000.0)
-    gaps = (base.select(*groups, gap.alias("__gap"))
-            .filter(F.col("__gap").isNotNull())
-            .localCheckpoint(eager=True))
+    from whylogs_spark.core.util import materialize
+    gaps = materialize(base.select(*groups, gap.alias("__gap"))
+                       .filter(F.col("__gap").isNotNull()))
 
     gb = gaps.groupBy(*groups) if groups else gaps.groupBy()
     m = gb.agg(

@@ -81,9 +81,9 @@ def ses_forecast(
             .groupBy(*(groups + [time_col]))
             .agg(F.avg(v).alias("__v")))
     # the guard job and the fit both consume the collapse — pay the
-    # upstream once when Catalyst bounds it (r13, cut_derived_lineage)
-    from whylogs_spark.core.util import cut_derived_lineage
-    base = cut_derived_lineage(base)
+    # upstream once when Catalyst bounds it
+    from whylogs_spark.core.util import materialize
+    base = materialize(base, only_if_expensive=True)
 
     sizes = base.groupBy(*groups).agg(F.count(F.lit(1)).alias("__n"))
     worst = sizes.agg(F.max("__n").alias("m")).collect()[0]["m"]
@@ -196,9 +196,9 @@ def holt_forecast(
             .groupBy(*(groups + [time_col]))
             .agg(F.avg(v).alias("__v")))
     # the guard job and the fold both consume the collapse — pay the
-    # upstream once when Catalyst bounds it (r13, cut_derived_lineage)
-    from whylogs_spark.core.util import cut_derived_lineage
-    base = cut_derived_lineage(base)
+    # upstream once when Catalyst bounds it
+    from whylogs_spark.core.util import materialize
+    base = materialize(base, only_if_expensive=True)
 
     sizes = base.groupBy(*groups).agg(F.count(F.lit(1)).alias("__n"))
     worst = sizes.agg(F.max("__n").alias("m")).collect()[0]["m"]

@@ -329,15 +329,18 @@ def grid_cluster(
                 .filter(F.col("n") >= min_pts))
     # the guard count and the cell collect both consume the collapse —
     # pay the data pass once when Catalyst bounds it
-    from whylogs_spark.core.util import cut_derived_lineage
-    dense_df = cut_derived_lineage(dense_df)
-    n_dense = dense_df.count()
-    if n_dense > max_dense_cells:
-        raise ValueError(
-            f"{n_dense} dense cells > max_dense_cells="
-            f"{max_dense_cells}: coarsen cell_deg or raise min_pts "
-            "(the union-find runs driver-side over dense cells)")
-    dense = [r["__cell"] for r in dense_df.select("__cell").collect()]
+    from whylogs_spark.core.util import materialize, release
+    dense_df = materialize(dense_df, only_if_expensive=True)
+    try:
+        n_dense = dense_df.count()
+        if n_dense > max_dense_cells:
+            raise ValueError(
+                f"{n_dense} dense cells > max_dense_cells="
+                f"{max_dense_cells}: coarsen cell_deg or raise min_pts "
+                "(the union-find runs driver-side over dense cells)")
+        dense = [r["__cell"] for r in dense_df.select("__cell").collect()]
+    finally:
+        release(dense_df)
     dense_set = set(dense)
 
     # driver union-find over 8-connected dense cells (bounded set)

@@ -190,52 +190,54 @@ def fit_poisson(
         *[x.alias(f"__z{j}") for j, x in enumerate(xs)])
     # One lineage cut before the Newton loop: the negative-label probe
     # plus up to max_iter gradient/Hessian aggregates otherwise each
-    # re-execute the full upstream plan (r13, same pattern as
-    # causal.fit_logistic / the Cox and Huber fits).
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base)
-    neg = base.filter(F.col("__y") < 0).limit(1).count()
-    if neg:
-        raise ValueError("fit_poisson: negative label values")
-    xcols = [F.col(f"__z{j}") for j in range(p1)]
+    # re-execute the full upstream plan.
+    from whylogs_spark.core.util import materialize, release
+    base = materialize(base)
+    try:
+        neg = base.filter(F.col("__y") < 0).limit(1).count()
+        if neg:
+            raise ValueError("fit_poisson: negative label values")
+        xcols = [F.col(f"__z{j}") for j in range(p1)]
 
-    beta = np.zeros(p1)
-    n = None
-    converged = False
-    ll = float("nan")
-    it = 0
-    for it in range(1, max_iter + 1):
-        eta = None
-        for j in range(p1):
-            term = F.lit(float(beta[j])) * xcols[j]
-            eta = term if eta is None else eta + term
-        eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
-        mu = F.exp(eta)
-        resid = F.col("__y") - mu
-        aggs = [F.count(F.lit(1)).cast("double").alias("__n"),
-                F.sum(F.col("__y") * eta - mu).alias("__ll")]
-        for j in range(p1):
-            aggs.append(F.sum(resid * xcols[j]).alias(f"__g{j}"))
-        for j in range(p1):
-            for k in range(j, p1):
-                aggs.append(F.sum(mu * xcols[j] * xcols[k])
-                            .alias(f"__h{j}_{k}"))
-        row = base.agg(*aggs).collect()[0]
-        n = int(row["__n"])
-        if n == 0:
-            raise ValueError("fit_poisson: no usable rows")
-        ll = float(row["__ll"])
-        grad = np.array([row[f"__g{j}"] for j in range(p1)])
-        hess = np.zeros((p1, p1))
-        for j in range(p1):
-            for k in range(j, p1):
-                hess[j, k] = hess[k, j] = row[f"__h{j}_{k}"]
-        hess += ridge * np.eye(p1)
-        step = np.linalg.solve(hess, grad)
-        beta = beta + step
-        if float(np.abs(step).max()) < tol:
-            converged = True
-            break
+        beta = np.zeros(p1)
+        n = None
+        converged = False
+        ll = float("nan")
+        it = 0
+        for it in range(1, max_iter + 1):
+            eta = None
+            for j in range(p1):
+                term = F.lit(float(beta[j])) * xcols[j]
+                eta = term if eta is None else eta + term
+            eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
+            mu = F.exp(eta)
+            resid = F.col("__y") - mu
+            aggs = [F.count(F.lit(1)).cast("double").alias("__n"),
+                    F.sum(F.col("__y") * eta - mu).alias("__ll")]
+            for j in range(p1):
+                aggs.append(F.sum(resid * xcols[j]).alias(f"__g{j}"))
+            for j in range(p1):
+                for k in range(j, p1):
+                    aggs.append(F.sum(mu * xcols[j] * xcols[k])
+                                .alias(f"__h{j}_{k}"))
+            row = base.agg(*aggs).collect()[0]
+            n = int(row["__n"])
+            if n == 0:
+                raise ValueError("fit_poisson: no usable rows")
+            ll = float(row["__ll"])
+            grad = np.array([row[f"__g{j}"] for j in range(p1)])
+            hess = np.zeros((p1, p1))
+            for j in range(p1):
+                for k in range(j, p1):
+                    hess[j, k] = hess[k, j] = row[f"__h{j}_{k}"]
+            hess += ridge * np.eye(p1)
+            step = np.linalg.solve(hess, grad)
+            beta = beta + step
+            if float(np.abs(step).max()) < tol:
+                converged = True
+                break
+    finally:
+        release(base)
     se = {}
     try:
         cov = np.linalg.inv(hess)

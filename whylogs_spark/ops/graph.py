@@ -8,16 +8,18 @@ Scale shape: PageRank is the canonical iterative join workload — each
 iteration is ONE equi-join of the rank vector against the edge list
 (shuffle keyed by node id; skew bound = one node's out-edges) plus a
 groupBy-sum, with dangling mass folded in from a 1-row broadcast
-aggregate.  Iterations localCheckpoint the (node-sized) rank vector so
+aggregate.  Iterations materialize the (node-sized) rank vector so
 lineage stays O(1) — the edge table itself is scanned once per
-iteration and never re-derived.  Degree stats are single partial-agged
-aggregations.
+iteration and never re-derived — and release each superseded state.
+Degree stats are single partial-agged aggregations.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from whylogs_spark.core.util import materialize, release
 
 __all__ = ["degree_stats", "pagerank", "stationary_distribution",
            "label_propagation"]
@@ -71,9 +73,9 @@ def pagerank(
 
     Per iteration: one broadcast of the 1-row dangling aggregate, one
     rank⋈edges equi-join keyed by src (the only data-sized shuffle),
-    one groupBy-sum.  The rank vector is node-sized and
-    localCheckpointed each step, so plan depth and lineage stay O(1)
-    regardless of ``iterations``.
+    one groupBy-sum.  The rank vector is node-sized and materialized
+    each step, so plan depth and lineage stay O(1) regardless of
+    ``iterations``.
     """
     if not 0.0 <= damping <= 1.0:
         raise ValueError(f"damping must be in [0, 1]: {damping}")
@@ -82,34 +84,37 @@ def pagerank(
     # materialize the distinct-edge view ONCE: every iteration joins
     # against it, and without the checkpoint the raw-edge scan +
     # dedup shuffle would re-run per iteration
-    e = edges.filter(
+    e = materialize(edges.filter(
         F.col(src).isNotNull() & F.col(dst).isNotNull()
-    ).select(F.col(src).alias("__s"), F.col(dst).alias("__d")) \
-        .distinct().localCheckpoint()
-    nodes = (e.select(F.col("__s").alias("node"))
-             .union(e.select(F.col("__d").alias("node")))
-             .distinct().localCheckpoint())
+    ).select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+        .distinct())
+    nodes = materialize(e.select(F.col("__s").alias("node"))
+                        .union(e.select(F.col("__d").alias("node")))
+                        .distinct())
     n_nodes = nodes.count()
     if n_nodes == 0:
+        release(e)
         return nodes.select("node", F.lit(0.0).alias("rank"))
     outd = e.groupBy(F.col("__s").alias("node")).agg(
         F.count(F.lit(1)).alias("__out"))
     # (node, out_degree, rank); out_degree null marks a dangling node
-    state = nodes.join(outd, "node", "left").select(
-        "node", "__out",
-        F.lit(1.0 / n_nodes).alias("rank")).localCheckpoint()
+    state = materialize(nodes.join(outd, "node", "left").select(
+        "node", "__out", F.lit(1.0 / n_nodes).alias("rank")))
 
     d = float(damping)
     for _ in range(int(iterations)):
-        state = _pagerank_step(state, e, n_nodes, d).localCheckpoint()
+        nxt = materialize(_pagerank_step(state, e, n_nodes, d))
+        release(state)
+        state = nxt
+    release(e, nodes)
     return state.select("node", "rank")
 
 
 def _pagerank_step(state: DataFrame, e: DataFrame, n_nodes: int,
                    d: float) -> DataFrame:
-    """One power-iteration update (un-checkpointed — the audit reads
-    this plan directly, since the checkpoint in :func:`pagerank`
-    erases the iteration's physical plan from the returned frame)."""
+    """One power-iteration update (uncut — the audit reads this plan
+    directly, since the cut in :func:`pagerank` erases the
+    iteration's physical plan from the returned frame)."""
     base = (1.0 - d) / n_nodes
     dang = state.agg(
         F.coalesce(F.sum(F.when(F.col("__out").isNull(),
@@ -161,9 +166,9 @@ def stationary_distribution(
     default 30 settles every aperiodic chain of practical size).
 
     Same scale shape as :func:`pagerank`: the (re-normalized) edge
-    frame is checkpointed once, each iteration is one equi-join +
+    frame is materialized once, each iteration is one equi-join +
     groupBy-sum with the dangling mass folded in from a 1-row
-    broadcast, and the state vector checkpoints every
+    broadcast, and the state vector is materialized every
     ``checkpoint_every`` steps (lineage depth bounded at that many
     joins).  Steps between checkpoints are lazily ``persist()``-ed —
     each step references its predecessor three times (dangling agg,
@@ -187,21 +192,20 @@ def stationary_distribution(
     ).select(F.col(src).alias("__s"), F.col(dst).alias("__d"),
              w.alias("__w"))
     tot = raw.groupBy("__s").agg(F.sum("__w").alias("__tw"))
-    e = (raw.join(tot, "__s")
-         .select("__s", "__d", (F.col("__w") / F.col("__tw"))
-                 .alias("__p"))
-         .localCheckpoint())
-    nodes = (e.select(F.col("__s").alias("state"))
-             .union(e.select(F.col("__d").alias("state")))
-             .distinct().localCheckpoint())
+    e = materialize(raw.join(tot, "__s")
+                    .select("__s", "__d", (F.col("__w") / F.col("__tw"))
+                            .alias("__p")))
+    nodes = materialize(e.select(F.col("__s").alias("state"))
+                        .union(e.select(F.col("__d").alias("state")))
+                        .distinct())
     n_nodes = nodes.count()
     if n_nodes == 0:
+        release(e)
         return nodes.select("state", F.lit(0.0).alias("probability"))
     has_out = e.select(F.col("__s").alias("state")).distinct() \
         .withColumn("__o", F.lit(True))
-    state = nodes.join(has_out, "state", "left").select(
-        "state", "__o",
-        F.lit(1.0 / n_nodes).alias("probability")).localCheckpoint()
+    state = cut = materialize(nodes.join(has_out, "state", "left").select(
+        "state", "__o", F.lit(1.0 / n_nodes).alias("probability")))
     d = None if damping is None else float(damping)
     it = int(iterations)
     ck = int(checkpoint_every)
@@ -230,17 +234,19 @@ def stationary_distribution(
             .select("state", "__o", flow.alias("probability"))
         )
         if (i + 1) % ck == 0 or i + 1 == it:
-            state = nxt.localCheckpoint()
-            # the checkpoint cut the lineage, so the lazily persisted
-            # intermediates it consumed can be released
+            state = materialize(nxt)
+            # the new cut ends the lineage, so the previous cut and the
+            # lazily persisted steps it consumed can be released
+            release(cut)
             for p in pending:
                 p.unpersist()
-            pending = []
+            cut, pending = state, []
         else:
             # lazy persist: the next step references this frame three
             # times; without it the chain recomputes 3^k subtrees
             state = nxt.persist()
             pending.append(state)
+    release(e, nodes)
     return state.select("state", "probability")
 
 
@@ -268,7 +274,7 @@ def label_propagation(
     distinct edge set is materialized once, each iteration is ONE
     labels⋈edges equi-join plus two partial-agged aggregations
     ((node, label) counts, then a struct-min argmax per node), and
-    the node-sized label vector localCheckpoints per step (O(1)
+    the node-sized label vector is materialized per step (O(1)
     lineage; per-step cadence measured optimal — see PLANS.md).
     A celebrity node's in-messages partial-aggregate map-side per
     (node, label), so hub skew ships one row per partition per
@@ -280,11 +286,10 @@ def label_propagation(
         F.col(src).isNotNull() & F.col(dst).isNotNull()
         & (F.col(src) != F.col(dst))
     ).select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    und = (base.union(base.select(F.col("__d").alias("__s"),
-                                  F.col("__s").alias("__d")))
-           .distinct().localCheckpoint())
-    nodes = und.select(F.col("__s").alias("node")).distinct() \
-        .localCheckpoint()
+    und = materialize(base.union(base.select(F.col("__d").alias("__s"),
+                                             F.col("__s").alias("__d")))
+                      .distinct())
+    nodes = materialize(und.select(F.col("__s").alias("node")).distinct())
     labels = nodes.select("node", F.col("node").alias("community"))
     for _ in range(int(iterations)):
         msgs = (labels.join(und, labels["node"] == und["__s"])
@@ -295,10 +300,12 @@ def label_propagation(
             F.min(F.struct((F.lit(0) - F.col("__c")).alias("nc"),
                            F.col("community").alias("lab")))
             .alias("__m"))
-        labels = (labels.join(pick, "node", "left")
-                  .select("node",
-                          F.coalesce(F.col("__m.lab"),
-                                     F.col("community"))
-                          .alias("community"))
-                  ).localCheckpoint()
+        nxt = materialize(labels.join(pick, "node", "left")
+                          .select("node",
+                                  F.coalesce(F.col("__m.lab"),
+                                             F.col("community"))
+                                  .alias("community")))
+        release(labels)
+        labels = nxt
+    release(und, nodes)
     return labels

@@ -162,39 +162,42 @@ def temperature_scaling(
     base = df.filter(ok).select(
         y.alias("__y"), *[F.col(c).cast("double").alias(c)
                           for c in cols])
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base)
-    lbl = F.col("__y")
+    from whylogs_spark.core.util import materialize, release
+    base = materialize(base)
+    try:
+        lbl = F.col("__y")
 
-    evals = [0]
+        evals = [0]
 
-    def nll(log_t: float):
-        evals[0] += 1
-        v, n = _nll_agg(base, cols, lbl, math.exp(log_t))
-        return v, n
+        def nll(log_t: float):
+            evals[0] += 1
+            v, n = _nll_agg(base, cols, lbl, math.exp(log_t))
+            return v, n
 
-    gr = (math.sqrt(5.0) - 1.0) / 2.0
-    a, b = math.log(t_min), math.log(t_max)
-    c1 = b - gr * (b - a)
-    c2 = a + gr * (b - a)
-    f1v, n = nll(c1)
-    f2v, _ = nll(c2)
-    if n == 0:
-        raise ValueError("temperature_scaling: no usable rows")
-    nll_before, _ = nll(0.0)  # T = 1
-    for _ in range(int(iters)):
-        if f1v < f2v:
-            b, c2, f2v = c2, c1, f1v
-            c1 = b - gr * (b - a)
-            f1v, _ = nll(c1)
-        else:
-            a, c1, f1v = c1, c2, f2v
-            c2 = a + gr * (b - a)
-            f2v, _ = nll(c2)
-        if b - a < 1e-5:
-            break
-    log_t = (a + b) / 2.0
-    nll_after, _ = nll(log_t)
+        gr = (math.sqrt(5.0) - 1.0) / 2.0
+        a, b = math.log(t_min), math.log(t_max)
+        c1 = b - gr * (b - a)
+        c2 = a + gr * (b - a)
+        f1v, n = nll(c1)
+        f2v, _ = nll(c2)
+        if n == 0:
+            raise ValueError("temperature_scaling: no usable rows")
+        nll_before, _ = nll(0.0)  # T = 1
+        for _ in range(int(iters)):
+            if f1v < f2v:
+                b, c2, f2v = c2, c1, f1v
+                c1 = b - gr * (b - a)
+                f1v, _ = nll(c1)
+            else:
+                a, c1, f1v = c1, c2, f2v
+                c2 = a + gr * (b - a)
+                f2v, _ = nll(c2)
+            if b - a < 1e-5:
+                break
+        log_t = (a + b) / 2.0
+        nll_after, _ = nll(log_t)
+    finally:
+        release(base)
     return {"temperature": float(math.exp(log_t)),
             "nll_before": float(nll_before),
             "nll_after": float(nll_after),

@@ -80,44 +80,47 @@ def huber_regression(
     base = df.filter(cond).select(
         y.alias("__y"), *[F.col(c).cast("double").alias(f"__x{i}")
                           for i, c in enumerate(xs)])
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base, eager=True)
-    n = base.count()
-    if n < p + 1:
-        raise ValueError(f"huber_regression needs > {p} rows, got {n}")
+    from whylogs_spark.core.util import materialize, release
+    base = materialize(base)
+    try:
+        n = base.count()
+        if n < p + 1:
+            raise ValueError(f"huber_regression needs > {p} rows, got {n}")
 
-    feats = ["__one"] + [f"__x{i}" for i in range(len(xs))]
-    wdf = base.withColumn("__one", F.lit(1.0))
+        feats = ["__one"] + [f"__x{i}" for i in range(len(xs))]
+        wdf = base.withColumn("__one", F.lit(1.0))
 
-    A, bvec = _weighted_moments(
-        wdf.withColumn("__w", F.lit(1.0)), feats, p)
-    beta = np.linalg.solve(A, bvec)
-    converged = False
-    it = 0
-    sigma = float("nan")
-    for it in range(1, max_iter + 1):
-        pred = F.lit(float(beta[0]))
-        for i in range(len(xs)):
-            pred = pred + F.lit(float(beta[i + 1])) * F.col(f"__x{i}")
-        resid = F.col("__y") - pred
-        r = wdf.withColumn("__r", resid)
-        mad = r.agg(F.expr(
-            "percentile(abs(__r), 0.5)").alias("m")).collect()[0]["m"]
-        sigma = float(mad) / 0.6745
-        if sigma <= 0:
-            converged = True  # perfect fit
-            break
-        cut = delta * sigma
-        w = F.when(F.abs(F.col("__r")) <= cut, F.lit(1.0)) \
-            .otherwise(F.lit(cut) / F.abs(F.col("__r")))
-        A, bvec = _weighted_moments(r.withColumn("__w", w), feats, p)
-        new_beta = np.linalg.solve(A, bvec)
-        if float(np.max(np.abs(new_beta - beta))) < tol * (
-                1.0 + float(np.max(np.abs(beta)))):
+        A, bvec = _weighted_moments(
+            wdf.withColumn("__w", F.lit(1.0)), feats, p)
+        beta = np.linalg.solve(A, bvec)
+        converged = False
+        it = 0
+        sigma = float("nan")
+        for it in range(1, max_iter + 1):
+            pred = F.lit(float(beta[0]))
+            for i in range(len(xs)):
+                pred = pred + F.lit(float(beta[i + 1])) * F.col(f"__x{i}")
+            resid = F.col("__y") - pred
+            r = wdf.withColumn("__r", resid)
+            mad = r.agg(F.expr(
+                "percentile(abs(__r), 0.5)").alias("m")).collect()[0]["m"]
+            sigma = float(mad) / 0.6745
+            if sigma <= 0:
+                converged = True  # perfect fit
+                break
+            cut = delta * sigma
+            w = F.when(F.abs(F.col("__r")) <= cut, F.lit(1.0)) \
+                .otherwise(F.lit(cut) / F.abs(F.col("__r")))
+            A, bvec = _weighted_moments(r.withColumn("__w", w), feats, p)
+            new_beta = np.linalg.solve(A, bvec)
+            if float(np.max(np.abs(new_beta - beta))) < tol * (
+                    1.0 + float(np.max(np.abs(beta)))):
+                beta = new_beta
+                converged = True
+                break
             beta = new_beta
-            converged = True
-            break
-        beta = new_beta
+    finally:
+        release(base)
 
     terms = ["intercept"] + xs
     rows = [(t, float(b_), it, bool(converged), float(sigma), int(n))
@@ -156,7 +159,7 @@ def quantile_regression(
     moment-matrix aggregate over the data (p(p+3)/2 scalars
     collected, never rows) and a driver-side p x p solve; the final
     pinball loss is one more bounded aggregate.  Job count =
-    iterations; the base is localCheckpointed once.
+    iterations; the base is materialized once.
     """
     if not 0.0 < tau < 1.0:
         raise ValueError(f"tau must be in (0, 1): {tau}")
@@ -174,48 +177,51 @@ def quantile_regression(
     base = df.filter(cond).select(
         y.alias("__y"), *[F.col(c).cast("double").alias(f"__x{i}")
                           for i, c in enumerate(xs)])
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(base, eager=True)
-    n = base.count()
-    if n < p + 1:
-        raise ValueError(
-            f"quantile_regression needs > {p} rows, got {n}")
+    from whylogs_spark.core.util import materialize, release
+    base = materialize(base)
+    try:
+        n = base.count()
+        if n < p + 1:
+            raise ValueError(
+                f"quantile_regression needs > {p} rows, got {n}")
 
-    feats = ["__one"] + [f"__x{i}" for i in range(len(xs))]
-    wdf = base.withColumn("__one", F.lit(1.0))
+        feats = ["__one"] + [f"__x{i}" for i in range(len(xs))]
+        wdf = base.withColumn("__one", F.lit(1.0))
 
-    A, bvec = _weighted_moments(
-        wdf.withColumn("__w", F.lit(1.0)), feats, p)
-    beta = np.linalg.solve(A, bvec)
-    converged = False
-    it = 0
-    for it in range(1, max_iter + 1):
+        A, bvec = _weighted_moments(
+            wdf.withColumn("__w", F.lit(1.0)), feats, p)
+        beta = np.linalg.solve(A, bvec)
+        converged = False
+        it = 0
+        for it in range(1, max_iter + 1):
+            pred = F.lit(float(beta[0]))
+            for i in range(len(xs)):
+                pred = pred + F.lit(float(beta[i + 1])) * F.col(f"__x{i}")
+            resid = F.col("__y") - pred
+            r = wdf.withColumn("__r", resid)
+            w = (F.abs(F.lit(tau)
+                       - F.when(F.col("__r") < 0, F.lit(1.0))
+                       .otherwise(F.lit(0.0)))
+                 / F.greatest(F.abs(F.col("__r")), F.lit(float(eps))))
+            A, bvec = _weighted_moments(r.withColumn("__w", w), feats, p)
+            new_beta = np.linalg.solve(A, bvec)
+            if float(np.max(np.abs(new_beta - beta))) < tol * (
+                    1.0 + float(np.max(np.abs(beta)))):
+                beta = new_beta
+                converged = True
+                break
+            beta = new_beta
+
         pred = F.lit(float(beta[0]))
         for i in range(len(xs)):
             pred = pred + F.lit(float(beta[i + 1])) * F.col(f"__x{i}")
-        resid = F.col("__y") - pred
-        r = wdf.withColumn("__r", resid)
-        w = (F.abs(F.lit(tau)
-                   - F.when(F.col("__r") < 0, F.lit(1.0))
-                   .otherwise(F.lit(0.0)))
-             / F.greatest(F.abs(F.col("__r")), F.lit(float(eps))))
-        A, bvec = _weighted_moments(r.withColumn("__w", w), feats, p)
-        new_beta = np.linalg.solve(A, bvec)
-        if float(np.max(np.abs(new_beta - beta))) < tol * (
-                1.0 + float(np.max(np.abs(beta)))):
-            beta = new_beta
-            converged = True
-            break
-        beta = new_beta
-
-    pred = F.lit(float(beta[0]))
-    for i in range(len(xs)):
-        pred = pred + F.lit(float(beta[i + 1])) * F.col(f"__x{i}")
-    rr = F.col("__y") - pred
-    loss = base.agg(F.avg(
-        F.when(rr >= 0, F.lit(tau) * rr)
-        .otherwise((F.lit(tau) - 1.0) * rr)).alias("l")
-    ).collect()[0]["l"]
+        rr = F.col("__y") - pred
+        loss = base.agg(F.avg(
+            F.when(rr >= 0, F.lit(tau) * rr)
+            .otherwise((F.lit(tau) - 1.0) * rr)).alias("l")
+        ).collect()[0]["l"]
+    finally:
+        release(base)
 
     terms = ["intercept"] + xs
     rows = [(t, float(b_), float(tau), it, bool(converged),

@@ -192,10 +192,11 @@ def pattern_profile(
     # the per-column totals); Spark re-runs the whole scan per branch,
     # so materialize the bounded frame once (mask cardinality, not
     # row count — the dedup `rep` checkpoint precedent)
-    counts = long_df.groupBy("column", "mask").agg(
+    from whylogs_spark.core.util import materialize
+    counts = materialize(long_df.groupBy("column", "mask").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("__v").alias("n_values"),
-        F.min("__v").alias("example")).localCheckpoint()
+        F.min("__v").alias("example")))
     tot = counts.groupBy("column").agg(F.sum("n").alias("__tot"))
 
     w_local = Window.partitionBy("column", "__pid").orderBy(

@@ -123,10 +123,11 @@ def kmv_pairwise_overlap(
     """
     sk = kmv_sketch(df, segment_col, key_cols, k).select(
         "__seg", "__u")
-    # checkpoint-free reuse: the sketch table is consumed by three
-    # branches (segment list x2, candidates x2) — persist it so the
-    # data pass runs once
-    sk = sk.localCheckpoint(eager=False)
+    # the sketch table is consumed by three branches (segment list x2,
+    # candidates x2) — cut it so the data pass runs once; lazy, so
+    # building the returned frame runs no job
+    from whylogs_spark.core.util import materialize
+    sk = materialize(sk, lazy=True)
     segs = sk.select("__seg").distinct()
     pairs = (segs.alias("pa")
              .crossJoin(F.broadcast(segs.alias("pb")))

@@ -779,9 +779,11 @@ def kendall_tau(
             .select(x.alias("__x"), y.alias("__y")))
     cells = base.groupBy("__x", "__y").agg(
         F.count(F.lit(1)).cast("double").alias("__c"))
-    cells = cells.localCheckpoint(eager=True)
+    from whylogs_spark.core.util import materialize, release
+    cells = materialize(cells)
     n_cells = cells.count()
     if n_cells > max_cells:
+        release(cells)
         raise ValueError(
             f"kendall_tau: {n_cells} distinct (x, y) cells > max_cells="
             f"{max_cells}; bucket a continuous column first "

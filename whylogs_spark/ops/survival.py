@@ -400,8 +400,8 @@ def cox_ph(
     to covariate shifts; centering keeps ``e^{xβ}`` conditioned).
     Rows with null/NaN duration, event, or features drop; ``event``
     must cast to 0/1 (1 = event, 0 = right-censored).  The filtered
-    base is localCheckpointed once so the 25 iterations never rescan
-    the source.
+    base is materialized once so the 25 iterations never rescan the
+    source.
     """
     import numpy as np
 
@@ -430,74 +430,79 @@ def cox_ph(
     n, n_events = int(means["__n"]), int(means["__ne"])
     if n == 0:
         raise ValueError("cox_ph: no usable rows")
-    from whylogs_spark.core.util import iteration_base
-    base = iteration_base(raw.select(
+    from whylogs_spark.core.util import materialize, release
+    base = materialize(raw.select(
         "__t", "__e",
         *[(F.col(f"__x{j}") - F.lit(float(means[f"__m{j}"])))
-          .alias(f"__x{j}") for j in range(p)]), eager=True)
-
-    beta = np.zeros(p)
-    converged = False
-    ll = float("nan")
-    it = 0
-    for it in range(1, max_iter + 1):
-        eta = None
-        for j in range(p):
-            term = F.lit(float(beta[j])) * F.col(f"__x{j}")
-            eta = term if eta is None else eta + term
-        eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
-        w = F.exp(eta)
-        aggs = [F.sum(w).alias("__w"),
-                F.sum("__e").alias("__d"),
-                F.sum(F.col("__e") * eta).alias("__se")]
-        sum_cols = ["__w"]
-        for j in range(p):
-            aggs.append(F.sum(F.col("__e") * F.col(f"__x{j}"))
-                        .alias(f"__sx{j}"))
-            aggs.append(F.sum(F.col(f"__x{j}") * w)
-                        .alias(f"__xw{j}"))
-            sum_cols.append(f"__xw{j}")
-        for j in range(p):
-            for k in range(j, p):
-                aggs.append(F.sum(F.col(f"__x{j}")
-                                  * F.col(f"__x{k}") * w)
-                            .alias(f"__xxw{j}_{k}"))
-                sum_cols.append(f"__xxw{j}_{k}")
-        g = base.groupBy("__t").agg(*aggs)
-        r = running_sums(g, ["__t"], sum_cols)
-        # suffix (risk-set) sum = grand − exclusive prefix
-        def suf(c):
-            return (F.col(f"__g_{c}")
-                    - (F.col(f"__cum_{c}") - F.col(c)))
-        s0 = suf("__w")
-        ev = r.filter(F.col("__d") > 0)
-        red = [F.sum(F.col("__se")).alias("__lse"),
-               F.sum(F.col("__d") * F.log(s0)).alias("__dls")]
-        for j in range(p):
-            red.append(F.sum(
-                F.col(f"__sx{j}")
-                - F.col("__d") * suf(f"__xw{j}") / s0)
-                .alias(f"__g{j}"))
-        for j in range(p):
-            for k in range(j, p):
+          .alias(f"__x{j}") for j in range(p)]))
+    try:
+        beta = np.zeros(p)
+        converged = False
+        ll = float("nan")
+        it = 0
+        for it in range(1, max_iter + 1):
+            eta = None
+            for j in range(p):
+                term = F.lit(float(beta[j])) * F.col(f"__x{j}")
+                eta = term if eta is None else eta + term
+            eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
+            w = F.exp(eta)
+            aggs = [F.sum(w).alias("__w"),
+                    F.sum("__e").alias("__d"),
+                    F.sum(F.col("__e") * eta).alias("__se")]
+            sum_cols = ["__w"]
+            for j in range(p):
+                aggs.append(F.sum(F.col("__e") * F.col(f"__x{j}"))
+                            .alias(f"__sx{j}"))
+                aggs.append(F.sum(F.col(f"__x{j}") * w)
+                            .alias(f"__xw{j}"))
+                sum_cols.append(f"__xw{j}")
+            for j in range(p):
+                for k in range(j, p):
+                    aggs.append(F.sum(F.col(f"__x{j}")
+                                      * F.col(f"__x{k}") * w)
+                                .alias(f"__xxw{j}_{k}"))
+                    sum_cols.append(f"__xxw{j}_{k}")
+            # cut here rather than inside the walk, so this step's blocks
+            # can be released once its row is on the driver
+            g = materialize(base.groupBy("__t").agg(*aggs))
+            r = running_sums(g, ["__t"], sum_cols)
+            # suffix (risk-set) sum = grand − exclusive prefix
+            def suf(c):
+                return (F.col(f"__g_{c}")
+                        - (F.col(f"__cum_{c}") - F.col(c)))
+            s0 = suf("__w")
+            ev = r.filter(F.col("__d") > 0)
+            red = [F.sum(F.col("__se")).alias("__lse"),
+                   F.sum(F.col("__d") * F.log(s0)).alias("__dls")]
+            for j in range(p):
                 red.append(F.sum(
-                    F.col("__d")
-                    * (suf(f"__xxw{j}_{k}") / s0
-                       - (suf(f"__xw{j}") / s0)
-                       * (suf(f"__xw{k}") / s0)))
-                    .alias(f"__h{j}_{k}"))
-        row = ev.agg(*red).collect()[0]
-        ll = float((row["__lse"] or 0.0) - (row["__dls"] or 0.0))
-        grad = np.array([row[f"__g{j}"] or 0.0 for j in range(p)])
-        hess = np.zeros((p, p))
-        for j in range(p):
-            for k in range(j, p):
-                hess[j, k] = hess[k, j] = row[f"__h{j}_{k}"] or 0.0
-        step = np.linalg.solve(hess + ridge * np.eye(p), grad)
-        beta = beta + step
-        if float(np.abs(step).max()) < tol:
-            converged = True
-            break
+                    F.col(f"__sx{j}")
+                    - F.col("__d") * suf(f"__xw{j}") / s0)
+                    .alias(f"__g{j}"))
+            for j in range(p):
+                for k in range(j, p):
+                    red.append(F.sum(
+                        F.col("__d")
+                        * (suf(f"__xxw{j}_{k}") / s0
+                           - (suf(f"__xw{j}") / s0)
+                           * (suf(f"__xw{k}") / s0)))
+                        .alias(f"__h{j}_{k}"))
+            row = ev.agg(*red).collect()[0]
+            release(g)
+            ll = float((row["__lse"] or 0.0) - (row["__dls"] or 0.0))
+            grad = np.array([row[f"__g{j}"] or 0.0 for j in range(p)])
+            hess = np.zeros((p, p))
+            for j in range(p):
+                for k in range(j, p):
+                    hess[j, k] = hess[k, j] = row[f"__h{j}_{k}"] or 0.0
+            step = np.linalg.solve(hess + ridge * np.eye(p), grad)
+            beta = beta + step
+            if float(np.abs(step).max()) < tol:
+                converged = True
+                break
+    finally:
+        release(base)
     se = {}
     try:
         cov = np.linalg.inv(hess + ridge * np.eye(p))
@@ -595,9 +600,11 @@ def concordance_index(
             f"score) cells > max_cells={max_cells}; the pair join "
             "is quadratic in cells — quantize the score or duration "
             "to a coarser grain first, or raise max_cells")
-    ev = cells.filter(F.col("__d") > 0).select(
+    # lazy: the returned frame's own job builds the event cells
+    from whylogs_spark.core.util import materialize
+    ev = materialize(cells.filter(F.col("__d") > 0).select(
         F.col("__t").alias("__ti"), F.col("__s").alias("__si"),
-        F.col("__d").alias("__di")).localCheckpoint(eager=False)
+        F.col("__d").alias("__di")), lazy=True)
     other = cells.select(
         F.col("__t").alias("__tj"), F.col("__s").alias("__sj"),
         F.col("__m").alias("__mj"), F.col("__c").alias("__cj"))

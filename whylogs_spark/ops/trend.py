@@ -80,8 +80,8 @@ def mann_kendall(
     g = base.groupBy(*groups, "__t").agg(F.avg("__v").alias("__v"))
     # the guard, both pair-join sides, and the tie pass all consume
     # the collapse — pay the upstream once when Catalyst bounds it
-    from whylogs_spark.core.util import cut_derived_lineage
-    g = cut_derived_lineage(g)
+    from whylogs_spark.core.util import materialize
+    g = materialize(g, only_if_expensive=True)
 
     if max_points is not None:
         worst = (g.groupBy(*groups)
