@@ -2265,21 +2265,23 @@ def main() -> None:
         F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
         .alias("dst"))
     # audit ONE iteration's un-checkpointed plan: the checkpoint in
-    # pagerank() erases the join/agg shape from the returned frame
-    from whylogs_spark.ops.graph import _pagerank_step
+    # pagerank() erases the join/agg shape from the returned frame.
+    # pagerank is stationary_distribution at unit weights, so the step
+    # is the shared Markov step with each node's out-degree on the state
+    from whylogs_spark.ops.graph import _markov_step
 
-    pr_e = pr_edges.filter(
+    pr_u = pr_edges.filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     ).select(F.col("src").alias("__s"),
              F.col("dst").alias("__d")).distinct()
-    pr_state = (pr_e.select(F.col("__s").alias("node"))
-                .union(pr_e.select(F.col("__d").alias("node")))
+    pr_e = pr_u.withColumn("__w", F.lit(1.0))
+    pr_state = (pr_e.select(F.col("__s").alias("state"))
+                .union(pr_e.select(F.col("__d").alias("state")))
                 .distinct()
-                .join(pr_e.groupBy(F.col("__s").alias("node"))
-                      .agg(F.count(F.lit(1)).alias("__out")),
-                      "node", "left")
-                .withColumn("rank", F.lit(0.001)))
-    pr = _pagerank_step(pr_state, pr_e, 1000, 0.85)
+                .join(pr_e.groupBy(F.col("__s").alias("state"))
+                      .agg(F.sum("__w").alias("__tw")), "state", "left")
+                .withColumn("probability", F.lit(0.001)))
+    pr = _markov_step(pr_state, pr_e, 1000, 0.85)
     sections.append((
         "pagerank (one power-iteration step)", pr,
         {
@@ -2463,18 +2465,20 @@ def main() -> None:
     sd_edges = ev.select(F.col("event_type").alias("src"),
                          F.col("event_type").alias("dst"),
                          F.lit(1.0).alias("probability"))
-    # audit the un-checkpointed renormalized-edge + first-step shape
-    # via a 1-iteration run's plan is erased by the checkpoint, so
-    # assert the construction frames instead: renormalization plan
+    # a 1-iteration run's plan is erased by the checkpoint, so assert
+    # the construction frame instead: the per-source weight totals
+    # joined onto the node-sized initial state (renormalization)
     sdw = F.col("probability").cast("double")
     sd_raw = sd_edges.filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
         & sdw.isNotNull() & (sdw > 0)
     ).select(F.col("src").alias("__s"), F.col("dst").alias("__d"),
              sdw.alias("__w"))
-    sd_tot = sd_raw.groupBy("__s").agg(F.sum("__w").alias("__tw"))
-    sd_norm = sd_raw.join(sd_tot, "__s").select(
-        "__s", "__d", (F.col("__w") / F.col("__tw")).alias("__p"))
+    sd_tot = sd_raw.groupBy(F.col("__s").alias("state")).agg(
+        F.sum("__w").alias("__tw"))
+    sd_norm = (sd_raw.select(F.col("__s").alias("state"))
+               .union(sd_raw.select(F.col("__d").alias("state")))
+               .distinct().join(sd_tot, "state", "left"))
     sections.append((
         "markov stationary distribution (edge renormalization)",
         sd_norm,
@@ -3455,9 +3459,10 @@ def main() -> None:
                 r"MapInPandas|FlatMapGroupsInPandas))",
         }))
 
-    # Cox PH: the per-Newton-step plan (rebuilt inline at beta=0 —
-    # cox_ph itself loops on the driver and returns a dict, so the
-    # audit pins the iteration frame the loop materializes)
+    # Cox PH: the per-Newton-step plan at beta=0 from the fit's own
+    # Gram aggregate (cox_ph itself loops on the driver and returns a
+    # dict, so the audit pins the iteration frame the loop materializes;
+    # the reduce is rebuilt inline)
     from whylogs_spark.core.prefix import running_sums as _rs
 
     cox_base = (ev11
@@ -3469,16 +3474,16 @@ def main() -> None:
                         .cast("double").alias("__e"),
                         ((F.col("user_id") % 50).cast("double")
                          / 50.0).alias("__x0")))
-    cox_w = F.exp(F.greatest(F.lit(-30.0), F.least(
-        F.lit(30.0), F.lit(0.0) * F.col("__x0"))))
-    cox_g = cox_base.groupBy("__t").agg(
-        F.sum(cox_w).alias("__w"),
-        F.sum("__e").alias("__d"),
-        F.sum(F.col("__x0") * cox_w).alias("__xw0"))
-    cox_r = _rs(cox_g, ["__t"], ["__w", "__xw0"])
-    cox_s0 = F.col("__g___w") - (F.col("__cum___w") - F.col("__w"))
-    cox_step = cox_r.filter(F.col("__d") > 0).agg(
-        F.sum(F.col("__d") * F.log(cox_s0)).alias("__dls"))
+    from whylogs_spark.ops.glm import _eta, _gram
+
+    cox_g = cox_base.groupBy("__t").agg(*_gram(
+        [F.lit(1.0), F.col("__x0")], F.exp(_eta([0.0], [F.col("__x0")])),
+        F.col("__e")))
+    cox_r = _rs(cox_g, ["__t"], ["__h0_0", "__h0_1", "__h1_1"])
+    cox_s0 = F.col("__g___h0_0") - (F.col("__cum___h0_0")
+                                    - F.col("__h0_0"))
+    cox_step = cox_r.filter(F.col("__g0") > 0).agg(
+        F.sum(F.col("__g0") * F.log(cox_s0)).alias("__dls"))
     sections.append((
         "Cox PH Newton step (groupBy + suffix prefix pass + reduce)",
         cox_step,
@@ -3854,25 +3859,17 @@ def main() -> None:
                 r"FlatMapGroupsInPandas",
         }))
 
-    # Huber IRLS: the per-iteration plan (rebuilt inline at unit
-    # weights — huber_regression loops driver-side like cox_ph, so
-    # the audit pins the weighted moment aggregate each step runs)
+    # Huber IRLS: the per-iteration plan at unit weights
+    # (huber_regression loops driver-side like cox_ph, so the audit
+    # pins the weighted moment aggregate each step runs: the shared
+    # Gram aggregate over [1, x, y])
     hb = load_table(spark, SF_DIR, "orders").select(
         (F.month("o_orderdate").cast("double") / 12.0).alias("__x0"),
         ((F.col("o_custkey") % 100).cast("double") / 100.0)
         .alias("__x1"),
-        F.col("o_totalprice").cast("double").alias("__y"),
-        F.lit(1.0).alias("__one"), F.lit(1.0).alias("__w"))
-    hub_feats = ["__one", "__x0", "__x1"]
-    hub_aggs = []
-    for i in range(3):
-        for j in range(i, 3):
-            hub_aggs.append(F.sum(
-                F.col("__w") * F.col(hub_feats[i])
-                * F.col(hub_feats[j])).alias(f"m_{i}_{j}"))
-        hub_aggs.append(F.sum(
-            F.col("__w") * F.col(hub_feats[i]) * F.col("__y"))
-            .alias(f"v_{i}"))
+        F.col("o_totalprice").cast("double").alias("__y"))
+    hub_aggs = _gram([F.lit(1.0), F.col("__x0"), F.col("__x1"),
+                      F.col("__y")], F.lit(1.0))
     sections.append((
         "Huber IRLS step (ONE weighted moment aggregate)",
         hb.agg(*hub_aggs),
@@ -3982,7 +3979,7 @@ def main() -> None:
 
     # round-13: quantile regression — the per-iteration data pass is
     # the SAME weighted moment aggregate huber_regression pins above
-    # (shared _weighted_moments); audit the loss pass it adds
+    # (shared robust._irls); audit the loss pass it adds
     from whylogs_spark.ops.robust import quantile_regression as _qr  # noqa: F401 (source-level: shares huber's audited moment pass)
 
     sections.append((

@@ -62,6 +62,33 @@ def test_pagerank_keeps_only_the_final_state(spark):
     assert sum(got.values()) == pytest.approx(1.0, rel=1e-9)
 
 
+def test_graph_walks_release_their_cuts_when_a_step_fails(
+        spark, monkeypatch):
+    from whylogs_spark.ops import graph
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (5, 1)], "src long, dst long")
+
+    def failing_on_third_call(step):
+        calls = []
+
+        def wrapped(*args):
+            calls.append(args)
+            if len(calls) == 3:
+                raise RuntimeError("step failed")
+            return step(*args)
+        return wrapped
+
+    for step, walk in (("_markov_step", graph.pagerank),
+                       ("_label_step", graph.label_propagation)):
+        monkeypatch.setattr(graph, step,
+                            failing_on_third_call(getattr(graph, step)))
+        before = _persistent_ids(spark)
+        with pytest.raises(RuntimeError, match="step failed"):
+            walk(edges, iterations=5)
+        assert _persistent_ids(spark) - before == set(), step
+
+
 def test_release_leaves_frames_it_did_not_cut(spark):
     own = spark.range(10).groupBy((F.col("id") % 2).alias("k")).count() \
         .localCheckpoint()

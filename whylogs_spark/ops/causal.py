@@ -25,11 +25,12 @@ Scale shapes:
 from __future__ import annotations
 
 import math
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, Optional, Sequence
 
-import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from whylogs_spark.ops.glm import _glm, _score_eta
 
 __all__ = ["did_estimator", "fit_logistic", "logistic_score_col",
            "ipw_att", "propensity_match_att", "covariate_balance"]
@@ -175,95 +176,27 @@ def fit_logistic(
     log-likelihood in ONE map-side-combined pass (p+1 gradient terms
     + (p+1)(p+2)/2 Hessian terms as conditional-sum expressions — all
     JVM codegen, no Python on the data path); the (p+1)-dim solve
-    happens on the driver.  ``ridge`` adds an L2 diagonal for
-    separable data.  Rows with null/NaN in any feature or the label
-    are excluded; the label must cast to 0/1.
+    happens on the driver (``ops.glm``'s shared Newton driver with the
+    logit link).  ``ridge`` adds an L2 diagonal for separable data.
+    Rows with null/NaN in any feature or the label are excluded; the
+    label must cast to 0/1.
     """
-    feats: List[str] = list(feature_cols)
-    if not feats:
-        raise ValueError("fit_logistic needs >= 1 feature column")
-    p1 = len(feats) + 1
-    y = F.col(label_col).cast("double")
-    ok = y.isNotNull() & ~F.isnan(y)
-    xs = []
-    for c in feats:
-        xc = F.col(c).cast("double")
-        ok = ok & xc.isNotNull() & ~F.isnan(xc)
-        xs.append(xc)
-    base = df.filter(ok).select(
-        y.alias("__y"),
-        *[x.alias(f"__x{i}") for i, x in enumerate(xs)])
-    # Each Newton step is one full aggregate over `base`; without a
-    # lineage cut every step RE-EXECUTES the upstream plan (scan +
-    # joins + any funnel) up to max_iter times.
-    from whylogs_spark.core.util import materialize, release
-    base = materialize(base)
-    try:
-        # x0 = intercept column of ones
-        xcols = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(len(feats))]
+    out = _glm(df, label_col, feature_cols, _logistic_link,
+               "fit_logistic", max_iter, tol, ridge)
+    del out["se"]
+    return out
 
-        beta = np.zeros(p1)
-        n = None
-        converged = False
-        it = 0
-        ll = float("nan")
-        for it in range(1, max_iter + 1):
-            eta = None
-            for j in range(p1):
-                term = F.lit(float(beta[j])) * xcols[j]
-                eta = term if eta is None else eta + term
-            # clamp eta so exp never overflows; mu in (0, 1)
-            eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
-            mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
-            w = mu * (1.0 - mu)
-            resid = F.col("__y") - mu
-            aggs = [F.count(F.lit(1)).cast("double").alias("__n"),
-                    F.sum(F.col("__y") * eta - F.log(F.lit(1.0)
-                                                     + F.exp(eta)))
-                    .alias("__ll")]
-            for j in range(p1):
-                aggs.append(F.sum(resid * xcols[j]).alias(f"__g{j}"))
-            for j in range(p1):
-                for kk in range(j, p1):
-                    aggs.append(F.sum(w * xcols[j] * xcols[kk])
-                                .alias(f"__h{j}_{kk}"))
-            row = base.agg(*aggs).collect()[0]
-            n = int(row["__n"])
-            ll = float(row["__ll"])
-            if n == 0:
-                raise ValueError("fit_logistic: no usable rows")
-            grad = np.array([row[f"__g{j}"] for j in range(p1)])
-            hess = np.zeros((p1, p1))
-            for j in range(p1):
-                for kk in range(j, p1):
-                    hess[j, kk] = hess[kk, j] = row[f"__h{j}_{kk}"]
-            hess += ridge * np.eye(p1)
-            step = np.linalg.solve(hess, grad)
-            beta = beta + step
-            if float(np.abs(step).max()) < tol:
-                converged = True
-                break
-    finally:
-        release(base)
-    return {
-        "intercept": float(beta[0]),
-        "coef": {c: float(beta[i + 1]) for i, c in enumerate(feats)},
-        "n": n, "iterations": it, "converged": converged,
-        "log_likelihood": ll,
-    }
+
+def _logistic_link(eta: Column):
+    mu = F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
+    return mu, mu * (1.0 - mu), F.log(F.lit(1.0) + F.exp(eta))
 
 
 def logistic_score_col(model: Dict, feature_cols: Optional[Sequence[str]] = None) -> Column:
     """Pure map-side scoring expression for a :func:`fit_logistic`
     model: ``sigmoid(b0 + sum b_i x_i)`` — attach with
     ``df.withColumn("propensity", logistic_score_col(m))``."""
-    feats = list(feature_cols) if feature_cols else list(model["coef"])
-    eta = F.lit(float(model["intercept"]))
-    for c in feats:
-        eta = eta + F.lit(float(model["coef"][c])) * \
-            F.col(c).cast("double")
-    eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-eta))
+    return _logistic_link(_score_eta(model, feature_cols))[0]
 
 
 def ipw_att(

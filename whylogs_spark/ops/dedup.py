@@ -563,32 +563,37 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    for _ in range(max_iter):
-        # label(u) <- min(label(u), min over neighbors v of label(v))
-        neigh = (
-            edges.join(labels.withColumnRenamed("node", "v"), "v")
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        updated = materialize(
-            labels.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_min"), F.col("component")),
-                ).alias("component"),
-                (F.coalesce(F.col("nbr_min"), F.col("component"))
-                 < F.col("component")).alias("__chg"),
+    try:
+        for _ in range(max_iter):
+            # label(u) <- min(label(u), min over neighbors v of label(v))
+            neigh = (
+                edges.join(labels.withColumnRenamed("node", "v"), "v")
+                .groupBy(F.col("u").alias("node"))
+                .agg(F.min("component").alias("nbr_min"))
             )
-        )
+            updated = materialize(
+                labels.join(neigh, "node", "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("component"),
+                        F.coalesce(F.col("nbr_min"), F.col("component")),
+                    ).alias("component"),
+                    (F.coalesce(F.col("nbr_min"), F.col("component"))
+                     < F.col("component")).alias("__chg"),
+                )
+            )
+            release(cut)
+            cut = updated
+            changed = updated.filter(F.col("__chg")).limit(1).count()
+            labels = updated.drop("__chg")
+            if changed == 0:
+                break
+    except BaseException:
         release(cut)
-        cut = updated
-        changed = updated.filter(F.col("__chg")).limit(1).count()
-        labels = updated.drop("__chg")
-        if changed == 0:
-            break
-    release(edges)
+        raise
+    finally:
+        release(edges)
     return labels
 
 

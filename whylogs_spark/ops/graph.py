@@ -1,20 +1,26 @@
-"""Link-graph analytics over an edge table: degree statistics and
-PageRank — the corpus-curation signals (site authority, crawl-frontier
+"""Link-graph analytics over an edge table: degree statistics,
+PageRank, Markov stationary distributions and label propagation — the
+corpus-curation signals (site authority, crawl-frontier
 prioritization, spam-farm detection) a web-scale training pipeline
 derives from its link structure.  Complements ``dedup.
 connected_components`` (single-link closure) with importance scoring.
 
-Scale shape: PageRank is the canonical iterative join workload — each
-iteration is ONE equi-join of the rank vector against the edge list
-(shuffle keyed by node id; skew bound = one node's out-edges) plus a
-groupBy-sum, with dangling mass folded in from a 1-row broadcast
-aggregate.  Iterations materialize the (node-sized) rank vector so
-lineage stays O(1) — the edge table itself is scanned once per
-iteration and never re-derived — and release each superseded state.
-Degree stats are single partial-agged aggregations.
+Scale shape: every walk runs :func:`_power_iterate`, the one loop of
+this module.  PageRank is the canonical iterative join workload — it
+is :func:`stationary_distribution` at unit edge weights, whose step
+(:func:`_markov_step`) is ONE equi-join of the rank vector against the
+edge list (shuffle keyed by node id; skew bound = one node's
+out-edges) plus a groupBy-sum, with dangling mass folded in from a
+1-row broadcast aggregate.  The loop materializes the (node-sized)
+state so lineage stays O(1) — the edge table itself is scanned once
+per iteration and never re-derived — and releases each superseded
+state, and every state it holds when a step fails.  Degree stats are
+single partial-agged aggregations.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -23,6 +29,38 @@ from whylogs_spark.core.util import materialize, release
 
 __all__ = ["degree_stats", "pagerank", "stationary_distribution",
            "label_propagation"]
+
+
+def _power_iterate(state: DataFrame, step: Callable[[DataFrame], DataFrame],
+                   iterations: int, every: int = 1) -> DataFrame:
+    """``step`` applied ``iterations`` times to ``state``.  Every
+    ``every``-th state and the last are materialized; the states
+    between are lazily ``persist()``-ed, since a step may read its
+    predecessor several times and an unpersisted chain would recompute
+    each read.  Once a new cut holds the lineage, the previous cut
+    (``state`` itself at first) and the persisted states it consumed
+    are released; if a step fails, every state the loop holds is."""
+    cut, pending = state, []
+
+    def drop():
+        release(cut)
+        for p in pending:
+            p.unpersist()
+
+    try:
+        for done in range(1, iterations + 1):
+            nxt = step(state)
+            if done % every and done < iterations:
+                state = nxt.persist()
+                pending.append(state)
+                continue
+            state = materialize(nxt)
+            drop()
+            cut, pending = state, []
+    except BaseException:
+        drop()
+        raise
+    return state
 
 
 def degree_stats(
@@ -71,6 +109,9 @@ def pagerank(
     where ``dangling = Σ r(u)`` over nodes with no out-edges.
     Duplicate edges count once; null endpoints drop.
 
+    This is :func:`stationary_distribution` over the distinct edges
+    at unit weight (so each node splits its rank evenly over its
+    out-edges) with ``damping`` set, renamed to ``(node, rank)``.
     Per iteration: one broadcast of the 1-row dangling aggregate, one
     rank⋈edges equi-join keyed by src (the only data-sized shuffle),
     one groupBy-sum.  The rank vector is node-sized and materialized
@@ -81,62 +122,12 @@ def pagerank(
         raise ValueError(f"damping must be in [0, 1]: {damping}")
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1: {iterations}")
-    # materialize the distinct-edge view ONCE: every iteration joins
-    # against it, and without the checkpoint the raw-edge scan +
-    # dedup shuffle would re-run per iteration
-    e = materialize(edges.filter(
-        F.col(src).isNotNull() & F.col(dst).isNotNull()
-    ).select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-        .distinct())
-    nodes = materialize(e.select(F.col("__s").alias("node"))
-                        .union(e.select(F.col("__d").alias("node")))
-                        .distinct())
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        release(e)
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-    outd = e.groupBy(F.col("__s").alias("node")).agg(
-        F.count(F.lit(1)).alias("__out"))
-    # (node, out_degree, rank); out_degree null marks a dangling node
-    state = materialize(nodes.join(outd, "node", "left").select(
-        "node", "__out", F.lit(1.0 / n_nodes).alias("rank")))
-
-    d = float(damping)
-    for _ in range(int(iterations)):
-        nxt = materialize(_pagerank_step(state, e, n_nodes, d))
-        release(state)
-        state = nxt
-    release(e, nodes)
-    return state.select("node", "rank")
-
-
-def _pagerank_step(state: DataFrame, e: DataFrame, n_nodes: int,
-                   d: float) -> DataFrame:
-    """One power-iteration update (uncut — the audit reads this plan
-    directly, since the cut in :func:`pagerank` erases the
-    iteration's physical plan from the returned frame)."""
-    base = (1.0 - d) / n_nodes
-    dang = state.agg(
-        F.coalesce(F.sum(F.when(F.col("__out").isNull(),
-                                F.col("rank"))),
-                   F.lit(0.0)).alias("__dang"))
-    contrib = (
-        state.filter(F.col("__out").isNotNull())
-        .join(e, state["node"] == e["__s"])
-        .select(F.col("__d").alias("node"),
-                (F.col("rank") / F.col("__out")).alias("__c"))
-        .groupBy("node").agg(F.sum("__c").alias("__in"))
-    )
-    return (
-        state.select("node", "__out").join(contrib, "node", "left")
-        .crossJoin(F.broadcast(dang))
-        .select(
-            "node", "__out",
-            (F.lit(base)
-             + F.lit(d) * (F.coalesce(F.col("__in"), F.lit(0.0))
-                           + F.col("__dang") / F.lit(float(n_nodes))))
-            .alias("rank"))
-    )
+    unit = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")) \
+        .distinct().withColumn("__w", F.lit(1.0))
+    return stationary_distribution(
+        unit, "src", "dst", "__w", iterations, damping=damping
+    ).select(F.col("state").alias("node"),
+             F.col("probability").alias("rank"))
 
 
 def stationary_distribution(
@@ -165,10 +156,11 @@ def stationary_distribution(
     callers picking ``iterations`` choose their averaging; the
     default 30 settles every aperiodic chain of practical size).
 
-    Same scale shape as :func:`pagerank`: the (re-normalized) edge
-    frame is materialized once, each iteration is one equi-join +
-    groupBy-sum with the dangling mass folded in from a 1-row
-    broadcast, and the state vector is materialized every
+    Same scale shape as :func:`pagerank`: the edge frame is
+    materialized once, each source's weight total is one groupBy joined
+    onto the node-sized state (never onto the edges), each iteration
+    is one equi-join + groupBy-sum with the dangling mass folded in
+    from a 1-row broadcast, and the state vector is materialized every
     ``checkpoint_every`` steps (lineage depth bounded at that many
     joins).  Steps between checkpoints are lazily ``persist()``-ed —
     each step references its predecessor three times (dangling agg,
@@ -186,15 +178,11 @@ def stationary_distribution(
         raise ValueError(
             f"checkpoint_every must be >= 1: {checkpoint_every}")
     w = F.col(weight).cast("double")
-    raw = edges.filter(
+    e = materialize(edges.filter(
         F.col(src).isNotNull() & F.col(dst).isNotNull()
         & w.isNotNull() & (w > 0)
     ).select(F.col(src).alias("__s"), F.col(dst).alias("__d"),
-             w.alias("__w"))
-    tot = raw.groupBy("__s").agg(F.sum("__w").alias("__tw"))
-    e = materialize(raw.join(tot, "__s")
-                    .select("__s", "__d", (F.col("__w") / F.col("__tw"))
-                            .alias("__p")))
+             w.alias("__w")))
     nodes = materialize(e.select(F.col("__s").alias("state"))
                         .union(e.select(F.col("__d").alias("state")))
                         .distinct())
@@ -202,52 +190,50 @@ def stationary_distribution(
     if n_nodes == 0:
         release(e)
         return nodes.select("state", F.lit(0.0).alias("probability"))
-    has_out = e.select(F.col("__s").alias("state")).distinct() \
-        .withColumn("__o", F.lit(True))
-    state = cut = materialize(nodes.join(has_out, "state", "left").select(
-        "state", "__o", F.lit(1.0 / n_nodes).alias("probability")))
-    d = None if damping is None else float(damping)
-    it = int(iterations)
-    ck = int(checkpoint_every)
-    pending = []
-    for i in range(it):
-        dang = state.agg(
-            F.coalesce(F.sum(F.when(F.col("__o").isNull(),
-                                    F.col("probability"))),
-                       F.lit(0.0)).alias("__dang"))
-        contrib = (
-            state.join(e, state["state"] == e["__s"])
-            .select(F.col("__d").alias("state"),
-                    (F.col("probability") * F.col("__p"))
-                    .alias("__c"))
-            .groupBy("state").agg(F.sum("__c").alias("__in"))
-        )
-        flow = (F.coalesce(F.col("__in"), F.lit(0.0))
-                + F.col("__dang") / F.lit(float(n_nodes)))
-        if d is not None:
-            # damped (TextRank/PageRank-style) variant of the same
-            # recurrence: pr' = (1-d)/N + d * flow
-            flow = (F.lit((1.0 - d) / n_nodes) + F.lit(d) * flow)
-        nxt = (
-            state.select("state", "__o").join(contrib, "state", "left")
-            .crossJoin(F.broadcast(dang))
-            .select("state", "__o", flow.alias("probability"))
-        )
-        if (i + 1) % ck == 0 or i + 1 == it:
-            state = materialize(nxt)
-            # the new cut ends the lineage, so the previous cut and the
-            # lazily persisted steps it consumed can be released
-            release(cut)
-            for p in pending:
-                p.unpersist()
-            cut, pending = state, []
-        else:
-            # lazy persist: the next step references this frame three
-            # times; without it the chain recomputes 3^k subtrees
-            state = nxt.persist()
-            pending.append(state)
-    release(e, nodes)
+    try:
+        # each source's weight total rides on the node-sized state, so
+        # renormalizing never joins the edge table
+        tot = e.groupBy(F.col("__s").alias("state")).agg(
+            F.sum("__w").alias("__tw"))
+        state = materialize(nodes.join(tot, "state", "left").select(
+            "state", "__tw", F.lit(1.0 / n_nodes).alias("probability")))
+        d = None if damping is None else float(damping)
+        state = _power_iterate(
+            state, lambda s: _markov_step(s, e, n_nodes, d),
+            int(iterations), int(checkpoint_every))
+    finally:
+        release(e, nodes)
     return state.select("state", "probability")
+
+
+def _markov_step(state: DataFrame, e: DataFrame, n_nodes: int,
+                 d) -> DataFrame:
+    """One power-iteration step of :func:`stationary_distribution`:
+    ``π' = πP + dangling/N`` over the edges ``e`` (``__s, __d, __w``),
+    damped to ``(1−d)/N + d·(πP + dangling/N)`` when ``d`` is set.
+    ``state`` is ``(state, __tw, probability)``: ``__tw`` is the
+    state's total out-weight, null on a dangling state.  Uncut, so the
+    plan audit reads one step's physical plan from it."""
+    dang = state.agg(
+        F.coalesce(F.sum(F.when(F.col("__tw").isNull(),
+                                F.col("probability"))),
+                   F.lit(0.0)).alias("__dang"))
+    contrib = (
+        state.join(e, state["state"] == e["__s"])
+        .select(F.col("__d").alias("state"),
+                (F.col("probability") * (F.col("__w") / F.col("__tw")))
+                .alias("__c"))
+        .groupBy("state").agg(F.sum("__c").alias("__in"))
+    )
+    flow = (F.coalesce(F.col("__in"), F.lit(0.0))
+            + F.col("__dang") / F.lit(float(n_nodes)))
+    if d is not None:
+        flow = F.lit((1.0 - d) / n_nodes) + F.lit(d) * flow
+    return (
+        state.select("state", "__tw").join(contrib, "state", "left")
+        .crossJoin(F.broadcast(dang))
+        .select("state", "__tw", flow.alias("probability"))
+    )
 
 
 def label_propagation(
@@ -290,22 +276,26 @@ def label_propagation(
                                              F.col("__s").alias("__d")))
                       .distinct())
     nodes = materialize(und.select(F.col("__s").alias("node")).distinct())
-    labels = nodes.select("node", F.col("node").alias("community"))
-    for _ in range(int(iterations)):
-        msgs = (labels.join(und, labels["node"] == und["__s"])
-                .select(F.col("__d").alias("node"), "community"))
-        cnt = msgs.groupBy("node", "community").agg(
-            F.count(F.lit(1)).alias("__c"))
-        pick = cnt.groupBy("node").agg(
-            F.min(F.struct((F.lit(0) - F.col("__c")).alias("nc"),
-                           F.col("community").alias("lab")))
-            .alias("__m"))
-        nxt = materialize(labels.join(pick, "node", "left")
-                          .select("node",
-                                  F.coalesce(F.col("__m.lab"),
-                                             F.col("community"))
-                                  .alias("community")))
-        release(labels)
-        labels = nxt
-    release(und, nodes)
-    return labels
+    try:
+        return _power_iterate(
+            nodes.select("node", F.col("node").alias("community")),
+            lambda labels: _label_step(labels, und), int(iterations))
+    finally:
+        release(und, nodes)
+
+
+def _label_step(labels: DataFrame, und: DataFrame) -> DataFrame:
+    """One synchronous update of :func:`label_propagation`: every node
+    adopts its neighbors' most frequent label, ties to the smallest;
+    a node with no neighbor keeps its own."""
+    msgs = (labels.join(und, labels["node"] == und["__s"])
+            .select(F.col("__d").alias("node"), "community"))
+    cnt = msgs.groupBy("node", "community").agg(
+        F.count(F.lit(1)).alias("__c"))
+    pick = cnt.groupBy("node").agg(
+        F.min(F.struct((F.lit(0) - F.col("__c")).alias("nc"),
+                       F.col("community").alias("lab")))
+        .alias("__m"))
+    return labels.join(pick, "node", "left").select(
+        "node", F.coalesce(F.col("__m.lab"), F.col("community"))
+        .alias("community"))

@@ -1,51 +1,71 @@
-"""Robust (Huber) linear regression — the outlier-resistant sibling
-of ``ops/glm.py ols_report``: squared loss within ``delta`` robust
-scales of the fit, absolute loss outside, so a handful of wild rows
-bends the line instead of owning it (Huber 1964).
+"""Robust (Huber) and quantile linear regression — the
+outlier-resistant siblings of ``ops/glm.py ols_report``: squared loss
+within ``delta`` robust scales of the fit, absolute loss outside, so a
+handful of wild rows bends the line instead of owning it (Huber
+1964); or the pinball loss of a conditional quantile.
 
-Fit by IRLS exactly like the house GLM family: each iteration runs
-ONE weighted moment-matrix aggregate over the data (p(p+3)/2 scalars
-collected, never rows) and a driver-side p×p solve.  The robust
-scale sigma is re-estimated each iteration from the median absolute
-residual (one exact-percentile aggregate).  Scale shape identical to
-``fit_poisson``: job count = iterations, data touched once per
-iteration, everything else is driver algebra on a tiny matrix.
+Both fit by IRLS on ``ops.glm``'s shared Newton driver (:func:`_irls`)
+and differ only in their weights: each iteration runs ONE weighted
+moment-matrix aggregate over the data (p(p+3)/2 scalars collected,
+never rows) and a driver-side p×p solve.  Huber re-estimates the
+robust scale sigma each iteration from the median absolute residual
+(one exact-percentile aggregate).  Job count = iterations, data
+touched once per iteration, everything else is driver algebra on a
+tiny matrix.
 """
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import Callable, Optional, Sequence
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from whylogs_spark.ops.glm import _design, _eta, _gram, _moments, _newton
 
 __all__ = ["huber_regression", "quantile_regression"]
 
 
-def _weighted_moments(frame: DataFrame, feats: List[str], p: int):
-    """ONE weighted moment-matrix aggregate: p(p+3)/2 scalars
-    (upper-triangle X'WX + X'Wy) collected to the driver — the shared
-    IRLS data pass for the robust/GLM family.  ``frame`` must carry
-    ``__w`` (weight) and ``__y`` columns."""
-    aggs = []
-    for i in range(p):
-        for j in range(i, p):
-            aggs.append(F.sum(
-                F.col("__w") * F.col(feats[i]) * F.col(feats[j])
-            ).alias(f"m_{i}_{j}"))
-        aggs.append(F.sum(
-            F.col("__w") * F.col(feats[i]) * F.col("__y")
-        ).alias(f"v_{i}"))
-    row = frame.agg(*aggs).collect()[0]
-    A = np.zeros((p, p))
-    b = np.zeros(p)
-    for i in range(p):
-        for j in range(i, p):
-            A[i, j] = A[j, i] = row[f"m_{i}_{j}"]
-        b[i] = row[f"v_{i}"]
-    return A, b
+def _irls(df: DataFrame, y_col: str, x_cols: Sequence[str],
+          weight: Callable, name: str, max_iter: int, tol: float,
+          finish: Optional[Callable] = None):
+    """Iteratively reweighted least squares of ``y ~ intercept + x``.
+    Starts from OLS (unit weights); each step solves the least squares
+    weighted by ``weight(base, r)`` at the current residuals ``r`` and
+    returns ``None`` instead of a weight to stop as a perfect fit.
+    Converged once no coefficient moves by ``tol·(1 + max|beta|)``.
+    ``finish(base, r)`` runs at the final residuals.  Returns ``(beta,
+    iterations, converged, n, finish's result)``."""
+    p = len(x_cols) + 1
+    xs = [F.lit(1.0)] + [F.col(f"__x{i}") for i in range(p - 1)]
+    y = F.col("__y")
+    seen = {}
+
+    def residuals(beta):
+        return y - _eta(beta, xs, clamp=False)
+
+    def wls(base, w):
+        m, _ = _moments(base.agg(*_gram(xs + [y], w)).collect()[0], p + 1)
+        return np.linalg.solve(m[:p, :p], m[:p, p])
+
+    def start(base):
+        n = seen["n"] = base.count()
+        if n < p + 1:
+            raise ValueError(f"{name} needs > {p} rows, got {n}")
+        return wls(base, F.lit(1.0))
+
+    def step(base, beta):
+        w = weight(base, residuals(beta))
+        return None if w is None else wls(base, w)
+
+    beta, it, converged, out = _newton(
+        _design(df, x_cols, __y=y_col), start, step, max_iter=max_iter,
+        tol=tol, relative=True,
+        finish=(lambda base, b: finish(base, residuals(b)))
+        if finish else None)
+    return beta, it, converged, seen["n"], out
 
 
 def huber_regression(
@@ -71,56 +91,20 @@ def huber_regression(
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1: {max_iter}")
     xs = list(x_cols)
-    p = len(xs) + 1
-    y = F.col(y_col).cast("double")
-    cond = y.isNotNull() & ~F.isnan(y)
-    for c in xs:
-        xc = F.col(c).cast("double")
-        cond = cond & xc.isNotNull() & ~F.isnan(xc)
-    base = df.filter(cond).select(
-        y.alias("__y"), *[F.col(c).cast("double").alias(f"__x{i}")
-                          for i, c in enumerate(xs)])
-    from whylogs_spark.core.util import materialize, release
-    base = materialize(base)
-    try:
-        n = base.count()
-        if n < p + 1:
-            raise ValueError(f"huber_regression needs > {p} rows, got {n}")
+    fit = {"sigma": float("nan")}
 
-        feats = ["__one"] + [f"__x{i}" for i in range(len(xs))]
-        wdf = base.withColumn("__one", F.lit(1.0))
+    def weight(base, r: Column) -> Optional[Column]:
+        mad = base.agg(F.percentile(F.abs(r), 0.5)).collect()[0][0]
+        sigma = fit["sigma"] = float(mad) / 0.6745
+        if sigma <= 0:
+            return None  # perfect fit
+        cut = delta * sigma
+        return F.when(F.abs(r) <= cut, F.lit(1.0)) \
+            .otherwise(F.lit(cut) / F.abs(r))
 
-        A, bvec = _weighted_moments(
-            wdf.withColumn("__w", F.lit(1.0)), feats, p)
-        beta = np.linalg.solve(A, bvec)
-        converged = False
-        it = 0
-        sigma = float("nan")
-        for it in range(1, max_iter + 1):
-            pred = F.lit(float(beta[0]))
-            for i in range(len(xs)):
-                pred = pred + F.lit(float(beta[i + 1])) * F.col(f"__x{i}")
-            resid = F.col("__y") - pred
-            r = wdf.withColumn("__r", resid)
-            mad = r.agg(F.expr(
-                "percentile(abs(__r), 0.5)").alias("m")).collect()[0]["m"]
-            sigma = float(mad) / 0.6745
-            if sigma <= 0:
-                converged = True  # perfect fit
-                break
-            cut = delta * sigma
-            w = F.when(F.abs(F.col("__r")) <= cut, F.lit(1.0)) \
-                .otherwise(F.lit(cut) / F.abs(F.col("__r")))
-            A, bvec = _weighted_moments(r.withColumn("__w", w), feats, p)
-            new_beta = np.linalg.solve(A, bvec)
-            if float(np.max(np.abs(new_beta - beta))) < tol * (
-                    1.0 + float(np.max(np.abs(beta)))):
-                beta = new_beta
-                converged = True
-                break
-            beta = new_beta
-    finally:
-        release(base)
+    beta, it, converged, n, _ = _irls(
+        df, y_col, xs, weight, "huber_regression", max_iter, tol)
+    sigma = fit["sigma"]
 
     terms = ["intercept"] + xs
     rows = [(t, float(b_), it, bool(converged), float(sigma), int(n))
@@ -154,12 +138,11 @@ def quantile_regression(
     weights; the fixed point is the pinball-loss minimizer up to the
     smoothing.  Starts from OLS (unit weights).
 
-    Scale shape identical to :func:`huber_regression` /
-    ``ops.glm.fit_poisson``: every iteration runs ONE weighted
-    moment-matrix aggregate over the data (p(p+3)/2 scalars
-    collected, never rows) and a driver-side p x p solve; the final
-    pinball loss is one more bounded aggregate.  Job count =
-    iterations; the base is materialized once.
+    Same loop as :func:`huber_regression` (:func:`_irls`): every
+    iteration runs ONE weighted moment-matrix aggregate over the data
+    (p(p+3)/2 scalars collected, never rows) and a driver-side p x p
+    solve; the final pinball loss is one more bounded aggregate.  Job
+    count = iterations; the base is materialized once.
     """
     if not 0.0 < tau < 1.0:
         raise ValueError(f"tau must be in (0, 1): {tau}")
@@ -168,60 +151,21 @@ def quantile_regression(
     if eps <= 0:
         raise ValueError(f"eps must be > 0: {eps}")
     xs = list(x_cols)
-    p = len(xs) + 1
-    y = F.col(y_col).cast("double")
-    cond = y.isNotNull() & ~F.isnan(y)
-    for c in xs:
-        xc = F.col(c).cast("double")
-        cond = cond & xc.isNotNull() & ~F.isnan(xc)
-    base = df.filter(cond).select(
-        y.alias("__y"), *[F.col(c).cast("double").alias(f"__x{i}")
-                          for i, c in enumerate(xs)])
-    from whylogs_spark.core.util import materialize, release
-    base = materialize(base)
-    try:
-        n = base.count()
-        if n < p + 1:
-            raise ValueError(
-                f"quantile_regression needs > {p} rows, got {n}")
 
-        feats = ["__one"] + [f"__x{i}" for i in range(len(xs))]
-        wdf = base.withColumn("__one", F.lit(1.0))
+    def weight(base, r: Column) -> Column:
+        return (F.abs(F.lit(tau)
+                      - F.when(r < 0, F.lit(1.0)).otherwise(F.lit(0.0)))
+                / F.greatest(F.abs(r), F.lit(float(eps))))
 
-        A, bvec = _weighted_moments(
-            wdf.withColumn("__w", F.lit(1.0)), feats, p)
-        beta = np.linalg.solve(A, bvec)
-        converged = False
-        it = 0
-        for it in range(1, max_iter + 1):
-            pred = F.lit(float(beta[0]))
-            for i in range(len(xs)):
-                pred = pred + F.lit(float(beta[i + 1])) * F.col(f"__x{i}")
-            resid = F.col("__y") - pred
-            r = wdf.withColumn("__r", resid)
-            w = (F.abs(F.lit(tau)
-                       - F.when(F.col("__r") < 0, F.lit(1.0))
-                       .otherwise(F.lit(0.0)))
-                 / F.greatest(F.abs(F.col("__r")), F.lit(float(eps))))
-            A, bvec = _weighted_moments(r.withColumn("__w", w), feats, p)
-            new_beta = np.linalg.solve(A, bvec)
-            if float(np.max(np.abs(new_beta - beta))) < tol * (
-                    1.0 + float(np.max(np.abs(beta)))):
-                beta = new_beta
-                converged = True
-                break
-            beta = new_beta
-
-        pred = F.lit(float(beta[0]))
-        for i in range(len(xs)):
-            pred = pred + F.lit(float(beta[i + 1])) * F.col(f"__x{i}")
-        rr = F.col("__y") - pred
-        loss = base.agg(F.avg(
-            F.when(rr >= 0, F.lit(tau) * rr)
-            .otherwise((F.lit(tau) - 1.0) * rr)).alias("l")
+    def pinball(base, r: Column) -> float:
+        return base.agg(F.avg(
+            F.when(r >= 0, F.lit(tau) * r)
+            .otherwise((F.lit(tau) - 1.0) * r)).alias("l")
         ).collect()[0]["l"]
-    finally:
-        release(base)
+
+    beta, it, converged, n, loss = _irls(
+        df, y_col, xs, weight, "quantile_regression", max_iter, tol,
+        finish=pinball)
 
     terms = ["intercept"] + xs
     rows = [(t, float(b_), float(tau), it, bool(converged),

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whylogs_spark.core.prefix import running_sums
+from whylogs_spark.core.util import materialize, release
+from whylogs_spark.ops.glm import _design, _eta, _gram, _moments, _newton
 
 __all__ = ["km_survival", "logrank_test", "nelson_aalen", "rmst",
            "cumulative_incidence", "cox_ph", "cox_report",
@@ -411,101 +413,70 @@ def cox_ph(
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1: {max_iter}")
     p = len(feats)
-    t = F.col(duration_col).cast("double")
-    e = F.col(event_col).cast("double")
-    ok = (t.isNotNull() & ~F.isnan(t)
-          & e.isNotNull() & ~F.isnan(e))
-    xs = []
-    for c in feats:
-        xc = F.col(c).cast("double")
-        ok = ok & xc.isNotNull() & ~F.isnan(xc)
-        xs.append(xc)
-    raw = df.filter(ok).select(
-        t.alias("__t"), e.alias("__e"),
-        *[x.alias(f"__x{j}") for j, x in enumerate(xs)])
+    raw = _design(df, feats, __t=duration_col, __e=event_col)
     means = raw.agg(
         *[F.avg(f"__x{j}").alias(f"__m{j}") for j in range(p)],
         F.count(F.lit(1)).cast("long").alias("__n"),
         F.sum("__e").cast("long").alias("__ne")).collect()[0]
-    n, n_events = int(means["__n"]), int(means["__ne"])
+    n = int(means["__n"])
     if n == 0:
         raise ValueError("cox_ph: no usable rows")
-    from whylogs_spark.core.util import materialize, release
-    base = materialize(raw.select(
-        "__t", "__e",
-        *[(F.col(f"__x{j}") - F.lit(float(means[f"__m{j}"])))
-          .alias(f"__x{j}") for j in range(p)]))
-    try:
-        beta = np.zeros(p)
-        converged = False
-        ll = float("nan")
-        it = 0
-        for it in range(1, max_iter + 1):
-            eta = None
-            for j in range(p):
-                term = F.lit(float(beta[j])) * F.col(f"__x{j}")
-                eta = term if eta is None else eta + term
-            eta = F.greatest(F.lit(-30.0), F.least(F.lit(30.0), eta))
-            w = F.exp(eta)
-            aggs = [F.sum(w).alias("__w"),
-                    F.sum("__e").alias("__d"),
-                    F.sum(F.col("__e") * eta).alias("__se")]
-            sum_cols = ["__w"]
-            for j in range(p):
-                aggs.append(F.sum(F.col("__e") * F.col(f"__x{j}"))
-                            .alias(f"__sx{j}"))
-                aggs.append(F.sum(F.col(f"__x{j}") * w)
-                            .alias(f"__xw{j}"))
-                sum_cols.append(f"__xw{j}")
-            for j in range(p):
-                for k in range(j, p):
-                    aggs.append(F.sum(F.col(f"__x{j}")
-                                      * F.col(f"__x{k}") * w)
-                                .alias(f"__xxw{j}_{k}"))
-                    sum_cols.append(f"__xxw{j}_{k}")
-            # cut here rather than inside the walk, so this step's blocks
-            # can be released once its row is on the driver
-            g = materialize(base.groupBy("__t").agg(*aggs))
-            r = running_sums(g, ["__t"], sum_cols)
+    n_events = int(means["__ne"])
+    xs = [F.col(f"__x{j}") for j in range(p)]
+    # with a leading ones column, the Gram aggregate per duration holds
+    # S0 (__h0_0), S1_k (__h0_{k+1}), S2_kl (__h{k+1}_{l+1}), the event
+    # count d (__g0) and Σ e·x_k (__g{k+1})
+    ones = [F.lit(1.0)] + xs
+    last = {}
+
+    def step(base, beta):
+        eta = _eta(beta, xs)
+        # cut here rather than inside the walk, so this step's blocks
+        # can be released once its row is on the driver
+        g = materialize(base.groupBy("__t").agg(*_gram(
+            ones, F.exp(eta), F.col("__e"),
+            __se=F.sum(F.col("__e") * eta))))
+        try:
+            r = running_sums(
+                g, ["__t"], [c for c in g.columns if c.startswith("__h")])
+
             # suffix (risk-set) sum = grand − exclusive prefix
             def suf(c):
                 return (F.col(f"__g_{c}")
                         - (F.col(f"__cum_{c}") - F.col(c)))
-            s0 = suf("__w")
-            ev = r.filter(F.col("__d") > 0)
+
+            s0 = suf("__h0_0")
+            d = F.col("__g0")
+
+            def s1(k):
+                return suf(f"__h0_{k + 1}") / s0
+
             red = [F.sum(F.col("__se")).alias("__lse"),
-                   F.sum(F.col("__d") * F.log(s0)).alias("__dls")]
-            for j in range(p):
-                red.append(F.sum(
-                    F.col(f"__sx{j}")
-                    - F.col("__d") * suf(f"__xw{j}") / s0)
-                    .alias(f"__g{j}"))
-            for j in range(p):
-                for k in range(j, p):
-                    red.append(F.sum(
-                        F.col("__d")
-                        * (suf(f"__xxw{j}_{k}") / s0
-                           - (suf(f"__xw{j}") / s0)
-                           * (suf(f"__xw{k}") / s0)))
-                        .alias(f"__h{j}_{k}"))
-            row = ev.agg(*red).collect()[0]
+                   F.sum(d * F.log(s0)).alias("__dls")]
+            # the reduce's own __g/__h columns are the gradient and
+            # Hessian that _moments reads
+            red += [F.sum(F.col(f"__g{k + 1}")
+                          - d * suf(f"__h0_{k + 1}") / s0).alias(f"__g{k}")
+                    for k in range(p)]
+            red += [F.sum(d * (suf(f"__h{k + 1}_{m + 1}") / s0
+                               - s1(k) * s1(m))).alias(f"__h{k}_{m}")
+                    for k in range(p) for m in range(k, p)]
+            row = r.filter(d > 0).agg(*red).collect()[0]
+        finally:
             release(g)
-            ll = float((row["__lse"] or 0.0) - (row["__dls"] or 0.0))
-            grad = np.array([row[f"__g{j}"] or 0.0 for j in range(p)])
-            hess = np.zeros((p, p))
-            for j in range(p):
-                for k in range(j, p):
-                    hess[j, k] = hess[k, j] = row[f"__h{j}_{k}"] or 0.0
-            step = np.linalg.solve(hess + ridge * np.eye(p), grad)
-            beta = beta + step
-            if float(np.abs(step).max()) < tol:
-                converged = True
-                break
-    finally:
-        release(base)
+        last["ll"] = float((row["__lse"] or 0.0) - (row["__dls"] or 0.0))
+        hess, grad = _moments(row, p)
+        last["hess"] = hess + ridge * np.eye(p)
+        return beta + np.linalg.solve(last["hess"], grad)
+
+    beta, it, converged, _ = _newton(
+        raw.select("__t", "__e", *[
+            (x - F.lit(float(means[f"__m{j}"]))).alias(f"__x{j}")
+            for j, x in enumerate(xs)]),
+        lambda base: np.zeros(p), step, max_iter=max_iter, tol=tol)
     se = {}
     try:
-        cov = np.linalg.inv(hess + ridge * np.eye(p))
+        cov = np.linalg.inv(last["hess"])
         ses = np.sqrt(np.maximum(np.diag(cov), 0.0))
         se = {c: float(ses[j]) for j, c in enumerate(feats)}
     except np.linalg.LinAlgError:
@@ -516,7 +487,7 @@ def cox_ph(
         "hazard_ratio": {c: float(np.exp(beta[j]))
                          for j, c in enumerate(feats)},
         "n": n, "n_events": n_events, "iterations": it,
-        "converged": converged, "log_likelihood": ll,
+        "converged": converged, "log_likelihood": last["ll"],
     }
 
 
@@ -601,7 +572,6 @@ def concordance_index(
             "is quadratic in cells — quantize the score or duration "
             "to a coarser grain first, or raise max_cells")
     # lazy: the returned frame's own job builds the event cells
-    from whylogs_spark.core.util import materialize
     ev = materialize(cells.filter(F.col("__d") > 0).select(
         F.col("__t").alias("__ti"), F.col("__s").alias("__si"),
         F.col("__d").alias("__di")), lazy=True)
