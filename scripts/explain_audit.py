@@ -65,12 +65,11 @@ def main() -> None:
     sections = []
 
     # 1. native profile tier: pruned scan + partial/final agg + codegen
-    aggs, _ = wsp.core.planner.plan_dataframe(
+    aggs = wsp.core.planner.plan_dataframe(
         li.schema, ["l_quantity", "l_returnflag"], [],
         wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
                          cardinality_impl="approx"))
-    base = [a for a in aggs if a.expr is not None]
-    wide = li.agg(*[a.expr.alias(a.alias) for a in base])
+    wide = li.agg(*[a.agg for a in aggs if a.agg is not None])
     sections.append((
         "profile native tier (2 columns)", wide,
         {
@@ -143,12 +142,13 @@ def main() -> None:
     # class -> partial agg by int column id -> tiny shuffle -> final
     # agg (O(1) plan size in width, no string group key)
     from whylogs_spark.core.datatypes import ValueType
-    from whylogs_spark.core.wide import class_frame
-    _, wmode = class_frame(
-        li, ValueType.FRACTIONAL,
-        ["l_quantity", "l_extendedprice", "l_discount"], [],
+    from whylogs_spark.core.wide import class_frame, plan_wide_sketches
+    wcols = ["l_quantity", "l_extendedprice", "l_discount"]
+    (_, waggs), = plan_wide_sketches(
+        li.select(*wcols).schema, None, [],
         wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                         cardinality_impl="approx"))
+                         cardinality_impl="approx")).values()
+    wmode = class_frame(li, ValueType.FRACTIONAL, wcols, [], waggs)
     sections.append((
         "wide-mode class aggregation", wmode,
         {

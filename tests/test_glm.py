@@ -69,3 +69,11 @@ def test_fits_without_usable_rows_raise(spark):
         fit_poisson(df, "y", ["x"])
     with pytest.raises(ValueError, match="cox_ph: no usable rows"):
         cox_ph(df, "t", "y", ["x"])
+
+
+@pytest.mark.parametrize("fit", [fit_logistic, fit_poisson])
+def test_newton_fits_reject_max_iter_below_one(spark, fit):
+    df = spark.createDataFrame([(0.0, 0.0), (1.0, 1.0), (2.0, 1.0)],
+                               "x double, y double")
+    with pytest.raises(ValueError, match="max_iter must be >= 1"):
+        fit(df, "y", ["x"], max_iter=0)

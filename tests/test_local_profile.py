@@ -14,6 +14,7 @@ import pytest
 import whylogs_spark as wsp
 from whylogs_spark.core import profiler
 from whylogs_spark.core.configs import MetricConfig
+from whylogs_spark.core.sketches import KllSketch
 from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.io.why1 import (read_why1, read_why1_segmented,
                                    write_why1, write_why1_segmented)
@@ -47,14 +48,25 @@ def _summary_via_spark(view):
 
 
 def _multiset(rows):
-    def norm(v):
+    def norm(v, kll):
         if isinstance(v, float) and math.isnan(v):
             return "nan"
+        if kll and v is not None:
+            return _kll_content(v)
         return bytes(v) if isinstance(v, (bytes, bytearray)) else v
 
     return Counter(
-        tuple(norm(r[k]) for k in profiler.PROFILE_SCHEMA.names)
+        tuple(norm(r[k], k == "b" and r["component"] == "kll")
+              for k in profiler.PROFILE_SCHEMA.names)
         for r in rows)
+
+
+def _kll_content(blob):
+    """A KLL blob as its items and their weights: below k values per
+    segment the sketch keeps every item, but the order of its level-0
+    items follows the shuffle's partial-merge order."""
+    items, weights = KllSketch.deserialize(bytes(blob))._weighted_items()
+    return tuple(items.tolist()), tuple(weights.tolist())
 
 
 def _views(spark, small, tmp_path, monkeypatch):

@@ -1,0 +1,185 @@
+"""A default profile is one native program: no Python worker, Columns
+built once per schema, and DataSketches blobs that still merge with
+stores written in the engine's former sketch formats."""
+
+import datetime as dt
+import json
+
+import numpy as np
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.classic.column import Column as ClassicColumn
+
+import whylogs_spark as wsp
+from whylogs_spark.core.planner import plan_dataframe
+from whylogs_spark.core.profiler import (ProfileView, _native_frame,
+                                         merge_profiles)
+from whylogs_spark.core.sketches import FrequentStringsSketch, KllSketch
+from whylogs_spark.io.store import ProfileStore
+from whylogs_spark.io.why1 import read_why1_rows, write_why1
+
+_PYTHON_NODES = ("MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython")
+
+
+@pytest.fixture(scope="module")
+def frame(spark):
+    """20k rows in one partition: 8 float, 4 string and 1 int column;
+    "top" is every string column's most frequent value."""
+    return spark.range(0, 20_000, 1, 1).select(
+        *[(F.sin(F.col("id") * (k + 1)) * 100).alias(f"f{k}")
+          for k in range(8)],
+        *[F.when(F.col("id") % 3 == 0, "top").otherwise(
+            (F.col("id") % (5 + 7 * k)).cast("string")).alias(f"s{k}")
+          for k in range(4)],
+        (F.col("id") % 8).alias("seg"))
+
+
+def _executed_plans(spark, fn):
+    """``(fn(), physical plans of the SQL executions fn started)``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    result = fn()
+    return result, [e.physicalPlanDescription() for e in executions()
+                    if e.executionId() > last]
+
+
+@pytest.mark.parametrize("kwargs", [
+    {}, {"segment_by": ["seg"]},
+    {"segment_by": ["seg"],
+     "config": wsp.MetricConfig(wide_column_threshold=1)},
+], ids=["unsegmented", "segmented", "wide"])
+def test_default_profile_runs_no_python_node(spark, frame, launched_jobs,
+                                             kwargs):
+    (view, plans), jobs = launched_jobs(lambda: _executed_plans(
+        spark, lambda: wsp.profile(frame, **kwargs)))
+    assert plans and all("Aggregate" in p for p in plans)
+    for p in plans:
+        assert not any(node in p for node in _PYTHON_NODES), p
+    if not kwargs:
+        assert len(jobs) <= 9, sorted(jobs)
+    # the sketch components are there, from the native aggregates
+    seg = "{}" if not kwargs else '{"seg":"1"}'
+    assert view.get_component("f0", "distribution", "kll", seg) is not None
+    items = json.loads(view.get_component("s0", "frequent_items", "items",
+                                          seg))
+    assert items[0]["value"] == "top"
+    assert [i["est"] for i in items] == sorted(
+        (i["est"] for i in items), reverse=True)
+
+
+def test_repeat_planning_reuses_its_columns(spark, monkeypatch):
+    """A schema planned once is planned for free: the second call
+    returns the same output Column objects and builds none, and a job's
+    frame over the plan builds none either."""
+    schema = T.StructType([T.StructField("memo_x", T.DoubleType()),
+                           T.StructField("memo_s", T.StringType()),
+                           T.StructField("memo_i", T.LongType())])
+    built = []
+    init = ClassicColumn.__init__
+
+    def counting(self, *args, **kwargs):
+        built.append(1)
+        init(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicColumn, "__init__", counting)
+    first = plan_dataframe(schema, None, [], wsp.MetricConfig())
+    assert built  # the first plan builds its Columns
+    built.clear()
+    again = plan_dataframe(schema, None, [], wsp.MetricConfig())
+    assert again is first
+    assert all(a.agg is b.agg and a.out is b.out
+               for a, b in zip(first, again))
+    df = spark.createDataFrame([(1.0, "a", 1)], schema)
+    grouped = df.groupBy()
+    built.clear()
+    frame = _native_frame(grouped, again, [])
+    assert built == []
+    monkeypatch.undo()
+    assert len(frame.columns) == sum(a.out is not None for a in first)
+
+
+def _legacy(view, values, words):
+    """``view`` with its KLL and frequent-items blobs replaced by the
+    engine's former ``WSK1``/``WFI1`` sketches of the same data."""
+    kll, fi = KllSketch(256), FrequentStringsSketch(128, 128)
+    kll.update_batch(values)
+    fi.update_batch(words)
+    table = view.table().to_pylist()
+    for r in table:
+        if (r["metric"], r["component"]) == ("distribution", "kll"):
+            r["b"] = kll.serialize()
+        elif (r["metric"], r["component"]) == ("frequent_items", "mg"):
+            r["b"] = fi.serialize()
+    return ProfileView(pa.Table.from_pylist(table, view.table().schema),
+                       spark=view.spark)
+
+
+def test_store_mixing_legacy_and_datasketches_rows(spark, tmp_path):
+    rng = np.random.default_rng(11)
+    days, views = [], []
+    for shift in (0.0, 0.0, 3.0):
+        x = rng.normal(shift, 1.0, 4000)
+        w = rng.choice(["a", "b", "c", "d"], 4000,
+                       p=[0.5, 0.3, 0.15, 0.05] if not shift
+                       else [0.05, 0.15, 0.3, 0.5])
+        days.append((x, w))
+        views.append(wsp.profile(spark.createDataFrame(
+            [(float(a), str(b)) for a, b in zip(x, w)],
+            "x double, w string")))
+    blob = views[0].get_component("x", "distribution", "kll")
+    assert bytes(blob)[2] == 15  # DataSketches KLL family byte
+    mg = views[0].get_component("w", "frequent_items", "mg")
+    assert bytes(mg)[2] == 10  # DataSketches frequent-items family byte
+    mixed = [views[0], _legacy(views[1], *days[1]), views[2]]
+    assert bytes(mixed[1].get_component("x", "distribution", "kll"))[:4] \
+        == b"WSK1"
+
+    store = ProfileStore(str(tmp_path / "store"))
+    dates = []
+    for i, v in enumerate(mixed):
+        ts = dt.datetime(2024, 3, 1 + i, tzinfo=dt.timezone.utc)
+        store.write(v, "mix", ts)
+        dates.append(ts.date().isoformat())
+
+    got = store.get(spark, "mix", dates[0], dates[1])
+    assert got.get_component("x", "counts", "n") == 8000
+    merged = KllSketch.deserialize(
+        bytes(got.get_component("x", "distribution", "kll")))
+    assert merged.n == 8000
+    both = np.sort(np.concatenate([days[0][0], days[1][0]]))
+    med = merged.quantile(0.5)
+    assert abs(np.searchsorted(both, med) / both.size - 0.5) < 0.02
+    items = json.loads(got.get_component("w", "frequent_items", "items"))
+    assert items[0]["value"] == "a"
+
+    pair = merge_profiles(mixed[:2])
+    assert pair.get_component("x", "distribution", "n") == 8000
+
+    scores = {s.column: s for s in store.drift_between(
+        spark, "mix", dates[0], dates[0], dates[1], dates[2])}
+    assert set(scores) == {"x", "w"}
+    assert {s.category for s in scores.values()} == {"DRIFT"}
+
+    series = store.quantile_series(spark, "mix", "x", quantiles=(0.5,),
+                                   window=2).orderBy("dataset_ts").collect()
+    assert [r["batches"] for r in series] == [1, 2, 2]
+    assert [r["n"] for r in series] == [4000, 8000, 8000]
+
+    # WHY1: DataSketches blobs are copied unchanged, legacy ones converted
+    for i, v in enumerate((views[0], got)):
+        path = str(tmp_path / f"p{i}.bin")
+        write_why1(v, path)
+        rows = {(r[1], r[2], r[3]): r[7] for r in read_why1_rows(path)}
+        kll = rows[("x", "distribution", "kll")]
+        if i == 0:
+            assert bytes(kll) == bytes(blob)
+        assert KllSketch.deserialize(bytes(kll)).n == (4000, 8000)[i]

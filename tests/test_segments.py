@@ -157,10 +157,21 @@ def test_segment_key_rendering_parity_across_paths(spark):
 def _rows_by_key(view):
     rows = view.df.collect()
     out = {(r["segment"], r["column"], r["metric"], r["component"]):
-           (r["n"], r["d"], r["s"], None if r["b"] is None else bytes(r["b"]))
+           (r["n"], r["d"], r["s"], _blob(r["component"], r["b"]))
            for r in rows}
     assert len(out) == len(rows)
     return out
+
+
+def _blob(component, b):
+    """Blob bytes; a KLL blob as its items and their weights: below k
+    values per segment the sketch keeps every item, but the order of
+    its level-0 items follows the shuffle's partial-merge order."""
+    if b is None or component != "kll":
+        return None if b is None else bytes(b)
+    from whylogs_spark.core.sketches import KllSketch
+    items, weights = KllSketch.deserialize(bytes(b))._weighted_items()
+    return tuple(items.tolist()), tuple(weights.tolist())
 
 
 def test_past_limit_fallback_matches_collected(spark, monkeypatch):

@@ -28,14 +28,17 @@ class MetricConfig:
 
     # Engine strategy knobs (ours, not the reference's):
     #   "native"  -> Spark JVM approx_percentile (fast, not mergeable)
-    #   "kll"     -> numpy KLL sketch via mapInArrow (mergeable, bytes stored)
+    #   "kll"     -> Spark's kll_sketch_agg_double (DataSketches KLL,
+    #                mergeable, bytes stored; compaction is randomized,
+    #                as in the reference, so bytes vary run to run)
     quantile_impl: str = "kll"
     # approx_percentile accuracy (~1/rank-error). The reference's KLL k=256
     # carries ~1.65% normalized rank error; 250 (0.4%) still beats it 4x
     # while halving the GK-summary build cost, which otherwise dominates
     # the whole native-tier profile pass (measured ~2x on lineitem).
     native_quantile_accuracy: int = 250
-    # frequent items: "sketch" (Misra-Gries via mapInArrow) | "none"
+    # frequent items: "sketch" (Spark's approx_top_k_accumulate, a
+    # DataSketches frequent-items sketch, bytes stored) | "none"
     frequent_items_impl: str = "sketch"
     # cardinality: "hll" (Spark DataSketches hll_sketch_agg, mergeable bytes)
     #            | "approx" (approx_count_distinct, estimate only)

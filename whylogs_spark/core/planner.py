@@ -25,9 +25,8 @@ Standard metric program (parity with reference resolvers.py):
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
-from typing import List, Optional, Tuple
+from typing import List, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -48,40 +47,35 @@ def qcol(name: str) -> Column:
 
 @dataclass
 class PlannedAgg:
+    """One profile component of one column and the Columns that compute
+    it, built once when the column is planned: ``agg`` is the aliased
+    aggregate, ``out`` the component's column in the job's frame (the
+    aggregate's alias, or a projection of other aliases)."""
+
     column: str          # input column name
     metric: str          # metric namespace ("counts", "distribution", ...)
     component: str       # component name ("n", "mean", "hll", ...)
     slot: str            # which typed slot of the profile row it fills
-    expr: Optional[Column]  # aggregate expression (None for derived)
     alias: str           # unique alias in the wide agg row
     # Execution tier: "codegen" aggregates are declarative (HashAggregate,
     # whole-stage codegen); "object" aggregates are TypedImperative
-    # (hll_sketch_agg, percentile_approx) which force the WHOLE aggregate
-    # exec into interpreted ObjectHashAggregateExec — so they run in a
-    # separate pass and the long outputs are unioned.
+    # (hll_sketch_agg, kll_sketch_agg, percentile_approx) which force the
+    # WHOLE aggregate exec into interpreted ObjectHashAggregateExec — so
+    # they run in a separate pass and the long outputs are unioned.
     tier: str = "codegen"
-    # Post-aggregation projection: value = derive(col(derive_from)).
-    # Used so e.g. hll estimate/bounds reuse ONE sketch aggregate instead
-    # of re-running hll_sketch_agg per derived component.
-    derive_from: Optional[str] = None
-    derive: Optional[object] = None  # Callable[[Column], Column]
-    # emit=False: internal base aggregate (e.g. a quantile array) that
-    # exists only for derived components and produces no profile row.
-    emit: bool = True
+    agg: Optional[Column] = None   # aliased aggregate (None when derived)
+    # None: an internal base aggregate (e.g. a sketch whose components
+    # are projections of it) that produces no profile row
+    out: Optional[Column] = None
     # Statically-known value (e.g. type-counter buckets that a typed Spark
     # column can never populate): no aggregate runs at all; the value is
     # stamped into the profile row driver-side / as a literal.
     const: Optional[int] = None
 
-
-@dataclass
-class SketchPlan:
-    """A column that needs the python sketch path (mapInArrow)."""
-
-    column: str
-    kind: str            # "kll" | "fi"
-    expr: Column         # pre-cast projection (double for kll, string for fi)
-    alias: str
+    @property
+    def emit(self) -> bool:
+        """Whether the component is a profile row."""
+        return self.out is not None or self.const is not None
 
 
 _TYPE_BUCKET = {
@@ -152,56 +146,70 @@ def _card_view(col: str, vt: ValueType) -> Column:
     return _string_view(col, vt)
 
 
-def plan_column(
-    col: str, dt: T.DataType, cfg: MetricConfig, aliases: "_AliasGen"
-) -> Tuple[List[PlannedAgg], List[SketchPlan]]:
-    vt = value_type_of(dt)
-    c = qcol(col)
-    aggs: List[PlannedAgg] = []
+class _ColumnPlan:
+    """One column's planned aggregates, each built with its Columns as
+    it is added."""
 
-    def add(metric: str, component: str, slot: str, expr: Column,
-            tier: str = "codegen", emit: bool = True) -> str:
-        alias = aliases.next()
-        aggs.append(
-            PlannedAgg(col, metric, component, slot, expr, alias, tier,
-                       emit=emit))
+    def __init__(self, col: str, aliases: "_AliasGen") -> None:
+        self.col, self.aliases = col, aliases
+        self.aggs: List[PlannedAgg] = []
+
+    def base(self, metric: str, component: str, slot: str, expr: Column,
+             tier: str = "codegen", emit: bool = True) -> str:
+        """Add an aggregate; returns its alias."""
+        alias = self.aliases.next()
+        self.aggs.append(PlannedAgg(
+            self.col, metric, component, slot, alias, tier,
+            agg=expr.alias(alias), out=F.col(alias) if emit else None))
         return alias
 
-    def add_derived(metric: str, component: str, slot: str,
-                    derive_from: str, derive, tier: str) -> None:
-        aggs.append(
-            PlannedAgg(col, metric, component, slot, None, aliases.next(),
-                       tier, derive_from, derive))
+    def derived(self, metric: str, component: str, slot: str,
+                value: Column, tier: str = "codegen") -> None:
+        """Add a component projected from the aliases of base
+        aggregates (one sketch aggregate serves several components)."""
+        alias = self.aliases.next()
+        self.aggs.append(PlannedAgg(self.col, metric, component, slot,
+                                    alias, tier, out=value.alias(alias)))
+
+    def const(self, metric: str, component: str, slot: str,
+              value: int) -> None:
+        self.aggs.append(PlannedAgg(self.col, metric, component, slot,
+                                    self.aliases.next(), const=value))
+
+
+def plan_column(col: str, dt: T.DataType, cfg: MetricConfig,
+                aliases: "_AliasGen") -> List[PlannedAgg]:
+    vt = value_type_of(dt)
+    c = qcol(col)
+    p = _ColumnPlan(col, aliases)
 
     # ---- counts (reference: python/whylogs/core/metrics/column_metrics.py:110)
-    add("counts", "n", SLOT_N, F.count(F.lit(1)))
-    add("counts", "null", SLOT_N,
-        F.coalesce(F.sum(c.isNull().cast(T.LongType())), F.lit(0)))
+    p.base("counts", "n", SLOT_N, F.count(F.lit(1)))
+    p.base("counts", "null", SLOT_N,
+           F.coalesce(F.sum(c.isNull().cast(T.LongType())), F.lit(0)))
     if vt == ValueType.FRACTIONAL:
         dc = c.cast(T.DoubleType())
-        add("counts", "nan", SLOT_N,
-            F.coalesce(F.sum(F.isnan(dc).cast(T.LongType())), F.lit(0)))
-        add("counts", "inf", SLOT_N,
-            F.coalesce(
-                F.sum((F.abs(dc) == float("inf")).cast(T.LongType())),
-                F.lit(0)))
+        p.base("counts", "nan", SLOT_N,
+               F.coalesce(F.sum(F.isnan(dc).cast(T.LongType())), F.lit(0)))
+        p.base("counts", "inf", SLOT_N,
+               F.coalesce(
+                   F.sum((F.abs(dc) == float("inf")).cast(T.LongType())),
+                   F.lit(0)))
     if vt == ValueType.BOOLEAN:
-        add("counts", "true", SLOT_N,
-            F.coalesce(F.sum(c.cast(T.LongType())), F.lit(0)))
+        p.base("counts", "true", SLOT_N,
+               F.coalesce(F.sum(c.cast(T.LongType())), F.lit(0)))
 
     # ---- types (reference: column_metrics.py:15 — static per Spark type).
     # Only the column's own bucket needs an aggregate; the other six are
     # statically zero for a typed Spark column, so they become constant
     # profile rows instead of ~6 dead aggregate exprs per column.
     bucket = _TYPE_BUCKET[vt]
-    non_null = F.count(c)
-    talias: Optional[str] = None
+    talias = ""
     for b in _ALL_TYPE_BUCKETS:
         if b == bucket:
-            talias = add("types", b, SLOT_N, non_null)
+            talias = p.base("types", b, SLOT_N, F.count(c))
         else:
-            aggs.append(PlannedAgg(col, "types", b, SLOT_N, None,
-                                   aliases.next(), "codegen", const=0))
+            p.const("types", b, SLOT_N, 0)
 
     # ---- distribution (reference: metrics.py:217; mean/M2 merge == Chan)
     nv = _numeric_view(col, vt)
@@ -212,47 +220,39 @@ def plan_column(
         if vt in (ValueType.INTEGRAL, ValueType.TEMPORAL):
             # the numeric view is a null-preserving cast, so the types
             # bucket's count(c) IS count(nv) — reuse it
-            nalias = talias
-            add_derived("distribution", "n", SLOT_N, talias,
-                        lambda x: x, tier="codegen")
+            n = F.col(talias)
+            p.derived("distribution", "n", SLOT_N, n)
         else:
-            nalias = add("distribution", "n", SLOT_N, F.count(nv))
-        add("distribution", "mean", SLOT_D, F.avg(nv))
-        valias = add("distribution", "_var", SLOT_D, F.var_samp(nv),
-                     emit=False)
+            n = F.col(p.base("distribution", "n", SLOT_N, F.count(nv)))
+        p.base("distribution", "mean", SLOT_D, F.avg(nv))
+        var = F.col(p.base("distribution", "_var", SLOT_D, F.var_samp(nv),
+                           emit=False))
         # n==1 -> stddev/m2 are 0, not NULL (reference returns variance 0
         # for a single value — metrics.py:357 — and the profile-merge path
         # already does the same; var_samp alone would give NULL)
-        add_derived(
-            "distribution", "stddev", SLOT_D, valias,
-            lambda x, _n=nalias: F.when(F.col(_n) == 1, 0.0)
-            .otherwise(F.sqrt(x)),
-            tier="codegen")
-        add_derived(
-            "distribution", "m2", SLOT_D, valias,
-            lambda x, _n=nalias: F.when(F.col(_n) == 1, 0.0).otherwise(
-                x * (F.col(_n) - F.lit(1)).cast(T.DoubleType())),
-            tier="codegen")
-        add("distribution", "min", SLOT_D, F.min(nv))
-        add("distribution", "max", SLOT_D, F.max(nv))
+        single = n == 1
+        p.derived("distribution", "stddev", SLOT_D,
+                  F.when(single, 0.0).otherwise(F.sqrt(var)))
+        p.derived("distribution", "m2", SLOT_D, F.when(single, 0.0).otherwise(
+            var * (n - F.lit(1)).cast(T.DoubleType())))
+        p.base("distribution", "min", SLOT_D, F.min(nv))
+        p.base("distribution", "max", SLOT_D, F.max(nv))
         if cfg.quantile_impl == "native":
-            qs = F.percentile_approx(
-                nv, F.array(*[F.lit(q) for q in cfg.quantiles]),
-                F.lit(cfg.native_quantile_accuracy)
-            )
             # ONE percentile aggregate; per-quantile components are
             # post-agg projections of the array
-            qalias = add("distribution", "_q_arr", SLOT_D, qs,
-                         tier="object", emit=False)
+            qs = F.col(p.base(
+                "distribution", "_q_arr", SLOT_D, F.percentile_approx(
+                    nv, F.array(*[F.lit(q) for q in cfg.quantiles]),
+                    F.lit(cfg.native_quantile_accuracy)),
+                tier="object", emit=False))
             for i, q in enumerate(cfg.quantiles):
-                add_derived(
-                    "distribution", _q_name(q), SLOT_D, qalias,
-                    _item_getter(i), tier="object")
+                p.derived("distribution", _q_name(q), SLOT_D, qs.getItem(i),
+                          tier="object")
 
     # ---- ints (reference: metrics.py:165)
     if vt == ValueType.INTEGRAL:
-        add("ints", "min", SLOT_N, F.min(c).cast(T.LongType()))
-        add("ints", "max", SLOT_N, F.max(c).cast(T.LongType()))
+        p.base("ints", "min", SLOT_N, F.min(c).cast(T.LongType()))
+        p.base("ints", "max", SLOT_N, F.max(c).cast(T.LongType()))
 
     # ---- cardinality (reference: metrics.py:535 — HLL lg_k=12; we use
     # Spark's Apache DataSketches hll_sketch_agg: JVM-side, mergeable)
@@ -265,19 +265,19 @@ def plan_column(
             # preamble, all JVM-side expressions — see _hll_bounds):
             # a sparse (coupon) sketch is near-exact, a dense one gets
             # the estimator's RSE, not one fixed formula for both.
-            halias = add("cardinality", "hll", SLOT_B,
+            hll = p.base("cardinality", "hll", SLOT_B,
                          F.hll_sketch_agg(sv, F.lit(cfg.hll_lg_k)),
                          tier="object")
-            add_derived("cardinality", "est", SLOT_D, halias,
-                        _hll_estimate(1.0), tier="object")
-            add_derived("cardinality", "lower", SLOT_D, halias,
-                        _hll_bounds(2.0, upper=False), tier="object")
-            add_derived("cardinality", "upper", SLOT_D, halias,
-                        _hll_bounds(2.0, upper=True), tier="object")
+            p.derived("cardinality", "est", SLOT_D,
+                      F.hll_sketch_estimate(F.col(hll)).cast(T.DoubleType()),
+                      tier="object")
+            p.derived("cardinality", "lower", SLOT_D,
+                      _hll_bounds(hll, 2.0, upper=False), tier="object")
+            p.derived("cardinality", "upper", SLOT_D,
+                      _hll_bounds(hll, 2.0, upper=True), tier="object")
         else:
-            add("cardinality", "est", SLOT_D,
-                F.approx_count_distinct(sv).cast(T.DoubleType()),
-                tier="codegen")
+            p.base("cardinality", "est", SLOT_D,
+                   F.approx_count_distinct(sv).cast(T.DoubleType()))
 
     # ---- registered custom metrics (reference plug-in surface:
     # @custom_metric/register_metric, metrics.py:60,156) — user-supplied
@@ -288,29 +288,101 @@ def plan_column(
         if not m.matches(col, vt):
             continue
         for comp in m.components:
-            add(m.namespace, comp.component, comp.slot, comp.expr(c))
+            p.base(m.namespace, comp.component, comp.slot, comp.expr(c))
 
-    return aggs, sketch_plans(col, vt, cfg, aliases)
+    return p.aggs + sketch_plans(col, vt, cfg, aliases)
+
+
+#: items a frequent-items summary lists
+_FI_TOP = 32
 
 
 def sketch_plans(col: str, vt: ValueType, cfg: MetricConfig,
-                 aliases: "_AliasGen") -> List[SketchPlan]:
-    """The python-sketched metrics of one column, for both profile
-    paths: a KLL sketch of the numeric view for integral, fractional and
-    temporal columns (distribution quantiles, reference metrics.py:217)
-    and a frequent-items sketch of the string view for integral,
-    boolean, string and temporal ones (reference metrics.py:444)."""
-    out: List[SketchPlan] = []
+                 aliases: "_AliasGen") -> List[PlannedAgg]:
+    """The sketch aggregates of one column, object tier, for every
+    profile path. Both are Spark's DataSketches aggregates, so their
+    bytes are the reference's own formats (io/dsketch.py):
+
+    * KLL of the numeric view of integral, fractional and temporal
+      columns (distribution quantiles, reference metrics.py:217):
+      ``kll_sketch_agg_double`` at ``effective_kll_k``, each quantile a
+      ``kll_sketch_get_quantile_double`` projection. An all-null column
+      yields the 8-byte empty sketch, which becomes a null blob with
+      null quantiles.
+    * frequent items of the string view, truncated to
+      ``max_frequent_item_size``, of integral, boolean, string and
+      temporal columns (reference metrics.py:444):
+      ``approx_top_k_accumulate`` tracking ``fi_capacity`` items. Its
+      ``sketch`` field (a frequent-items sketch followed by Spark's
+      8-byte null count) is the ``mg`` blob; ``items`` is the JSON top
+      of ``approx_top_k_estimate``, which lists only the items whose
+      count is certain to beat the sketch's error (no false positives,
+      the reference's summary default). An all-null column gets a null
+      blob and null items.
+    """
+    p = _ColumnPlan(col, aliases)
     if cfg.quantile_impl == "kll" and vt in (
             ValueType.INTEGRAL, ValueType.FRACTIONAL, ValueType.TEMPORAL):
-        out.append(SketchPlan(col, "kll", _numeric_view(col, vt),
-                              f"__kll__{aliases.next()}"))
+        blob = F.col(p.base(
+            "distribution", "_kll", SLOT_B, F.kll_sketch_agg_double(
+                _numeric_view(col, vt), F.lit(cfg.effective_kll_k)),
+            tier="object", emit=False))
+        full = F.length(blob) > 8
+        p.derived("distribution", "kll", SLOT_B, F.when(full, blob),
+                  tier="object")
+        for q in cfg.quantiles:
+            p.derived("distribution", _q_name(q), SLOT_D, F.when(
+                full, F.kll_sketch_get_quantile_double(blob, F.lit(q))),
+                tier="object")
     if cfg.frequent_items_impl == "sketch" and vt in (
             ValueType.INTEGRAL, ValueType.BOOLEAN, ValueType.STRING,
             ValueType.TEMPORAL):
-        out.append(SketchPlan(col, "fi", _string_view(col, vt),
-                              f"__fi__{aliases.next()}"))
-    return out
+        acc = p.base("frequent_items", "_top_k", SLOT_B, F.call_function(
+            "approx_top_k_accumulate",
+            F.substring(_string_view(col, vt), 1,
+                        cfg.max_frequent_item_size),
+            F.lit(cfg.fi_capacity)), tier="object", emit=False)
+        # preamble longs: 1 in the empty form, 4 once a value was seen
+        seen = f"{_le_uint(acc + '.sketch', 0)} > 1"
+        p.derived("frequent_items", "mg", SLOT_B,
+                  F.expr(f"CASE WHEN {seen} THEN {acc}.sketch END"),
+                  tier="object")
+        p.derived("frequent_items", "items", SLOT_S, F.expr(
+            f"CASE WHEN {seen} THEN {_fi_items(acc, cfg.fi_capacity)} END"),
+            tier="object")
+    return p.aggs
+
+
+# The two sketch read-outs below are SQL text: one Column built in one
+# py4j call, where the Column API spends dozens per byte read.
+
+
+def _le_uint(blob: str, start: int, nbytes: int = 1) -> str:
+    """SQL: the unsigned little-endian integer at bytes ``start`` ..
+    ``start + nbytes - 1`` of the binary SQL expression ``blob``."""
+    return "(" + " + ".join(
+        f"shiftleft(CAST(conv(hex(substring({blob}, {start + i + 1}, 1)), "
+        f"16, 10) AS BIGINT), {8 * i})" for i in range(nbytes)) + ")"
+
+
+def _fi_items(acc: str, capacity: int) -> str:
+    """SQL: the JSON top items of the ``approx_top_k_accumulate`` state
+    ``acc``, as ``[{value, est, lower, upper}]`` sorted by count, then
+    value. ``est`` and ``upper`` are the estimate's count (stored count
+    plus the sketch's offset, the undercount any item may carry) and
+    ``lower`` is the count minus that offset, a uint64 at bytes 24-31 of
+    the frequent-items preamble. Spark counts nulls as one more item, so
+    one more is estimated and the null one dropped."""
+    offset = _le_uint(f"{acc}.sketch", 24, 8)
+    k = min(_FI_TOP + 1, capacity)
+    return (
+        f"to_json(transform(array_sort(slice(filter("
+        f"approx_top_k_estimate({acc}, {k}), e -> e.item IS NOT NULL), "
+        f"1, {_FI_TOP}), (x, y) -> CASE WHEN x.count > y.count THEN -1 "
+        f"WHEN x.count < y.count THEN 1 WHEN x.item < y.item THEN -1 "
+        f"WHEN x.item > y.item THEN 1 ELSE 0 END), "
+        f"e -> named_struct('value', e.item, 'est', e.count, "
+        f"'lower', e.count - {offset}, 'upper', e.count)))")
 
 
 def _q_name(q: float) -> str:
@@ -319,16 +391,7 @@ def _q_name(q: float) -> str:
     return f"q_{int(round(q * 100)):02d}"
 
 
-def _item_getter(i: int):
-    return lambda c: c.getItem(i)
-
-
-def _hll_estimate(scale: float):
-    return lambda c: F.hll_sketch_estimate(c).cast(
-        T.DoubleType()) * F.lit(scale)
-
-
-def _hll_bounds(num_std: float, upper: bool):
+def _hll_bounds(hll: str, num_std: float, upper: bool) -> Column:
     """Sketch-derived cardinality bounds from the serialized
     DataSketches HLL blob — pure JVM expressions, no Python.
 
@@ -344,24 +407,17 @@ def _hll_bounds(num_std: float, upper: bool):
     the case for distributed merges). Bound form matches the library:
     est / (1 +/- numStdDev * rse).
     """
-
-    def expr(c):
-        byte = lambda i: F.conv(  # noqa: E731
-            F.hex(F.substring(c, i + 1, 1)), 16, 10).cast(T.IntegerType())
-        mode = byte(7).bitwiseAND(F.lit(3))
-        ooo = byte(5).bitwiseAND(F.lit(16))
-        lgk = byte(3)
-        factor = F.when(ooo > 0, F.lit(1.03896)).otherwise(F.lit(0.8326))
-        rse_hll = factor / F.sqrt(
-            F.pow(F.lit(2.0), lgk.cast(T.DoubleType())))
-        # coupon-mode collision error over 2^26 slots: bounded by 1e-4
-        # for any sketch still in LIST/SET mode
-        rse = F.when(mode == 2, rse_hll).otherwise(F.lit(1e-4))
-        est = F.hll_sketch_estimate(c).cast(T.DoubleType())
-        sign = -1.0 if upper else 1.0
-        return est / (F.lit(1.0) + F.lit(sign * num_std) * rse)
-
-    return expr
+    mode = f"({_le_uint(hll, 7)} & 3)"
+    ooo = f"({_le_uint(hll, 5)} & 16)"
+    lgk = _le_uint(hll, 3)
+    # coupon-mode collision error over 2^26 slots: bounded by 1e-4
+    # for any sketch still in LIST/SET mode
+    rse = (f"CASE WHEN {mode} = 2 THEN CASE WHEN {ooo} > 0 THEN 1.03896D "
+           f"ELSE 0.8326D END / sqrt(pow(2.0D, CAST({lgk} AS DOUBLE))) "
+           f"ELSE 1.0E-4D END")
+    sign = -1.0 if upper else 1.0
+    return F.expr(f"CAST(hll_sketch_estimate({hll}) AS DOUBLE) / "
+                  f"(1.0D + {sign * num_std!r}D * ({rse}))")
 
 
 class _AliasGen:
@@ -391,15 +447,17 @@ def plan_dataframe(
     columns: Optional[List[str]],
     segment_cols: List[str],
     cfg: MetricConfig,
-) -> Tuple[List[PlannedAgg], List[SketchPlan]]:
-    """Plan (and memoize) the aggregate expressions for a schema.
+) -> List[PlannedAgg]:
+    """Plan (and memoize) the aggregates of a schema's profiled columns.
 
-    Building ~20 Column expressions per column costs a py4j round-trip
-    each — O(1 s) of driver time for a wide frame. Spark Columns are
-    immutable expression trees, so the planned lists are safe to reuse
-    whenever (schema, column selection, segmentation, config, custom
-    metric registry) are identical — which is every micro-batch of a
-    streaming profile and every repeat profile of the same table.
+    Each planned component carries its final Columns (aggregate, output
+    reference or projection), and every Column costs a py4j round-trip
+    — O(1 s) of driver time for a few dozen columns. Spark Columns are
+    immutable expression trees, so the planned list is reused whenever
+    (schema, column selection, segmentation, config, custom metric
+    registry) are identical — which is every micro-batch of a streaming
+    profile and every repeat profile of the same table: a job over a
+    cached plan builds no Column of its aggregates.
     """
     from .registry import registry_generation
 
@@ -414,13 +472,9 @@ def plan_dataframe(
     if hit is not None:
         return hit
     gen = _AliasGen()
-    aggs: List[PlannedAgg] = []
-    sketches: List[SketchPlan] = []
-    for field in profiled_fields(schema, columns, segment_cols):
-        a, s = plan_column(field.name, field.dataType, cfg, gen)
-        aggs.extend(a)
-        sketches.extend(s)
+    aggs = [a for field in profiled_fields(schema, columns, segment_cols)
+            for a in plan_column(field.name, field.dataType, cfg, gen)]
     if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
         _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-    _PLAN_CACHE[key] = (aggs, sketches)
-    return aggs, sketches
+    _PLAN_CACHE[key] = aggs
+    return aggs

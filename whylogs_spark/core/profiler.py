@@ -8,31 +8,25 @@ python/whylogs/core/dataset_profile.py:107) and for its Spark integration
 
 Execution shape (designed for 100 TB, not 60k rows):
 
-1. NATIVE PASS — ``df.groupBy(segments).agg(*exprs)``: all exact
-   counters, min/max, mean/M2, and DataSketches HLL run JVM-side with
-   whole-stage codegen + map-side partial aggregation. One job per
-   tier (the interpreted object tier apart from the codegen tier); an
-   ungrouped profile also cuts each tier into column chunks. The jobs
-   run concurrently, each returns #segments rows regardless of input
-   size, and one reshape turns them into long-form rows driver-side —
-   up to 20k segments; past that the same aggregate frames are
-   exploded JVM-side instead.
-2. SKETCH PASS (only for KLL quantiles / frequent-items, which Spark has
-   no built-in mergeable equivalent for) — ``mapInArrow`` builds ONE
-   sketch per (partition x segment x column), so the only shuffled data
-   is a few KB of sketch bytes per partition, then a tiny
-   ``groupBy(...).applyInPandas`` union. This mirrors the reference's
-   partial+merge design (profiler.py:70-73) but never shuffles raw rows.
-   It runs concurrently with the native pass, and its rows are
-   collected the same way.
+One NATIVE PASS — ``df.groupBy(segments).agg(*exprs)``: exact counters,
+min/max, mean/M2 and the three DataSketches sketches (HLL cardinality,
+KLL quantiles, frequent items) run JVM-side with map-side partial
+aggregation, so the only shuffled data is a few KB of aggregate buffers
+per partition. One job per tier: the declarative aggregates keep
+whole-stage codegen, the TypedImperative sketch aggregates run apart in
+the interpreted object tier. An ungrouped profile also cuts each tier
+into column chunks. The jobs run concurrently and each returns
+#segments rows regardless of input size. Every aggregate and output
+Column is the planner's, built once per schema (``plan_dataframe``).
 
-Both passes return a few rows per segment x column, so ``profile()``
-keeps its result on the driver as ONE Arrow table in the long-form
-layout below; ``ProfileView.df`` is built from it lazily, through Arrow
-(JVM-side tasks only). Past 20k segments the view wraps the lazy
-frames instead. Either way the result is a LONG-FORM PROFILE —
-profiles are data, not opaque blobs (contrast with the reference's
-protobuf binary, python/whylogs/core/view/dataset_profile_view.py:264):
+The jobs' rows reshape into a few rows per segment x column, so
+``profile()`` keeps its result on the driver as ONE Arrow table in the
+long-form layout below; ``ProfileView.df`` is built from it lazily,
+through Arrow (JVM-side tasks only). Past 20k segments the same
+aggregate frames are exploded JVM-side into a lazy frame instead.
+Either way the result is a LONG-FORM PROFILE — profiles are data, not
+opaque blobs (contrast with the reference's protobuf binary,
+python/whylogs/core/view/dataset_profile_view.py:264):
 
     segment  STRING  (JSON object of segment key -> value, '{}' if none)
     column   STRING
@@ -41,7 +35,7 @@ protobuf binary, python/whylogs/core/view/dataset_profile_view.py:264):
     n        LONG    (integer-valued components)
     d        DOUBLE  (real-valued components)
     s        STRING  (JSON/string components)
-    b        BINARY  (sketch bytes: HLL / KLL / FI)
+    b        BINARY  (DataSketches bytes: HLL / KLL / frequent items)
 
 Merging profiles (the monoid ⊕, reference
 dataset_profile_view.py:172) is a small grouped aggregation over this
@@ -65,11 +59,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .configs import DEFAULT_CONFIG, MetricConfig
 from .planner import (
-    SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, SketchPlan, _q_name,
-    plan_dataframe, profiled_fields,
+    SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, _q_name, plan_dataframe,
+    profiled_fields,
 )
-from .sketches import (FrequentStringsSketch, KllSketch, merge_fi_blobs,
-                       merge_kll_blobs)
+from .sketches import KllSketch, merge_fi_blobs, merge_kll_blobs
 from .util import ensure_parallelism as _ensure_parallelism
 from .util import materialize, release, run_concurrent
 
@@ -157,15 +150,16 @@ def _collect(frame: DataFrame,
 def _native_work(aggs: List[PlannedAgg], by_column: bool) -> List[tuple]:
     """The native pass's job split: ``[(tier, chunk of aggs)]``.
 
-    One job per tier: a TypedImperative aggregate (hll_sketch_agg,
+    One job per tier: a TypedImperative aggregate (the three sketches,
     percentile_approx) turns its whole Aggregate node into interpreted
     ObjectHashAggregateExec, so the object tier runs apart and the
     codegen tier keeps whole-stage codegen. With ``by_column`` (an
     ungrouped profile) each tier is cut into chunks of whole columns (a
-    derived agg stays with its base): >= 6 columns per chunk and at most
-    ~8 chunks per tier, so the Catalyst analysis and codegen of a wide
-    plan run on parallel threads over column-pruned scans while the job
-    count stays bounded.
+    derived agg stays with its base): >= 16 columns per chunk and at
+    most ~8 chunks per tier, so a wide plan's codegen stays within the
+    JVM's 64 KB method limit (one chunk of 90 mixed columns overflowed
+    it) and its chunks run on parallel threads over column-pruned scans,
+    while a frame of up to 16 columns runs one job per tier.
     """
     tiers: Dict[str, List[PlannedAgg]] = {}
     for a in aggs:
@@ -179,7 +173,7 @@ def _native_work(aggs: List[PlannedAgg], by_column: bool) -> List[tuple]:
         for a in tier_aggs:
             by_col.setdefault(a.column, []).append(a)
         cols = list(by_col)
-        step = max(6, -(-len(cols) // 8))
+        step = max(16, -(-len(cols) // 8))
         work += [(tier, [a for c in cols[i:i + step] for a in by_col[c]])
                  for i in range(0, len(cols), step)]
     return work
@@ -188,16 +182,12 @@ def _native_work(aggs: List[PlannedAgg], by_column: bool) -> List[tuple]:
 def _native_frame(grouped: GroupedData, chunk: List[PlannedAgg],
                   keys: List[Column], key_aggs=()) -> DataFrame:
     """One job's aggregate frame: the ``keys`` columns, then every
-    emitted component of ``chunk`` under its alias (base aggregates as
-    they come out, derived ones projected from their base).
+    emitted component of ``chunk`` under its alias, through the
+    planner's own Columns (no Column is built per call).
     ``key_aggs`` are extra aggregates the keys read (``grouping_id()``).
     """
-    base = [a for a in chunk if a.expr is not None]
-    wide = grouped.agg(*key_aggs, *[a.expr.alias(a.alias) for a in base])
-    return wide.select(
-        *keys, *[F.col(a.alias) for a in base if a.emit],
-        *[a.derive(F.col(a.derive_from)).alias(a.alias)
-          for a in chunk if a.derive is not None])
+    wide = grouped.agg(*key_aggs, *[a.agg for a in chunk if a.agg is not None])
+    return wide.select(*keys, *[a.out for a in chunk if a.out is not None])
 
 
 def _native_pass(df: DataFrame, aggs: List[PlannedAgg], group, keys,
@@ -273,8 +263,8 @@ def _table_df(spark: SparkSession, table: pa.Table) -> DataFrame:
 
 
 def _long_form(jobs: List[_Job]) -> Union[pa.Table, DataFrame]:
-    """The native half of a profile: the jobs' collected rows reshaped
-    into a local table; when any job passed its collect limit
+    """A profile's rows: the jobs' collected rows reshaped into a local
+    table; when any job passed its collect limit
     (``_SEGMENT_COLLECT_LIMIT`` segments), the jobs' frames exploded
     JVM-side into a lazy union instead."""
     if any(j.rows is None for j in jobs):
@@ -292,146 +282,11 @@ def _long_form(jobs: List[_Job]) -> Union[pa.Table, DataFrame]:
 
 def _native_long(df: DataFrame, aggs: List[PlannedAgg],
                  segment_cols: List[str]) -> Union[pa.Table, DataFrame]:
-    """The narrow path's native half: one ``groupBy(segments)`` pass."""
+    """The narrow path's rows: one ``groupBy(segments)`` pass."""
     return _long_form(_native_pass(
         df, aggs, lambda src: src.groupBy(*segment_cols),
         [_segment_json_col(segment_cols).alias("__segment")],
         by_column=not segment_cols))
-
-
-# --------------------------------------------------------------------- sketch
-def _sketch_long(
-    df: DataFrame,
-    sketches: List[SketchPlan],
-    segment_cols: List[str],
-    cfg: MetricConfig,
-) -> DataFrame:
-    """mapInArrow partial sketches -> tiny shuffle -> merged sketch rows."""
-    seg_exprs = [
-        F.coalesce(F.col(s).cast(T.StringType()), F.lit(_NULL_SENTINEL))
-        .alias(f"__seg__{s}")
-        for s in segment_cols
-    ]
-    proj = _ensure_parallelism(
-        df.select(*seg_exprs, *[p.expr.alias(p.alias) for p in sketches]))
-
-    seg_names = [f"__seg__{s}" for s in segment_cols]
-    seg_keys = list(segment_cols)
-    plans = [(p.alias, p.column, p.kind) for p in sketches]
-    kll_k = cfg.effective_kll_k
-    fi_cap = cfg.fi_capacity
-    fi_maxlen = cfg.max_frequent_item_size
-
-    out_schema = T.StructType(
-        [
-            T.StructField("segment", T.StringType()),
-            T.StructField("column", T.StringType()),
-            T.StructField("metric", T.StringType()),
-            T.StructField("component", T.StringType()),
-            T.StructField("b", T.BinaryType()),
-        ]
-    )
-    out_pa = pa.schema(
-        [
-            ("segment", pa.string()),
-            ("column", pa.string()),
-            ("metric", pa.string()),
-            ("component", pa.string()),
-            ("b", pa.binary()),
-        ]
-    )
-
-    def sketch_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
-
-        # state: (segment_json, alias) -> sketch
-        state: Dict[tuple, object] = {}
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            pdf = tbl.to_pandas()
-            if seg_names:
-                groups = pdf.groupby(seg_names, dropna=False, sort=False)
-            else:
-                groups = [((), pdf)]
-            for key, g in groups:
-                if seg_names:
-                    if not isinstance(key, tuple):
-                        key = (key,)
-                    seg = _segment_json_py(seg_keys, key)
-                else:
-                    seg = "{}"
-                for alias, colname, kind in plans:
-                    sk = state.get((seg, alias))
-                    if kind == "kll":
-                        vals = g[alias].to_numpy(dtype="float64", na_value=np.nan)
-                        vals = vals[~np.isnan(vals)]
-                        if vals.size == 0:
-                            continue
-                        if sk is None:
-                            sk = KllSketch(kll_k)
-                            state[(seg, alias)] = sk
-                        sk.update_batch(vals)
-                    else:
-                        vals = g[alias].dropna()
-                        if len(vals) == 0:
-                            continue
-                        if sk is None:
-                            sk = FrequentStringsSketch(fi_cap, fi_maxlen)
-                            state[(seg, alias)] = sk
-                        sk.update_batch(vals)
-        if state:
-            alias_meta = {a: (c, k) for a, c, k in plans}
-            rows = {"segment": [], "column": [], "metric": [],
-                    "component": [], "b": []}
-            for (seg, alias), sk in state.items():
-                colname, kind = alias_meta[alias]
-                rows["segment"].append(seg)
-                rows["column"].append(colname)
-                rows["metric"].append(
-                    "distribution" if kind == "kll" else "frequent_items")
-                rows["component"].append("kll" if kind == "kll" else "mg")
-                rows["b"].append(sk.serialize())
-            yield pa.RecordBatch.from_pydict(rows, schema=out_pa)
-
-    partial = proj.mapInArrow(sketch_partition, out_schema)
-
-    quantiles = list(cfg.quantiles)
-    fi_topk = 32
-
-    merged_schema = PROFILE_SCHEMA
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = pdf["segment"].iloc[0]
-        colname = pdf["column"].iloc[0]
-        metric = pdf["metric"].iloc[0]
-        component = pdf["component"].iloc[0]
-        out = []
-        if component == "kll":
-            sk = merge_kll_blobs(pdf["b"], kll_k)
-            out.append((seg, colname, metric, "kll", None, None, None,
-                        sk.serialize()))
-            for q, v in zip(quantiles, sk.quantiles(quantiles)):
-                out.append((seg, colname, metric, _q_name(q), None,
-                            float(v), None, None))
-        else:
-            sk = merge_fi_blobs(pdf["b"], fi_cap, fi_maxlen)
-            out.append((seg, colname, metric, "mg", None, None, None,
-                        sk.serialize()))
-            items = [
-                {"value": v, "est": e, "lower": lo, "upper": hi}
-                for v, e, lo, hi in sk.top_k(fi_topk)
-            ]
-            out.append((seg, colname, metric, "items", None, None,
-                        json.dumps(items, ensure_ascii=False), None))
-        return pd.DataFrame(
-            out,
-            columns=["segment", "column", "metric", "component",
-                     "n", "d", "s", "b"],
-        )
-
-    return partial.groupBy("segment", "column", "metric", "component").applyInPandas(
-        merge_group, merged_schema
-    )
 
 
 # -------------------------------------------------------------------- profile
@@ -469,24 +324,18 @@ def profile(
     # of the reference's count-only object handling; see
     # datatypes.flatten_struct_columns). Done BEFORE the wide/narrow
     # dispatch so the threshold counts leaves, and before planning so
-    # every path (narrow/wide/sketch) sees only scalar columns.
+    # every path (narrow/wide) sees only scalar columns.
     from .datatypes import flatten_struct_columns
 
     df, columns = flatten_struct_columns(df, columns, segment_cols)
     # Derived inputs (a join / funnel / python stage upstream): pay the
-    # upstream ONCE instead of once per chunk job + sketch pass (r13,
-    # guide §3.3 "materialising an intermediate truncates the plan").
+    # upstream ONCE instead of once per chunk job (r13, guide §3.3
+    # "materialising an intermediate truncates the plan").
     # Plain scans / caches / projections stay un-checkpointed — each
     # chunk's column-pruned scan is cheaper than materializing.
     df = materialize(df, only_if_expensive=True)
-    try:
-        df.sparkSession.conf.set("spark.sql.codegen.maxFields", "2048")
-        # bigger Arrow batches => fewer python-side groupby/update rounds
-        # in the sketch pass
-        df.sparkSession.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", "131072")
-    except Exception:
-        pass
+    # codegen-tier chunks carry more than the default 100 buffer fields
+    df.sparkSession.conf.set("spark.sql.codegen.maxFields", "2048")
     # Wide frames: O(#cols) aggregate expressions would dominate driver/
     # Catalyst time and blow codegen method limits — switch to the
     # unpivot-per-type-class path (core/wide.py). Custom registered
@@ -497,60 +346,17 @@ def profile(
     n_profiled = len(profiled_fields(df.schema, columns, segment_cols))
     if (n_profiled >= config.wide_column_threshold
             and not registered_metrics()):
-        from .wide import plan_wide_sketches, wide_native_rows
+        from .wide import wide_native_rows
 
-        sketches = plan_wide_sketches(
-            df.schema, columns, segment_cols, config)
-        native = partial(wide_native_rows, df, columns, segment_cols, config)
+        long = wide_native_rows(df, columns, segment_cols, config)
     else:
-        aggs, sketches = plan_dataframe(
-            df.schema, columns, segment_cols, config)
-        native = partial(_native_long, df, aggs, segment_cols)
-    long = _with_sketch_rows(df, sketches, segment_cols, config, native)
+        long = _native_long(
+            df, plan_dataframe(df.schema, columns, segment_cols, config),
+            segment_cols)
     if isinstance(long, pa.Table):
         release(df)
     return ProfileView(long, config, dataset_timestamp, metadata=metadata,
                        spark=df.sparkSession)
-
-
-def _with_sketch_rows(
-    df: DataFrame,
-    sketches: List[SketchPlan],
-    segment_cols: List[str],
-    cfg: MetricConfig,
-    native,
-) -> Union[pa.Table, DataFrame]:
-    """The native half (``native()``, a local table or a lazy frame)
-    followed by the python sketch half of a profile, run concurrently.
-
-    The sketch rows are collected into a local table like the native
-    rows: one row per segment x column x component, so a view never
-    re-runs the sketch pass and leaves nothing cached behind. Past
-    ``_SEGMENT_COLLECT_LIMIT`` segments the sketch half stays a lazy
-    frame; when either half is lazy the result is their lazy union."""
-    if not sketches:
-        return native()
-    spark = df.sparkSession
-
-    def sketch_half() -> Union[pa.Table, DataFrame]:
-        sketch_df = _sketch_long(df, sketches, segment_cols, cfg)
-        if not segment_cols:
-            return _profile_table(sketch_df.collect())
-        # rows per segment: kll + its quantiles, or mg + items
-        cap = _SEGMENT_COLLECT_LIMIT * len(sketches) * (
-            2 + len(cfg.quantiles))
-        rows = sketch_df.limit(cap + 1).collect()
-        if len(rows) > cap:
-            return sketch_df
-        return _profile_table(rows)
-
-    halves = run_concurrent(spark, [native, sketch_half])
-    if all(isinstance(h, pa.Table) for h in halves):
-        return pa.concat_tables(halves)
-    native_df, sketch_df = (
-        _table_df(spark, h) if isinstance(h, pa.Table) else h
-        for h in halves)
-    return native_df.unionByName(sketch_df)
 
 
 def profile_partitions(
@@ -564,11 +370,8 @@ def profile_partitions(
     The reference loops its <=10 SegmentationPartitions and re-groups the
     data once per partition (python/whylogs/api/logger/segment_processing.py:157-199);
     here all partitions share a single scan via GROUPING SETS —
-    ``grouping_id()`` attributes each output row to its partition. Native
-    metric tiers each run one grouping-sets aggregate; the KLL/FI sketch
-    pass (which has no grouping-sets equivalent) runs per partition on
-    its own (cheap: sketch bytes only) and is collected like
-    ``profile()``'s.
+    ``grouping_id()`` attributes each output row to its partition. Each
+    metric tier, sketches included, runs one grouping-sets aggregate.
 
     Returns {partition_name -> ProfileView}.
     """
@@ -592,10 +395,10 @@ def profile_partitions(
 
     df, columns = flatten_struct_columns(df, columns, all_cols)
     df = materialize(df, only_if_expensive=True)
-    aggs, sketches = plan_dataframe(df.schema, columns, all_cols, config)
-    # segment values cast JVM-side (same rendering as _segment_json_col /
-    # _sketch_long) so boolean/float keys don't diverge from the narrow
-    # path when stringified in python
+    aggs = plan_dataframe(df.schema, columns, all_cols, config)
+    # segment values cast JVM-side (same rendering as _segment_json_col)
+    # so boolean/float keys don't diverge from the narrow path when
+    # stringified in python
     keys = [F.col("__gid")] + [
         F.coalesce(F.col(c).cast(T.StringType()),
                    F.lit(_NULL_SENTINEL)).alias(c)
@@ -620,15 +423,10 @@ def profile_partitions(
                     rows_by_part[pname].extend(
                         _component_rows(seg, j.chunk, row))
 
-    spark = df.sparkSession
-    longs = run_concurrent(spark, [
-        partial(_with_sketch_rows, df, sketches, cols, config,
-                partial(_profile_table, rows_by_part[pname]))
-        for pname, cols in part_items])
-    if all(isinstance(long, pa.Table) for long in longs):
-        release(df)
-    return {pname: ProfileView(long, config, spark=spark)
-            for (pname, _), long in zip(part_items, longs)}
+    release(df)
+    return {pname: ProfileView(_profile_table(rows_by_part[pname]), config,
+                               spark=df.sparkSession)
+            for pname, _ in part_items}
 
 
 def merge_profiles(views: List["ProfileView"]) -> "ProfileView":

@@ -13,9 +13,12 @@ Apache DataSketches (reference: python/pyproject.toml:15). We need the same
   with deterministic merge (reference frequent-items sketch:
   python/whylogs/core/metrics/metrics.py:444, 128 slots).
 
-Both serialize to compact bytes for storage in a profile table's BINARY
-column and both merges are associative+commutative, which is what makes
-profile rows a monoid (reference merge semantics:
+A profile builds its sketches JVM-side with Spark's DataSketches
+aggregates; these kernels read those bytes (``deserialize`` also takes
+their own ``WSK1``/``WFI1`` format, which older stores hold) and merge
+them on the driver-side and store paths. Both merges are
+associative+commutative, which is what makes profile rows a monoid
+(reference merge semantics:
 python/whylogs/core/metrics/metric_components.py:26).
 
 Determinism: KLL compaction chooses even/odd offsets from a counter-based
@@ -288,11 +291,15 @@ class KllSketch:
 
     @classmethod
     def deserialize(cls, blob: Optional[bytes]) -> "KllSketch":
+        """A sketch from this class's ``WSK1`` bytes or from a
+        DataSketches KLL doubles sketch (family byte 15 at offset 2),
+        the bytes a profile stores."""
         if not blob:
             return cls()
+        if blob[:4] != _KLL_MAGIC:
+            from ..io.dsketch import kll_from_ds_bytes  # checks the family
+            return kll_from_ds_bytes(blob)
         magic, k, n, mn, mx, nlev = struct.unpack_from("<4siqddi", blob, 0)
-        if magic != _KLL_MAGIC:
-            raise ValueError("bad KLL blob")
         off = struct.calcsize("<4siqddi")
         sizes = struct.unpack_from(f"<{nlev}i", blob, off)
         off += 4 * nlev
@@ -395,10 +402,14 @@ class FrequentStringsSketch:
 
     @classmethod
     def deserialize(cls, blob: Optional[bytes]) -> "FrequentStringsSketch":
+        """A sketch from this class's ``WFI1`` bytes or from a
+        DataSketches frequent-items sketch of strings (family byte 10 at
+        offset 2), the bytes a profile stores."""
         if not blob:
             return cls()
         if blob[:4] != b"WFI1":
-            raise ValueError("bad FI blob")
+            from ..io.dsketch import fi_from_ds_bytes  # checks the family
+            return fi_from_ds_bytes(blob)
         payload = json.loads(blob[4:].decode())
         sk = cls(capacity=payload["cap"], max_len=payload["max_len"])
         sk.error = payload["err"]

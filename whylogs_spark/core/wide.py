@@ -52,8 +52,7 @@ from pyspark.sql import types as T
 
 from .configs import MetricConfig
 from .datatypes import ValueType, value_type_of
-from .planner import (PlannedAgg, SketchPlan, _AliasGen, plan_dataframe,
-                      profiled_fields, qcol, sketch_plans)
+from .planner import PlannedAgg, plan_dataframe, profiled_fields, qcol
 from .profiler import (_Job, _collect, _long_form, _native_frame,
                        _segment_json_col)
 from .util import run_concurrent
@@ -89,23 +88,25 @@ def plan_wide_sketches(
     columns: Optional[List[str]],
     segment_cols: List[str],
     cfg: MetricConfig,
-) -> List[SketchPlan]:
-    """The KLL/FI sketch projections (2 exprs/col — unavoidable and cheap;
-    the mapInArrow sketch pass is already width-scalable)."""
-    aliases = _AliasGen()
-    return [p for f in profiled_fields(schema, columns, segment_cols)
-            for p in sketch_plans(f.name, value_type_of(f.dataType), cfg,
-                                  aliases)]
+) -> Dict[ValueType, Tuple[List[str], List[PlannedAgg]]]:
+    """The wide path's plan: each type class's profiled columns, and the
+    planner's aggregates (sketches included) for one ``val`` column of
+    the class's element type — memoized by ``plan_dataframe``, so the
+    plan of a class costs its Columns once."""
+    by_class: Dict[ValueType, List[str]] = {}
+    for f in profiled_fields(schema, columns, segment_cols):
+        by_class.setdefault(value_type_of(f.dataType), []).append(f.name)
+    return {vt: (cols, plan_dataframe(
+        T.StructType([T.StructField("val", _CLASS_TYPE[vt])]), None, [],
+        cfg)) for vt, cols in by_class.items()}
 
 
 def class_frame(df: DataFrame, vt: ValueType, cols: List[str],
                 segment_cols: List[str],
-                cfg: MetricConfig) -> Tuple[List[PlannedAgg], DataFrame]:
-    """One type class's aggregates and aggregate frame: ``cols`` stacked
-    into ``(segment..., cid, val)`` rows, grouped by segment and ``cid``,
-    keyed by ``__segment`` and ``cid``."""
-    aggs, _ = plan_dataframe(
-        T.StructType([T.StructField("val", _CLASS_TYPE[vt])]), None, [], cfg)
+                aggs: List[PlannedAgg]) -> DataFrame:
+    """One type class's aggregate frame: ``cols`` stacked into
+    ``(segment..., cid, val)`` rows, grouped by segment and ``cid``,
+    keyed by ``__segment`` and ``cid``, over the class's ``aggs``."""
     if vt in (ValueType.TENSOR, ValueType.OBJECT):
         def element(c):
             return F.when(qcol(c).isNotNull(), True)
@@ -121,7 +122,7 @@ def class_frame(df: DataFrame, vt: ValueType, cols: List[str],
         for i in range(0, len(cols), _CHUNK)])
     keys = [_segment_json_col(segment_cols, seg).alias("__segment"),
             F.col("cid")]
-    return aggs, _native_frame(stacked.groupBy(*seg, "cid"), aggs, keys)
+    return _native_frame(stacked.groupBy(*seg, "cid"), aggs, keys)
 
 
 def wide_native_rows(
@@ -130,16 +131,13 @@ def wide_native_rows(
     segment_cols: List[str],
     cfg: MetricConfig,
 ) -> Union[pa.Table, DataFrame]:
-    """The wide path's native half of ``profile()``: one job per type
-    class, reshaped like the narrow path's (a local Arrow table, or a
-    lazy frame past ``_SEGMENT_COLLECT_LIMIT`` segments)."""
-    by_class: Dict[ValueType, List[str]] = {}
-    for f in profiled_fields(df.schema, columns, segment_cols):
-        by_class.setdefault(value_type_of(f.dataType), []).append(f.name)
-
-    def job(vt, cols):
-        aggs, frame = class_frame(df, vt, cols, segment_cols, cfg)
+    """The wide path's ``profile()`` rows: one job per type class,
+    reshaped like the narrow path's (a local Arrow table, or a lazy
+    frame past ``_SEGMENT_COLLECT_LIMIT`` segments)."""
+    def job(vt, cols, aggs):
+        frame = class_frame(df, vt, cols, segment_cols, aggs)
         return _Job(aggs, frame, _collect(frame, len(cols)), cols)
 
     return _long_form(run_concurrent(df.sparkSession, [
-        partial(job, vt, cols) for vt, cols in by_class.items()]))
+        partial(job, vt, cols, aggs) for vt, (cols, aggs) in
+        plan_wide_sketches(df.schema, columns, segment_cols, cfg).items()]))

@@ -28,12 +28,13 @@ byte-valid protobuf. Interop scope, stated honestly:
 * cardinality/hll bytes are genuine Apache DataSketches HLL binary
   (Spark's ``hll_sketch_agg``) — the same sketch family the reference's
   ``whylogs-sketching`` uses;
-* distribution/kll and frequent_items bytes are written in the public
-  Apache DataSketches kll_doubles_sketch / frequent_strings_sketch
-  binary formats (converted losslessly from the engine-native state by
-  io/dsketch.py, which is round-trip-validated against datasketches-java)
-  — so a full-mode file is parseable end-to-end by reference whylogs,
-  and reference-written files are readable here, including sketches.
+* distribution/kll and frequent_items bytes are the public Apache
+  DataSketches kll_doubles_sketch / frequent_strings_sketch binary
+  formats (Spark's ``kll_sketch_agg_double`` / ``approx_top_k``
+  sketches, copied unchanged both ways; legacy engine blobs are
+  converted losslessly by io/dsketch.py) — so a full-mode file is
+  parseable end-to-end by reference whylogs, and reference-written
+  files are readable here, including sketches.
 """
 
 from __future__ import annotations
@@ -150,8 +151,9 @@ _WIRE_COMP = {("frequent_items", "frequent_strings"): "mg"}
 
 
 def _to_ds_blob(b) -> bytes:
-    """Engine-native sketch blob -> public Apache DataSketches bytes
-    (io/dsketch.py); non-native blobs (e.g. JVM HLL) pass through."""
+    """A component's sketch bytes as public Apache DataSketches bytes
+    (io/dsketch.py): legacy ``WSK1``/``WFI1`` blobs are converted, the
+    DataSketches blobs a profile stores are copied unchanged."""
     bb = bytes(b)
     if bb[:4] == b"WSK1":
         from ..core.sketches import KllSketch
@@ -164,22 +166,6 @@ def _to_ds_blob(b) -> bytes:
         from .dsketch import fi_to_ds_bytes
         return fi_to_ds_bytes(FrequentStringsSketch.deserialize(bb))
     return bb
-
-
-def _from_ds_blob(metric: str, comp: str, b) -> bytes:
-    """Wire sketch bytes -> engine-native blob. Accepts both this
-    engine's legacy blobs (magic-tagged) and the public DataSketches
-    formats the reference writes."""
-    bb = bytes(b)
-    if bb[:4] in (b"WSK1", b"WFI1"):
-        return bb
-    if (metric, comp) == ("distribution", "kll"):
-        from .dsketch import kll_from_ds_bytes
-        return kll_from_ds_bytes(bb).serialize()
-    if (metric, comp) == ("frequent_items", "mg"):
-        from .dsketch import fi_from_ds_bytes
-        return fi_from_ds_bytes(bb).serialize()
-    return bb  # HLL: stored as DataSketches bytes natively
 
 
 def _component_msg(metric: str, comp: str, n, d, b) -> Optional[bytes]:
@@ -217,10 +203,10 @@ def write_why1(view, path: str, compat: str = "full") -> None:
       whole file is parseable by reference whylogs
       (dataset_profile_view.py:353-430). Scalars, paths, and the
       container follow the reference wire format directly; HLL bytes are
-      genuine Apache DataSketches HLL; KLL and frequent-items state is
-      converted losslessly to the public DataSketches
-      kll_doubles_sketch / frequent_strings_sketch binary formats
-      (io/dsketch.py, validated byte-for-byte against datasketches-java)
+      genuine Apache DataSketches HLL; KLL and frequent-items bytes are
+      the public DataSketches kll_doubles_sketch /
+      frequent_strings_sketch formats, copied as the profile holds them
+      (a legacy engine blob is converted losslessly, io/dsketch.py),
       under the reference's paths ``distribution/kll`` and
       ``frequent_items/frequent_strings``.
     * ``compat="reference"``: KLL/FI sketch bytes are OMITTED entirely
@@ -574,8 +560,6 @@ def _read_why1(
             metric, comp = index_to_path[idx].split("/", 1)
             comp = _WIRE_COMP.get((metric, comp), comp)
             n, d, b = _parse_component(comp_buf)
-            if b is not None:
-                b = _from_ds_blob(metric, comp, b)
             rows.append((seg_json, col, metric, comp, n, d, None, b))
     return rows, props
 

@@ -122,6 +122,8 @@ def _newton(base: DataFrame, start: Callable, step: Callable, *,
     beta)`` runs on the final coefficients before the release.
 
     Returns ``(beta, iterations, converged, finish's result)``."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1: {max_iter}")
     base = materialize(base)
     try:
         beta = start(base)

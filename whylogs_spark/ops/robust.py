@@ -88,8 +88,6 @@ def huber_regression(
     """
     if delta <= 0:
         raise ValueError(f"delta must be > 0: {delta}")
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1: {max_iter}")
     xs = list(x_cols)
     fit = {"sigma": float("nan")}
 
@@ -146,8 +144,6 @@ def quantile_regression(
     """
     if not 0.0 < tau < 1.0:
         raise ValueError(f"tau must be in (0, 1): {tau}")
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1: {max_iter}")
     if eps <= 0:
         raise ValueError(f"eps must be > 0: {eps}")
     xs = list(x_cols)

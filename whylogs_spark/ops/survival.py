@@ -410,8 +410,6 @@ def cox_ph(
     feats = list(feature_cols)
     if not feats:
         raise ValueError("cox_ph needs >= 1 feature column")
-    if max_iter < 1:
-        raise ValueError(f"max_iter must be >= 1: {max_iter}")
     p = len(feats)
     raw = _design(df, feats, __t=duration_col, __e=event_col)
     means = raw.agg(

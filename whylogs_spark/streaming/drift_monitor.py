@@ -5,8 +5,8 @@ The reference engine computes drift between two STATIC profiles
 (python/whylogs/viz/drift/column_drift_algorithms.py:308-424); a
 production pipeline wants that continuously — profile what just
 arrived, compare to the blessed reference, alert. This sink composes
-the existing pieces Spark-first: the batch profiler (one distributed
-agg + Arrow sketch pass per microbatch) and the sketch-based KS/chi2
+the existing pieces Spark-first: the batch profiler (one native
+aggregate pass per microbatch, sketches included) and the sketch-based KS/chi2
 scorers, so each microbatch costs one profile pass regardless of
 stream history, and state never grows (the reference sketches are a
 driver-held constant).

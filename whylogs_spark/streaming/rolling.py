@@ -56,7 +56,7 @@ def streaming_profile(
         config, quantile_impl="none", frequent_items_impl="none")
     exclude = set(segs) | {ts_col}
     cols = columns or [c for c in stream_df.columns if c not in exclude]
-    aggs, _ = plan_dataframe(stream_df.schema, cols, segs, cfg)
+    aggs = plan_dataframe(stream_df.schema, cols, segs, cfg)
     # streaming keeps a single mixed-tier aggregate: one state store
     # beats codegen purity here
     win = F.window(F.col(ts_col), window_duration)
