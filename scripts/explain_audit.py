@@ -3831,7 +3831,7 @@ def main() -> None:
 
     # store rolling-quantile series: write a tiny store, audit the
     # read plan — the scan must prune to the kll rows and the merge
-    # must be ONE Arrow-batched grouped pandas op over blob rows
+    # must be ONE grouped native KLL union, no Python node
     import tempfile as _tf
 
     import whylogs_spark as _wsp
@@ -3855,8 +3855,11 @@ def main() -> None:
                 r"PushedFilters: \[[^\]]*(metric|component)",
             "window fan-out is a Generate (explode), x window":
                 r"\(\d+\) Generate",
-            "ONE grouped Arrow-batched sketch merge":
-                r"FlatMapGroupsInPandas",
+            "one grouped native sketch merge, no Python node":
+                r"^(?![\s\S]*(BatchEvalPython|ArrowEvalPython|MapInPandas|"
+                r"MapInArrow|FlatMapGroupsInPandas))[\s\S]*"
+                r"ObjectHashAggregate[\s\S]*Functions \[\d+\]: "
+                r"\[kll_merge_agg_double",
         }))
 
     # Huber IRLS: the per-iteration plan at unit weights

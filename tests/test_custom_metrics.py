@@ -84,5 +84,6 @@ def test_register_validation():
         wsp.register_metric("empty", [])
     with pytest.raises(ValueError):
         CustomComponent("x", "q", lambda c: F.sum(c))
-    with pytest.raises(ValueError):
-        CustomComponent("x", "d", lambda c: F.sum(c), merge="median")
+    for merge in ("median", lambda values: values.sum()):
+        with pytest.raises(ValueError):
+            CustomComponent("x", "d", lambda c: F.sum(c), merge=merge)

@@ -17,8 +17,9 @@ from whylogs_spark.core.planner import plan_dataframe
 from whylogs_spark.core.profiler import (ProfileView, _native_frame,
                                          merge_profiles)
 from whylogs_spark.core.sketches import FrequentStringsSketch, KllSketch
+from whylogs_spark.io.dsketch import fi_to_ds_bytes, fi_with_null_count
 from whylogs_spark.io.store import ProfileStore
-from whylogs_spark.io.why1 import read_why1_rows, write_why1
+from whylogs_spark.io.why1 import read_why1, read_why1_rows, write_why1
 
 _PYTHON_NODES = ("MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython")
 
@@ -183,3 +184,101 @@ def test_store_mixing_legacy_and_datasketches_rows(spark, tmp_path):
         if i == 0:
             assert bytes(kll) == bytes(blob)
         assert KllSketch.deserialize(bytes(kll)).n == (4000, 8000)[i]
+
+
+def test_why1_plain_frequent_items_bytes_merge(spark, tmp_path):
+    """A WHY1 frequent-strings payload of plain DataSketches bytes (as
+    reference whylogs writes it, with no Spark null count after it)
+    reads back in the shape of a profile's ``mg`` blob, so the native
+    merge can combine it."""
+    words = ["a"] * 50 + ["b"] * 30 + ["c"] * 20
+    view = wsp.profile(spark.createDataFrame([(w,) for w in words],
+                                             "w string"))
+    fresh = bytes(view.get_component("w", "frequent_items", "mg"))
+    assert fi_with_null_count(fresh) == fresh
+    empty = fi_to_ds_bytes(FrequentStringsSketch(128, 128))
+    assert fi_with_null_count(empty) == empty + bytes(8)
+    fi = FrequentStringsSketch(128, 128)
+    fi.update_batch(words)
+    plain = fi_to_ds_bytes(fi)
+    table = view.table().to_pylist()
+    for r in table:
+        if (r["metric"], r["component"]) == ("frequent_items", "mg"):
+            r["b"] = plain
+    path = str(tmp_path / "plain.bin")
+    write_why1(ProfileView(pa.Table.from_pylist(table, view.table().schema),
+                           spark=view.spark), path)
+    back = read_why1(spark, path)
+    assert bytes(back.get_component("w", "frequent_items", "mg")) \
+        == plain + bytes(8)
+    merged = merge_profiles([back, back])
+    items = json.loads(merged.get_component("w", "frequent_items", "items"))
+    assert [(i["value"], i["est"]) for i in items] == [
+        ("a", 100), ("b", 60), ("c", 40)]
+
+
+def test_merge_of_one_profile_is_that_profile(spark):
+    """``merge_profiles([v])`` renders every component as ``v`` does: the
+    mode-aware cardinality bounds and the frequent items that beat the
+    sketch's error (``[]`` on a near-uniform integer column), from the
+    same read-outs. KLL merges are randomized, so its rows are left out,
+    and a frequent-items blob is compared by its counts (a rebuilt
+    sketch may serialize its items in another order)."""
+    df = spark.range(0, 5000, 1, 1).select(
+        (F.col("id") % 1000).alias("uniform"), (F.col("id") % 7).alias("few"),
+        (F.col("id") * 1.5).alias("x"),
+        F.lit(None).cast("double").alias("empty"))
+    view = wsp.profile(df)
+
+    def counts(blob):
+        sk = FrequentStringsSketch.deserialize(blob)
+        return sk.n, sk.error, sk.counts
+
+    def rows(v):
+        return {(r["column"], r["metric"], r["component"]):
+                (r["n"], r["d"], r["s"],
+                 counts(r["b"]) if r["component"] == "mg" else r["b"])
+                for r in v.table().to_pylist()
+                if r["component"] != "kll" and not (
+                    r["metric"] == "distribution"
+                    and r["component"].startswith(("q_", "median")))}
+
+    fresh, merged = rows(view), rows(merge_profiles([view]))
+    assert merged == fresh
+    assert fresh[("uniform", "frequent_items", "items")][2] == "[]"
+    est, lower = (fresh[("few", "cardinality", c)][1]
+                  for c in ("est", "lower"))
+    assert est == 7 and lower > 6.99
+
+
+def test_merges_run_no_python_node(spark, frame, tmp_path):
+    """Every merge over DataSketches-only profiles is one native
+    program: store reads, ⊕, segment collapse, drift, quantile series
+    and compaction plan no Python node."""
+    from whylogs_spark.core.profiler import merge_segments
+
+    small = frame.limit(2000)
+    flat = wsp.profile(small)
+    seg = wsp.profile(small, segment_by=["seg"])
+    store = ProfileStore(str(tmp_path / "store"))
+    for day, hour in ((1, 0), (2, 0), (2, 12), (3, 0)):
+        store.write(flat, "ds", dt.datetime(2024, 3, day, hour,
+                                            tzinfo=dt.timezone.utc))
+    calls = {
+        "get": lambda: store.get(spark, "ds").to_pandas(),
+        "merge_profiles": lambda: merge_profiles([flat, flat]).to_pandas(),
+        "merge_segments": lambda: merge_segments(seg).to_pandas(),
+        "drift_between": lambda: store.drift_between(
+            spark, "ds", "2024-03-01", "2024-03-01", "2024-03-02",
+            "2024-03-03"),
+        "quantile_series": lambda: store.quantile_series(
+            spark, "ds", "f0", window=2).collect(),
+        "compact": lambda: store.compact(spark, "ds"),
+    }
+    for name, call in calls.items():
+        result, plans = _executed_plans(spark, call)
+        assert plans, name
+        for p in plans:
+            assert not any(node in p for node in _PYTHON_NODES), (name, p)
+        if name == "compact":
+            assert result == 1

@@ -268,13 +268,9 @@ def plan_column(col: str, dt: T.DataType, cfg: MetricConfig,
             hll = p.base("cardinality", "hll", SLOT_B,
                          F.hll_sketch_agg(sv, F.lit(cfg.hll_lg_k)),
                          tier="object")
-            p.derived("cardinality", "est", SLOT_D,
-                      F.hll_sketch_estimate(F.col(hll)).cast(T.DoubleType()),
-                      tier="object")
-            p.derived("cardinality", "lower", SLOT_D,
-                      _hll_bounds(hll, 2.0, upper=False), tier="object")
-            p.derived("cardinality", "upper", SLOT_D,
-                      _hll_bounds(hll, 2.0, upper=True), tier="object")
+            for comp, slot, sql in hll_readouts(hll):
+                p.derived("cardinality", comp, slot, F.expr(sql),
+                          tier="object")
         else:
             p.base("cardinality", "est", SLOT_D,
                    F.approx_count_distinct(sv).cast(T.DoubleType()))
@@ -323,17 +319,13 @@ def sketch_plans(col: str, vt: ValueType, cfg: MetricConfig,
     p = _ColumnPlan(col, aliases)
     if cfg.quantile_impl == "kll" and vt in (
             ValueType.INTEGRAL, ValueType.FRACTIONAL, ValueType.TEMPORAL):
-        blob = F.col(p.base(
+        blob = p.base(
             "distribution", "_kll", SLOT_B, F.kll_sketch_agg_double(
                 _numeric_view(col, vt), F.lit(cfg.effective_kll_k)),
-            tier="object", emit=False))
-        full = F.length(blob) > 8
-        p.derived("distribution", "kll", SLOT_B, F.when(full, blob),
-                  tier="object")
-        for q in cfg.quantiles:
-            p.derived("distribution", _q_name(q), SLOT_D, F.when(
-                full, F.kll_sketch_get_quantile_double(blob, F.lit(q))),
-                tier="object")
+            tier="object", emit=False)
+        for comp, slot, sql in kll_readouts(blob, cfg):
+            p.derived("distribution", comp, slot, F.expr(sql),
+                      tier="object")
     if cfg.frequent_items_impl == "sketch" and vt in (
             ValueType.INTEGRAL, ValueType.BOOLEAN, ValueType.STRING,
             ValueType.TEMPORAL):
@@ -342,19 +334,79 @@ def sketch_plans(col: str, vt: ValueType, cfg: MetricConfig,
             F.substring(_string_view(col, vt), 1,
                         cfg.max_frequent_item_size),
             F.lit(cfg.fi_capacity)), tier="object", emit=False)
-        # preamble longs: 1 in the empty form, 4 once a value was seen
-        seen = f"{_le_uint(acc + '.sketch', 0)} > 1"
-        p.derived("frequent_items", "mg", SLOT_B,
-                  F.expr(f"CASE WHEN {seen} THEN {acc}.sketch END"),
-                  tier="object")
-        p.derived("frequent_items", "items", SLOT_S, F.expr(
-            f"CASE WHEN {seen} THEN {_fi_items(acc, cfg.fi_capacity)} END"),
-            tier="object")
+        for comp, slot, sql in fi_readouts(acc, cfg):
+            p.derived("frequent_items", comp, slot, F.expr(sql),
+                      tier="object")
     return p.aggs
 
 
-# The two sketch read-outs below are SQL text: one Column built in one
-# py4j call, where the Column API spends dozens per byte read.
+# The sketch read-outs and merges below are SQL text: one Column built
+# in one py4j call, where the Column API spends dozens per byte read.
+# A fresh profile and a merge (profiler.merge_profiles) read their
+# sketches through the same read-outs, so both render alike.
+
+#: an empty ``approx_top_k`` sketch: the empty frequent-items preamble
+#: followed by Spark's 8-byte null count
+_FI_EMPTY = "X'01010a08030500000000000000000000'"
+
+
+def _kll_seen(blob: str) -> str:
+    """SQL: whether the KLL sketch ``blob`` holds a value (the empty
+    sketch is its 8-byte preamble)."""
+    return f"length({blob}) > 8"
+
+
+def kll_quantile(blob: str, q: float) -> str:
+    """SQL: quantile ``q`` of the KLL sketch ``blob``, null when it is
+    empty."""
+    return (f"CASE WHEN {_kll_seen(blob)} THEN "
+            f"kll_sketch_get_quantile_double({blob}, {float(q)!r}D) END")
+
+
+def kll_readouts(blob: str, cfg: MetricConfig) -> List[tuple]:
+    """``(component, slot, SQL)`` of the KLL sketch ``blob``: the blob
+    and its ``cfg.quantiles``, all null for the empty sketch."""
+    return [("kll", SLOT_B,
+             f"CASE WHEN {_kll_seen(blob)} THEN {blob} END")] + [
+        (_q_name(q), SLOT_D, kll_quantile(blob, q)) for q in cfg.quantiles]
+
+
+def fi_readouts(acc: str, cfg: MetricConfig) -> List[tuple]:
+    """``(component, slot, SQL)`` of the ``approx_top_k`` state ``acc``:
+    its sketch (the ``mg`` blob) and JSON top items, both null until a
+    value was seen."""
+    # preamble longs: 1 in the empty form, 4 once a value was seen
+    seen = f"{_le_uint(acc + '.sketch', 0)} > 1"
+    return [("mg", SLOT_B, f"CASE WHEN {seen} THEN {acc}.sketch END"),
+            ("items", SLOT_S,
+             f"CASE WHEN {seen} THEN {_fi_items(acc, cfg.fi_capacity)} END")]
+
+
+def hll_readouts(hll: str) -> List[tuple]:
+    """``(component, slot, SQL)`` of the HLL sketch ``hll``: estimate and
+    the mode-aware two-sigma bounds (:func:`_hll_bounds`)."""
+    return [("est", SLOT_D, f"CAST(hll_sketch_estimate({hll}) AS DOUBLE)"),
+            ("lower", SLOT_D, _hll_bounds(hll, 2.0, upper=False)),
+            ("upper", SLOT_D, _hll_bounds(hll, 2.0, upper=True))]
+
+
+def kll_merge(blob: str, cfg: MetricConfig) -> str:
+    """SQL aggregate: the KLL union of the group's ``blob`` sketches at
+    ``effective_kll_k`` (nulls skipped; the 8-byte empty sketch when
+    all are null). A lone sketch comes back unchanged."""
+    return f"kll_merge_agg_double({blob}, {cfg.effective_kll_k})"
+
+
+def fi_merge(blob: str, cfg: MetricConfig) -> str:
+    """SQL aggregate: the ``approx_top_k`` state combining the group's
+    ``mg`` sketches ``blob`` and tracking ``fi_capacity`` items. The
+    combine throws on a null state and on a group that fed it no row,
+    so a null blob feeds the empty sketch."""
+    state = (f"named_struct('sketch', coalesce({blob}, {_FI_EMPTY}), "
+             f"'maxItemsTracked', {cfg.fi_capacity}, 'itemDataType', "
+             "CAST(NULL AS STRING), 'itemDataTypeDDL', "
+             "'item string not null')")
+    return f"approx_top_k_combine({state}, {cfg.fi_capacity})"
 
 
 def _le_uint(blob: str, start: int, nbytes: int = 1) -> str:
@@ -391,8 +443,8 @@ def _q_name(q: float) -> str:
     return f"q_{int(round(q * 100)):02d}"
 
 
-def _hll_bounds(hll: str, num_std: float, upper: bool) -> Column:
-    """Sketch-derived cardinality bounds from the serialized
+def _hll_bounds(hll: str, num_std: float, upper: bool) -> str:
+    """SQL: sketch-derived cardinality bounds from the serialized
     DataSketches HLL blob — pure JVM expressions, no Python.
 
     Preamble (org.apache.datasketches.hll.PreambleUtil, verified
@@ -416,8 +468,8 @@ def _hll_bounds(hll: str, num_std: float, upper: bool) -> Column:
            f"ELSE 0.8326D END / sqrt(pow(2.0D, CAST({lgk} AS DOUBLE))) "
            f"ELSE 1.0E-4D END")
     sign = -1.0 if upper else 1.0
-    return F.expr(f"CAST(hll_sketch_estimate({hll}) AS DOUBLE) / "
-                  f"(1.0D + {sign * num_std!r}D * ({rse}))")
+    return (f"CAST(hll_sketch_estimate({hll}) AS DOUBLE) / "
+            f"(1.0D + {sign * num_std!r}D * ({rse}))")
 
 
 class _AliasGen:

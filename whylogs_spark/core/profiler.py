@@ -46,7 +46,8 @@ from __future__ import annotations
 
 import json
 from functools import partial, reduce
-from typing import Dict, Iterable, Iterator, List, NamedTuple, Optional, Union
+from typing import (Dict, Iterable, Iterator, List, NamedTuple, Optional,
+                    Sequence, Union)
 
 import pandas as pd
 import pyarrow as pa
@@ -59,10 +60,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .configs import DEFAULT_CONFIG, MetricConfig
 from .planner import (
-    SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, _q_name, plan_dataframe,
-    profiled_fields,
+    SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, fi_merge, fi_readouts,
+    hll_readouts, kll_merge, kll_readouts, plan_dataframe, profiled_fields,
 )
-from .sketches import KllSketch, merge_fi_blobs, merge_kll_blobs
+from .sketches import KllSketch
 from .util import ensure_parallelism as _ensure_parallelism
 from .util import materialize, release, run_concurrent
 
@@ -431,24 +432,18 @@ def profile_partitions(
 
 def merge_profiles(views: List["ProfileView"]) -> "ProfileView":
     """⊕ over profiles — the reference's monoid merge
-    (python/whylogs/core/view/dataset_profile_view.py:172), expressed as a
-    grouped aggregation over the profile table so it distributes:
-
-    * cardinality/hll merges JVM-side via ``hll_union_agg``;
-    * sketch blobs (kll/mg) union in pandas groups;
-    * counters/extrema/moments merge algebraically (Chan's formula for
-      mean/M2 — reference python/whylogs/core/metrics/maths.py:11).
-    """
+    (python/whylogs/core/view/dataset_profile_view.py:172), expressed as
+    one grouped native aggregation over the profile table so it
+    distributes (:func:`_merge_profile_df`)."""
     if not views:
         raise ValueError("no profiles to merge")
     cfg = views[0].config
-    tagged = [
-        v.df.withColumn("src", F.lit(i)) for i, v in enumerate(views)
-    ]
-    allp = tagged[0]
-    for t in tagged[1:]:
-        allp = allp.unionByName(t)
-    return ProfileView(_merge_profile_df(allp, cfg), cfg)
+    allp = reduce(DataFrame.unionByName, [
+        v.df.withColumn("src", F.lit(i)) for i, v in enumerate(views)])
+    tables = [v._table for v in views]
+    legacy = (any(map(_has_legacy, tables))
+              if all(t is not None for t in tables) else None)
+    return ProfileView(_merge_profile_df(allp, cfg, legacy=legacy), cfg)
 
 
 def merge_segments(view: "ProfileView") -> "ProfileView":
@@ -460,228 +455,207 @@ def merge_segments(view: "ProfileView") -> "ProfileView":
 
     Scale shape: the input is the bounded profile TABLE (segments ×
     columns × components rows, never data rows); one grouped merge,
-    one hash exchange.  Each segment acts as one merge source (``src``
-    keys the Chan mean/M2 alignment), so the result is bit-identical
-    to merging per-segment views written/read separately — the
-    property the segmented WHY1 round-trip test pins.
+    one hash exchange. Each segment acts as one merge source (``src``
+    keys the Chan mean/M2 alignment), as if the per-segment views had
+    been written, read back and merged separately.
     """
     allp = (view.df.withColumn("src", F.xxhash64("segment"))
             .withColumn("segment", F.lit("{}")))
-    return ProfileView(_merge_profile_df(allp, view.config), view.config)
+    legacy = None if view._table is None else _has_legacy(view._table)
+    return ProfileView(_merge_profile_df(allp, view.config, legacy=legacy),
+                       view.config)
 
 
-def _merge_profile_df(allp: DataFrame, cfg: MetricConfig) -> DataFrame:
-    """Merge a profile table carrying a ``src`` column distinguishing the
-    source profiles (so mean/M2 components can be aligned per source)."""
+#: first bytes of the engine's former sketch formats (``KllSketch`` /
+#: ``FrequentStringsSketch.serialize``), which Spark's sketch functions
+#: cannot read
+_LEGACY_HEADS = (b"WSK1", b"WFI1")
+_LEGACY_SQL = "substring(b, 1, 4) IN ({})".format(
+    ", ".join(f"X'{h.hex()}'" for h in _LEGACY_HEADS))
+
+
+def _has_legacy(table: pa.Table) -> bool:
+    """Whether a local profile table holds a legacy sketch blob."""
+    heads = pc.binary_slice(table.column("b"), 0, 4)
+    return bool(pc.any(pc.is_in(heads, value_set=pa.array(
+        _LEGACY_HEADS, pa.binary()))).as_py())
+
+
+def _legacy_to_ds(batches: Iterator[pa.RecordBatch]
+                  ) -> Iterator[pa.RecordBatch]:
+    """mapInArrow: every legacy ``b`` blob rewritten as DataSketches
+    bytes (``io.dsketch.to_ds_blob``)."""
+    from ..io.dsketch import to_ds_blob
+
+    for batch in batches:
+        i = batch.schema.get_field_index("b")
+        blobs = [None if b is None else to_ds_blob(b)
+                 for b in batch.column(i).to_pylist()]
+        yield batch.set_column(i, "b", pa.array(blobs, pa.binary()))
+
+
+def _ds_blobs(df: DataFrame, legacy: Optional[bool] = None) -> DataFrame:
+    """``df`` with DataSketches ``b`` blobs only, the one input the
+    native merges read. Legacy blobs (stores written before profiles
+    held Spark's sketches, ``streaming_quantiles`` output) are rewritten
+    by one mapInArrow, planned only when ``legacy`` says they exist;
+    when it is None, one job over ``df`` counts them and returns one
+    number per partition. (A ``limit(1)`` scans a multi-file store in
+    several rounds and a global aggregate in two stages, one job each.)"""
+    if legacy is None:
+        legacy = df.where(_LEGACY_SQL).select(F.lit(True)) \
+            ._jdf.queryExecution().toRdd().count() > 0
+    return df.mapInArrow(_legacy_to_ds, df.schema) if legacy else df
+
+
+def _sql_str(v: str) -> str:
+    """``v`` as a Spark SQL string literal."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _component_row(component: str, **slots: str) -> str:
+    """SQL: one merged profile component, ``named_struct(component, n,
+    d, s, b)``, the given slots set from their SQL and the rest null."""
+    return "named_struct('component', {}, {})".format(component, ", ".join(
+        f"'{slot}', CAST({slots.get(slot, 'NULL')} AS {dt.simpleString()})"
+        for slot, dt, _ in _SLOTS))
+
+
+def _readout_rows(readouts: List[tuple]) -> List[str]:
+    return [_component_row(f"'{comp}'", **{slot: sql})
+            for comp, slot, sql in readouts]
+
+
+def _merge_profile_df(allp: DataFrame, cfg: MetricConfig,
+                      keys: Sequence[str] = (),
+                      legacy: Optional[bool] = None) -> DataFrame:
+    """Merge a profile table whose ``src`` column tells its source
+    profiles apart (grouped by ``keys`` too) — one native program: a
+    hash exchange on (``keys``, segment, column), two windows over it
+    (each row's source ``n`` and ``mean``; whether its column has a KLL
+    sketch), then one groupBy(``keys``, segment, column, metric, family)
+    in which each component family merges by its native aggregate:
+
+    * counts and types: ``sum``; ints and distribution min / max:
+      ``min`` / ``max``;
+    * distribution n / mean / m2 / stddev: Chan et al.'s parallel
+      formula (reference python/whylogs/core/metrics/maths.py:11) in
+      closed form over the per-source rows, ``N = Σnᵢ``,
+      ``mean = Σnᵢ·meanᵢ / N``, ``m2 = Σm2ᵢ + Σnᵢ·(meanᵢ − mean)²``
+      (the last sum an ``aggregate()`` over the collected
+      ``(nᵢ, meanᵢ)``);
+    * KLL: ``kll_merge_agg_double``; frequent items:
+      ``approx_top_k_combine``; HLL: ``hll_union_agg``. Each is read
+      out by the planner's read-outs, as a fresh profile is;
+    * quantiles of a column without KLL (``quantile_impl='native'``):
+      the mean weighted by source ``n``, and estimate-only cardinality
+      (``cardinality_impl='approx'``): the ``max`` — documented
+      APPROXIMATIONS (exact only for identically-distributed sources,
+      resp. when one source's values cover the others');
+    * custom metrics: their registered ``sum`` / ``min`` / ``max``
+      (``none`` components are dropped); any other component keeps its
+      first row.
+    """
     if "src" not in allp.columns:
         raise ValueError(
             "profile table must carry a 'src' column identifying the "
             "source profile of each row (merge_profiles adds it)")
-    # --- JVM mergeable: HLL union
-    hll = allp.filter(
-        (F.col("metric") == "cardinality") & (F.col("component") == "hll"))
-    import math as _math
-
-    union = hll.groupBy("segment", "column", "metric").agg(
-        F.hll_union_agg(F.col("b"), F.lit(True)).alias("hb"))
-    est = F.hll_sketch_estimate(F.col("hb"))
-    rse = 2.0 * 1.04 / _math.sqrt(2.0 ** cfg.hll_lg_k)
-    nl = F.lit(None)
-    hll_rows = union.select(
-        "segment", "column", "metric",
-        F.explode(
-            F.array(
-                F.struct(F.lit("hll").alias("component"),
-                         nl.cast(T.LongType()).alias("n"),
-                         nl.cast(T.DoubleType()).alias("d"),
-                         nl.cast(T.StringType()).alias("s"),
-                         F.col("hb").alias("b")),
-                F.struct(F.lit("est").alias("component"),
-                         nl.cast(T.LongType()).alias("n"),
-                         est.alias("d"),
-                         nl.cast(T.StringType()).alias("s"),
-                         nl.cast(T.BinaryType()).alias("b")),
-                F.struct(F.lit("lower").alias("component"),
-                         nl.cast(T.LongType()).alias("n"),
-                         (est * F.lit(1.0 - rse)).alias("d"),
-                         nl.cast(T.StringType()).alias("s"),
-                         nl.cast(T.BinaryType()).alias("b")),
-                F.struct(F.lit("upper").alias("component"),
-                         nl.cast(T.LongType()).alias("n"),
-                         (est * F.lit(1.0 + rse)).alias("d"),
-                         nl.cast(T.StringType()).alias("s"),
-                         nl.cast(T.BinaryType()).alias("b")),
-            )
-        ).alias("r"),
-    ).select("segment", "column", "metric", "r.*")
-
-    # ALL rows (cardinality included) flow to the grouped merge below:
-    # hll-backed cardinality groups short-circuit there (the JVM
-    # hll_union_agg path above emits them); est-only groups
-    # (cardinality_impl='approx') merge python-side so non-default
-    # configs don't silently lose the metric
-    rest = allp
-
-    quantiles = list(cfg.quantiles)
-    kll_k = cfg.effective_kll_k
-    fi_cap = cfg.fi_capacity
-    fi_maxlen = cfg.max_frequent_item_size
-    # snapshot the custom-metric merge ops DRIVER-side: the registry is a
-    # driver-process dict, invisible to executor python workers — the
-    # closure must carry the ops, not re-import them
     from .registry import registered_metrics
 
-    custom_ops = {
-        (ns, comp.component): comp.merge
-        for ns, m in registered_metrics().items()
-        for comp in m.components
+    custom = {(ns, c.component): c.merge
+              for ns, m in registered_metrics().items()
+              for c in m.components}
+    dropped = [f"metric = {_sql_str(ns)} AND component = {_sql_str(c)}"
+               for (ns, c), op in custom.items() if op == "none"]
+    if dropped:
+        allp = allp.where("NOT (" + " OR ".join(
+            f"({d})" for d in dropped) + ")")
+    by = ", ".join(f"`{k}`" for k in [*keys, "segment", "column"])
+    dist = "metric = 'distribution'"
+
+    def of_src(component: str, slot: str) -> str:
+        return (f"max(CASE WHEN {dist} AND component = '{component}' THEN "
+                f"{slot} END) OVER (PARTITION BY {by}, src)")
+
+    family = (
+        f"CASE WHEN {dist} AND component IN ('n', 'mean', 'm2', 'stddev') "
+        f"THEN '#moments' WHEN {dist} AND (component = 'kll' OR (component "
+        f"= 'median' OR component RLIKE '^q_[0-9]+$') AND max({dist} AND "
+        f"component = 'kll') OVER (PARTITION BY {by})) THEN '#kll' "
+        "WHEN metric IN ('cardinality', 'frequent_items') THEN '#' || metric "
+        "ELSE component END")
+    rows = _ds_blobs(allp, legacy).repartition(
+        *keys, "segment", "column").selectExpr(
+        *keys, "segment", "`column`", "metric", "component", "n", "d", "s",
+        "b", f"{family} AS __family",
+        f"CAST(coalesce(nullif({of_src('n', 'n')}, 0), 1) AS DOUBLE) AS __w",
+        f"{of_src('mean', 'd')} AS __mean")
+    merged = rows.groupBy(*keys, "segment", "column", "metric",
+                          "__family").agg(*[F.expr(e) for e in (
+        "sum(n) AS __n_sum", "min(n) AS __n_min", "max(n) AS __n_max",
+        "sum(d) AS __d_sum", "min(d) AS __d_min", "max(d) AS __d_max",
+        "first(struct(n, d, s, b)) AS __first",
+        "sum(__w * d) / sum(CASE WHEN d IS NOT NULL THEN __w END) "
+        "AS __wmean",
+        "sum(n * __mean) AS __nmean_sum",
+        "sum(CASE WHEN component = 'm2' THEN d END) AS __m2_sum",
+        "collect_list(CASE WHEN __family = '#moments' AND component = 'n' "
+        "THEN struct(n, coalesce(__mean, 0D) AS mean) END) AS __srcs",
+        kll_merge("CASE WHEN __family = '#kll' AND component = 'kll' "
+                  "THEN b END", cfg) + " AS __kll",
+        "hll_union_agg(CASE WHEN __family = '#cardinality' AND component "
+        "= 'hll' THEN b END, true) AS __hll",
+        "max(component = 'hll') AS __has_hll",
+        fi_merge("CASE WHEN __family = '#frequent_items' AND component = "
+                 "'mg' THEN b END", cfg) + " AS __fi")])
+
+    n, mean = "coalesce(__n_sum, 0)", "__nmean_sum / __n_sum"
+    m2 = (f"coalesce(__m2_sum, 0D) + aggregate(__srcs, 0D, (a, x) -> a + "
+          f"x.n * (x.mean - {mean}) * (x.mean - {mean}))")
+    moments = [
+        _component_row("'n'", n=n),
+        _component_row("'mean'", d=f"CASE WHEN {n} > 0 THEN {mean} END"),
+        _component_row("'m2'", d=f"CASE WHEN {n} > 0 THEN {m2} END"),
+        _component_row("'stddev'", d=f"CASE WHEN {n} > 1 THEN "
+                       f"sqrt(({m2}) / ({n} - 1)) WHEN {n} > 0 THEN 0D END")]
+    op = ("CASE WHEN metric IN ('counts', 'types') THEN 'sum' "
+          "WHEN metric IN ('ints', 'distribution') AND __family IN "
+          "('min', 'max') THEN __family "
+          "WHEN metric = 'distribution' THEN 'wmean' " + "".join(
+              f"WHEN metric = {_sql_str(ns)} AND __family = {_sql_str(c)} "
+              f"THEN '{o}' " for (ns, c), o in custom.items())
+          + "ELSE 'first' END")
+
+    def by_op(**values: str) -> str:
+        return f"CASE {op} " + "".join(
+            f"WHEN '{o}' THEN {v} " for o, v in values.items()) + "END"
+
+    component = _component_row(
+        "__family",
+        n=by_op(sum="__n_sum", min="__n_min", max="__n_max",
+                first="__first.n"),
+        d=by_op(sum="__d_sum", min="__d_min", max="__d_max",
+                wmean="__wmean", first="__first.d"),
+        s=by_op(first="__first.s"), b=by_op(first="__first.b"))
+
+    def array(rows: List[str]) -> str:
+        return f"array({', '.join(rows)})"
+
+    hll = [_component_row("'hll'", b="__hll"),
+           *_readout_rows(hll_readouts("__hll"))]
+    est = _component_row("'est'", d="__d_max")  # no hll: est rows only
+    families = {
+        "#moments": array(moments),
+        "#kll": array(_readout_rows(kll_readouts("__kll", cfg))),
+        "#frequent_items": array(_readout_rows(fi_readouts("__fi", cfg))),
+        "#cardinality": (f"CASE WHEN __has_hll THEN {array(hll)} "
+                         f"ELSE {array([est])} END"),
     }
-
-    def merge_metric(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = pdf["segment"].iloc[0]
-        colname = pdf["column"].iloc[0]
-        metric = pdf["metric"].iloc[0]
-        out: List[tuple] = []
-
-        def emit(component, n=None, d=None, s=None, b=None):
-            out.append((seg, colname, metric, component, n, d, s, b))
-
-        by_comp = {k: g for k, g in pdf.groupby("component")}
-
-        def nsum(comp):
-            g = by_comp.get(comp)
-            return int(g["n"].dropna().sum()) if g is not None else None
-
-        if metric in ("counts", "types"):
-            for comp in by_comp:
-                emit(comp, n=nsum(comp))
-        elif metric == "ints":
-            if "min" in by_comp:
-                mn = by_comp["min"]["n"].dropna()
-                emit("min", n=int(mn.min()) if len(mn) else None)
-            if "max" in by_comp:
-                mx = by_comp["max"]["n"].dropna()
-                emit("max", n=int(mx.max()) if len(mx) else None)
-        elif metric == "distribution":
-            # Chan et al. parallel merge of (n, mean, M2) — components
-            # paired per source profile via the ``src`` column
-            # (reference: python/whylogs/core/metrics/maths.py:11).
-            per_src: Dict[int, Dict[str, float]] = {}
-            for _, r in pdf.iterrows():
-                if r["component"] in ("n", "mean", "m2"):
-                    d = per_src.setdefault(int(r["src"]), {})
-                    d[r["component"]] = (
-                        r["n"] if r["component"] == "n" else r["d"])
-            N = 0
-            mean = 0.0
-            m2 = 0.0
-            for d in per_src.values():
-                nb = int(d.get("n") or 0)
-                if not nb:
-                    continue
-                mb = d.get("mean")
-                m2b = d.get("m2")
-                mb = float(mb) if mb is not None and pd.notna(mb) else 0.0
-                m2b = float(m2b) if m2b is not None and pd.notna(m2b) else 0.0
-                delta = mb - mean
-                tot = N + nb
-                mean += delta * nb / tot
-                m2 += m2b + delta * delta * N * nb / tot
-                N = tot
-            emit("n", n=N)
-            if N > 0:
-                emit("mean", d=mean)
-                emit("m2", d=m2)
-                emit("stddev", d=(m2 / (N - 1)) ** 0.5 if N > 1 else 0.0)
-            mins = by_comp.get("min")
-            maxs = by_comp.get("max")
-            if mins is not None and mins["d"].notna().any():
-                emit("min", d=float(mins["d"].min()))
-            if maxs is not None and maxs["d"].notna().any():
-                emit("max", d=float(maxs["d"].max()))
-            kll = by_comp.get("kll")
-            if kll is not None:
-                sk = merge_kll_blobs(kll["b"], kll_k)
-                emit("kll", b=sk.serialize())
-                for q, v in zip(quantiles, sk.quantiles(quantiles)):
-                    emit(_q_name(q), d=float(v))
-            else:
-                # quantile_impl='native' profiles carry per-quantile
-                # values but no mergeable sketch: merged quantile =
-                # source-size-weighted average — a documented
-                # APPROXIMATION (exact only for identically-distributed
-                # sources), carried instead of silently dropped
-                n_of_src = {s: int(d.get("n") or 0)
-                            for s, d in per_src.items()}
-                qnames = [c for c in by_comp
-                          if c == "median"
-                          or (c.startswith("q_") and c[2:].isdigit())]
-                for compname in sorted(qnames):
-                    num = den = 0.0
-                    for _, r in by_comp[compname].iterrows():
-                        if r["d"] is None or pd.isna(r["d"]):
-                            continue
-                        w = float(n_of_src.get(int(r["src"]), 0) or 1.0)
-                        num += float(r["d"]) * w
-                        den += w
-                    if den > 0:
-                        emit(compname, d=num / den)
-        elif metric == "cardinality":
-            # hll-backed groups were merged JVM-side (hll_union_agg in
-            # _merge_profile_df) — emit nothing here; est-only groups
-            # (approx_count_distinct) have no mergeable state: merged
-            # est = max across sources, a documented lower-bound
-            # approximation (exact when one source's values cover the
-            # others')
-            if "hll" not in by_comp:
-                g = by_comp.get("est")
-                if g is not None and g["d"].notna().any():
-                    emit("est", d=float(g["d"].max()))
-        elif metric == "frequent_items":
-            mg = by_comp.get("mg")
-            if mg is not None:
-                sk = merge_fi_blobs(mg["b"], fi_cap, fi_maxlen)
-                emit("mg", b=sk.serialize())
-                items = [
-                    {"value": v, "est": e, "lower": lo, "upper": hi}
-                    for v, e, lo, hi in sk.top_k(32)
-                ]
-                emit("items", s=json.dumps(items, ensure_ascii=False))
-        else:
-            # custom metrics merge by their registered per-component op
-            # (reference: pluggable component aggregators,
-            # python/whylogs/core/metrics/aggregators.py:33-47); truly
-            # unknown components keep the first occurrence
-            for comp, g in by_comp.items():
-                op = custom_ops.get((metric, comp))
-                if op is None:
-                    r = g.iloc[0]
-                    emit(comp, n=r["n"], d=r["d"], s=r["s"], b=r["b"])
-                    continue
-                if op == "none":
-                    continue  # recomputable-only component: dropped
-                for slot in ("n", "d"):
-                    vals = g[slot].dropna()
-                    if not len(vals):
-                        continue
-                    if callable(op):
-                        v = op(vals)
-                    elif op == "sum":
-                        v = vals.sum()
-                    elif op == "min":
-                        v = vals.min()
-                    else:
-                        v = vals.max()
-                    emit(comp, **{
-                        slot: int(v) if slot == "n" else float(v)})
-                    break
-        return pd.DataFrame(
-            out, columns=["segment", "column", "metric", "component",
-                          "n", "d", "s", "b"])
-
-    merged_rest = rest.groupBy("segment", "column", "metric").applyInPandas(
-        merge_metric, PROFILE_SCHEMA)
-    return merged_rest.unionByName(hll_rows)
+    out = merged.selectExpr(
+        *keys, "segment", "`column`", "metric", "explode(CASE __family "
+        + "".join(f"WHEN '{f}' THEN {r} " for f, r in families.items())
+        + f"ELSE {array([component])} END) AS __r")
+    return out.select(*keys, "segment", "column", "metric", "__r.*")
 
 
 # ----------------------------------------------------------------------- view

@@ -29,20 +29,19 @@ codegen'd — no UDAF needed for the common cases) plus a per-component
     )
 
 ``merge`` ops: "sum" | "min" | "max" | "none" ("none" = recomputable
-from other components only, dropped on merge; e.g. a ratio). A callable
-``(pandas.Series) -> scalar`` is also accepted for anything else.
+from other components only, dropped on merge; e.g. a ratio). Each is a
+native Spark aggregate in the one grouped merge of ``merge_profiles``,
+so a merge of custom metrics starts no Python worker either.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, Dict, List, Optional, Set, Union
+from typing import Callable, Dict, List, Optional, Set
 
 from pyspark.sql import Column
 
 from .datatypes import ValueType
-
-MergeOp = Union[str, Callable]
 
 _VALID_MERGE = {"sum", "min", "max", "none"}
 
@@ -60,14 +59,14 @@ class CustomComponent:
     component: str
     slot: str
     expr: Callable[[Column], Column]
-    merge: MergeOp = "sum"
+    merge: str = "sum"
 
     def __post_init__(self) -> None:
         if self.slot not in ("n", "d"):
             raise ValueError("custom component slot must be 'n' or 'd'")
-        if isinstance(self.merge, str) and self.merge not in _VALID_MERGE:
+        if self.merge not in _VALID_MERGE:
             raise ValueError(
-                f"merge must be one of {sorted(_VALID_MERGE)} or a callable")
+                f"merge must be one of {sorted(_VALID_MERGE)}")
 
 
 @dataclass(frozen=True)
@@ -127,13 +126,3 @@ def unregister_metric(namespace: str) -> None:
 
 def registered_metrics() -> Dict[str, CustomMetric]:
     return dict(_REGISTRY)
-
-
-def merge_op_for(namespace: str, component: str) -> Optional[MergeOp]:
-    m = _REGISTRY.get(namespace)
-    if m is None:
-        return None
-    for comp in m.components:
-        if comp.component == component:
-            return comp.merge
-    return None

@@ -416,27 +416,3 @@ class FrequentStringsSketch:
         sk.n = payload["n"]
         sk.counts = {str(k): int(v) for k, v in payload["c"].items()}
         return sk
-
-
-def merge_kll_blobs(blobs: Iterable[Optional[bytes]], k: int) -> KllSketch:
-    """Merge serialized KLL sketches, in iteration order, into a fresh
-    ``KllSketch(k)``; null blobs are skipped. The order is part of the
-    result (compaction coin flips), so callers that need a replayable
-    answer pass the blobs in a pinned order."""
-    acc = KllSketch(k)
-    for b in blobs:
-        if b is not None:
-            acc.merge(KllSketch.deserialize(bytes(b)))
-    return acc
-
-
-def merge_fi_blobs(blobs: Iterable[Optional[bytes]], capacity: int,
-                   max_len: int) -> FrequentStringsSketch:
-    """Merge serialized frequent-items sketches into a fresh
-    ``FrequentStringsSketch(capacity, max_len)``; null blobs are
-    skipped."""
-    acc = FrequentStringsSketch(capacity, max_len)
-    for b in blobs:
-        if b is not None:
-            acc.merge(FrequentStringsSketch.deserialize(bytes(b)))
-    return acc

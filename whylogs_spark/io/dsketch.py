@@ -241,19 +241,62 @@ def fi_from_ds_bytes(blob: bytes) -> FrequentStringsSketch:
         raise ValueError(f"not a frequent-items sketch (family {family})")
     capacity = int(0.75 * (1 << lg_max))
     sk = FrequentStringsSketch(capacity=max(capacity, 1))
-    if flags & _FLAG_SINGLE_ITEM or pre_longs == 1:
+    if _fi_empty(blob):
         return sk
     num_active, _, stream_len, offset = struct.unpack_from("<IIQQ", blob, 8)
-    pos = 32
-    counts = struct.unpack_from(f"<{num_active}q", blob, pos)
-    pos += 8 * num_active
-    values: List[str] = []
-    for _ in range(num_active):
-        (ln,) = struct.unpack_from("<I", blob, pos)
-        pos += 4
-        values.append(blob[pos:pos + ln].decode("utf-8"))
-        pos += ln
+    counts = struct.unpack_from(f"<{num_active}q", blob, 32)
+    values = [blob[a:b].decode("utf-8") for a, b in _fi_item_spans(blob)]
     sk.n = int(stream_len)
     sk.error = int(offset)
     sk.counts = {v: int(c) for v, c in zip(values, counts)}
     return sk
+
+
+def _fi_empty(blob: bytes) -> bool:
+    """Whether a frequent-items blob is the empty form (preamble only)."""
+    return bool(blob[5] & 4) or blob[0] == 1  # flag 4: EMPTY
+
+
+def _fi_item_spans(blob: bytes) -> List[tuple]:
+    """``(start, end)`` byte offsets of the UTF-8 items of a non-empty
+    frequent-items blob, in stored order."""
+    (num_active,) = struct.unpack_from("<I", blob, 8)
+    pos = 32 + 8 * num_active
+    spans = []
+    for _ in range(num_active):
+        (ln,) = struct.unpack_from("<I", blob, pos)
+        spans.append((pos + 4, pos + 4 + ln))
+        pos += 4 + ln
+    return spans
+
+
+def fi_with_null_count(blob: bytes) -> bytes:
+    """A frequent-items blob in the shape of a profile's ``mg`` blob:
+    DataSketches bytes followed by Spark's 8-byte null count, which
+    ``approx_top_k_combine`` reads. Plain DataSketches bytes (reference
+    whylogs writes them) get a zero count appended; a blob that already
+    carries one, or is no frequent-items sketch, comes back unchanged."""
+    if len(blob) < 8 or blob[2] != _FI_FAMILY:
+        return blob
+    if _fi_empty(blob):
+        end = 8
+    else:
+        spans = _fi_item_spans(blob)
+        end = spans[-1][1] if spans else 32
+    return blob + bytes(8) if len(blob) == end else blob
+
+
+# ------------------------------------------------------------ legacy blobs
+def to_ds_blob(b) -> bytes:
+    """A profile's sketch bytes as Apache DataSketches bytes: the engine's
+    former ``WSK1`` KLL / ``WFI1`` frequent-items blobs are converted,
+    DataSketches blobs come back unchanged. A converted frequent-items
+    sketch carries Spark's 8-byte null count (zero) after it, as the
+    ``mg`` blob of a profile does."""
+    bb = bytes(b)
+    if bb[:4] == b"WSK1":
+        return kll_to_ds_bytes(KllSketch.deserialize(bb))
+    if bb[:4] == b"WFI1":
+        return fi_to_ds_bytes(FrequentStringsSketch.deserialize(bb)) \
+            + bytes(8)
+    return bb

@@ -19,14 +19,24 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..core.configs import DEFAULT_CONFIG, MetricConfig
-from ..core.profiler import ProfileView, _merge_profile_df
+from ..core.planner import fi_merge, kll_merge, kll_quantile
+from ..core.profiler import (PROFILE_SCHEMA, ProfileView, _ds_blobs,
+                             _merge_profile_df)
 
 #: parquet codec of every store file: a profile's DataSketches KLL blobs
 #: hold ~1.7x the items of the engine's former sketch, and zstd brings a
 #: stored profile back to its snappy size of before
 _CODEC = "zstd"
+
+#: a store's schema: the profile rows, the batch time and the two
+#: partition columns. Reading with it launches no schema-inference job.
+_STORE_SCHEMA = T.StructType(PROFILE_SCHEMA.fields + [
+    T.StructField("dataset_ts", T.StringType()),
+    T.StructField("dataset_id", T.StringType()),
+    T.StructField("date", T.DateType())])
 
 
 class ProfileStore:
@@ -54,7 +64,7 @@ class ProfileStore:
         )
 
     def _read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return spark.read.schema(_STORE_SCHEMA).parquet(self.path)
 
     def get(
         self,
@@ -72,12 +82,9 @@ class ProfileStore:
             df = df.filter(F.col("date") <= date_to)
         if not merge:
             return ProfileView(df, self.config)
-        tagged = df.withColumn(
-            "src", F.xxhash64(F.col("dataset_ts"))).select(
-            "segment", "column", "metric", "component", "n", "d", "s",
-            "b", "src")
+        batches = df.withColumn("src", F.xxhash64("dataset_ts"))
         return ProfileView(
-            _merge_profile_df(tagged, self.config), self.config)
+            _merge_profile_df(batches, self.config), self.config)
 
     def list_datasets(self, spark: SparkSession) -> list:
         return [
@@ -120,15 +127,15 @@ class ProfileStore:
         and ``mg`` rows). Each row is tagged with the window(s) its
         date falls in — a batch inside both windows feeds both sides —
         and one groupBy(side, segment, column, component) merges the
-        blobs executor-side in ascending ``dataset_ts`` order, so the
-        answer replays identically. One collect returns two merged
-        sketch tables (2 x segments x columns rows, however many
-        batches the windows hold); the scoring is driver-side."""
-        import pandas as pd
-
+        blobs JVM-side with the native merges of ``merge_profiles``
+        (``kll_merge_agg_double`` / ``approx_top_k_combine``). One
+        collect returns two merged sketch tables (2 x segments x
+        columns rows, however many batches the windows hold); the
+        scoring is driver-side. KLL merges are randomized, as the
+        reference's are, so two calls agree within the sketch's rank
+        error, not bit for bit."""
         from ..core.drift import (SKETCH_COMPONENTS, drift_scorer,
                                   score_segments, sketch_tables)
-        from ..core.sketches import merge_fi_blobs, merge_kll_blobs
 
         # validate BEFORE the scan: a typo'd algorithm should not cost
         # a store read first
@@ -144,27 +151,19 @@ class ProfileStore:
             df = df.filter(F.col("segment") == "{}")
         sides = F.array_compact(F.array(
             F.when(in_ref, F.lit("ref")), F.when(in_tgt, F.lit("tgt"))))
-        tagged = df.select(
+        tagged = _ds_blobs(df).select(
             F.explode(sides).alias("side"), "segment", "column",
-            "component", F.to_timestamp("dataset_ts").alias("ts"), "b")
-
-        kll_k = self.config.effective_kll_k
-        fi_cap = self.config.fi_capacity
-        fi_maxlen = self.config.max_frequent_item_size
-
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            # pinned order: batch time, then blob bytes for equal times
-            pdf = pdf.sort_values(["ts", "b"], kind="stable")
-            if pdf["component"].iloc[0] == "kll":
-                sk = merge_kll_blobs(pdf["b"], kll_k)
-            else:
-                sk = merge_fi_blobs(pdf["b"], fi_cap, fi_maxlen)
-            return pdf.iloc[:1][["side", "segment", "column",
-                                 "component"]].assign(b=sk.serialize())
-
+            "component", "b")
         rows = (tagged.groupBy("side", "segment", "column", "component")
-                .applyInPandas(merge, "side string, segment string, "
-                               "column string, component string, b binary")
+                .agg(F.expr(kll_merge(
+                    "CASE WHEN component = 'kll' THEN b END", self.config)
+                    ).alias("kll"),
+                     F.expr(fi_merge(
+                         "CASE WHEN component = 'mg' THEN b END",
+                         self.config)).alias("fi"))
+                .selectExpr("side", "segment", "`column`", "component",
+                            "CASE component WHEN 'kll' THEN kll "
+                            "ELSE fi.sketch END AS b")
                 .collect())
         tgt, ref = (sketch_tables(r for r in rows if r["side"] == side)
                     for side in ("tgt", "ref"))
@@ -194,45 +193,34 @@ class ProfileStore:
         daily for those dates; compact only history older than the
         monitoring window. ``dataset_ts`` keeps the partition's max.
 
-        Each partition's merged profile is tiny (one row per metric
-        component), so it materializes driver-side before the
-        overwrite — never reading and overwriting the same files in
-        one plan.
+        The partitions merge in ONE grouped merge (keyed by date) whose
+        rows, tiny (one per metric component), materialize driver-side
+        before the overwrite — never reading and overwriting the same
+        files in one plan.
         """
         df = self._read(spark).filter(F.col("dataset_id") == dataset_id)
         if date_from is not None:
             df = df.filter(F.col("date") >= date_from)
         if date_to is not None:
             df = df.filter(F.col("date") <= date_to)
-        todo = sorted(
-            (r["date"], r["max_ts"])
+        todo = {
+            r["date"]: r["max_ts"]
             for r in df.groupBy("date").agg(
                 F.countDistinct("dataset_ts").alias("n_ts"),
                 F.max("dataset_ts").alias("max_ts")).collect()
-            if r["n_ts"] > 1)
+            if r["n_ts"] > 1}
         if not todo:
             return 0
-        # one union plan over every qualifying date -> one collect job
-        # and one dynamic-overwrite write, not a per-date job storm
-        # (a year of daily appends is ~365 tiny partitions)
-        frames = []
-        for d, max_ts in todo:
-            tagged = df.filter(F.col("date") == d).withColumn(
-                "src", F.xxhash64(F.col("dataset_ts"))).select(
-                "segment", "column", "metric", "component", "n", "d",
-                "s", "b", "src")
-            frames.append(
-                _merge_profile_df(tagged, self.config)
-                .withColumn("date", F.lit(d))
-                .withColumn("dataset_ts", F.lit(max_ts)))
-        merged = frames[0]
-        for f in frames[1:]:
-            merged = merged.unionByName(f)
+        batches = df.filter(F.col("date").isin(list(todo))).withColumn(
+            "src", F.xxhash64("dataset_ts"))
+        merged = _merge_profile_df(batches, self.config, keys=["date"])
         # materialize driver-side (profiles are KB-scale) so the write
         # never overwrites files its own plan is reading
         rows = merged.collect()
-        local = spark.createDataFrame(rows, merged.schema) \
-            .withColumn("dataset_id", F.lit(dataset_id))
+        max_ts = F.create_map(*[F.lit(v) for kv in todo.items() for v in kv])
+        local = (spark.createDataFrame(rows, merged.schema)
+                 .withColumn("dataset_ts", max_ts[F.col("date")])
+                 .withColumn("dataset_id", F.lit(dataset_id)))
         prev = spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set(
@@ -643,20 +631,16 @@ class ProfileStore:
         one per segment per batch, never data rows.  Each batch row
         fans out to the ``window`` window-ends it participates in
         (one explode, x window), then ONE groupBy(segment,
-        window_end) Arrow-batched pandas merge unions <= ``window``
+        window_end) native ``kll_merge_agg_double`` unions <= ``window``
         blobs per group and reads the quantiles off the merged
-        sketch.  100+ windows x many segments stays a bounded
-        sketch-algebra job: cost ~ batches x window blob merges,
-        independent of the profiled table's size.  The per-segment
-        ``row_number`` window runs over batch COUNTS (a store has
-        hundreds of batches, not billions).  Merge order inside a
-        window is pinned (ascending batch) so compaction randomness
-        replays identically run to run.
+        sketch, no Python worker.  100+ windows x many segments stays
+        a bounded sketch-algebra job: cost ~ batches x window blob
+        merges, independent of the profiled table's size.  The
+        per-segment ``row_number`` window runs over batch COUNTS (a
+        store has hundreds of batches, not billions).  KLL merges are
+        randomized, as the reference's are: a window's quantiles agree
+        run to run within the sketch's rank error.
         """
-        import pandas as pd
-
-        from ..core.sketches import merge_kll_blobs
-
         if window < 1:
             raise ValueError(f"window must be >= 1: {window}")
         qs = [float(q) for q in quantiles]
@@ -680,7 +664,7 @@ class ProfileStore:
         from pyspark.sql import Window as W
         rn = F.row_number().over(
             W.partitionBy("segment").orderBy("dataset_ts"))
-        base = df.select(
+        base = _ds_blobs(df).select(
             "segment", F.to_timestamp("dataset_ts").alias("dataset_ts"),
             "b").withColumn("__rn", rn)
         mx = base.groupBy("segment").agg(F.max("__rn").alias("__mx"))
@@ -691,24 +675,11 @@ class ProfileStore:
                            F.least(F.col("__rn") + F.lit(window - 1),
                                    F.col("__mx")))).alias("__end")))
 
-        kll_k = self.config.effective_kll_k
-        out_schema = ("segment string, dataset_ts timestamp, "
-                      "batches int, n long, "
-                      + ", ".join(f"{c} double" for c in qcols))
-
-        def _merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("__rn")
-            sk = merge_kll_blobs(pdf["b"], kll_k)
-            end_row = pdf[pdf["__rn"] == pdf["__end"].iloc[0]]
-            ts = end_row["dataset_ts"].iloc[0] if len(end_row) \
-                else pdf["dataset_ts"].iloc[-1]
-            vals = sk.quantiles(qs) if sk.n else [None] * len(qs)
-            rec = {"segment": pdf["segment"].iloc[0],
-                   "dataset_ts": ts, "batches": len(pdf),
-                   "n": int(sk.n)}
-            for c, v in zip(qcols, vals):
-                rec[c] = None if v is None else float(v)
-            return pd.DataFrame([rec])
-
         return (fan.groupBy("segment", "__end")
-                .applyInPandas(_merge, out_schema))
+                .agg(F.expr(kll_merge("b", self.config)).alias("__kll"),
+                     F.count("*").cast("int").alias("batches"),
+                     F.max_by("dataset_ts", "__rn").alias("dataset_ts"))
+                .select("segment", "dataset_ts", "batches",
+                        F.expr("kll_sketch_get_n_double(__kll)").alias("n"),
+                        *[F.expr(kll_quantile("__kll", q)).alias(c)
+                          for q, c in zip(qs, qcols)]))

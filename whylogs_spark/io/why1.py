@@ -150,24 +150,6 @@ _WIRE_PATH = {("frequent_items", "mg"): "frequent_items/frequent_strings"}
 _WIRE_COMP = {("frequent_items", "frequent_strings"): "mg"}
 
 
-def _to_ds_blob(b) -> bytes:
-    """A component's sketch bytes as public Apache DataSketches bytes
-    (io/dsketch.py): legacy ``WSK1``/``WFI1`` blobs are converted, the
-    DataSketches blobs a profile stores are copied unchanged."""
-    bb = bytes(b)
-    if bb[:4] == b"WSK1":
-        from ..core.sketches import KllSketch
-
-        from .dsketch import kll_to_ds_bytes
-        return kll_to_ds_bytes(KllSketch.deserialize(bb))
-    if bb[:4] == b"WFI1":
-        from ..core.sketches import FrequentStringsSketch
-
-        from .dsketch import fi_to_ds_bytes
-        return fi_to_ds_bytes(FrequentStringsSketch.deserialize(bb))
-    return bb
-
-
 def _component_msg(metric: str, comp: str, n, d, b) -> Optional[bytes]:
     out = bytearray()
     tid = _TYPE_ID.get((metric, comp), 0)
@@ -181,7 +163,9 @@ def _component_msg(metric: str, comp: str, n, d, b) -> Optional[bytes]:
         f = _SKETCH_FIELD.get((metric, comp))
         if f is None:
             return None  # unknown sketch kind: not representable
-        out += _len_field(f, _len_field(1, _to_ds_blob(b)))
+        from .dsketch import to_ds_blob
+
+        out += _len_field(f, _len_field(1, to_ds_blob(b)))
     else:
         return None  # s-slot (derived JSON) and empty components skipped
     return bytes(out)
@@ -425,6 +409,10 @@ def _parse_component(buf: bytes) -> tuple:
             for f2, w2, v2 in _fields(val):
                 if f2 == 1 and w2 == 2:
                     b = bytes(v2)
+            if field == 4 and b is not None:
+                from .dsketch import fi_with_null_count
+
+                b = fi_with_null_count(b)
     return n, d, b
 
 
