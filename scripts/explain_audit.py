@@ -24,10 +24,30 @@ SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 
 def formatted(df) -> str:
+    if isinstance(df, str):  # plans already captured (executed_plans)
+        return df
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def executed_plans(spark, fn) -> str:
+    """The formatted physical plans of the SQL executions ``fn()`` ran,
+    for an operator that collects its result and returns a local
+    frame."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    fn()
+    return "\n".join(e.physicalPlanDescription() for e in executions()
+                     if e.executionId() > last)
 
 
 def audit(name: str, df, checks: dict[str, str]) -> tuple[str, list[str]]:
@@ -708,6 +728,35 @@ def main() -> None:
     q3.stop()
     frequent_plan = buf3.getvalue()
 
+    # 9c1. streaming sketch windows: the same runtime contract over
+    # the profile's DataSketches aggregates (KLL per window for
+    # quantiles, frequent items per window for heavy hitters), append
+    # mode, no Python state op
+    from whylogs_spark.streaming.frequent import streaming_heavy_hitters
+    from whylogs_spark.streaming.quantiles import streaming_quantiles
+
+    sketch_plans = {}
+    for name, out in (
+            ("quantiles", streaming_quantiles(
+                spark.readStream.schema(ev.schema).parquet(src_dir),
+                "value", ts_col="ts", window_duration="1 hour",
+                watermark="10 minutes")),
+            ("heavy_hitters", streaming_heavy_hitters(
+                spark.readStream.schema(ev.schema).parquet(src_dir),
+                ts_col="ts", value_col="event_type",
+                window_duration="1 hour", watermark="10 minutes"))):
+        qs = (out.writeStream.outputMode("append").format("noop")
+              .trigger(availableNow=True)
+              .option("checkpointLocation",
+                      _tempfile.mkdtemp(prefix=f"audit_ckpt_{name}_"))
+              .start())
+        qs.awaitTermination(180)
+        bufs = io.StringIO()
+        with redirect_stdout(bufs):
+            qs.explain()
+        qs.stop()
+        sketch_plans[name] = bufs.getvalue()
+
     # 9c2. streaming experiment SRM counts: same runtime contract
     from whylogs_spark.streaming.experiment import streaming_arm_counts
 
@@ -834,7 +883,8 @@ def main() -> None:
             r"^(?![\s\S]*Exchange hashpartitioning[\s\S]*"
             r"Exchange hashpartitioning)",
         "no Python in the streaming hot path":
-            r"^(?![\s\S]*(ArrowEvalPython|BatchEvalPython))",
+            r"^(?![\s\S]*(ArrowEvalPython|BatchEvalPython|"
+            r"FlatMapGroupsInPandas))",
     }
 
     # 9z. metric-series anomaly monitoring (core/monitor.py): the
@@ -3747,9 +3797,12 @@ def main() -> None:
 
     from whylogs_spark.ops.stats import kendall_tau
 
+    # kendall_tau collects its one row (releasing its cut) and returns
+    # a local frame, so audit the plans of the jobs the call ran
     sections.append((
         "Kendall tau-b (cell-table pair pass, broadcast NL)",
-        kendall_tau(li, "l_quantity", "l_linenumber"),
+        executed_plans(spark, lambda: kendall_tau(
+            li, "l_quantity", "l_linenumber")),
         {
             "pair pass is a broadcast nested-loop over the BOUNDED "
             "cell table (max_cells-guarded), never a shuffle "
@@ -4169,6 +4222,10 @@ def main() -> None:
              model_plan),
             ("streaming frequent items (runtime microbatch plan)",
              frequent_plan),
+            ("streaming quantiles (runtime microbatch plan)",
+             sketch_plans["quantiles"]),
+            ("streaming heavy hitters (runtime microbatch plan)",
+             sketch_plans["heavy_hitters"]),
             ("streaming experiment arm counts (runtime microbatch "
              "plan)", armcounts_plan),
             ("streaming fairness decision counts (runtime microbatch "

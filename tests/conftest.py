@@ -182,7 +182,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_drift_monitor_sink_flags_shifted_batch",
     "test_streaming.py::test_rolling_sink_merges_to_batch_profile",
     "test_streaming.py::test_rolling_sink_segmented",
-    "test_streaming.py::test_streaming_heavy_hitters_mg_bounds",
     "test_udf_unicode_embeddings.py::test_embedding_drift_identical_and_shifted",
     "test_udf_unicode_embeddings.py::test_profile_store_roundtrip",
     "test_udf_unicode_embeddings.py::test_reference_centroids_and_profile",

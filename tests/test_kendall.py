@@ -72,3 +72,15 @@ class TestKendall:
             "x double, y double")
         r = kendall_tau(df, "x", "y").collect()[0]
         assert r["n"] == 2 and r["concordant"] == 1
+
+    def test_releases_its_cell_cut(self, spark):
+        """Two calls leave no checkpointed RDD behind: the one-row
+        result is local, so the cut of the cell table is released."""
+        jsc = spark.sparkContext._jsc
+        df = spark.createDataFrame(
+            [(float(i % 7), float(i % 5)) for i in range(100)],
+            "x double, y double")
+        before = jsc.getPersistentRDDs().size()
+        for _ in range(2):
+            assert kendall_tau(df, "x", "y").collect()[0]["n"] == 100
+        assert jsc.getPersistentRDDs().size() == before

@@ -21,7 +21,8 @@ from whylogs_spark.io.dsketch import fi_to_ds_bytes, fi_with_null_count
 from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.io.why1 import read_why1, read_why1_rows, write_why1
 
-_PYTHON_NODES = ("MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython")
+_PYTHON_NODES = ("MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython",
+                 "FlatMapGroupsInPandasWithState")
 
 
 @pytest.fixture(scope="module")
@@ -217,6 +218,51 @@ def test_why1_plain_frequent_items_bytes_merge(spark, tmp_path):
         ("a", 100), ("b", 60), ("c", 40)]
 
 
+def test_store_plain_frequent_items_blobs(spark, tmp_path):
+    """A store whose ``mg`` blobs are plain DataSketches bytes (no Spark
+    null count after them; stores written from WHY1 views before WHY1
+    reads appended the count hold them) reads, collapses segments and
+    scores drift like a store written with the counts: the store probe
+    finds the plain blobs and appends the count."""
+    from whylogs_spark.core.profiler import merge_segments
+
+    days = {1: [("a", i % 2) for i in range(50)]
+            + [("b", i % 2) for i in range(30)] + [("c", 0)] * 20,
+            2: [("a", 0)] * 10 + [("b", 1)] * 30
+            + [("c", i % 2) for i in range(60)]}
+    plain, full = (ProfileStore(str(tmp_path / name))
+                   for name in ("plain", "full"))
+    for day, rows in days.items():
+        view = wsp.profile(spark.createDataFrame(rows, "w string, g int"),
+                           segment_by=["g"])
+        table = view.table().to_pylist()
+        for r in table:
+            if r["component"] == "mg":
+                r["b"] = bytes(r["b"])[:-8]
+                assert fi_with_null_count(r["b"]) == r["b"] + bytes(8)
+        ts = dt.datetime(2024, 3, day, tzinfo=dt.timezone.utc)
+        plain.write(ProfileView(pa.Table.from_pylist(
+            table, view.table().schema), spark=view.spark), "ds", ts)
+        full.write(view, "ds", ts)
+
+    def items(view, segment):
+        return [(i["value"], i["est"]) for i in json.loads(
+            view.get_component("w", "frequent_items", "items", segment))]
+
+    got = plain.get(spark, "ds")
+    assert items(got, '{"g":"0"}') == [("c", 50), ("a", 35), ("b", 15)]
+    assert items(got, '{"g":"1"}') == [("b", 45), ("c", 30), ("a", 25)]
+    day1 = merge_segments(plain.get(spark, "ds", "2024-03-01",
+                                    "2024-03-01", merge=False))
+    assert items(day1, "{}") == [("a", 50), ("b", 30), ("c", 20)]
+    for by_segment in (False, True):
+        assert plain.drift_between(
+            spark, "ds", "2024-03-01", "2024-03-01", "2024-03-02",
+            "2024-03-02", by_segment=by_segment) == full.drift_between(
+            spark, "ds", "2024-03-01", "2024-03-01", "2024-03-02",
+            "2024-03-02", by_segment=by_segment)
+
+
 def test_merge_of_one_profile_is_that_profile(spark):
     """``merge_profiles([v])`` renders every component as ``v`` does: the
     mode-aware cardinality bounds and the frequent items that beat the
@@ -282,3 +328,43 @@ def test_merges_run_no_python_node(spark, frame, tmp_path):
             assert not any(node in p for node in _PYTHON_NODES), (name, p)
         if name == "compact":
             assert result == 1
+
+
+def test_streaming_sketch_windows_run_no_python_node(spark, tmp_path):
+    """The streaming operators that hold sketches per window —
+    ``streaming_profile``, ``streaming_quantiles`` and
+    ``streaming_heavy_hitters`` — run a stateful native aggregate: their
+    runtime microbatch plans have a state store and no Python node."""
+    import io
+    from contextlib import redirect_stdout
+
+    from whylogs_spark.streaming.frequent import streaming_heavy_hitters
+    from whylogs_spark.streaming.quantiles import streaming_quantiles
+    from whylogs_spark.streaming.rolling import streaming_profile
+
+    src = str(tmp_path / "src")
+    spark.range(0, 500, 1, 1).select(
+        F.timestamp_seconds(F.lit(1_714_557_600) + F.col("id") * 7)
+        .alias("ts"), (F.col("id") % 17 * 1.5).alias("x"),
+        (F.col("id") % 5).cast("string").alias("w")).write.parquet(src)
+    stream = spark.readStream.schema("ts timestamp, x double, w string") \
+        .parquet(src)
+    operators = {
+        "profile": streaming_profile(stream, ts_col="ts",
+                                     watermark="0 seconds"),
+        "quantiles": streaming_quantiles(stream, "x",
+                                         watermark="0 seconds"),
+        "heavy_hitters": streaming_heavy_hitters(
+            stream, value_col="w", watermark="0 seconds", slots=8),
+    }
+    for name, out in operators.items():
+        q = (out.writeStream.format("noop").outputMode("append")
+             .option("checkpointLocation", str(tmp_path / name))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            q.explain()
+        plan = buf.getvalue()
+        assert "StateStoreSave" in plan, (name, plan)
+        assert not any(node in plan for node in _PYTHON_NODES), (name, plan)

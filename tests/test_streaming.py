@@ -50,6 +50,74 @@ def test_streaming_native_profile_matches_batch(spark, events,
     assert got_map == truth
 
 
+def test_streamed_window_merges_with_batch_profile(spark, tmp_path):
+    """A window of ``streaming_profile`` (append mode) carries the batch
+    profile's sketches: collected into a ProfileView it merges with a
+    batch profile of the same rows (exact KLL n, quantiles within the
+    rank bound of two merged sketches, exact frequent items), and,
+    written to a store, feeds ``quantile_series``."""
+    import datetime as dt
+
+    import numpy as np
+
+    from whylogs_spark.core.profiler import (PROFILE_SCHEMA, ProfileView,
+                                             merge_profiles)
+    from whylogs_spark.core.sketches import KllSketch
+    from whylogs_spark.io.store import ProfileStore
+
+    hour = 1_714_557_600  # 2024-05-01 10:00 UTC, a window start
+    src = str(tmp_path / "src")
+    spark.range(0, 3000, 1, 1).select(
+        F.timestamp_seconds(F.lit(hour) + F.col("id") % 3600).alias("ts"),
+        (F.randn(5) * 4.0 + 20.0).alias("x"),
+        F.element_at(F.array(*map(F.lit, "abbccc")),
+                     (F.col("id") % 6 + 1).cast("int")).alias("w"),
+    ).write.parquet(src + "/b=0")
+    spark.range(1).select(  # moves the watermark past the window
+        F.timestamp_seconds(F.lit(hour + 2 * 86400)).alias("ts"),
+        F.lit(0.0).alias("x"), F.lit("z").alias("w"),
+    ).write.parquet(src + "/b=1")
+    rows = spark.read.parquet(src + "/b=0")
+    stream = (spark.readStream.schema(rows.schema)
+              .option("maxFilesPerTrigger", 1).parquet(src + "/*"))
+    q = (streaming_profile(stream, ts_col="ts", window_duration="1 hour",
+                           watermark="0 seconds")
+         .writeStream.format("memory").queryName("streamed_window")
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination(180)
+    streamed = ProfileView(spark.sql(
+        "SELECT * FROM streamed_window WHERE window_start = "
+        "(SELECT min(window_start) FROM streamed_window)").select(
+        *[f.name for f in PROFILE_SCHEMA.fields]))
+    assert streamed.get_component("x", "counts", "n") == 3000
+
+    batch = wsp.profile(rows.drop("ts"))
+    merged = merge_profiles([streamed, batch])
+    kll = KllSketch.deserialize(
+        bytes(merged.get_component("x", "distribution", "kll")))
+    assert kll.n == 6000
+    xs = np.sort([r["x"] for r in rows.select("x").collect()])
+    for q_, comp in ((0.25, "q_25"), (0.5, "median"), (0.95, "q_95")):
+        got = merged.get_component("x", "distribution", comp)
+        assert abs(np.searchsorted(xs, got) / xs.size - q_) <= 2 * 0.0165
+    items = json.loads(merged.get_component("w", "frequent_items",
+                                            "items"))
+    assert [(i["value"], i["est"]) for i in items] == [
+        ("c", 3000), ("b", 2000), ("a", 1000)]
+
+    store = ProfileStore(str(tmp_path / "store"))
+    for day, view in ((1, streamed), (2, batch)):
+        store.write(view, "ds", dt.datetime(2024, 5, day,
+                                            tzinfo=dt.timezone.utc))
+    series = store.quantile_series(spark, "ds", "x", quantiles=(0.5,),
+                                   window=2).orderBy("dataset_ts").collect()
+    assert [(r["batches"], r["n"]) for r in series] == [(1, 3000),
+                                                       (2, 6000)]
+    for r in series:
+        assert abs(np.searchsorted(xs, r["q_50"]) / xs.size - 0.5) \
+            <= 2 * 0.0165
+
+
 def test_rolling_sink_merges_to_batch_profile(spark, events,
                                               events_stream_src, tmp_path):
     stream = spark.readStream.schema(

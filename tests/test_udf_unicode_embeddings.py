@@ -339,6 +339,24 @@ def test_udf_schema_drop_columns(spark):
     assert out.first()["sum"] == 3.0
 
 
+def test_register_udf_feeds_udf_schema(spark, monkeypatch):
+    """A function registered with ``@register_udf`` (the reference's
+    ``@register_metric_udf``) is applied by ``udf_schema()``, under its
+    ``prefix.name`` output column."""
+    from whylogs_spark.core import udf_schema as us
+
+    monkeypatch.setattr(us, "_REGISTRY", [])
+
+    @us.register_udf(["a", "b"], prefix="pair")
+    def ratio(a, b):
+        return a / b
+
+    df = spark.createDataFrame([(6.0, 2.0), (1.0, 4.0)], ["a", "b"])
+    out = us.udf_schema().apply_udfs(df)
+    assert out.columns == ["a", "b", "pair.ratio"]
+    assert [r["pair.ratio"] for r in out.collect()] == [3.0, 0.25]
+
+
 def test_condition_validator_actions(spark):
     """Failure actions fire driver-side over the bounded sample with the
     reference signature (validator, condition, value, row_id) —

@@ -123,17 +123,3 @@ def flatten_struct_columns(df, columns=None, segment_cols=()):
             new_columns.extend(rename.get(c, [c]))
     return df.select(*sel), new_columns
 
-
-def is_numeric(vt: ValueType) -> bool:
-    return vt in (ValueType.INTEGRAL, ValueType.FRACTIONAL, ValueType.BOOLEAN)
-
-
-def is_discrete(vt: ValueType) -> bool:
-    """Columns whose values are hashed/stringified for cardinality + FI."""
-    return vt in (
-        ValueType.INTEGRAL,
-        ValueType.STRING,
-        ValueType.BOOLEAN,
-        ValueType.TEMPORAL,
-        ValueType.FRACTIONAL,
-    )

@@ -273,17 +273,14 @@ def roc_auc_sketch(
     label_col: str,
     k: int = 256,
 ) -> float:
-    """One-shot sketch AUC over a DataFrame: per-partition KLL
-    sketches per class (Arrow-batched, zero shuffle of rows), merged
-    driver-side (<= 2 x #partitions small blobs), then the sketch
-    AUC. The production shape for continuous scores at corpus scale;
-    ``roc_auc_exact`` is its ground-truth verifier. Labels must be
-    0/1 (any other value raises).
+    """One-shot sketch AUC over a DataFrame: one KLL sketch of the
+    scores per class (``kll_sketch_agg_double`` grouped by the label,
+    partially aggregated before its exchange, so no row is shuffled),
+    two small blobs collected, then the sketch AUC. The production
+    shape for continuous scores at corpus scale; ``roc_auc_exact`` is
+    its ground-truth verifier. Labels must be 0/1 (any other value
+    raises).
     """
-    from typing import Iterator as _Iterator
-
-    import pandas as pd
-
     from .sketches import KllSketch
 
     src = df.select(
@@ -292,24 +289,11 @@ def roc_auc_sketch(
     ).filter(F.col("s").isNotNull() & ~F.isnan("s")
              & F.col("y0").isNotNull()).select(
         "s", _binary_label(F.col("y0")).cast("int").alias("y"))
-
-    def build(batches: "_Iterator[pd.DataFrame]"):
-        sk = {0: KllSketch(k), 1: KllSketch(k)}
-        for pdf in batches:
-            for y in (0, 1):
-                vals = pdf.loc[pdf["y"] == y, "s"].to_numpy(float)
-                if vals.size:
-                    sk[y].update_batch(vals)
-        yield pd.DataFrame(
-            {"y": [0, 1],
-             "blob": [sk[0].serialize(), sk[1].serialize()]})
-
-    parts = src.mapInPandas(build, "y int, blob binary").collect()
-    merged = {0: KllSketch(k), 1: KllSketch(k)}
-    for r in parts:
-        merged[r["y"]] = merged[r["y"]].merge(
-            KllSketch.deserialize(bytes(r["blob"])))
-    return roc_auc_from_sketches(merged[1], merged[0])
+    rows = src.groupBy("y").agg(
+        F.kll_sketch_agg_double("s", F.lit(int(k))).alias("b")).collect()
+    sk = {r["y"]: KllSketch.deserialize(bytes(r["b"])) for r in rows}
+    return roc_auc_from_sketches(sk.get(1, KllSketch(k)),
+                                 sk.get(0, KllSketch(k)))
 
 
 def _distinct_score_counts(df, score_col, label_col, n_bins):

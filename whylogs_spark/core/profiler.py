@@ -60,8 +60,9 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .configs import DEFAULT_CONFIG, MetricConfig
 from .planner import (
-    SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, fi_merge, fi_readouts,
-    hll_readouts, kll_merge, kll_readouts, plan_dataframe, profiled_fields,
+    SLOT_B, SLOT_D, SLOT_N, SLOT_S, PlannedAgg, _le_uint, fi_merge,
+    fi_readouts, hll_readouts, kll_merge, kll_readouts, plan_dataframe,
+    profiled_fields,
 )
 from .sketches import KllSketch
 from .util import ensure_parallelism as _ensure_parallelism
@@ -470,8 +471,29 @@ def merge_segments(view: "ProfileView") -> "ProfileView":
 #: ``FrequentStringsSketch.serialize``), which Spark's sketch functions
 #: cannot read
 _LEGACY_HEADS = (b"WSK1", b"WFI1")
-_LEGACY_SQL = "substring(b, 1, 4) IN ({})".format(
-    ", ".join(f"X'{h.hex()}'" for h in _LEGACY_HEADS))
+
+
+def _plain_fi_sql(b: str) -> str:
+    """SQL: whether ``b`` is a frequent-items sketch of plain
+    DataSketches bytes, which end with the last item where a profile's
+    ``mg`` blob carries Spark's null count after them
+    (``io.dsketch.fi_with_null_count``'s length test): 8 bytes when
+    empty, else a 32-byte preamble, one count per item, then the items,
+    each a uint32 length and its bytes. The walk never passes the end
+    of the blob, so a malformed one reads false."""
+    n, end = _le_uint(b, 8, 4), f"length({b}) + 1"
+    walk = (f"aggregate(array_repeat(0, CAST(least({n}, length({b})) AS "
+            f"INT)), least(32 + 8 * {n}, {end}), (p, x) -> least(p + 4 + "
+            f"{_le_uint(b, 'CAST(p AS INT)', 4)}, {end}))")
+    return (f"CASE WHEN substring({b}, 3, 1) != X'0a' THEN false "
+            f"WHEN length({b}) = 8 THEN true ELSE length({b}) = {walk} END")
+
+
+#: whether a ``b`` blob must be rewritten before the native merges read
+#: it: a legacy blob, or a plain frequent-items sketch (stores written
+#: from WHY1 views before WHY1 reads appended the null count hold them)
+_LEGACY_SQL = "substring(b, 1, 4) IN ({}) OR {}".format(
+    ", ".join(f"X'{h.hex()}'" for h in _LEGACY_HEADS), _plain_fi_sql("b"))
 
 
 def _has_legacy(table: pa.Table) -> bool:
@@ -484,7 +506,8 @@ def _has_legacy(table: pa.Table) -> bool:
 def _legacy_to_ds(batches: Iterator[pa.RecordBatch]
                   ) -> Iterator[pa.RecordBatch]:
     """mapInArrow: every legacy ``b`` blob rewritten as DataSketches
-    bytes (``io.dsketch.to_ds_blob``)."""
+    bytes and every plain frequent-items sketch given Spark's null
+    count (``io.dsketch.to_ds_blob``)."""
     from ..io.dsketch import to_ds_blob
 
     for batch in batches:
@@ -497,9 +520,9 @@ def _legacy_to_ds(batches: Iterator[pa.RecordBatch]
 def _ds_blobs(df: DataFrame, legacy: Optional[bool] = None) -> DataFrame:
     """``df`` with DataSketches ``b`` blobs only, the one input the
     native merges read. Legacy blobs (stores written before profiles
-    held Spark's sketches, ``streaming_quantiles`` output) are rewritten
-    by one mapInArrow, planned only when ``legacy`` says they exist;
-    when it is None, one job over ``df`` counts them and returns one
+    held Spark's sketches) and plain frequent-items sketches
+    (``_LEGACY_SQL``) are rewritten by one mapInArrow, planned only
+    when ``legacy`` says they exist; when it is None, one job over ``df`` counts them and returns one
     number per partition. (A ``limit(1)`` scans a multi-file store in
     several rounds and a global aggregate in two stages, one job each.)"""
     if legacy is None:

@@ -1,24 +1,29 @@
-"""Mergeable sketch kernels (pure numpy — no native deps).
+"""KLL and frequent-items sketches in Python: decoders of the engine's
+sketch bytes, and the reference the tests check Spark's sketches against.
 
 The reference delegates these to the C++ ``whylogs-sketching`` fork of
-Apache DataSketches (reference: python/pyproject.toml:15). We need the same
-*semantics* — bounded-memory, mergeable, serializable — so:
+Apache DataSketches (reference: python/pyproject.toml:15). Every sketch
+the library builds or merges is Spark's DataSketches aggregate, run in
+the JVM: profiles, merges, the store, streaming windows and
+``roc_auc_sketch``. No library path calls ``update_batch``, ``merge`` or
+``serialize`` here. What the library uses is ``deserialize``, which
+reads DataSketches bytes (and the engine's former ``WSK1``/``WFI1``
+format, which older stores hold), and the read-side queries the
+driver-side scorers run on a decoded sketch (drift, viz, model_perf):
 
 * ``KllSketch``: the KLL quantile sketch (Karnin, Lang, Liberty 2016,
-  "Optimal Quantile Approximation in Streams"). Used for
-  distribution quantiles (reference: python/whylogs/core/metrics/metrics.py:217,
-  k=256 per python/whylogs/core/configs.py:10-15). Normalized rank error for
+  "Optimal Quantile Approximation in Streams"), distribution quantiles
+  (reference: python/whylogs/core/metrics/metrics.py:217, k=256 per
+  python/whylogs/core/configs.py:10-15). Normalized rank error for
   k=256 is ~1.65%.
-* ``FrequentStringsSketch``: Misra-Gries / SpaceSaving-style heavy hitters
-  with deterministic merge (reference frequent-items sketch:
+* ``FrequentStringsSketch``: Misra-Gries / SpaceSaving-style heavy
+  hitters (reference frequent-items sketch:
   python/whylogs/core/metrics/metrics.py:444, 128 slots).
 
-A profile builds its sketches JVM-side with Spark's DataSketches
-aggregates; these kernels read those bytes (``deserialize`` also takes
-their own ``WSK1``/``WFI1`` format, which older stores hold) and merge
-them on the driver-side and store paths. Both merges are
-associative+commutative, which is what makes profile rows a monoid
-(reference merge semantics:
+The update and merge kernels stay as the reference implementation the
+tests compare against, and perfbench's ``sketches.*`` probes time them
+(both merges are associative+commutative, which
+is what makes profile rows a monoid — reference merge semantics:
 python/whylogs/core/metrics/metric_components.py:26).
 
 Determinism: KLL compaction chooses even/odd offsets from a counter-based

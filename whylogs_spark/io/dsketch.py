@@ -5,12 +5,19 @@ The reference engine stores distribution quantiles as a DataSketches
 and heavy hitters as a ``frequent_strings_sketch``
 (python/whylogs/core/metrics/metrics.py:446), serialized inside
 ``MetricComponentMessage`` oneof fields (proto/src/whylogs_messages.proto:39-56).
-Our engine-native sketches (core/sketches.py) have the same state shape —
-KLL levels with weight 2**level items, Misra-Gries counters with a global
-undercount offset — so they convert LOSSLESSLY to and from the public
-DataSketches wire format, which is identical across the Java/C++/Python
-implementations. Writing this format makes WHY1 files fully readable by
-reference whylogs; reading it lets us ingest reference-written profiles.
+Profiles hold this format already: their sketches are Spark's DataSketches
+aggregates (``kll_sketch_agg_double``, ``approx_top_k_accumulate``), and
+the public wire format is identical across the Java/C++/Python
+implementations, so WHY1 files carry the blobs as they are and reference
+whylogs reads them. This module is the Python side of that format:
+
+* decoders into ``core/sketches`` objects (same state shape — KLL levels
+  with weight 2**level items, Misra-Gries counters with a global
+  undercount offset — so the conversion is LOSSLESS), which the
+  driver-side scorers and the reference-profile readers use;
+* ``to_ds_blob``, the one converter from the engine's former
+  ``WSK1``/``WFI1`` blobs (which older stores hold) and from plain
+  frequent-items bytes to a profile's blob shape.
 
 Layout was derived empirically against the datasketches-java library
 bundled with Spark (used by ``hll_sketch_agg``) and matches the public
@@ -290,13 +297,13 @@ def fi_with_null_count(blob: bytes) -> bytes:
 def to_ds_blob(b) -> bytes:
     """A profile's sketch bytes as Apache DataSketches bytes: the engine's
     former ``WSK1`` KLL / ``WFI1`` frequent-items blobs are converted,
-    DataSketches blobs come back unchanged. A converted frequent-items
-    sketch carries Spark's 8-byte null count (zero) after it, as the
-    ``mg`` blob of a profile does."""
+    DataSketches blobs come back unchanged. A converted or plain
+    frequent-items sketch gets Spark's 8-byte null count (zero) after
+    it, as the ``mg`` blob of a profile has (``fi_with_null_count``)."""
     bb = bytes(b)
     if bb[:4] == b"WSK1":
         return kll_to_ds_bytes(KllSketch.deserialize(bb))
     if bb[:4] == b"WFI1":
         return fi_to_ds_bytes(FrequentStringsSketch.deserialize(bb)) \
             + bytes(8)
-    return bb
+    return fi_with_null_count(bb)

@@ -103,10 +103,6 @@ def _str_field(field: int, s: str) -> bytes:
     return _len_field(field, s.encode("utf-8"))
 
 
-def _map_entry(key_bytes: bytes, val_bytes: bytes) -> bytes:
-    return key_bytes + val_bytes
-
-
 def _fields(buf: bytes) -> Iterator[Tuple[int, int, object]]:
     """Iterate (field_no, wire_type, value) over a serialized message."""
     pos = 0

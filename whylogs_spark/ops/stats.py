@@ -768,7 +768,9 @@ def kendall_tau(
     cell collapse).  Pair masses are exact integers carried in
     doubles — exact while n^2 < 2^53, i.e. any input under ~94M rows
     per judged pair; beyond that the tau denominator dominates the
-    error anyway.  Null/NaN rows drop pairwise-complete.
+    error anyway.  Null/NaN rows drop pairwise-complete.  The one-row
+    result is collected, the cut of the cell table released, and the
+    row returned as a local frame.
     """
     from pyspark.sql.functions import broadcast
 
@@ -816,9 +818,13 @@ def kendall_tau(
            .crossJoin(broadcast(n1)).crossJoin(broadcast(n2)))
     n0 = F.col("n_d") * (F.col("n_d") - 1.0) / 2.0
     denom = F.sqrt((n0 - F.col("n1")) * (n0 - F.col("n2")))
-    return rep.select(
+    row = rep.select(
         F.col("n_d").cast("long").alias("n"), "n_cells",
         F.col("C").cast("long").alias("concordant"),
         F.col("D").cast("long").alias("discordant"),
         F.when(denom > 0, (F.col("C") - F.col("D")) / denom)
-        .alias("tau_b"))
+        .alias("tau_b")).collect()[0]
+    release(cells)
+    return df.sparkSession.createDataFrame(
+        [tuple(row)], "n long, n_cells long, concordant long, "
+        "discordant long, tau_b double")

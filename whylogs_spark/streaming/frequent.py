@@ -1,10 +1,10 @@
 """Streaming frequent items: live top-k value monitoring.
 
-The batch ``frequent_items`` metric (core/sketches.py Misra-Gries,
-reference analog ``core/metrics/metrics.py`` FrequentItemsMetric) answers
-"what are the most common values" over a finished table; a streaming
-ingest pipeline wants the same answer per event-time window while rows
-arrive. Split the work the way the calibration monitor does
+The batch ``frequent_items`` metric (Spark's ``approx_top_k_accumulate``,
+reference analog ``core/metrics/metrics.py`` FrequentItemsMetric)
+answers "what are the most common values" over a finished table; a
+streaming ingest pipeline wants the same answer per event-time window
+while rows arrive. Split the work the way the calibration monitor does
 (streaming/model_monitor.py): the STREAM carries one watermarked
 stateful aggregation producing per-(window, value) sufficient counts —
 the only shape Structured Streaming aggregates natively — and the
@@ -15,16 +15,20 @@ as ``streaming_exact_dedup``'s fingerprint store — watermark eviction
 keeps it to the horizon, and ``truncate`` caps per-entry size). For
 genuinely unbounded-cardinality columns (user ids, URLs) exact
 counting is the wrong tool at 100 TB — use
-``streaming_heavy_hitters`` below: a per-window Misra-Gries summary
-(``applyInPandasWithState``) whose state is ``slots`` counters
-regardless of cardinality, with the deterministic MG error bound
-carried in the output.
+``streaming_heavy_hitters`` below: the batch metric's frequent-items
+sketch as the per-window state of the same kind of native windowed
+aggregate, ``slots`` items regardless of cardinality, with the
+sketch's error bound carried in the output. Neither operator runs
+Python in the stream.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..core.planner import fi_offset, fi_top
+from ._util import duration_ms, watermarked
 
 
 def streaming_value_counts(
@@ -48,14 +52,8 @@ def streaming_value_counts(
     if truncate < 1:
         raise ValueError("truncate must be >= 1")
     v = F.substring(F.col(value_col).cast("string"), 1, truncate)
-    src = (
-        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        # null event times would key a null window row; drop them before
-        # the watermark, matching streaming_transitions
-        .filter(F.col(ts_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .filter(F.col(value_col).isNotNull())
-    )
+    src = watermarked(stream_df, ts_col, watermark).filter(
+        F.col(value_col).isNotNull())
     out = (
         src.groupBy(F.window(F.col(ts_col), window_duration),
                     v.alias("value"))
@@ -105,89 +103,45 @@ def streaming_heavy_hitters(
     unbounded-cardinality columns — the scale path
     ``streaming_value_counts`` documents itself as not being.
 
-    Per window the state rehydrates the SAME Misra-Gries sketch the
-    batch ``frequent_items`` metric uses
-    (``core/sketches.py FrequentStringsSketch`` — one implementation,
-    one set of bound semantics): each microbatch updates it, and the
-    accumulated decrement travels as the per-window
-    ``max_undercount`` error bound, so every emitted estimate obeys
-    ``true_count ∈ [est_count, est_count + max_undercount]``.
+    Per window the state is the SAME frequent-items sketch a batch
+    profile's ``frequent_items`` metric builds: Spark's
+    ``approx_top_k_accumulate`` tracking ``slots`` items (Apache
+    DataSketches frequent items). Its offset is the undercount any
+    stored count may carry, so with ``est_count`` the sketch's lower
+    bound (estimate minus offset) and ``max_undercount`` the offset
+    (estimate = upper bound = ``est_count + max_undercount``), every
+    emitted row obeys ``true_count ∈ [est_count, est_count +
+    max_undercount]``. Only the items the sketch can certify are
+    listed (no false positives), as for a profile's ``items``.
     ``n_rows`` counts the NON-NULL values the sketch saw (nulls are
     excluded, same as ``streaming_value_counts``).
 
-    When the watermark passes the window end, the window's final top
-    counters emit once (append mode) as ``(window_start, window_end,
-    value, est_count, max_undercount, n_rows, rank)`` and the state is
-    removed. State per open window = ``slots`` (value, count) pairs,
-    independent of the column's cardinality.
+    When the watermark passes the window end, the window's items emit
+    once (append mode) as ``(window_start, window_end, value,
+    est_count, max_undercount, n_rows, rank)``, ranked by estimate,
+    then value, and the state is removed. State per open window is one
+    sketch of ``slots`` items, independent of the column's cardinality.
     """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    from ..core.sketches import FrequentStringsSketch
-    from ._util import duration_ms
-
     if slots < 1 or truncate < 1:
         raise ValueError("slots and truncate must be >= 1")
-    win_ms = duration_ms(window_duration)
-    if win_ms <= 0:
+    if duration_ms(window_duration) <= 0:
         raise ValueError("window_duration must be positive")
-    out_schema = ("window_start timestamp, window_end timestamp, "
-                  "value string, est_count long, max_undercount long, "
-                  "n_rows long, rank int")
-    state_schema = ("vals array<string>, cnts array<long>, "
-                    "decr long, n long")
-
-    def emit(wstart_ms, d, decr, n) -> pd.DataFrame:
-        top = sorted(d.items(), key=lambda kv: (-kv[1], kv[0]))
-        return pd.DataFrame({
-            "window_start": [pd.to_datetime(wstart_ms, unit="ms")] *
-            len(top),
-            "window_end": [pd.to_datetime(wstart_ms + win_ms,
-                                          unit="ms")] * len(top),
-            "value": [v for v, _ in top],
-            "est_count": [c for _, c in top],
-            "max_undercount": [decr] * len(top),
-            "n_rows": [n] * len(top),
-            "rank": list(range(1, len(top) + 1)),
-        })
-
-    def fn(key, pdfs, state: GroupState):
-        wstart_ms = int(pd.Timestamp(key[0]).value // 1_000_000)
-        if state.hasTimedOut:
-            vals, cnts, decr, n = state.get
-            state.remove()
-            yield emit(wstart_ms, dict(zip(vals, cnts)), decr, n)
-            return
-        # rehydrate the batch MG sketch: (vals, cnts, decr, n) maps
-        # 1:1 onto (counts, error, n)
-        sk = FrequentStringsSketch(capacity=slots, max_len=truncate)
-        if state.exists:
-            vals, cnts, sk.error, sk.n = state.get
-            sk.counts = dict(zip(vals, cnts))
-        for pdf in pdfs:
-            if len(pdf):
-                sk.update_batch(pdf[value_col])
-        state.update((list(sk.counts.keys()),
-                      [int(c) for c in sk.counts.values()],
-                      int(sk.error), int(sk.n)))
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(wstart_ms + win_ms, wm + 1))
-        return
-        yield  # pragma: no cover — generator contract
-
-    src = (
-        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        # a null event time would yield a NaT __wstart key and a phantom
-        # state row whose wstart_ms is the int64 NaT sentinel
-        .filter(F.col(ts_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .withColumn(
-            "__wstart",
-            F.window(F.col(ts_col), window_duration)["start"])
-    )
-    return src.groupBy("__wstart").applyInPandasWithState(
-        fn, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout)
+    v = F.substring(F.col(value_col).cast("string"), 1, truncate)
+    agg = (watermarked(stream_df, ts_col, watermark)
+           .filter(F.col(value_col).isNotNull())
+           .groupBy(F.window(F.col(ts_col), window_duration).alias("__w"))
+           .agg(F.call_function("approx_top_k_accumulate", v,
+                                F.lit(int(slots))).alias("__acc"),
+                F.count(v).alias("n_rows")))
+    offset = F.expr(fi_offset("__acc.sketch"))
+    top = agg.select(
+        "__w", "n_rows", offset.alias("max_undercount"),
+        F.posexplode(F.expr(fi_top("__acc", slots, slots)))
+        .alias("__r", "__e"))
+    return top.select(
+        F.col("__w.start").alias("window_start"),
+        F.col("__w.end").alias("window_end"),
+        F.col("__e.item").alias("value"),
+        (F.col("__e.count") - F.col("max_undercount")).alias("est_count"),
+        "max_undercount", "n_rows",
+        (F.col("__r") + 1).cast("int").alias("rank"))

@@ -1,32 +1,32 @@
-"""Streaming windowed quantiles with BOUNDED state: one KLL sketch
-per open event-time window (``applyInPandasWithState``), emitted once
-when the watermark closes the window.
+"""Streaming windowed quantiles with BOUNDED state: one KLL sketch per
+open event-time window, emitted once when the watermark closes the
+window.
 
-Spark's native streaming aggregation has ``approx_percentile``, but
-its state is not a mergeable sketch you can also persist, re-read and
-compose with the BATCH profiles (the store's ``quantile_series``).
-This operator keeps the engine's single quantile implementation —
-``core/sketches.KllSketch``, the same sketch the batch profiler and
-the WHY1 codec use — as streaming state, so a windowed stream
-quantile, a batch profile quantile, and a stored rolling quantile are
-all the SAME sketch with the SAME error bound, mergeable with each
-other.
+The window's state is the profile's own sketch: Spark's
+``kll_sketch_agg_double`` (Apache DataSketches KLL doubles) runs as a
+watermarked ``groupBy(window(ts), ...)`` aggregate, the same
+aggregate a batch profile's ``distribution/kll`` component comes from.
+The emitted ``kll`` blob therefore merges with batch profiles and the
+profile store (``merge_profiles``, ``quantile_series``) under the same
+rank-error bound, and each ``q_<pct>`` is read from it through the
+planner's ``kll_quantile``.
 
-Scale shape: one shuffle per microbatch (hash on window start —
-state-store-local); state per open window is ONE serialized KLL blob
-(~KB at k=256) regardless of row count; each emitted row is final
-(append mode).  With ``by_cols`` the key extends to (window, groups)
-and state stays one blob per group-window.
+Scale shape: partial aggregation, then one exchange on the state key
+per microbatch; state per open window is one KLL sketch (~KB at
+k=256) regardless of row count; each emitted row is final (append
+mode). With ``by_cols`` the key extends to (window, groups) and state
+stays one sketch per group-window. No Python runs in the stream.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..core.planner import kll_quantile
+from ._util import duration_ms, watermarked
 
 __all__ = ["streaming_quantiles"]
 
@@ -43,20 +43,16 @@ def streaming_quantiles(
 ) -> DataFrame:
     """-> append-mode stream: one row per closed (window [, groups]):
     ``(window_start, window_end [, by_cols...], n, q_min, q_<pct>...,
-    q_max, kll)`` — the ``kll`` column carries the window's serialized
-    sketch so downstream consumers (the profile store, drift scorers)
-    can merge it instead of re-reading data."""
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    from ..core.sketches import KllSketch
-    from ._util import duration_ms
-
+    q_max, kll)``. ``n`` counts the window's non-null, non-NaN values;
+    ``q_min``/``q_max`` are their exact extremes; the ``kll`` column
+    carries the window's DataSketches KLL bytes so downstream consumers
+    (the profile store, drift scorers) can merge it instead of
+    re-reading data. A window without a value has ``n`` 0 and null
+    quantiles."""
     qs = [float(q) for q in quantiles]
     if not qs or any(not 0.0 < q < 1.0 for q in qs):
         raise ValueError(f"quantiles must be in (0, 1): {quantiles}")
-    win_ms = duration_ms(window_duration)
-    if win_ms <= 0:
+    if duration_ms(window_duration) <= 0:
         raise ValueError("window_duration must be positive")
     groups = list(by_cols or [])
     qcols = [f"q_{str(q).replace('0.', '').ljust(2, '0')[:4]}"
@@ -64,68 +60,17 @@ def streaming_quantiles(
     if len(set(qcols)) != len(qcols):
         raise ValueError(f"quantiles collide after naming: {qcols}")
 
-    gtypes = {f.name: f.dataType.simpleString()
-              for f in stream_df.schema.fields}
-    out_schema = ", ".join(
-        ["window_start timestamp", "window_end timestamp"]
-        + [f"{g} {gtypes[g]}" for g in groups]
-        + ["n long", "q_min double"]
-        + [f"{c} double" for c in qcols]
-        + ["q_max double", "kll binary"])
-    state_schema = "blob binary"
-
-    def fn(key, pdfs, state: GroupState):
-        wstart_ms = int(pd.Timestamp(key[0]).value // 1_000_000)
-        gvals = list(key[1:])
-        if state.hasTimedOut:
-            (blob,) = state.get
-            state.remove()
-            sk = KllSketch.deserialize(bytes(blob)) if blob \
-                else KllSketch(k)
-            rec = {"window_start": pd.to_datetime(wstart_ms,
-                                                  unit="ms"),
-                   "window_end": pd.to_datetime(wstart_ms + win_ms,
-                                                unit="ms")}
-            for g, v in zip(groups, gvals):
-                rec[g] = v
-            rec["n"] = int(sk.n)
-            if sk.n:
-                vals = sk.quantiles(qs)
-                rec["q_min"] = float(sk.min_value)
-                for c, v in zip(qcols, vals):
-                    rec[c] = float(v)
-                rec["q_max"] = float(sk.max_value)
-            else:
-                rec["q_min"] = rec["q_max"] = None
-                for c in qcols:
-                    rec[c] = None
-            rec["kll"] = sk.serialize()
-            yield pd.DataFrame([rec])
-            return
-        sk = KllSketch(k)
-        if state.exists:
-            (blob,) = state.get
-            if blob:
-                sk = KllSketch.deserialize(bytes(blob))
-        for pdf in pdfs:
-            if len(pdf):
-                sk.update_batch(
-                    pd.to_numeric(pdf[value_col],
-                                  errors="coerce").to_numpy())
-        state.update((sk.serialize(),))
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(wstart_ms + win_ms, wm + 1))
-        return
-        yield  # pragma: no cover — generator contract
-
-    src = (
-        stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .filter(F.col(ts_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .withColumn(
-            "__wstart",
-            F.window(F.col(ts_col), window_duration)["start"])
-    )
-    return src.groupBy("__wstart", *groups).applyInPandasWithState(
-        fn, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout)
+    v = F.col(value_col).cast("double")
+    v = F.when(~F.isnan(v), v)
+    agg = (watermarked(stream_df, ts_col, watermark)
+           .groupBy(F.window(F.col(ts_col), window_duration).alias("__w"),
+                    *groups)
+           .agg(F.kll_sketch_agg_double(v, F.lit(int(k))).alias("kll"),
+                F.min(v).alias("q_min"), F.max(v).alias("q_max")))
+    return agg.select(
+        F.col("__w.start").alias("window_start"),
+        F.col("__w.end").alias("window_end"), *groups,
+        F.kll_sketch_get_n_double("kll").alias("n"), "q_min",
+        *[F.expr(kll_quantile("kll", q)).alias(c)
+          for q, c in zip(qs, qcols)],
+        "q_max", "kll")

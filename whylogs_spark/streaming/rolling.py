@@ -9,13 +9,18 @@ Replaces the reference's TimedRollingLogger + Scheduler thread
   event-time watermark. This is a strict superset of the reference, which
   only supports processing-time rolling (SURVEY §2.9): we get event-time
   windows, late-data handling, and exactly-once state from Spark.
-* ``RollingProfileSink`` — the general path (all metrics incl. KLL/FI
-  sketches): ``foreachBatch`` profiles each micro-batch per window via the
-  batch profiler and APPENDS the long-form profile rows tagged with
-  (window_start, batch_id). Because profiles are a monoid, the sink never
-  updates in place — merging at read time with ``merge_profiles`` gives
-  the same result as one big profile (the reference's merge-on-write
-  SQLiteStore becomes merge-on-read over an append-only Parquet log).
+  A streamed window carries the full metric set of a batch profile,
+  KLL and frequent-items sketches included: they are the same Spark
+  DataSketches aggregates, held in the state store.
+* ``RollingProfileSink`` — merge-on-read with unbounded lateness:
+  ``foreachBatch`` profiles each micro-batch per window via the batch
+  profiler and APPENDS the long-form profile rows tagged with
+  (window_start, batch_id), with no watermark, so a row arriving
+  arbitrarily late still lands in its window. Because profiles are a
+  monoid, the sink never updates in place — merging at read time with
+  ``merge_profiles`` gives the same result as one big profile (the
+  reference's merge-on-write SQLiteStore becomes merge-on-read over an
+  append-only Parquet log).
 """
 
 from __future__ import annotations
@@ -24,8 +29,6 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-import dataclasses
 
 from ..core.configs import DEFAULT_CONFIG, MetricConfig
 from ..core.planner import plan_dataframe
@@ -50,13 +53,9 @@ def streaming_profile(
     component, n, d, s, b) in update/append mode depending on sink.
     """
     segs = list(segment_by or [])
-    # sketch paths need foreachBatch (RollingProfileSink); the pure
-    # streaming aggregation keeps only native + HLL components
-    cfg = dataclasses.replace(
-        config, quantile_impl="none", frequent_items_impl="none")
     exclude = set(segs) | {ts_col}
     cols = columns or [c for c in stream_df.columns if c not in exclude]
-    aggs = plan_dataframe(stream_df.schema, cols, segs, cfg)
+    aggs = plan_dataframe(stream_df.schema, cols, segs, config)
     # streaming keeps a single mixed-tier aggregate: one state store
     # beats codegen purity here
     win = F.window(F.col(ts_col), window_duration)
@@ -78,7 +77,9 @@ def streaming_profile(
 
 
 class RollingProfileSink:
-    """foreachBatch sink: full-fidelity rolling profiles on a stream.
+    """foreachBatch sink: rolling profiles merged on read, with no
+    watermark, so a late row still lands in its window
+    (``streaming_profile`` drops rows behind its watermark).
 
     Usage::
 
