@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 import whylogs_spark as wsp
 from whylogs_spark.core import summaries
+from whylogs_spark.core.util import run_concurrent
 from whylogs_spark.ops import dedup as dedup_ops
 from whylogs_spark.ops import similarity as sim_ops
 from whylogs_spark.ops import text as text_ops
@@ -40,12 +41,9 @@ def _par(*thunks) -> None:
     thunk is the same query as before, computed from the parquet
     inputs — results and per-query task-seconds are unchanged; only
     idle-core wall time is recovered. Sequentially-dependent work
-    (fit -> score, write -> read) stays inside a single thunk."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
-        for f in [pool.submit(th) for th in thunks]:
-            f.result()
+    (fit -> score, write -> read) stays inside a single thunk. The
+    jobs keep the caller's job group and tags (``run_concurrent``)."""
+    run_concurrent(SparkSession.active(), thunks)
 
 
 def main() -> None:
@@ -873,9 +871,8 @@ def main() -> None:
                                 _dt.datetime(2024, 8, 1 + day,
                                              tzinfo=_dt.timezone.utc))
 
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                list(pool.map(_one_day, range(10)))
+            run_concurrent(spark, [lambda d=d: _one_day(d)
+                                   for d in range(10)])
             _par(
                 lambda: _noop(store.quantile_series(
                     spark, "bench", "l_quantity",

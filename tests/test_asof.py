@@ -8,12 +8,11 @@ hand-built rows.
 """
 
 import datetime as dt
-import io
-from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops.asof import asof_join
 
 
@@ -94,17 +93,12 @@ def test_plan_single_exchange_no_join(frames):
     left, right = frames
     out = asof_join(left, right, on="ts", by=["user_id"],
                     value_cols=["price"])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "Join" not in plan and "CartesianProduct" not in plan
+    plan = Plan.of(out)
+    assert not plan.has(named("Join", "CartesianProduct"))
     # exactly one exchange above the union (inputs here are local
     # relations; parquet sources may add AQE read nodes but no exchange)
-    import re
-
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
-    assert "Window" in plan
+    assert plan.count("Exchange") == 1
+    assert plan.has(named("Window"))
 
 
 def test_matches_window_free_reference(spark):
@@ -242,21 +236,15 @@ def test_hot_key_buckets_ntz_dst_safe(spark):
 def test_hot_key_buckets_plan_partitions_by_bucket(spark):
     """The big (row-count-proportional) window must key on
     (key, bucket), not the key alone — that is the skew bound."""
-    import io as _io
-    from contextlib import redirect_stdout
-
     left = spark.createDataFrame(
         [(1, _ts("2024-01-01 00:00:00"), 0)], "k long, ts timestamp, i long")
     right = spark.createDataFrame(
         [(1, _ts("2024-01-01 00:00:00"), 1.0)], "k long, ts timestamp, v double")
     out = asof_join(left, right, on="ts", by=["k"], value_cols=["v"],
                     hot_key_buckets="1 day")
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "__asof_bucket" in plan
-    assert "hashpartitioning(k#" in plan.replace("L", "")
+    plan = Plan.of(out)
+    assert plan.has(None, "__asof_bucket")
+    assert plan.has("Exchange", "hashpartitioning(k#")
 
 
 def test_bucketed_asof_on_date_and_string_ts(spark):

@@ -5,14 +5,13 @@ determinism under repartitioning, and plan shape (broadcast model join,
 top-k without a global sort)."""
 
 import hashlib
-import io
 import math
 import re
-from contextlib import redirect_stdout
 
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan
 from whylogs_spark.ops import classify
 
 K = 512
@@ -66,13 +65,6 @@ def _py_nb(data, smoothing=1.0):
     return prior, llr, oov
 
 
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def test_classifier_matches_reference_model(spark, corpus):
     model = classify.train_quality_classifier(corpus, n_buckets=K)
     out = {r.doc_id: r for r in
@@ -121,9 +113,9 @@ def test_classifier_deterministic_under_repartition(spark, corpus):
 
 def test_classifier_model_is_broadcast_joined(spark, corpus):
     model = classify.train_quality_classifier(corpus, n_buckets=K)
-    plan = _plan(classify.score_quality_classifier(corpus, model,
-                                                   n_buckets=K))
-    assert "BroadcastHashJoin" in plan
+    plan = Plan.of(classify.score_quality_classifier(corpus, model,
+                                                     n_buckets=K))
+    assert plan.has("BroadcastHashJoin")
 
 
 def test_dsir_matches_reference_model(spark, corpus):
@@ -183,10 +175,10 @@ def test_dsir_sample_temperature_zero_limit_is_topk_by_weight(spark, corpus):
 def test_dsir_sample_plans_as_take_ordered(spark, corpus):
     target = corpus.filter(F.col("label") == 1)
     w = classify.dsir_logweights(corpus, target, n_buckets=K)
-    plan = _plan(classify.dsir_sample(w, 5))
+    plan = Plan.of(classify.dsir_sample(w, 5))
     # per-partition bounded heaps, not a global sort of the corpus
     # (the only Sort nodes allowed are the <=n_buckets-row model join's)
-    assert "TakeOrderedAndProject" in plan
+    assert plan.has("TakeOrderedAndProject")
 
 
 def test_score_with_empty_model_scores_prior_only(spark):

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops.cluster import (
     kmeans,
     kmeans_assign,
@@ -140,7 +141,5 @@ def test_inertia_nonincreasing_and_stats(spark, embeddings):
 def test_assignment_is_plan_only_projection(spark, embeddings):
     # centroids are plan literals: no shuffle in the assignment plan
     cents = kmeans_init(embeddings, k=2)
-    plan = kmeans_assign(embeddings, cents,
-                         check_dims=False)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan
+    plan = Plan.of(kmeans_assign(embeddings, cents, check_dims=False))
+    assert not plan.has(named("Exchange"))

@@ -4,6 +4,7 @@ python/tests/viz/drift/test_column_drift_algorithm.py)."""
 import numpy as np
 import pytest
 
+from whylogs_spark.core.plan import Plan, named
 import whylogs_spark as wsp
 from whylogs_spark.core import constraints as C
 from whylogs_spark.core import drift
@@ -281,18 +282,12 @@ def test_rolling_psi_against_python_model(spark):
 
 
 def test_rolling_psi_plan_has_no_window(spark, events):
-    import io
-    from contextlib import redirect_stdout
-
     from whylogs_spark.core import drift as D
 
     plan_df = D.rolling_psi(events, "ts", "value", unit="day")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        plan_df.explain("formatted")
-    plan = buf.getvalue()
-    assert "Window" not in plan
-    assert "HashAggregate" in plan
+    plan = Plan.of(plan_df)
+    assert not plan.has(named("Window"))
+    assert plan.has(named("HashAggregate"))
 
 
 def test_store_drift_between(spark, lineitem, tmp_path):
@@ -727,6 +722,38 @@ def test_store_compact_preserves_merged_view(spark, lineitem, tmp_path):
 
     # compacting again is a no-op
     assert store.compact(spark, "ds") == 0
+
+
+def test_store_batches_at_one_timestamp_merge_as_two_sources(spark,
+                                                            tmp_path):
+    """Each write call is its own merge source, even when two calls
+    share a ``dataset_ts``: moments pair by batch id."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from whylogs_spark.io.store import ProfileStore
+
+    store = ProfileStore(str(tmp_path / "profiles_same_ts"))
+    ts = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    for lo in (0, 10_000):
+        store.write(wsp.profile(spark.range(lo, lo + 1000).select(
+            F.col("id").cast("double").alias("x"))), "ds", ts)
+
+    def moments():
+        pdf = store.get(spark, "ds").to_pandas()
+        row = pdf[pdf["column"] == "x"].iloc[0]
+        return (row["counts/n"], row["distribution/mean"],
+                row["distribution/stddev"])
+
+    n, mean, sd = moments()
+    assert n == 2000
+    assert mean == pytest.approx(5499.5, rel=1e-12)
+    assert sd == pytest.approx(5010.0, rel=1e-3)
+    # compaction sees two batches on the date and keeps the moments
+    assert store.compact(spark, "ds") == 1
+    assert store._read(spark).select("batch_id").distinct().count() == 1
+    assert moments() == pytest.approx((n, mean, sd), rel=1e-12)
 
 
 def test_schema_diff_all_null_column_reports_null_type(spark, lineitem):

@@ -6,6 +6,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.core.embeddings import embedding_dim_stats
 from whylogs_spark.ops.text import BPE_TOKEN_PATTERN, corpus_stats
 
@@ -46,12 +47,9 @@ class TestCorpusStats:
         assert out[0].n_docs == documents.count()
 
     def test_no_raw_text_in_exchange(self, spark, documents):
-        plan = corpus_stats(documents, group_cols=["source"]) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan
-        for line in plan.splitlines():
-            if "Exchange" in line:
-                assert "text#" not in line
+        plan = Plan.of(corpus_stats(documents, group_cols=["source"]))
+        assert plan.has(named("Exchange"))
+        assert not plan.has(named("Exchange"), "text#")
 
 
 class TestEmbeddingDimStats:
@@ -85,10 +83,9 @@ class TestEmbeddingDimStats:
             assert r.n > 0 and r.min_val <= r.mean <= r.max_val
 
     def test_partial_agg_before_exchange(self, spark, embeddings):
-        plan = embedding_dim_stats(embeddings) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("HashAggregate") >= 2
-        assert "Exchange" in plan
+        plan = Plan.of(embedding_dim_stats(embeddings))
+        assert plan.count(named("HashAggregate")) >= 2
+        assert plan.has(named("Exchange"))
 
 
 class TestHistogramExact:

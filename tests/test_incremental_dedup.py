@@ -3,12 +3,10 @@ filter (ops/dedup.py): strategy equivalence, no-false-negative
 guarantee, ground-truth parity, and the zero-history-shuffle plan
 shape of the bloom strategy."""
 
-import io
-from contextlib import redirect_stdout
-
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops import dedup
 
 
@@ -91,14 +89,11 @@ def test_bloom_strategy_plan_shape(spark, corpus):
     hist = corpus.filter(F.col("doc_id") <= 1)
     batch = corpus.filter(F.col("doc_id") > 1)
     out = dedup.incremental_dedup(batch, hist, strategy="bloom")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
+    plan = Plan.of(out)
     # probes + suspect resolution ride broadcast joins; the bloom
     # build partial-aggregates bit words before its bounded exchange
-    assert "BroadcastHashJoin" in plan
-    assert "Window" not in plan
+    assert plan.has("BroadcastHashJoin")
+    assert not plan.has(named("Window"))
 
 
 # ------------------------------------------- within-document self-dedup
@@ -120,11 +115,7 @@ def test_dedup_paragraphs_first_occurrence_order(spark):
 def test_dedup_paragraphs_zero_shuffle(spark):
     df = spark.createDataFrame([(1, "a\nb")], "doc_id long, text string")
     out = dedup.dedup_paragraphs(df)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "Exchange" not in plan  # pure projection
+    assert not Plan.of(out).has(named("Exchange"))  # pure projection
 
 
 # ------------------------------------------------- semantic dedup

@@ -2,13 +2,12 @@
 bucket-size invariance, null/inverted bounds, and the hash-join (not
 nested-loop) plan shape."""
 
-import io
-from contextlib import redirect_stdout
 from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops.intervals import interval_join
 
 
@@ -66,12 +65,9 @@ def test_interval_join_closed_bounds(spark):
 def test_interval_join_plans_hash_join(spark, data):
     L, R, _ = data
     out = interval_join(L, R, on="ts", by=["k"], bucket="1 hour")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "NestedLoop" not in plan and "Cartesian" not in plan
-    assert "Join" in plan
+    plan = Plan.of(out)
+    assert not plan.has(named("NestedLoop", "Cartesian"))
+    assert plan.has(named("Join"))
 
 
 def test_interval_join_rejects_bad_bucket(spark, data):

@@ -2,12 +2,10 @@
 Python Morton encoder, locality benefit vs single-column sort, null and
 constant-column handling, zero-shuffle key projection."""
 
-import io
-from contextlib import redirect_stdout
-
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops import layout
 
 
@@ -71,13 +69,10 @@ def test_zorder_key_projection_is_shuffle_free(spark):
         F.col("id"), (F.col("id") % 10).cast("double").alias("a"),
         (F.col("id") % 7).cast("double").alias("b"))
     out = layout.with_zorder_key(df, ["a", "b"])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
+    plan = Plan.of(out)
     # only the 1-row bounds agg exchanges; no shuffle of the data rows
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "Window" not in plan
+    assert plan.has(("BroadcastNestedLoopJoin", "BroadcastHashJoin"))
+    assert not plan.has(named("Window"))
 
 
 def test_cluster_by_zorder_partitions_are_key_ranges(spark):
@@ -176,12 +171,10 @@ def test_hilbert_key_projection_is_shuffle_free(spark):
     df = spark.createDataFrame(
         [(float(i), float(i * 3 % 7)) for i in range(50)],
         "a double, b double")
-    plan = layout.with_hilbert_key(df, ["a", "b"])._jdf \
-        .queryExecution().executedPlan().toString()
+    kinds = Plan.of(layout.with_hilbert_key(df, ["a", "b"])).exchanges()
     # one broadcast of the 1-row bounds agg; no hash/range exchange of
     # the data itself
-    assert "Exchange hashpartitioning" not in plan
-    assert "rangepartitioning" not in plan
+    assert not kinds["hash"] and not kinds["range"], kinds
 
 
 # -------------------------------------------------------- property tests
@@ -250,9 +243,8 @@ def test_skew_report_ranks_hot_keys(spark):
     assert hot.share == pytest.approx(500 / n_total)
     assert hot.skew == pytest.approx(500 * 42 / n_total)
     # plan shape: top-k never globally sorts
-    plan = layout.skew_report(df, ["key"])._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
+    assert Plan.of(layout.skew_report(df, ["key"])).has(
+        "TakeOrderedAndProject")
 
 
 def test_skew_report_null_and_multi_keys(spark):

@@ -13,6 +13,7 @@ import math
 import numpy as np
 import pytest
 
+from whylogs_spark.core.plan import Plan
 from whylogs_spark.core.monitor import anomaly_scan, missing_periods
 
 
@@ -193,11 +194,10 @@ def test_anomaly_scan_plan_is_single_exchange(spark):
     # one hash exchange on the series key; the window frame is
     # row-bounded so state is O(window) per row
     df = _series_df(spark, [1.0] * 10, key="a")
-    plan = anomaly_scan(
-        df, "ts", "value", key_cols=["series"])._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") <= 1
-    assert "rangepartitioning" not in plan
+    kinds = Plan.of(anomaly_scan(
+        df, "ts", "value", key_cols=["series"])).exchanges()
+    assert kinds["hash"] <= 1
+    assert not kinds["range"]
 
 
 def _np_cusum(values, k, h, mu, sigma, start=0):

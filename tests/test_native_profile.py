@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 from pyspark.sql.classic.column import Column as ClassicColumn
 
 import whylogs_spark as wsp
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.core.planner import plan_dataframe
 from whylogs_spark.core.profiler import (ProfileView, _native_frame,
                                          merge_profiles)
@@ -20,10 +21,6 @@ from whylogs_spark.core.sketches import FrequentStringsSketch, KllSketch
 from whylogs_spark.io.dsketch import fi_to_ds_bytes, fi_with_null_count
 from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.io.why1 import read_why1, read_why1_rows, write_why1
-
-_PYTHON_NODES = ("MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython",
-                 "FlatMapGroupsInPandasWithState")
-
 
 @pytest.fixture(scope="module")
 def frame(spark):
@@ -38,22 +35,6 @@ def frame(spark):
         (F.col("id") % 8).alias("seg"))
 
 
-def _executed_plans(spark, fn):
-    """``(fn(), physical plans of the SQL executions fn started)``."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def executions():
-        bus.waitUntilEmpty()
-        ex = store.executionsList()
-        return [ex.apply(i) for i in range(ex.size())]
-
-    last = max((e.executionId() for e in executions()), default=-1)
-    result = fn()
-    return result, [e.physicalPlanDescription() for e in executions()
-                    if e.executionId() > last]
-
-
 @pytest.mark.parametrize("kwargs", [
     {}, {"segment_by": ["seg"]},
     {"segment_by": ["seg"],
@@ -61,11 +42,11 @@ def _executed_plans(spark, fn):
 ], ids=["unsegmented", "segmented", "wide"])
 def test_default_profile_runs_no_python_node(spark, frame, launched_jobs,
                                              kwargs):
-    (view, plans), jobs = launched_jobs(lambda: _executed_plans(
+    (view, plans), jobs = launched_jobs(lambda: Plan.executed(
         spark, lambda: wsp.profile(frame, **kwargs)))
-    assert plans and all("Aggregate" in p for p in plans)
+    assert plans and all(p.has(named("Aggregate")) for p in plans)
     for p in plans:
-        assert not any(node in p for node in _PYTHON_NODES), p
+        assert not p.python_nodes(), p.names()
     if not kwargs:
         assert len(jobs) <= 9, sorted(jobs)
     # the sketch components are there, from the native aggregates
@@ -297,47 +278,11 @@ def test_merge_of_one_profile_is_that_profile(spark):
     assert est == 7 and lower > 6.99
 
 
-def test_merges_run_no_python_node(spark, frame, tmp_path):
-    """Every merge over DataSketches-only profiles is one native
-    program: store reads, ⊕, segment collapse, drift, quantile series
-    and compaction plan no Python node."""
-    from whylogs_spark.core.profiler import merge_segments
-
-    small = frame.limit(2000)
-    flat = wsp.profile(small)
-    seg = wsp.profile(small, segment_by=["seg"])
-    store = ProfileStore(str(tmp_path / "store"))
-    for day, hour in ((1, 0), (2, 0), (2, 12), (3, 0)):
-        store.write(flat, "ds", dt.datetime(2024, 3, day, hour,
-                                            tzinfo=dt.timezone.utc))
-    calls = {
-        "get": lambda: store.get(spark, "ds").to_pandas(),
-        "merge_profiles": lambda: merge_profiles([flat, flat]).to_pandas(),
-        "merge_segments": lambda: merge_segments(seg).to_pandas(),
-        "drift_between": lambda: store.drift_between(
-            spark, "ds", "2024-03-01", "2024-03-01", "2024-03-02",
-            "2024-03-03"),
-        "quantile_series": lambda: store.quantile_series(
-            spark, "ds", "f0", window=2).collect(),
-        "compact": lambda: store.compact(spark, "ds"),
-    }
-    for name, call in calls.items():
-        result, plans = _executed_plans(spark, call)
-        assert plans, name
-        for p in plans:
-            assert not any(node in p for node in _PYTHON_NODES), (name, p)
-        if name == "compact":
-            assert result == 1
-
-
 def test_streaming_sketch_windows_run_no_python_node(spark, tmp_path):
     """The streaming operators that hold sketches per window —
     ``streaming_profile``, ``streaming_quantiles`` and
     ``streaming_heavy_hitters`` — run a stateful native aggregate: their
     runtime microbatch plans have a state store and no Python node."""
-    import io
-    from contextlib import redirect_stdout
-
     from whylogs_spark.streaming.frequent import streaming_heavy_hitters
     from whylogs_spark.streaming.quantiles import streaming_quantiles
     from whylogs_spark.streaming.rolling import streaming_profile
@@ -362,9 +307,6 @@ def test_streaming_sketch_windows_run_no_python_node(spark, tmp_path):
              .option("checkpointLocation", str(tmp_path / name))
              .trigger(availableNow=True).start())
         q.awaitTermination(120)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            q.explain()
-        plan = buf.getvalue()
-        assert "StateStoreSave" in plan, (name, plan)
-        assert not any(node in plan for node in _PYTHON_NODES), (name, plan)
+        plan = Plan.of(q)
+        assert plan.has("StateStoreSave"), (name, plan.names())
+        assert not plan.python_nodes(), (name, plan.names())

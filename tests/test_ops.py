@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops import dedup, similarity, text
 
 
@@ -422,19 +423,13 @@ def test_line_dedup_plan_skew_immune(spark):
     """Winner selection must be a partial-aggregated groupBy, never a
     window over the raw line text (a boilerplate line in 10% of a web
     corpus would funnel 10% of all rows into one task)."""
-    import io as _io
-    from contextlib import redirect_stdout
-
     from whylogs_spark.ops.dedup import line_dedup
 
     docs = spark.createDataFrame([(1, "a\nb")], "doc_id long, text string")
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        line_dedup(docs).explain("formatted")
-    plan = buf.getvalue()
-    assert "Window" not in plan
+    plan = Plan.of(line_dedup(docs))
+    assert not plan.has(named("Window"))
     # survivor marking joins on the unique (line, id, pos) triple
-    assert "Join" in plan
+    assert plan.has(named("Join"))
 
 
 def test_sessionize_hot_user_buckets_equivalent(spark):
@@ -511,27 +506,19 @@ def test_sessionize_bucketed_plan_keys_on_bucket(spark):
     """The event-proportional window must partition by (user, bucket),
     bounding any task at one user-bucket slice."""
     import datetime as dt
-    import io as _io
-    from contextlib import redirect_stdout
 
     from whylogs_spark.ops import events as ev
 
     df = spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 1), 0)], "user_id long, ts timestamp, e long")
     out = ev.sessionize(df, hot_user_buckets="1 day")
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    assert "__sb" in buf.getvalue()
+    assert Plan.of(out).has(None, "__sb")
 
 
 def test_chunk_text_semantics_and_plan(spark):
     """Every char covered, consecutive chunks share `overlap` chars,
     short/empty docs behave, and the plan is a shuffle-free generator
     projection."""
-    import io as _io
-    from contextlib import redirect_stdout
-
     from whylogs_spark.ops.text import chunk_text
 
     df = spark.createDataFrame(
@@ -560,11 +547,8 @@ def test_chunk_text_semantics_and_plan(spark):
     with pytest.raises(ValueError, match="size"):
         chunk_text(df, size=0)
 
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        chunk_text(df, size=4, overlap=1).explain("formatted")
-    plan = buf.getvalue()
-    assert "Exchange" not in plan and "Generate" in plan
+    plan = Plan.of(chunk_text(df, size=4, overlap=1))
+    assert not plan.has(named("Exchange")) and plan.has("Generate")
 
 
 def test_duplicate_spans_semantics(spark):
@@ -619,24 +603,15 @@ def test_duplicate_spans_plan_skew_immune(spark):
     """The gram-frequency pass must partial-aggregate before its
     exchange (a viral passage's grams collapse map-side), and the only
     window may partition by doc id — never by the gram key."""
-    import io as _io
-    from contextlib import redirect_stdout
-
     from whylogs_spark.ops.dedup import duplicate_spans
 
     docs = spark.createDataFrame([(1, "a b c d e f g h i j k l")],
                                  "doc_id long, text string")
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        duplicate_spans(docs, n=3).explain("formatted")
-    plan = buf.getvalue()
-    import re
+    plan = Plan.of(duplicate_spans(docs, n=3))
     # partial agg before final: two HashAggregate rounds on the gram key
-    assert len(re.findall(r"HashAggregate", plan)) >= 2
+    assert plan.count(named("HashAggregate")) >= 2
     # windows only over the doc id
-    for m in re.finditer(r"Window.*?partitionbyspec?=?\[?([^\]\n]*)",
-                         plan, re.IGNORECASE):
-        assert "__gk" not in m.group(1)
+    assert not plan.has(named("Window"), "windowspecdefinition(__gk")
 
 
 def test_normalize_url_rules(spark):
@@ -683,19 +658,13 @@ def test_url_dedup_and_domain_stats(spark):
 
 
 def test_url_dedup_plan_skew_immune(spark):
-    import io as _io
-    from contextlib import redirect_stdout
-
     from whylogs_spark.ops.urls import url_dedup
 
     df = spark.createDataFrame([(1, "http://a.com/x")],
                                "doc_id long, url string")
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        url_dedup(df).explain("formatted")
-    plan = buf.getvalue()
-    assert "Window" not in plan
-    assert "Join" in plan
+    plan = Plan.of(url_dedup(df))
+    assert not plan.has(named("Window"))
+    assert plan.has(named("Join"))
 
 
 def test_domain_filter_suffix_semantics(spark):

@@ -7,9 +7,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from whylogs_spark.core import util
+from whylogs_spark.core.plan import Plan, is_expensive, named
 from whylogs_spark.core.util import (
     MIN_ADAPTIVE_SLICES,
-    _has_expensive_node,
     ensure_parallelism,
     materialize,
     plan_size_estimate,
@@ -25,15 +25,22 @@ def test_plan_size_estimate_scan_vs_unknown(spark, lineitem):
 
 
 def test_expensive_node_detection(spark, lineitem):
-    assert not _has_expensive_node(lineitem)
-    assert not _has_expensive_node(
+    assert not is_expensive(lineitem)
+    assert not is_expensive(
         lineitem.select("l_quantity").filter(F.col("l_quantity") > 0))
-    assert _has_expensive_node(lineitem.offset(10).limit(10))
-    assert _has_expensive_node(
+    assert is_expensive(lineitem.offset(10).limit(10))
+    assert is_expensive(
         lineitem.groupBy("l_returnflag").count())
-    assert _has_expensive_node(
+    assert is_expensive(
         lineitem.join(lineitem.select("l_orderkey").distinct(),
                       "l_orderkey"))
+
+
+def test_expensive_node_in_scalar_subquery(spark, lineitem):
+    # the aggregate lives only in the filter's subquery expression: a
+    # walk over children() alone sees Filter and the relation
+    avg_q = lineitem.select(F.avg("l_quantity")).scalar()
+    assert is_expensive(lineitem.filter(F.col("l_quantity") > avg_q))
 
 
 def test_expensive_node_skips_cache_build_plan(spark, lineitem):
@@ -42,7 +49,7 @@ def test_expensive_node_skips_cache_build_plan(spark, lineitem):
         cached.count()
         # the cache's BUILD plan contains a Repartition exchange, but
         # replaying the cache costs a block read — must not be flagged
-        assert not _has_expensive_node(cached.select("l_quantity"))
+        assert not is_expensive(cached.select("l_quantity"))
     finally:
         cached.unpersist()
 
@@ -116,8 +123,11 @@ def test_iteration_base_right_sizes_and_cuts(spark, orders):
     ck = materialize(base)
     # a few hundred KB of doubles must coalesce below the input width
     assert ck.rdd.getNumPartitions() <= 4
-    # lineage is cut: the checkpointed plan has no shuffle left
-    assert "Exchange" not in ck._jdf.queryExecution().executedPlan().toString()
+    # lineage is cut: the checkpointed plan reads the checkpoint and
+    # has no shuffle left
+    plan = Plan.of(ck)
+    assert plan.checkpoint_scans() == 1
+    assert not plan.has(named("Exchange"))
     # values identical
     assert ck.count() == base.count()
     got = ck.agg(F.sum("__y"), F.sum("__x0")).collect()[0]

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from whylogs_spark.core import drift as D
 from whylogs_spark.core import model_perf as M
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.core.prefix import running_sums
 
 
@@ -45,18 +46,13 @@ def test_roc_auc_plan_has_no_global_window(spark):
     """The cumulative-positives walk must never plan a
     single-partition Window: every windowspec in the physical plan
     carries a partitionBy key (__slice / bounded slice-totals)."""
-    import io
     import re
-    from contextlib import redirect_stdout
 
     df = spark.createDataFrame(
         [(i / 100.0, i % 2) for i in range(100)],
         "score double, label int")
     out = M.roc_auc_exact(df, "score", "label")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
+    plan = "\n".join(n.desc for n in Plan.of(out).find(named("Window")))
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs, "expected window specs in the AUC plan"
     for spec in specs:
@@ -332,8 +328,7 @@ def test_chained_walks_plan_stays_linear(spark):
         c1.select("k", F.col("__cum_a").alias("a")), ["k"], ["a"])
     c3 = running_sums(
         c2.select("k", F.col("__cum_a").alias("a")), ["k"], ["a"])
-    n_exchange = c3._jdf.queryExecution().executedPlan().toString() \
-        .count("Exchange")
+    n_exchange = Plan.of(c3).count(lambda n: "Exchange" in n.name)
     # linear chain: ~4 exchanges + 2 broadcasts per pass; the
     # un-cut doubling shape planned 40+ for three passes
     assert n_exchange <= 24, f"plan carries {n_exchange} Exchanges"

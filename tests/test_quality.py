@@ -9,6 +9,7 @@ localize to an operator, not a pipeline.
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops import decontam, quality, sampling
 
 
@@ -252,21 +253,15 @@ def test_bigram_lm_backoff_on_unseen_pairs(spark):
 
 
 def test_bigram_lm_plan_is_broadcast_no_window(spark):
-    import io
-    from contextlib import redirect_stdout
-
     from whylogs_spark.ops import quality as Q
 
     df = spark.createDataFrame(
         [(0, "a b c")], "doc_id long, text string")
     out = Q.bigram_lm_scores(df, vocab_size=10, max_bigrams=100)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan
-    assert "Window" not in plan
-    assert "TakeOrderedAndProject" in plan  # the bigram cap
+    plan = Plan.of(out)
+    assert plan.has("BroadcastHashJoin")
+    assert not plan.has(named("Window"))
+    assert plan.has("TakeOrderedAndProject")  # the bigram cap
 
 
 # ---------------------------------------------------- text normalization

@@ -2,12 +2,10 @@
 under repartitioning, statistical accuracy at modest n, per-group caps,
 and zero-shuffle plan shape for the filter-style ops."""
 
-import io
-from contextlib import redirect_stdout
-
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops import sampling
 
 
@@ -20,13 +18,6 @@ def frame(spark):
          .when(F.col("id") % 3 == 1, "de")
          .otherwise("fr").alias("lang"),
     )
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_hash_split_fractions_and_determinism(spark, frame):
@@ -73,7 +64,7 @@ def test_stratified_sample_per_stratum(spark, frame):
     assert counts["de"] / base["de"] == pytest.approx(0.1, abs=0.03)
     assert "fr" not in counts  # default_fraction=0 drops unlisted strata
     # zero shuffle: the sample is a scan-side filter
-    assert "Exchange" not in _plan(out)
+    assert not Plan.of(out).has(named("Exchange"))
 
 
 def test_group_sample_caps_and_determinism(spark, frame):
@@ -113,13 +104,7 @@ def test_group_sample_presalt_equivalent(spark):
     assert len(a) == 4 * 7
     # stage-1 task bound: the presalted plan's first window keys on
     # (group, bucket), not the group alone
-    import io as _io
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        salted.explain("formatted")
-    assert "__gsb" in buf.getvalue()
+    assert Plan.of(salted).has(None, "__gsb")
 
 
 def test_pack_chunks_distributed_equivalent(spark):
@@ -226,14 +211,12 @@ def test_mix_sources_zero_shuffle_of_corpus(spark):
         F.lit("a b").alias("text"),
     )
     out = sampling.mix_sources(df, {"s0": 1.0}, token_budget=10)
-    plan = _plan(out)
+    plan = Plan.of(out)
     # fractions ride a broadcast join (hash normally; constant-folded
     # single-source degenerates to nested-loop); the corpus never
     # exchanges and nothing sorts
-    assert "BroadcastHashJoin" in plan or \
-        "BroadcastNestedLoopJoin" in plan
-    assert "Window" not in plan
-    assert "SortMergeJoin" not in plan
+    assert plan.has(("BroadcastHashJoin", "BroadcastNestedLoopJoin"))
+    assert not plan.has(named("Window", "SortMergeJoin"))
 
 
 def test_mix_sources_zero_token_source_keeps_everything(spark):

@@ -10,6 +10,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.ops.search import bm25_search, keyword_match_stats
 from whylogs_spark.ops.text import pmi_collocations, with_readability
 
@@ -62,10 +63,9 @@ class TestBM25:
             bm25_search(documents, "  ! ")
 
     def test_takeordered_plan(self, spark, documents):
-        plan = bm25_search(documents, "spark query", k=5) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan
-        assert "Sort " not in plan.replace("TakeOrderedAndProject", "")
+        plan = Plan.of(bm25_search(documents, "spark query", k=5))
+        assert plan.has("TakeOrderedAndProject")
+        assert not plan.has("Sort")
 
     def test_keyword_match_stats(self, spark, documents):
         rows = [r.asDict() for r in
@@ -127,9 +127,8 @@ class TestReadability:
         assert got[0].fk_grade < got[1].fk_grade
 
     def test_zero_shuffle_plan(self, spark, documents):
-        plan = with_readability(documents) \
-            ._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
+        assert not Plan.of(with_readability(documents)).has(
+            named("Exchange"))
 
 
 class TestPMI:

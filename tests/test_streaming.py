@@ -10,6 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 import whylogs_spark as wsp
 from whylogs_spark.streaming.rolling import RollingProfileSink, streaming_profile
 
@@ -327,17 +328,9 @@ def test_streaming_exact_dedup_drops_within_watermark(spark, tmp_path):
     assert len(got & {1, 2, 4}) == 1
 
     # the runtime plan is stateful dedup-within-watermark
-    import io as _io
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        q.explain()
-    plan = buf.getvalue()
-    assert "StreamingDeduplicateWithinWatermark" in plan \
-        or "dropDuplicatesWithinWatermark" in plan \
-        or "StreamingDeduplicate" in plan
-    assert "EventTimeWatermark" in plan
+    plan = Plan.of(q)
+    assert plan.has(named("StreamingDeduplicate"))
+    assert plan.has("EventTimeWatermark")
 
 
 def test_streaming_fingerprint_counts(spark, tmp_path):
@@ -946,16 +939,10 @@ def test_streaming_fk_monitor_matches_batch(spark, tmp_path):
     for k, v in got.items():
         assert want[k] == v
 
-    import io as _io
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        q.explain()
-    plan = buf.getvalue()
-    assert "EventTimeWatermark" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "StateStoreSave" in plan
+    plan = Plan.of(q)
+    assert plan.has("EventTimeWatermark")
+    assert plan.has("BroadcastHashJoin")
+    assert plan.has("StateStoreSave")
 
 
 def test_streaming_fk_monitor_arity_validation(spark, tmp_path):

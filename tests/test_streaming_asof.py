@@ -4,6 +4,7 @@ plain stream-static join would have missed."""
 
 import datetime
 
+from whylogs_spark.core.plan import Plan
 import whylogs_spark  # noqa: F401  (session fixtures)
 from whylogs_spark.streaming.asof import streaming_asof_enrich
 
@@ -82,16 +83,10 @@ def test_streaming_asof_enrich_point_in_time(spark, tmp_path):
 
     # runtime plan audit: stateful pandas operator behind ONE
     # event-time watermark, state hashed on the join key
-    import io as _io
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        q.explain()
-    plan = buf.getvalue()
-    assert "FlatMapGroupsInPandasWithState" in plan
-    assert "EventTimeWatermark" in plan
-    assert "hashpartitioning(__k" in plan
+    plan = Plan.of(q)
+    assert plan.has("FlatMapGroupsInPandasWithState")
+    assert plan.has("EventTimeWatermark")
+    assert plan.has("Exchange", "hashpartitioning(__k")
 
 
 def test_streaming_asof_validation(spark):

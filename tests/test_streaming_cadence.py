@@ -6,6 +6,7 @@ import datetime
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan
 from whylogs_spark.streaming.cadence import streaming_interarrival
 
 BASE = datetime.datetime(2024, 6, 1)
@@ -56,15 +57,9 @@ def test_streaming_interarrival_matches_batch_lag(spark, tmp_path):
     assert got[("u1", _t(0))] is None
     assert got[("u1", _t(100))] == 70.0
 
-    import io as _io
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        q.explain()
-    plan = buf.getvalue()
-    assert "FlatMapGroupsInPandasWithState" in plan
-    assert "EventTimeWatermark" in plan
+    plan = Plan.of(q)
+    assert plan.has("FlatMapGroupsInPandasWithState")
+    assert plan.has("EventTimeWatermark")
 
 
 def test_streaming_interarrival_validation(spark):

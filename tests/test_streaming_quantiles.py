@@ -6,6 +6,7 @@ import datetime
 
 import numpy as np
 
+from whylogs_spark.core.plan import Plan
 from whylogs_spark.core.sketches import KllSketch
 from whylogs_spark.streaming.quantiles import streaming_quantiles
 
@@ -66,16 +67,10 @@ def test_streaming_quantiles_match_batch_sketch(spark, tmp_path):
 
     # runtime plan audit: a stateful native aggregate keyed on the
     # window, no Python node
-    import io as _io
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        q.explain()
-    plan = buf.getvalue()
-    assert "StateStoreSave" in plan and "ObjectHashAggregate" in plan
-    assert "FlatMapGroupsInPandasWithState" not in plan
-    assert "EventTimeWatermark" in plan
+    plan = Plan.of(q)
+    assert plan.has("StateStoreSave") and plan.has("ObjectHashAggregate")
+    assert not plan.has("FlatMapGroupsInPandasWithState")
+    assert plan.has("EventTimeWatermark")
 
 
 def test_streaming_quantiles_grouped(spark, tmp_path):

@@ -4,6 +4,7 @@ arrival order across microbatches."""
 
 import datetime
 
+from whylogs_spark.core.plan import Plan
 from whylogs_spark.ops.sampling import group_sample
 from whylogs_spark.streaming.sampling import streaming_group_sample
 
@@ -50,15 +51,9 @@ def test_streaming_sample_equals_batch(spark, tmp_path):
     assert len(got) == 75  # 25 x 3 groups
 
     # runtime plan audit
-    import io as _io
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        q.explain()
-    plan = buf.getvalue()
-    assert "FlatMapGroupsInPandasWithState" in plan
-    assert "EventTimeWatermark" in plan
+    plan = Plan.of(q)
+    assert plan.has("FlatMapGroupsInPandasWithState")
+    assert plan.has("EventTimeWatermark")
 
 
 def test_streaming_sample_validation(spark):

@@ -9,6 +9,7 @@ text source, and chains html_to_text + url/dedup ops over the payloads
 import pytest
 from pyspark.sql import functions as F
 
+from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.io.warc import read_warc, warc_responses
 from whylogs_spark.ops.html import (extract_links, extract_title,
                                     html_to_text, html_to_text_col)
@@ -141,14 +142,7 @@ def test_crawl_to_corpus_pipeline(spark, warc_dir):
     assert "First paragraph" in r["text"]
 
     # plan stays Python-free for the sql kernel
-    import io as _io
-    from contextlib import redirect_stdout
-
-    buf = _io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "Python" not in plan and "Arrow" not in plan
+    assert not Plan.of(out).has(named("Python", "Arrow"))
 
 
 def test_html_entities_single_pass_decode(spark):

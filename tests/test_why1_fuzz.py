@@ -1,6 +1,6 @@
 """Property tests for the WHY1 protobuf wire codec (no Spark needed)."""
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from whylogs_spark.io.why1 import (_component_msg, _fields,
@@ -30,6 +30,9 @@ def test_int64_roundtrip(n):
               st.floats(allow_nan=False, width=64), st.none()),
     st.tuples(st.none(), st.none(), st.binary(max_size=256)),
 ))
+# blobs whose third byte reads as the frequent-items family id
+@example((None, None, b"\x00\x00\n\x00\x00\x00\x00\x00"))
+@example((None, None, b"\x00\x00\n\x00\x00\x04\x00\x00"))
 def test_component_roundtrip(slot_values):
     n, d, b = slot_values
     metric, comp = ("cardinality", "hll") if b is not None else ("counts",

@@ -3,13 +3,14 @@
 from __future__ import annotations
 
 import logging
-import re
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, List, Optional, Sequence
 
 from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+from whylogs_spark.core.plan import is_expensive
 
 _log = logging.getLogger("whylogs_spark")
 
@@ -35,21 +36,6 @@ MIN_ADAPTIVE_SLICES = 4
 #: 6M-row frame.  Unknown estimate => no cut.
 CHECKPOINT_MAX_BYTES = 256 * 1024 * 1024
 
-#: Logical-plan node names whose re-execution is expensive (shuffles,
-#: global funnels, python stages) — used to decide whether a profile
-#: input is worth local-checkpointing before fanning out the chunked
-#: aggregate + sketch jobs that each re-execute the input subplan.
-_EXPENSIVE_NODES = frozenset((
-    "Join", "Aggregate", "Window", "Generate", "Expand", "Offset",
-    "GlobalLimit", "LocalLimit", "Sort", "Distinct", "Deduplicate",
-    "Repartition", "RepartitionByExpression", "RebalancePartitions",
-    "Sample", "Intersect", "Except", "MapInArrow", "MapInPandas",
-    "PythonMapInArrow", "FlatMapGroupsInPandas",
-    "FlatMapCoGroupsInPandas", "CoGroup", "MapGroups", "MapElements",
-))
-
-_NODE_RE = re.compile(r"([A-Za-z]+)")
-
 #: Attribute :func:`materialize` sets on the frames it cuts; only
 #: those are released by :func:`release`.
 _CUT = "_whylogs_cut"
@@ -68,32 +54,6 @@ def plan_size_estimate(df: DataFrame) -> Optional[int]:
     if sz <= 0 or sz >= (1 << 50):
         return None
     return sz
-
-
-def _has_expensive_node(df: DataFrame) -> bool:
-    """True when the optimized logical plan contains a node from
-    ``_EXPENSIVE_NODES`` OUTSIDE any InMemoryRelation subtree (a cached
-    input replays from block storage — its build plan is history, not
-    per-consumer cost).  False for a streaming frame."""
-    try:
-        tree = df._jdf.queryExecution().optimizedPlan().treeString()
-    except AnalysisException:
-        return False
-    skip_indent = -1
-    for line in tree.splitlines():
-        stripped = line.lstrip(" :+-*")
-        indent = len(line) - len(stripped)
-        if skip_indent >= 0:
-            if indent > skip_indent:
-                continue
-            skip_indent = -1
-        if stripped.startswith("InMemoryRelation"):
-            skip_indent = indent
-            continue
-        m = _NODE_RE.match(stripped)
-        if m and m.group(1) in _EXPENSIVE_NODES:
-            return True
-    return False
 
 
 def materialize(df: DataFrame, *, only_if_expensive: bool = False,
@@ -150,7 +110,7 @@ def materialize(df: DataFrame, *, only_if_expensive: bool = False,
     if df.isStreaming:
         _log.warning("materialize: streaming frame left uncut")
         return df
-    if only_if_expensive and not _has_expensive_node(df):
+    if only_if_expensive and not is_expensive(df):
         return df
     est = plan_size_estimate(df)
     if only_if_expensive and (est is None or est > CHECKPOINT_MAX_BYTES):

@@ -294,16 +294,18 @@ def fi_with_null_count(blob: bytes) -> bytes:
 
 
 # ------------------------------------------------------------ legacy blobs
-def to_ds_blob(b) -> bytes:
+def to_ds_blob(b, frequent_items: bool = True) -> bytes:
     """A profile's sketch bytes as Apache DataSketches bytes: the engine's
     former ``WSK1`` KLL / ``WFI1`` frequent-items blobs are converted,
     DataSketches blobs come back unchanged. A converted or plain
     frequent-items sketch gets Spark's 8-byte null count (zero) after
-    it, as the ``mg`` blob of a profile has (``fi_with_null_count``)."""
+    it, as the ``mg`` blob of a profile has (``fi_with_null_count``);
+    ``frequent_items=False`` says the blob is another kind of sketch,
+    whose bytes may look like a frequent-items preamble by chance."""
     bb = bytes(b)
     if bb[:4] == b"WSK1":
         return kll_to_ds_bytes(KllSketch.deserialize(bb))
     if bb[:4] == b"WFI1":
         return fi_to_ds_bytes(FrequentStringsSketch.deserialize(bb)) \
             + bytes(8)
-    return fi_with_null_count(bb)
+    return fi_with_null_count(bb) if frequent_items else bb

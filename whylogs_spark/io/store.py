@@ -15,6 +15,7 @@ profile monoid.
 from __future__ import annotations
 
 import datetime as _dt
+import uuid
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,12 +32,20 @@ from ..core.profiler import (PROFILE_SCHEMA, ProfileView, _ds_blobs,
 #: stored profile back to its snappy size of before
 _CODEC = "zstd"
 
-#: a store's schema: the profile rows, the batch time and the two
-#: partition columns. Reading with it launches no schema-inference job.
+#: a store's schema: the profile rows, the batch time, the batch id and
+#: the two partition columns. Reading with it launches no
+#: schema-inference job.
 _STORE_SCHEMA = T.StructType(PROFILE_SCHEMA.fields + [
     T.StructField("dataset_ts", T.StringType()),
+    T.StructField("batch_id", T.StringType()),
     T.StructField("dataset_id", T.StringType()),
     T.StructField("date", T.DateType())])
+
+
+def _batch_key() -> F.Column:
+    """A stored row's merge source: its write call's ``batch_id``, or
+    its ``dataset_ts`` in a store written before batch ids existed."""
+    return F.coalesce("batch_id", "dataset_ts")
 
 
 class ProfileStore:
@@ -56,6 +65,7 @@ class ProfileStore:
             view.df.withColumn("dataset_id", F.lit(dataset_id))
             .withColumn("date", F.lit(ts.date().isoformat()))
             .withColumn("dataset_ts", F.lit(ts.isoformat()))
+            .withColumn("batch_id", F.lit(uuid.uuid4().hex))
         )
         (
             df.write.mode("append").option("compression", _CODEC)
@@ -82,7 +92,7 @@ class ProfileStore:
             df = df.filter(F.col("date") <= date_to)
         if not merge:
             return ProfileView(df, self.config)
-        batches = df.withColumn("src", F.xxhash64("dataset_ts"))
+        batches = df.withColumn("src", F.xxhash64(_batch_key()))
         return ProfileView(
             _merge_profile_df(batches, self.config), self.config)
 
@@ -206,20 +216,23 @@ class ProfileStore:
         todo = {
             r["date"]: r["max_ts"]
             for r in df.groupBy("date").agg(
-                F.countDistinct("dataset_ts").alias("n_ts"),
+                F.countDistinct(_batch_key()).alias("n_batches"),
                 F.max("dataset_ts").alias("max_ts")).collect()
-            if r["n_ts"] > 1}
+            if r["n_batches"] > 1}
         if not todo:
             return 0
         batches = df.filter(F.col("date").isin(list(todo))).withColumn(
-            "src", F.xxhash64("dataset_ts"))
+            "src", F.xxhash64(_batch_key()))
         merged = _merge_profile_df(batches, self.config, keys=["date"])
         # materialize driver-side (profiles are KB-scale) so the write
         # never overwrites files its own plan is reading
         rows = merged.collect()
         max_ts = F.create_map(*[F.lit(v) for kv in todo.items() for v in kv])
+        ids = F.create_map(*[F.lit(v) for d in todo
+                             for v in (d, uuid.uuid4().hex)])
         local = (spark.createDataFrame(rows, merged.schema)
                  .withColumn("dataset_ts", max_ts[F.col("date")])
+                 .withColumn("batch_id", ids[F.col("date")])
                  .withColumn("dataset_id", F.lit(dataset_id)))
         prev = spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode", "static")

@@ -133,8 +133,9 @@ def _signed64(u: int) -> int:
 
 # ----------------------------------------------------------- message encode
 
+_FI_FIELD = 4
 _SKETCH_FIELD = {  # (metric, component) -> oneof field for sketch bytes
-    ("frequent_items", "mg"): 4,
+    ("frequent_items", "mg"): _FI_FIELD,
     ("cardinality", "hll"): 5,
     ("distribution", "kll"): 6,
 }
@@ -161,7 +162,8 @@ def _component_msg(metric: str, comp: str, n, d, b) -> Optional[bytes]:
             return None  # unknown sketch kind: not representable
         from .dsketch import to_ds_blob
 
-        out += _len_field(f, _len_field(1, to_ds_blob(b)))
+        out += _len_field(f, _len_field(1, to_ds_blob(
+            b, frequent_items=f == _FI_FIELD)))
     else:
         return None  # s-slot (derived JSON) and empty components skipped
     return bytes(out)
@@ -405,7 +407,7 @@ def _parse_component(buf: bytes) -> tuple:
             for f2, w2, v2 in _fields(val):
                 if f2 == 1 and w2 == 2:
                     b = bytes(v2)
-            if field == 4 and b is not None:
+            if field == _FI_FIELD and b is not None:
                 from .dsketch import fi_with_null_count
 
                 b = fi_with_null_count(b)

@@ -1606,7 +1606,7 @@ def incremental_minhash_dedup(
     )
 
     losers = losers_b.unionByName(losers_h).distinct()
-    return batch.join(losers, id_col, "left_anti")
+    return batch.join(_maybe_b(losers), id_col, "left_anti")
 
 
 def cross_source_overlap(
