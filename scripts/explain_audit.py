@@ -1316,7 +1316,7 @@ def main() -> None:
     sec("textrank keywords (co-occurrence graph build)", trk, {
         "edge counts partial-agg before their exchange": PARTIAL,
         "pair expansion is in-scan (no self-join of the corpus)":
-            count("SortMergeJoin", 0, 3),
+            count("SortMergeJoin", 0, 1),
         "top-k via TakeOrderedAndProject (no global sort)": TOP_K})
     mk_daily = (ev.filter(F.col("ts").isNotNull())
                 .groupBy("event_type",
@@ -1354,7 +1354,7 @@ def main() -> None:
             has("BroadcastHashJoin"),
         "estimator agg partial-aggs before its exchange": PARTIAL,
         "no sort-merge join of the data against itself":
-            count("SortMergeJoin", 0, 2),
+            count("SortMergeJoin", 0, 1),
         "no window anywhere": NO_WINDOW})
     tf = trailing_features(
         ev.filter(F.col("user_id").isNotNull()

@@ -149,3 +149,23 @@ def test_pagerank_iterations_exchange_no_edges(spark):
     for p in steps:
         assert not any(_edge_side(c) for x in p.find("Exchange")
                        for c in x.children), p.names()
+
+
+def test_executed_plans_read_as_the_frame_plan(spark):
+    """A status-store plan graph reads as the frame's own plan: the
+    adaptive plan wrapped inside a subquery is spliced out, so the
+    subquery's aggregate stays under its filter, and a reused exchange
+    is one node under both of its consumers."""
+    df = spark.range(0, 2000, 1, 2).select(
+        (F.col("id") % 7).alias("k"), F.col("id").alias("v"))
+    q = df.filter(F.col("v") > df.groupBy("k").agg(F.avg("v").alias("a"))
+                  .filter("k = 3").select("a").scalar())
+    a = df.groupBy("k").agg(F.sum("v").alias("s"))
+    j = a.join(a.select("k", F.col("s").alias("s2")).hint("merge"), "k")
+    for frame, path in ((q, ("Filter", "Subquery", "Exchange", AGG)),
+                        (j, ("SortMergeJoin", "Exchange", AGG))):
+        _, plans = Plan.executed(spark, frame.collect)
+        assert len(plans) == 1, [p.names() for p in plans]
+        p, own = plans[0], Plan.of(frame)
+        assert p.path(*path) and own.path(*path), str(p)
+        assert p.count("Exchange") == own.count("Exchange") == 1, str(p)

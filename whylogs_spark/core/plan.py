@@ -78,25 +78,23 @@ def _unwrap(jnode, codegen: bool = False) -> Tuple[str, object, bool]:
         jnode = getattr(jnode, step)()
 
 
-def _names(jplan) -> Iterator[str]:
-    """The name of every node of a logical or physical plan, subquery
-    plans included."""
-    stack = [jplan]
-    while stack:
-        name, node, _ = _unwrap(stack.pop())
-        yield name
-        stack += _seq(node.children()) + _seq(node.subqueries())
-
-
 def is_expensive(df: DataFrame) -> bool:
     """True when ``df``'s optimized logical plan, subqueries included,
     holds a shuffle, a global funnel or a Python step outside any
-    cached input; False for a streaming frame."""
+    cached input; False for a streaming frame.  ``profile()`` asks this
+    on every call, so the walk asks each node only its name and its
+    children, and gathers the subquery plans once at the root."""
     try:
-        jplan = df._jdf.queryExecution().optimizedPlan()
+        root = df._jdf.queryExecution().optimizedPlan()
     except AnalysisException:
         return False
-    return any(name in _EXPENSIVE_NODES for name in _names(jplan))
+    stack = [root] + _seq(root.subqueriesAll())
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _EXPENSIVE_NODES:
+            return True
+        stack += _seq(node.children())
+    return False
 
 
 class Node:
@@ -180,7 +178,9 @@ class Plan:
 
     def __init__(self, roots: Sequence[Node]):
         self.roots = list(roots)
-        self.nodes = [n for r in self.roots for n in r]
+        # a node under two parents (a reused exchange) is listed once
+        self.nodes = list({id(n): n for r in self.roots for n in r}
+                          .values())
 
     @classmethod
     def of(cls, obj, *, logical: bool = False) -> "Plan":
@@ -279,18 +279,27 @@ class Plan:
 
 
 def _graph_tree(graph) -> Node:
-    """A status-store ``SparkPlanGraph`` as a tree: codegen clusters
-    are skipped, edges point from child to parent."""
-    nodes = {}
+    """A status-store ``SparkPlanGraph`` as a tree.  Edges point from
+    child to parent; a wrapper (codegen cluster, adaptive plan, query
+    stage) is spliced out, its children hung on its parent.  A reused
+    exchange is one node under both of its parents (`Plan` lists it
+    once)."""
+    info, kids, children = {}, {}, set()
     for g in _seq(graph.allNodes()):
-        name = g.name().strip()
-        if not (name in _WRAPPERS or name.startswith("WholeStageCodegen")):
-            nodes[g.id()] = Node(name, g.desc(), [])
-    parents = set()
+        info[g.id()] = (g.name().strip(), g)
     for e in _seq(graph.edges()):
-        child, parent = nodes.get(e.fromId()), nodes.get(e.toId())
-        if child is not None and parent is not None:
-            parent.children.append(child)
-            parents.add(e.fromId())
-    roots = [n for i, n in nodes.items() if i not in parents]
+        kids.setdefault(e.toId(), []).append(e.fromId())
+        children.add(e.fromId())
+    built = {}
+
+    def build(i) -> List[Node]:
+        if i not in built:
+            name, g = info[i]
+            below = [n for k in kids.get(i, ()) for n in build(k)]
+            wrapper = name in _WRAPPERS or name.startswith(
+                "WholeStageCodegen")
+            built[i] = below if wrapper else [Node(name, g.desc(), below)]
+        return built[i]
+
+    roots = [n for i in info if i not in children for n in build(i)]
     return roots[0] if len(roots) == 1 else Node("Plans", "", roots)
