@@ -22,11 +22,11 @@ from whylogs_spark.ops import sampling as sampling_ops
 from whylogs_spark.ops import similarity as sim_ops
 from whylogs_spark.ops import text as text_ops
 
-# exact-components-only profile: no sketch passes, single codegen'd
-# aggregation (the gate only hash-checks exact values)
+# exact-components-only profile: no quantile or frequent-items sketch;
+# the exact metrics run in one whole-stage-codegen aggregation, the HLL
+# in the object tier's job (the gate only hash-checks exact values)
 _FAST_CFG = wsp.MetricConfig(quantile_impl="none",
-                             frequent_items_impl="none",
-                             cardinality_impl="approx")
+                             frequent_items_impl="none")
 
 _LINEITEM_COLS = [
     "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
@@ -698,19 +698,16 @@ _WIDE_GATE_N = 120
 
 
 def _q_profile_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exercises the WIDE unpivot path end-to-end (120 derived columns >
-    wide_column_threshold=96 forces it): per-column exact distribution
-    stats out of the chunked explode/union plan, hash-matched against a
-    generated 120-branch SQL oracle — proving the wide path's values,
-    not just wide-vs-narrow parity."""
+    """Exercises the WIDE unpivot path end-to-end (120 derived columns
+    reach ``MetricConfig.wide_column_threshold``, 96): per-column exact
+    distribution stats out of the chunked explode/union plan,
+    hash-matched against a generated 120-branch SQL oracle — proving
+    the wide path's values, not just wide-vs-narrow parity."""
     df = _t(spark, sf_dir, "lineitem")
     wide = df.select(*[
         (F.col("l_quantity") * (i + 1) + F.col("l_tax")).alias(f"w{i}")
         for i in range(_WIDE_GATE_N)])
-    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                           cardinality_impl="approx",
-                           wide_column_threshold=96)
-    view = wsp.profile(wide, config=cfg)
+    view = wsp.profile(wide, config=_FAST_CFG)
     long = view.df.filter(F.col("metric") == "distribution")
     out = (long.groupBy("column")
            .pivot("component", ["n", "mean", "stddev", "min", "max"])

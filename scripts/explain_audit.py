@@ -136,6 +136,9 @@ NO_WINDOW = no(WINDOWS)
 TOP_K = has("TakeOrderedAndProject")
 BCAST = has(BCAST_JOINS)
 CODEGEN_PROJECT = has(lambda n: n.name == "Project" and n.codegen)
+#: an executed plan's hash aggregates all run inside whole-stage codegen
+CODEGEN_AGGS = both(has("HashAggregate"), no(
+    lambda n: n.name == "HashAggregate" and not n.codegen))
 #: a window whose first argument is a sort spec on a non-__slice column
 #: is a global ORDERED window over the data (the single-task sort
 #: shape); partitioned windows and orderless full-frame windows (the
@@ -315,17 +318,21 @@ def main() -> None:
         finally:
             spark.conf.unset("spark.whylogs.cutLineage")
 
+    # the codegen tier's job of a default profile: its exact metrics
     aggs = wsp.core.planner.plan_dataframe(
-        li.schema, ["l_quantity", "l_returnflag"], [],
-        wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                         cardinality_impl="approx"))
-    wide = li.agg(*[a.agg for a in aggs if a.agg is not None])
+        li.schema, ["l_quantity", "l_returnflag"], [], wsp.MetricConfig())
+    wide = li.agg(*[a.agg for a in aggs
+                    if a.agg is not None and a.tier == "codegen"])
     sec("profile native tier (2 columns)", wide, {
         "column-pruned scan (only 2 columns read)":
             reads("l_quantity", "l_returnflag"),
         "partial aggregation before exchange": PARTIAL,
         "declarative HashAggregate (codegen), not interpreted Object agg":
             no("ObjectHashAggregate")}, py=None)
+    sec("profile native tier (2 columns), executed",
+        executed(wide.collect), {
+            "every aggregate inside whole-stage codegen": CODEGEN_AGGS},
+        py=None)
     seg = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"), F.avg("l_quantity").alias("m"))
     sec("segmented aggregation", seg, {
@@ -342,13 +349,8 @@ def main() -> None:
     sec("cosine top-k", topk, {
         "top-k via TakeOrderedAndProject (no full sort)": TOP_K,
         "no exchange of raw vectors": no(is_hashed("embedding"))}, py=None)
-    sigs = dedup.minhash_signatures(docs, num_hashes=16, impl="sql")
-    sec("minhash signatures (sql impl)", sigs, {
-        "map-side partial aggregation of signature mins": PARTIAL,
-        "declarative HashAggregate (codegen), not interpreted Object agg":
-            no("ObjectHashAggregate")}, py=None)
-    sigs_a = dedup.minhash_signatures(docs, num_hashes=16)
-    sec("minhash signatures (arrow impl)", sigs_a, {
+    sigs = dedup.minhash_signatures(docs, num_hashes=16)
+    sec("minhash signatures (arrow impl)", sigs, {
         "single Arrow pass (MapInArrow)":
             has(("MapInArrow", "ArrowEvalPython")),
         "no shuffle of documents": exchanges("hash", 0, 0),
@@ -356,8 +358,8 @@ def main() -> None:
     wcols = ["l_quantity", "l_extendedprice", "l_discount"]
     (_, waggs), = plan_wide_sketches(
         li.select(*wcols).schema, None, [],
-        wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                         cardinality_impl="approx")).values()
+        wsp.MetricConfig(quantile_impl="none",
+                         frequent_items_impl="none")).values()
     wmode = class_frame(li, ValueType.FRACTIONAL, wcols, [], waggs)
     sec("wide-mode class aggregation", wmode, {
         "generator unpivot (posexplode), no join":

@@ -43,7 +43,6 @@ SLOW_TESTS = {
     "test_quality.py::test_bigram_lm_matches_python_model",
     "test_profile_basic.py::test_histogram_from_kll",
     "test_incremental_dedup.py::test_incremental_minhash_greedy_not_closure",
-    "test_ops.py::test_simhash[sql]",
     "test_behavioral.py::test_retention_cohorts_day_grain",
     "test_bpe.py::test_train_and_tokenize_roundtrip",
     "test_outliers_bins.py::test_quantile_bins_quartiles",
@@ -142,7 +141,7 @@ SLOW_TESTS = {
     "test_custom_metrics.py::test_custom_metric_merge_monoid",
     "test_incremental_dedup.py::test_incremental_minhash_accepts_persisted_index",
     "test_incremental_dedup.py::test_incremental_minhash_ground_truth",
-    "test_incremental_dedup.py::test_minhash_index_sql_impl_agrees_on_pairs",
+    "test_incremental_dedup.py::test_minhash_index_finds_planted_pairs",
     "test_ops.py::test_sessionize_hot_user_buckets_equivalent",
     "test_relations_ranking.py::test_pr_auc_exact_edges",
     "test_streaming.py::test_stateful_streaming_sessionize",
@@ -216,6 +215,16 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if "load" in item.keywords:
             item.add_marker(skip)
+
+
+def profile_wide(df, **kwargs):
+    """``wsp.profile`` on the wide path whatever the frame's width."""
+    import whylogs_spark as wsp
+    from whylogs_spark.core.configs import MetricConfig
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(MetricConfig, "wide_column_threshold", 1)
+        return wsp.profile(df, **kwargs)
 
 
 @pytest.fixture(scope="session")

@@ -166,8 +166,7 @@ def test_comparison_constraints(spark, lineitem):
     profile pair."""
     from whylogs_spark.core import constraints as C
 
-    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                           cardinality_impl="approx")
+    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
     ref = wsp.profile(lineitem.filter("l_orderkey % 2 = 0"),
                       columns=["l_quantity"], config=cfg)
     tgt = wsp.profile(lineitem.filter("l_orderkey % 2 = 1"),
@@ -722,6 +721,36 @@ def test_store_compact_preserves_merged_view(spark, lineitem, tmp_path):
 
     # compacting again is a no-op
     assert store.compact(spark, "ds") == 0
+
+
+def test_store_compact_leaves_session_conf_alone(spark, tmp_path,
+                                                 monkeypatch):
+    """``compact`` overwrites its partitions dynamically through a write
+    option: it sets no session conf, which other jobs of the session
+    read concurrently."""
+    import datetime as dt
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    import whylogs_spark as wsp
+    from whylogs_spark.io.store import ProfileStore
+
+    store = ProfileStore(str(tmp_path / "store"))
+    view = wsp.profile(spark.range(0, 50).selectExpr("id * 0.5 AS x"))
+    for day, hour in ((1, 0), (1, 12), (2, 0)):
+        store.write(view, "ds", dt.datetime(2024, 1, day, hour,
+                                            tzinfo=dt.timezone.utc))
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    sets = []
+    monkeypatch.setattr(RuntimeConfig, "set",
+                        lambda self, k, v: sets.append((k, v)))
+    assert store.compact(spark, "ds") == 1
+    assert sets == []
+    assert spark.conf.get(key) == before
+    # the untouched day survives the overwrite
+    assert store._read(spark).select("date").distinct().count() == 2
+    assert store.get(spark, "ds").get_component("x", "counts", "n") == 150
 
 
 def test_store_batches_at_one_timestamp_merge_as_two_sources(spark,

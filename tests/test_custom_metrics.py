@@ -9,8 +9,7 @@ import whylogs_spark as wsp
 from whylogs_spark import CustomComponent, ValueType
 
 
-CFG = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                       cardinality_impl="approx")
+CFG = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
 
 
 @pytest.fixture

@@ -11,9 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import whylogs_spark as wsp
+from tests.conftest import profile_wide
 
-FAST = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                        cardinality_impl="approx")
+FAST = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
 
 
 def test_empty_dataframe(spark):
@@ -96,8 +96,6 @@ def test_odd_column_names_wide_path(spark):
     df = spark.range(0, 100).selectExpr(
         "id AS `col.with.dots`", "id * 2 AS `col with spaces`",
         "cast(id AS string) AS `日本語`")
-    v = wsp.profile(df, config=wsp.MetricConfig(
-        quantile_impl="none", frequent_items_impl="none",
-        cardinality_impl="approx", wide_column_threshold=1))
+    v = profile_wide(df, config=FAST)
     assert v.get_component("col.with.dots", "counts", "n") == 100
     assert v.get_component("日本語", "types", "string") == 100

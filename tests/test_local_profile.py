@@ -13,11 +13,11 @@ import pytest
 
 import whylogs_spark as wsp
 from whylogs_spark.core import profiler
-from whylogs_spark.core.configs import MetricConfig
 from whylogs_spark.core.sketches import KllSketch
 from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.io.why1 import (read_why1, read_why1_segmented,
                                    write_why1, write_why1_segmented)
+from tests.conftest import profile_wide
 
 BIG = 2**62 + 3  # an int64 a double cannot hold
 
@@ -70,7 +70,6 @@ def _kll_content(blob):
 
 
 def _views(spark, small, tmp_path, monkeypatch):
-    wide_cfg = MetricConfig(wide_column_threshold=1)
     parts = profiler.profile_partitions(
         small, {"by_k": ["k"], "all": []})
     unseg = wsp.profile(small)
@@ -83,7 +82,7 @@ def _views(spark, small, tmp_path, monkeypatch):
     views = {
         "unsegmented": unseg,
         "segmented": seg,
-        "wide": wsp.profile(small, segment_by=["k"], config=wide_cfg),
+        "wide": profile_wide(small, segment_by=["k"]),
         "partitions": parts["by_k"],
         "partitions_empty": parts["all"],
         "why1": read_why1(spark, why1_path),

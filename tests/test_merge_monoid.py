@@ -152,25 +152,35 @@ def test_sketch_kernels_monoid_hypothesis():
     fi_split_merge()
 
 
+def _estimate_only(view):
+    """``view`` as a store written with ``cardinality_impl='approx'``
+    (earlier versions) holds it: cardinality ``est`` rows, no ``hll``
+    sketch and no bounds."""
+    return wsp.ProfileView(
+        view.df.filter("metric != 'cardinality' OR component = 'est'"),
+        view.config)
+
+
 def test_merge_nondefault_config(lineitem, halves):
-    """Profiles built with cardinality_impl='approx' /
-    quantile_impl='native' have no mergeable sketch state; the merge
-    must still carry cardinality (max-of-est) and quantiles
-    (source-size-weighted average) as documented approximations rather
-    than silently dropping them (ADVICE r1, profiler.py merge)."""
-    a, b = halves
+    """Profiles without mergeable sketch state still merge: estimate-only
+    cardinality rows to the max of the sources' ``est``, and
+    ``quantile_impl='native'`` quantiles to the source-size-weighted
+    average — documented approximations rather than silently dropped
+    components (ADVICE r1, profiler.py merge)."""
     cfg = wsp.MetricConfig(quantile_impl="native",
-                           cardinality_impl="approx",
                            frequent_items_impl="none")
     cols = ["l_quantity"]
     whole = wsp.profile(lineitem, columns=cols, config=cfg)
-    merged = wsp.merge_profiles([wsp.profile(a, columns=cols, config=cfg),
-                                 wsp.profile(b, columns=cols, config=cfg)])
+    parts = [_estimate_only(wsp.profile(h, columns=cols, config=cfg))
+             for h in halves]
+    merged = wsp.merge_profiles(parts)
 
     est_w = whole.get_component("l_quantity", "cardinality", "est")
     est_m = merged.get_component("l_quantity", "cardinality", "est")
-    assert est_m is not None
+    assert est_m == max(
+        p.get_component("l_quantity", "cardinality", "est") for p in parts)
     assert est_m == pytest.approx(est_w, rel=0.2)
+    assert merged.get_component("l_quantity", "cardinality", "hll") is None
 
     med_w = whole.get_component("l_quantity", "distribution", "median")
     med_m = merged.get_component("l_quantity", "distribution", "median")
@@ -181,3 +191,34 @@ def test_merge_nondefault_config(lineitem, halves):
     # exact components still exact
     assert merged.get_component("l_quantity", "counts", "n") == \
         whole.get_component("l_quantity", "counts", "n")
+
+
+def test_store_of_estimate_only_cardinality_rows(spark, lineitem, halves,
+                                                 tmp_path):
+    """A store holding estimate-only cardinality rows still reads,
+    merges and compacts: ``est`` is the max of its batches'."""
+    import datetime as dt
+
+    from whylogs_spark.io.store import ProfileStore
+
+    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
+    parts = [_estimate_only(wsp.profile(h, columns=["l_quantity"],
+                                        config=cfg)) for h in halves]
+    top = max(p.get_component("l_quantity", "cardinality", "est")
+              for p in parts)
+    store = ProfileStore(str(tmp_path / "store"), cfg)
+    for h, part in enumerate(parts):
+        store.write(part, "ds",
+                    dt.datetime(2024, 1, 1, h, tzinfo=dt.timezone.utc))
+
+    def est(view):
+        return view.get_component("l_quantity", "cardinality", "est")
+
+    assert est(store.get(spark, "ds")) == top
+    assert est(wsp.merge_profiles(
+        [store.get(spark, "ds"), store.get(spark, "ds")])) == top
+    n = store.get(spark, "ds").get_component("l_quantity", "counts", "n")
+    assert store.compact(spark, "ds") == 1
+    after = store.get(spark, "ds")
+    assert est(after) == top
+    assert after.get_component("l_quantity", "counts", "n") == n

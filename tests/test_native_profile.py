@@ -21,6 +21,7 @@ from whylogs_spark.core.sketches import FrequentStringsSketch, KllSketch
 from whylogs_spark.io.dsketch import fi_to_ds_bytes, fi_with_null_count
 from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.io.why1 import read_why1, read_why1_rows, write_why1
+from tests.conftest import profile_wide
 
 @pytest.fixture(scope="module")
 def frame(spark):
@@ -35,15 +36,14 @@ def frame(spark):
         (F.col("id") % 8).alias("seg"))
 
 
-@pytest.mark.parametrize("kwargs", [
-    {}, {"segment_by": ["seg"]},
-    {"segment_by": ["seg"],
-     "config": wsp.MetricConfig(wide_column_threshold=1)},
+@pytest.mark.parametrize("run, kwargs", [
+    (wsp.profile, {}), (wsp.profile, {"segment_by": ["seg"]}),
+    (profile_wide, {"segment_by": ["seg"]}),
 ], ids=["unsegmented", "segmented", "wide"])
 def test_default_profile_runs_no_python_node(spark, frame, launched_jobs,
-                                             kwargs):
+                                             run, kwargs):
     (view, plans), jobs = launched_jobs(lambda: Plan.executed(
-        spark, lambda: wsp.profile(frame, **kwargs)))
+        spark, lambda: run(frame, **kwargs)))
     assert plans and all(p.has(named("Aggregate")) for p in plans)
     for p in plans:
         assert not p.python_nodes(), p.names()

@@ -72,8 +72,7 @@ def test_segmented_nested(nested):
     v = wsp.profile(nested, segment_by=["id"],
                     columns=["meta"],
                     config=wsp.MetricConfig(quantile_impl="none",
-                                            frequent_items_impl="none",
-                                            cardinality_impl="approx"))
+                                            frequent_items_impl="none"))
     rows = v.df.filter("column='meta.amounts.qty' and metric='counts' "
                        "and component='n'").collect()
     assert len(rows) == 3

@@ -194,15 +194,14 @@ def test_embedding_outliers_dropped_bucket_flag(spark):
     assert len(out3) == 30
 
 
-@pytest.mark.parametrize("impl", ["arrow", "sql"])
-def test_simhash(spark, impl):
+def test_simhash(spark):
     df = spark.createDataFrame(
         [(1, "spark is a distributed engine for big data"),
          (2, "spark is a distributed engine for huge data"),
          (3, "bananas oranges apples pears grapes melons kiwi")],
         ["doc_id", "text"],
     )
-    sigs = dedup.simhash_signatures(df, impl=impl)
+    sigs = dedup.simhash_signatures(df)
     rows = {r["doc_id"]: r["simhash"] for r in sigs.collect()}
     d12 = sigs.filter("doc_id=1").select(
         dedup.simhash_hamming(F.lit(rows[1]), F.lit(rows[2])).alias("h")

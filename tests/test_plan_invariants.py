@@ -1,9 +1,10 @@
 """Plan invariants the engine's scale depends on, read from the plan
 tree (``core.plan``): no partition-less ``Window.orderBy`` outside a
 declared-bounded allowlist, partial aggregation before the exchange on
-every profile path, no Python node in a default profile or in a merge
-of DataSketches-only profiles, and no exchange of the edge table inside
-a PageRank iteration.  ``scripts/explain_audit.py`` checks the full set
+every profile path, whole-stage codegen for a profile's exact metrics,
+no Python node in a default profile or in a merge of DataSketches-only
+profiles, and no exchange of the edge table inside a PageRank
+iteration.  ``scripts/explain_audit.py`` checks the full set
 of headline plans at a TPC-H scale."""
 
 import datetime as dt
@@ -17,6 +18,7 @@ from whylogs_spark.core.plan import Plan
 from whylogs_spark.core.profiler import merge_profiles, merge_segments
 from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.ops.graph import pagerank
+from tests.conftest import profile_wide
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "whylogs_spark"
 
@@ -76,9 +78,7 @@ def test_profile_paths_partial_aggregate_before_exchange(spark):
     calls = {
         "narrow": lambda: wsp.profile(df),
         "segmented": lambda: wsp.profile(df, segment_by=["seg"]),
-        "wide": lambda: wsp.profile(
-            df, segment_by=["seg"],
-            config=wsp.MetricConfig(wide_column_threshold=1)),
+        "wide": lambda: profile_wide(df, segment_by=["seg"]),
         "partitions": lambda: wsp.profile_partitions(
             df, {"all": [], "by_seg": ["seg"]}),
     }
@@ -90,6 +90,20 @@ def test_profile_paths_partial_aggregate_before_exchange(spark):
             assert p.path(AGG, "Exchange", AGG), (name, p.names())
         for p in plans:
             assert not p.python_nodes(), (name, p.names())
+
+
+def test_profile_codegen_tier_runs_in_whole_stage_codegen(spark):
+    """The exact metrics of a narrow profile, default config and the
+    sketch-free config of the correctness gate alike, aggregate inside
+    whole-stage codegen: no interpreted aggregate in their job."""
+    df = _frame(spark)
+    for cfg in (wsp.MetricConfig(),
+                wsp.MetricConfig(quantile_impl="none",
+                                 frequent_items_impl="none")):
+        _, plans = Plan.executed(spark, lambda: wsp.profile(df, config=cfg))
+        aggs = [n for p in plans for n in p.find("HashAggregate")]
+        assert aggs, [p.names() for p in plans]
+        assert all(n.codegen for n in aggs), [str(p) for p in plans]
 
 
 def test_merges_run_no_python_node(spark, tmp_path):

@@ -182,8 +182,7 @@ def test_log_accepts_pandas_row_multiple(spark, lineitem):
 
     import whylogs_spark as wsp
 
-    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                           cardinality_impl="approx")
+    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
     pdf = pd.DataFrame({"a": [1, 2, 3], "b": ["x", "y", None]})
     v = wsp.log(pandas=pdf, config=cfg)
     assert v.get_component("a", "counts", "n") == 3
@@ -214,8 +213,7 @@ def test_single_value_stddev_m2_zero(spark):
 
 def test_write_read_api(spark, lineitem, tmp_path):
     """why.write / why.read parity (reference api/writer, result_set.py:310)."""
-    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                           cardinality_impl="approx")
+    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
     v = wsp.profile(lineitem, columns=["l_quantity"], config=cfg)
     n = v.get_component("l_quantity", "counts", "n")
     binp = str(tmp_path / "p.bin")

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import whylogs_spark as wsp
+from tests.conftest import profile_wide
 
 
 @pytest.fixture(scope="module")
@@ -68,8 +69,7 @@ def test_null_segment_key(spark):
 def test_profile_partitions_single_pass_matches_separate(lineitem):
     import whylogs_spark as wsp
 
-    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                           cardinality_impl="approx")
+    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
     parts = {"by_flag": ["l_returnflag"],
              "by_both": ["l_returnflag", "l_linestatus"]}
     multi = wsp.profile_partitions(
@@ -87,8 +87,7 @@ def test_profile_partitions_single_pass_matches_separate(lineitem):
 def test_segment_filter(lineitem):
     import whylogs_spark as wsp
 
-    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                           cardinality_impl="approx")
+    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
     v = wsp.profile(lineitem, segment_by=["l_returnflag"],
                     columns=["l_quantity"], config=cfg,
                     segment_filter="l_quantity > 25")
@@ -102,8 +101,7 @@ def test_segment_filter(lineitem):
 def test_explicit_segment_key_values(spark, lineitem):
     """Constant segment keys appended sorted by name (reference:
     segment_processing.py:70-72)."""
-    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none",
-                           cardinality_impl="approx")
+    cfg = wsp.MetricConfig(quantile_impl="none", frequent_items_impl="none")
     v = wsp.profile(lineitem, segment_by=["l_returnflag"],
                     columns=["l_quantity"],
                     segment_key_values={"env": "prod", "batch": "b7"},
@@ -134,9 +132,7 @@ def test_segment_key_rendering_parity_across_paths(spark):
                 for r in view.df.select("segment").distinct().collect()}
 
     narrow = wsp.profile(df, segment_by=["flag", "rate"], columns=["x"])
-    wide = wsp.profile(
-        df, segment_by=["flag", "rate"], columns=["x"],
-        config=wsp.MetricConfig(wide_column_threshold=1))
+    wide = profile_wide(df, segment_by=["flag", "rate"], columns=["x"])
     parts = profile_partitions(df, {"p": ["flag", "rate"]}, columns=["x"])
 
     kn, kw, kp = keys(narrow), keys(wide), keys(parts["p"])
@@ -184,13 +180,11 @@ def test_past_limit_fallback_matches_collected(spark, monkeypatch):
         [(i % 6, float(i % 17) * 0.5, f"s{i % 7}", i % 5)
          for i in range(600)],
         "k int, x double, s string, i int").coalesce(1)
-    configs = [wsp.MetricConfig(),
-               wsp.MetricConfig(wide_column_threshold=1)]
-    collected = [wsp.profile(df, segment_by=["k"], config=cfg)
-                 for cfg in configs]
+    paths = [wsp.profile, profile_wide]
+    collected = [run(df, segment_by=["k"]) for run in paths]
     monkeypatch.setattr(profiler, "_SEGMENT_COLLECT_LIMIT", 2)
-    for cfg, view in zip(configs, collected):
-        fallback = wsp.profile(df, segment_by=["k"], config=cfg)
+    for run, view in zip(paths, collected):
+        fallback = run(df, segment_by=["k"])
         plan = fallback.df._jdf.queryExecution().optimizedPlan().toString()
         assert "Generate" in plan and "Generate" not in (
             view.df._jdf.queryExecution().optimizedPlan().toString())

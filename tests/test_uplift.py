@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 import whylogs_spark as wsp
 from whylogs_spark.core.util import run_concurrent
 from whylogs_spark.ops.uplift import two_model_uplift, uplift_score_col
+from tests.conftest import profile_wide
 
 RNG = np.random.RandomState(61)
 
@@ -94,9 +95,7 @@ def test_concurrent_jobs_keep_callers_job_group(spark, job_group,
     calls = {
         "unsegmented": lambda: wsp.profile(df),
         "segmented": lambda: wsp.profile(df, segment_by=["k"]),
-        "wide": lambda: wsp.profile(
-            df, segment_by=["k"],
-            config=wsp.MetricConfig(wide_column_threshold=1)),
+        "wide": lambda: profile_wide(df, segment_by=["k"]),
         "uplift": lambda: two_model_uplift(df, "tr", "y", ["x"],
                                            max_iter=3),
     }

@@ -102,8 +102,7 @@ def test_segmented_view_rejected(spark, lineitem, tmp_path):
     segv = wsp.profile(
         lineitem, segment_by=["l_returnflag"],
         config=wsp.MetricConfig(quantile_impl="none",
-                                frequent_items_impl="none",
-                                cardinality_impl="approx"))
+                                frequent_items_impl="none"))
     with pytest.raises(ValueError):
         write_why1(segv, str(tmp_path / "x.bin"))
 
@@ -115,8 +114,7 @@ def test_properties_roundtrip(spark, lineitem, tmp_path):
     v = wsp.profile(
         lineitem, columns=["l_quantity"],
         config=wsp.MetricConfig(quantile_impl="none",
-                                frequent_items_impl="none",
-                                cardinality_impl="approx"),
+                                frequent_items_impl="none"),
         dataset_timestamp=ts, metadata={"source": "unit-test", "v": "1"})
     p = str(tmp_path / "props.bin")
     write_why1(v, p)

@@ -17,8 +17,7 @@ from whylogs_spark.io.why1 import (MAGIC, _fields, _read_uvarint,
                                    write_why1_segmented)
 
 _CFG = wsp.MetricConfig(quantile_impl="kll",
-                        frequent_items_impl="mg",
-                        cardinality_impl="approx")
+                        frequent_items_impl="mg")
 
 
 @pytest.fixture(scope="module")

@@ -8,15 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 import whylogs_spark as wsp
+from tests.conftest import profile_wide
 
-NARROW = wsp.MetricConfig(quantile_impl="native",
-                          frequent_items_impl="none",
-                          cardinality_impl="hll",
-                          wide_column_threshold=10_000)
-WIDE = wsp.MetricConfig(quantile_impl="native",
-                        frequent_items_impl="none",
-                        cardinality_impl="hll",
-                        wide_column_threshold=1)
+CFG = wsp.MetricConfig(quantile_impl="native", frequent_items_impl="none")
 
 @pytest.fixture(scope="module")
 def frame(spark):
@@ -65,8 +59,8 @@ def _compare(a, b):
 
 
 def test_wide_matches_narrow(spark, frame):
-    a = _rows(wsp.profile(frame, config=NARROW))
-    b = _rows(wsp.profile(frame, config=WIDE))
+    a = _rows(wsp.profile(frame, config=CFG))
+    b = _rows(profile_wide(frame, config=CFG))
     _compare(a, b)
 
 
@@ -75,14 +69,13 @@ def test_wide_matches_narrow(spark, frame):
 def test_wide_matches_narrow_segmented(spark, frame, segment_by):
     seg = (frame.withColumn("grp", (F.col("i0") % 3).cast("string"))
            .withColumn("flag", F.col("i1") % 2 == 0))
-    a = _rows(wsp.profile(seg, segment_by=segment_by, config=NARROW))
-    b = _rows(wsp.profile(seg, segment_by=segment_by, config=WIDE))
+    a = _rows(wsp.profile(seg, segment_by=segment_by, config=CFG))
+    b = _rows(profile_wide(seg, segment_by=segment_by, config=CFG))
     _compare(a, b)
 
 
 def test_wide_sketch_pass_kll_fi(spark, frame):
-    cfg = wsp.MetricConfig(wide_column_threshold=1)
-    v = wsp.profile(frame, columns=["i0", "s0", "f1"], config=cfg)
+    v = profile_wide(frame, columns=["i0", "s0", "f1"])
     # KLL quantiles present for numerics, FI items for int/string
     assert v.get_component("i0", "distribution", "median") is not None
     assert v.get_component("f1", "distribution", "q_95") is not None
@@ -97,8 +90,7 @@ def test_wide_sketch_pass_kll_fi(spark, frame):
 
 
 def test_wide_tensor_column_counts_only(spark, frame):
-    v = wsp.profile(frame, columns=["arr0", "i0"],
-                    config=wsp.MetricConfig(wide_column_threshold=1))
+    v = profile_wide(frame, columns=["arr0", "i0"])
     assert v.get_component("arr0", "counts", "n") == 4000
     assert v.get_component("arr0", "types", "tensor") == 4000
     assert v.get_component("arr0", "cardinality", "est") is None

@@ -3,13 +3,19 @@
 Mirrors the knobs of the reference engine's ``MetricConfig``
 (reference: python/whylogs/core/configs.py:9-41) so benchmark comparisons
 are apples-to-apples: KLL k=256 (1024 when ``large_kll_k``), HLL lg_k=12,
-frequent-items 128 slots, 128-char string truncation.
+frequent-items 128 slots, 128-char string truncation. Cardinality is
+always Spark's DataSketches ``hll_sketch_agg`` at ``hll_lg_k``: one
+mergeable HLL per column, as in the paper's profile.
+
+Two engine constants are class attributes, not fields: the column count
+at which ``profile()`` switches to the wide path and the accuracy of
+``quantile_impl="native"``.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import List
+from typing import ClassVar, List
 
 
 @dataclass(frozen=True)
@@ -32,23 +38,21 @@ class MetricConfig:
     #                mergeable, bytes stored; compaction is randomized,
     #                as in the reference, so bytes vary run to run)
     quantile_impl: str = "kll"
+    # frequent items: "sketch" (Spark's approx_top_k_accumulate, a
+    # DataSketches frequent-items sketch, bytes stored) | "none"
+    frequent_items_impl: str = "sketch"
+
     # approx_percentile accuracy (~1/rank-error). The reference's KLL k=256
     # carries ~1.65% normalized rank error; 250 (0.4%) still beats it 4x
     # while halving the GK-summary build cost, which otherwise dominates
     # the whole native-tier profile pass (measured ~2x on lineitem).
-    native_quantile_accuracy: int = 250
-    # frequent items: "sketch" (Spark's approx_top_k_accumulate, a
-    # DataSketches frequent-items sketch, bytes stored) | "none"
-    frequent_items_impl: str = "sketch"
-    # cardinality: "hll" (Spark DataSketches hll_sketch_agg, mergeable bytes)
-    #            | "approx" (approx_count_distinct, estimate only)
-    cardinality_impl: str = "hll"
+    native_quantile_accuracy: ClassVar[int] = 250
     # At/above this many profiled columns, switch to the wide path
     # (unpivot per type class + groupBy(segments, int column id): O(1)
     # plan size — see core/wide.py). Below it, the narrow
     # per-column-expression path (vectorized per-column aggregates; plan
     # cost amortizes over rows).
-    wide_column_threshold: int = 96
+    wide_column_threshold: ClassVar[int] = 96
 
     @property
     def effective_kll_k(self) -> int:

@@ -281,12 +281,15 @@ class Plan:
 def _graph_tree(graph) -> Node:
     """A status-store ``SparkPlanGraph`` as a tree.  Edges point from
     child to parent; a wrapper (codegen cluster, adaptive plan, query
-    stage) is spliced out, its children hung on its parent.  A reused
+    stage) is spliced out, its children hung on its parent; the members
+    of a whole-stage-codegen cluster are marked ``codegen``.  A reused
     exchange is one node under both of its parents (`Plan` lists it
     once)."""
-    info, kids, children = {}, {}, set()
+    info, kids, children, codegen = {}, {}, set(), set()
     for g in _seq(graph.allNodes()):
         info[g.id()] = (g.name().strip(), g)
+        if info[g.id()][0].startswith("WholeStageCodegen"):
+            codegen.update(m.id() for m in _seq(g.nodes()))
     for e in _seq(graph.edges()):
         kids.setdefault(e.toId(), []).append(e.fromId())
         children.add(e.fromId())
@@ -298,7 +301,8 @@ def _graph_tree(graph) -> Node:
             below = [n for k in kids.get(i, ()) for n in build(k)]
             wrapper = name in _WRAPPERS or name.startswith(
                 "WholeStageCodegen")
-            built[i] = below if wrapper else [Node(name, g.desc(), below)]
+            built[i] = below if wrapper else [
+                Node(name, g.desc(), below, i in codegen)]
         return built[i]
 
     roots = [n for i in info if i not in children for n in build(i)]

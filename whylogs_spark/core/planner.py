@@ -257,23 +257,17 @@ def plan_column(col: str, dt: T.DataType, cfg: MetricConfig,
     # ---- cardinality (reference: metrics.py:535 — HLL lg_k=12; we use
     # Spark's Apache DataSketches hll_sketch_agg: JVM-side, mergeable)
     if vt not in (ValueType.TENSOR, ValueType.OBJECT):
-        sv = _card_view(col, vt)
-        if cfg.cardinality_impl == "hll":
-            # ONE hll aggregate per column; estimate and two-sigma
-            # bounds are post-agg projections of the sketch bytes. The
-            # bounds are MODE-AWARE (parsed from the DataSketches
-            # preamble, all JVM-side expressions — see _hll_bounds):
-            # a sparse (coupon) sketch is near-exact, a dense one gets
-            # the estimator's RSE, not one fixed formula for both.
-            hll = p.base("cardinality", "hll", SLOT_B,
-                         F.hll_sketch_agg(sv, F.lit(cfg.hll_lg_k)),
-                         tier="object")
-            for comp, slot, sql in hll_readouts(hll):
-                p.derived("cardinality", comp, slot, F.expr(sql),
-                          tier="object")
-        else:
-            p.base("cardinality", "est", SLOT_D,
-                   F.approx_count_distinct(sv).cast(T.DoubleType()))
+        # ONE hll aggregate per column; estimate and two-sigma bounds
+        # are post-agg projections of the sketch bytes. The bounds are
+        # MODE-AWARE (parsed from the DataSketches preamble, all
+        # JVM-side expressions — see _hll_bounds): a sparse (coupon)
+        # sketch is near-exact, a dense one gets the estimator's RSE,
+        # not one fixed formula for both.
+        hll = p.base("cardinality", "hll", SLOT_B, F.hll_sketch_agg(
+            _card_view(col, vt), F.lit(cfg.hll_lg_k)), tier="object")
+        for comp, slot, sql in hll_readouts(hll):
+            p.derived("cardinality", comp, slot, F.expr(sql),
+                      tier="object")
 
     # ---- registered custom metrics (reference plug-in surface:
     # @custom_metric/register_metric, metrics.py:60,156) — user-supplied

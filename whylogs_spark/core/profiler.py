@@ -571,10 +571,12 @@ def _merge_profile_df(allp: DataFrame, cfg: MetricConfig,
       ``approx_top_k_combine``; HLL: ``hll_union_agg``. Each is read
       out by the planner's read-outs, as a fresh profile is;
     * quantiles of a column without KLL (``quantile_impl='native'``):
-      the mean weighted by source ``n``, and estimate-only cardinality
-      (``cardinality_impl='approx'``): the ``max`` — documented
-      APPROXIMATIONS (exact only for identically-distributed sources,
-      resp. when one source's values cover the others');
+      the mean weighted by source ``n`` — a documented APPROXIMATION
+      (exact only for identically-distributed sources);
+    * cardinality rows without an ``hll`` sketch: the ``max`` of their
+      ``est`` (exact only when one source's values cover the others').
+      The engine no longer writes such rows, but stores written by
+      earlier versions with ``cardinality_impl='approx'`` hold them;
     * custom metrics: their registered ``sum`` / ``min`` / ``max``
       (``none`` components are dropped); any other component keeps its
       first row.

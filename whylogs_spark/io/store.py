@@ -76,6 +76,22 @@ class ProfileStore:
     def _read(self, spark: SparkSession) -> DataFrame:
         return spark.read.schema(_STORE_SCHEMA).parquet(self.path)
 
+    def _scan(self, spark: SparkSession, dataset_id: str,
+              date_from: Optional[str] = None,
+              date_to: Optional[str] = None,
+              where: Optional[F.Column] = None) -> DataFrame:
+        """The stored rows of ``dataset_id`` dated within
+        [``date_from``, ``date_to``] (either end open when None) that
+        pass ``where``. The id and the dates are partition columns, so
+        the scan lists only the matching partitions."""
+        cond = F.col("dataset_id") == dataset_id
+        if date_from is not None:
+            cond &= F.col("date") >= date_from
+        if date_to is not None:
+            cond &= F.col("date") <= date_to
+        return self._read(spark).filter(
+            cond if where is None else cond & where)
+
     def get(
         self,
         spark: SparkSession,
@@ -85,11 +101,7 @@ class ProfileStore:
         merge: bool = True,
     ) -> ProfileView:
         """DateQuery equivalent; partition-pruned scan + monoid merge."""
-        df = self._read(spark).filter(F.col("dataset_id") == dataset_id)
-        if date_from is not None:
-            df = df.filter(F.col("date") >= date_from)
-        if date_to is not None:
-            df = df.filter(F.col("date") <= date_to)
+        df = self._scan(spark, dataset_id, date_from, date_to)
         if not merge:
             return ProfileView(df, self.config)
         batches = df.withColumn("src", F.xxhash64(_batch_key()))
@@ -208,11 +220,7 @@ class ProfileStore:
         before the overwrite — never reading and overwriting the same
         files in one plan.
         """
-        df = self._read(spark).filter(F.col("dataset_id") == dataset_id)
-        if date_from is not None:
-            df = df.filter(F.col("date") >= date_from)
-        if date_to is not None:
-            df = df.filter(F.col("date") <= date_to)
+        df = self._scan(spark, dataset_id, date_from, date_to)
         todo = {
             r["date"]: r["max_ts"]
             for r in df.groupBy("date").agg(
@@ -234,16 +242,12 @@ class ProfileStore:
                  .withColumn("dataset_ts", max_ts[F.col("date")])
                  .withColumn("batch_id", ids[F.col("date")])
                  .withColumn("dataset_id", F.lit(dataset_id)))
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (local.write.mode("overwrite").option("compression", _CODEC)
-             .partitionBy("dataset_id", "date").parquet(self.path))
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev)
+        # dynamic overwrite replaces only the rewritten partitions; as a
+        # write option it leaves the session's conf (and any other job
+        # in the session) alone
+        (local.write.mode("overwrite").option("compression", _CODEC)
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("dataset_id", "date").parquet(self.path))
         return len(todo)
 
     def prune(
@@ -336,15 +340,9 @@ class ProfileStore:
         engine-side. The scan is partition-pruned and column/metric
         filters push into it; ``value`` coalesces the double and long
         component slots (e.g. ``distribution/mean`` vs ``counts/n``)."""
-        df = self._read(spark).filter(
-            (F.col("dataset_id") == dataset_id)
-            & (F.col("column") == column)
-            & (F.col("metric") == metric)
-            & (F.col("component") == component))
-        if date_from is not None:
-            df = df.filter(F.col("date") >= date_from)
-        if date_to is not None:
-            df = df.filter(F.col("date") <= date_to)
+        df = self._scan(spark, dataset_id, date_from, date_to, where=(
+            (F.col("column") == column) & (F.col("metric") == metric)
+            & (F.col("component") == component)))
         return df.select(
             "segment",
             F.to_timestamp("dataset_ts").alias("dataset_ts"),
@@ -426,11 +424,7 @@ class ProfileStore:
         arrive?" as one partition-pruned scan plus a lag."""
         from ..core.monitor import missing_periods
 
-        df = self._read(spark).filter(F.col("dataset_id") == dataset_id)
-        if date_from is not None:
-            df = df.filter(F.col("date") >= date_from)
-        if date_to is not None:
-            df = df.filter(F.col("date") <= date_to)
+        df = self._scan(spark, dataset_id, date_from, date_to)
         ts = df.select(
             F.to_timestamp("dataset_ts").alias("dataset_ts")).distinct()
         return missing_periods(
@@ -664,16 +658,10 @@ class ProfileStore:
         if len(set(qcols)) != len(qcols):
             raise ValueError(f"quantiles collide after naming: {qcols}")
 
-        df = self._read(spark).filter(
-            (F.col("dataset_id") == dataset_id)
-            & (F.col("column") == column)
+        df = self._scan(spark, dataset_id, date_from, date_to, where=(
+            (F.col("column") == column)
             & (F.col("metric") == "distribution")
-            & (F.col("component") == "kll")
-            & F.col("b").isNotNull())
-        if date_from is not None:
-            df = df.filter(F.col("date") >= date_from)
-        if date_to is not None:
-            df = df.filter(F.col("date") <= date_to)
+            & (F.col("component") == "kll") & F.col("b").isNotNull()))
         from pyspark.sql import Window as W
         rn = F.row_number().over(
             W.partitionBy("segment").orderBy("dataset_ts"))

@@ -1,18 +1,18 @@
 """Deduplication operators for large-scale corpora.
 
-All variants are expressed as declarative DataFrame plans:
+Every operator returns a DataFrame plan:
 
 * ``exact_dedup`` — hash-groupBy on a normalized fingerprint. One shuffle
   on the fingerprint; survives any scale (the shuffle key is the dedup
   key, skew only if the corpus is mostly one document).
 * ``minhash_signatures`` / ``minhash_lsh_pairs`` / ``minhash_dedup`` —
   MinHash + LSH banding (Broder 1997; Leskovec et al., "Mining of Massive
-  Datasets" ch.3). Signatures are computed WITHOUT exploding shingles:
-  ``array_min(transform(shingles, xxhash64(concat(s, seed))))`` keeps the
-  whole signature computation inside whole-stage codegen. Only band keys
-  (docs × bands rows, each a few bytes) are shuffled — never shingle sets.
-* ``simhash_signatures`` — 64-bit SimHash (Charikar 2002) via bit-vote
-  aggregation over token hashes, again with higher-order functions.
+  Datasets" ch.3). Signatures and shingle sets are computed in one
+  shuffle-free Arrow pass per document batch (numpy over the gram
+  hashes). Only band keys (docs × bands rows, each a few bytes) are
+  shuffled; shingle sets meet only the verified-candidate join.
+* ``simhash_signatures`` — 64-bit SimHash (Charikar 2002) via bit votes
+  over md5 token hashes, again one Arrow pass.
 * ``ngram_jaccard_pairs`` — exact n-gram Jaccard verification for a
   candidate pair set (used as the verify stage after LSH).
 """
@@ -134,24 +134,64 @@ def char_shingles(c: Column, n: int = 5) -> Column:
 
 
 # ----------------------------------------------------------------- minhash
-def hashed_word_shingles(
-    c: Column, n: int = 3
-) -> Column:
-    """Distinct word-n-gram hashes (array<long>) of the normalized text.
+def _hash_lists(chunks: List[np.ndarray]) -> pa.ListArray:
+    """One ``list<int64>`` row per document from its uint64 hashes."""
+    return pa.ListArray.from_arrays(
+        np.cumsum([0] + [len(g) for g in chunks]),
+        pa.concat_arrays([pa.array(g.astype(np.int64)) for g in chunks])
+        if chunks else pa.array([], pa.int64()))
 
-    Tokens are hashed ONCE (xxhash64 on strings), n-grams combine the n
-    token hashes with another xxhash64 over longs — so the expensive
-    string hashing is O(#tokens), not O(#shingles × signature width).
-    """
-    toks = F.split(normalized_text(c), " ")
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    k = F.size(toks) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-        lambda i: F.xxhash64(*[F.get(th, i + j) for j in range(n)]),
-    )
-    short = F.array(F.xxhash64(F.concat_ws(" ", toks)))
-    return F.when(k >= 1, F.array_distinct(grams)).otherwise(short)
+
+def _minhash_kernel(num_hashes: int):
+    """``signatures(gram_chunks) -> list<int64>`` array: per document,
+    the minimum of each of ``num_hashes`` seeded (a*x + b) mod 2^64
+    permutations of its gram hashes. The permutations are evaluated as
+    one (num_hashes × grams) matrix with a single
+    ``minimum.reduceat`` per batch."""
+    rng = np.random.RandomState(0xD5)
+    perm_a = (rng.randint(1, 2 ** 62, size=num_hashes, dtype=np.uint64)
+              * np.uint64(2) + np.uint64(1))
+    perm_b = rng.randint(0, 2 ** 63, size=num_hashes, dtype=np.uint64)
+
+    def signatures(gram_chunks: List[np.ndarray]) -> pa.Array:
+        starts = np.cumsum([0] + [g.size for g in gram_chunks])[:-1]
+        allg = np.concatenate(gram_chunks)
+        # wraparound uint64 arithmetic
+        perm = perm_a[:, None] * allg[None, :] + perm_b[:, None]
+        mins = np.minimum.reduceat(perm, starts, axis=1)
+        return pa.array([row.tolist() for row in mins.astype(np.int64).T],
+                        pa.list_(pa.int64()))
+
+    return signatures
+
+
+def _gram_pass(df: DataFrame, text_col: str, id_col: str, n: int,
+               outputs: dict) -> DataFrame:
+    """One shuffle-free Arrow pass over ``(id_col, text_col)``: each
+    batch's documents become their distinct word-n-gram hashes
+    (``_token_gram_hashes``), and each ``outputs`` entry, ``name ->
+    (type, fn)``, adds column ``name`` as ``fn(gram_chunks)``."""
+    out_schema = T.StructType([df.schema[id_col]] + [
+        T.StructField(name, dt) for name, (dt, _) in outputs.items()])
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        np.seterr(over="ignore")
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            texts = tbl.column(text_col).to_pylist()
+            if not texts:
+                continue
+            grams = [_token_gram_hashes(t, n) for t in texts]
+            yield pa.RecordBatch.from_arrays(
+                [tbl.column(id_col).combine_chunks()]
+                + [fn(grams) for _, fn in outputs.values()],
+                names=[id_col, *outputs])
+
+    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
+        gen, out_schema)
+
+
+_LONGS = T.ArrayType(T.LongType())
 
 
 def shingle_hash_sets(
@@ -163,30 +203,8 @@ def shingle_hash_sets(
     """(id, shingles: array<long>) — sorted distinct word-n-gram hashes,
     computed Arrow-vectorized (see ``_token_gram_hashes``). Basis for
     exact-Jaccard verification; same gram definition as the signatures."""
-    n = shingle_words
-    id_field = df.schema[id_col]
-    out_schema = T.StructType(
-        [id_field, T.StructField("shingles", T.ArrayType(T.LongType()))])
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        np.seterr(over="ignore")
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            texts = tbl.column(text_col).to_pylist()
-            grams = [
-                pa.array(_token_gram_hashes(t, n).astype(np.int64))
-                for t in texts
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(id_col).combine_chunks(),
-                 pa.ListArray.from_arrays(
-                     np.cumsum([0] + [len(g) for g in grams]),
-                     pa.concat_arrays(grams) if grams else
-                     pa.array([], pa.int64()))],
-                names=[id_col, "shingles"])
-
-    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
-        gen, out_schema)
+    return _gram_pass(df, text_col, id_col, shingle_words,
+                      {"shingles": (_LONGS, _hash_lists)})
 
 
 def minhash_signatures(
@@ -195,73 +213,17 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     shingle_words: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, minhash_sig: array<long>[num_hashes]).
 
-    impl="arrow" (default): one Arrow pass — blake2b token hashes, numpy
-    gram combine, the num_hashes permutations (a_i*g + b_i over uint64)
-    evaluated as one (num_hashes × grams) matrix with a single
-    ``minimum.reduceat`` per batch. No shuffle at all: signatures are
-    computed where the docs live. ~4x faster than the SQL path, whose
-    higher-order array lambdas Spark evaluates interpreted (outside
-    whole-stage codegen).
-
-    impl="sql": pure-JVM fallback — explode shingle hashes then
-    hash-aggregate ``min(xxhash64(h, i))`` per id; map-side partial
-    aggregation keeps the shuffle at one signature row per doc.
+    One Arrow pass: blake2b token hashes, numpy gram combine, the
+    num_hashes permutations (a_i*g + b_i over uint64) evaluated as one
+    (num_hashes × grams) matrix with a single ``minimum.reduceat`` per
+    batch. No shuffle at all: signatures are computed where the docs
+    live.
     """
-    if impl == "sql":
-        ex = ensure_parallelism(df).select(
-            F.col(id_col),
-            F.explode(
-                hashed_word_shingles(F.col(text_col), shingle_words)
-            ).alias("__h"),
-        )
-        agg = ex.groupBy(id_col).agg(
-            *[
-                F.min(F.xxhash64("__h", F.lit(i))).alias(f"__m{i}")
-                for i in range(num_hashes)
-            ]
-        )
-        return agg.select(
-            F.col(id_col),
-            F.array(*[f"__m{i}" for i in range(num_hashes)]).alias(
-                "minhash_sig"),
-        )
-
-    n = shingle_words
-    rng = np.random.RandomState(0xD5)
-    perm_a = (rng.randint(1, 2 ** 62, size=num_hashes, dtype=np.uint64)
-              * np.uint64(2) + np.uint64(1))
-    perm_b = rng.randint(0, 2 ** 63, size=num_hashes, dtype=np.uint64)
-    id_field = df.schema[id_col]
-    out_schema = T.StructType(
-        [id_field, T.StructField("minhash_sig", T.ArrayType(T.LongType()))])
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        np.seterr(over="ignore")
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            texts = tbl.column(text_col).to_pylist()
-            if not texts:
-                continue
-            gram_chunks = [_token_gram_hashes(t, n) for t in texts]
-            starts = np.cumsum([0] + [g.size for g in gram_chunks])[:-1]
-            allg = np.concatenate(gram_chunks)
-            # (num_hashes, total_grams) permuted matrix; per-doc min via
-            # one reduceat — all wraparound uint64 arithmetic
-            perm = perm_a[:, None] * allg[None, :] + perm_b[:, None]
-            mins = np.minimum.reduceat(perm, starts, axis=1)
-            sigs = mins.astype(np.int64).T
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(id_col).combine_chunks(),
-                 pa.array([row.tolist() for row in sigs],
-                          pa.list_(pa.int64()))],
-                names=[id_col, "minhash_sig"])
-
-    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
-        gen, out_schema)
+    return _gram_pass(df, text_col, id_col, shingle_words,
+                      {"minhash_sig": (_LONGS, _minhash_kernel(num_hashes))})
 
 
 def minhash_index(
@@ -270,7 +232,6 @@ def minhash_index(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     shingle_words: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, minhash_sig: array<long>, shingles: array<long>) — the
     persistable near-dup INDEX: everything the LSH pair machinery needs
@@ -279,68 +240,14 @@ def minhash_index(
     to Parquet once per ingested corpus and incremental runs never
     touch history text again.
 
-    impl="arrow" (default): ONE Arrow pass computes both — the gram
-    hashes are shared between the signature permutations and the
-    shingle sets (halves the tokenize+hash work vs running
-    ``minhash_signatures`` and ``shingle_hash_sets`` separately).
-    impl="sql": pure-JVM — ``hashed_word_shingles`` plus an in-plan
-    ``array_min(transform(...))`` per permutation; identical values to
-    the explode/groupBy formulation, zero shuffle.
+    ONE Arrow pass computes both: the gram hashes are shared between
+    the signature permutations and the shingle sets (halves the
+    tokenize+hash work vs running ``minhash_signatures`` and
+    ``shingle_hash_sets`` separately).
     """
-    if impl == "sql":
-        sh = hashed_word_shingles(F.col(text_col), shingle_words)
-        out = ensure_parallelism(df).select(
-            F.col(id_col), sh.alias("shingles"))
-        # NB: the transform lambda must be ARITY 1 — PySpark treats a
-        # two-parameter lambda as (element, array_index) and would
-        # shadow the permutation index with the element position
-        sig = F.array(*[
-            F.array_min(F.transform(
-                F.col("shingles"),
-                (lambda ii: lambda h: F.xxhash64(h, F.lit(ii)))(i)))
-            for i in range(num_hashes)
-        ])
-        return out.select(id_col, sig.alias("minhash_sig"), "shingles")
-
-    n = shingle_words
-    rng = np.random.RandomState(0xD5)
-    perm_a = (rng.randint(1, 2 ** 62, size=num_hashes, dtype=np.uint64)
-              * np.uint64(2) + np.uint64(1))
-    perm_b = rng.randint(0, 2 ** 63, size=num_hashes, dtype=np.uint64)
-    id_field = df.schema[id_col]
-    out_schema = T.StructType([
-        id_field,
-        T.StructField("minhash_sig", T.ArrayType(T.LongType())),
-        T.StructField("shingles", T.ArrayType(T.LongType())),
-    ])
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        np.seterr(over="ignore")
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            texts = tbl.column(text_col).to_pylist()
-            if not texts:
-                continue
-            gram_chunks = [_token_gram_hashes(t, n) for t in texts]
-            starts = np.cumsum([0] + [g.size for g in gram_chunks])[:-1]
-            allg = np.concatenate(gram_chunks)
-            perm = perm_a[:, None] * allg[None, :] + perm_b[:, None]
-            mins = np.minimum.reduceat(perm, starts, axis=1)
-            sigs = mins.astype(np.int64).T
-            sh_arrays = [pa.array(g.astype(np.int64))
-                         for g in gram_chunks]
-            yield pa.RecordBatch.from_arrays(
-                [tbl.column(id_col).combine_chunks(),
-                 pa.array([row.tolist() for row in sigs],
-                          pa.list_(pa.int64())),
-                 pa.ListArray.from_arrays(
-                     np.cumsum([0] + [len(g) for g in gram_chunks]),
-                     pa.concat_arrays(sh_arrays) if sh_arrays else
-                     pa.array([], pa.int64()))],
-                names=[id_col, "minhash_sig", "shingles"])
-
-    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
-        gen, out_schema)
+    return _gram_pass(df, text_col, id_col, shingle_words, {
+        "minhash_sig": (_LONGS, _minhash_kernel(num_hashes)),
+        "shingles": (_LONGS, _hash_lists)})
 
 
 def _band_structs(num_hashes: int, bands: int,
@@ -463,7 +370,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_words: int = 3,
     jaccard_threshold: float = 0.5,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via LSH banding + exact verify.
 
@@ -483,14 +389,8 @@ def minhash_lsh_pairs(
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
     sig = minhash_signatures(df, text_col, id_col, num_hashes,
-                             shingle_words, impl)
-    if impl == "sql":
-        sh = ensure_parallelism(df).select(
-            F.col(id_col),
-            hashed_word_shingles(F.col(text_col), shingle_words)
-            .alias("shingles"))
-    else:
-        sh = shingle_hash_sets(df, text_col, id_col, shingle_words)
+                             shingle_words)
+    sh = shingle_hash_sets(df, text_col, id_col, shingle_words)
     return _lsh_verified_pairs(sig, sh, id_col, num_hashes, bands,
                                jaccard_threshold)
 
@@ -605,7 +505,6 @@ def minhash_dedup(
     bands: int = 16,
     shingle_words: int = 3,
     jaccard_threshold: float = 0.8,
-    impl: str = "arrow",
     reuse_signatures: bool = False,
 ) -> DataFrame:
     """Drop near-duplicates: single-link clusters of verified pairs
@@ -677,7 +576,7 @@ def minhash_dedup(
 
     if reuse_signatures:
         idx = minhash_index(uniq, text_col, id_col, num_hashes,
-                            shingle_words, impl).persist()
+                            shingle_words).persist()
         try:
             pairs = _lsh_verified_pairs(
                 idx, idx, id_col, num_hashes, bands,
@@ -691,7 +590,7 @@ def minhash_dedup(
     else:
         pairs = minhash_lsh_pairs(
             uniq, text_col, id_col, num_hashes, bands, shingle_words,
-            jaccard_threshold, impl)
+            jaccard_threshold)
         comp = connected_components(pairs, "id_a", "id_b")
     # survivor iff id == final cluster winner: the rep's component
     # label when the rep joined any verified pair, else the rep itself.
@@ -894,8 +793,6 @@ def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
-    impl: str = "arrow",
 ) -> DataFrame:
     """(id, simhash: long) — 64-bit SimHash over whitespace tokens.
 
@@ -907,101 +804,53 @@ def simhash_signatures(
     bit-for-bit outside Spark (the correctness gate recomputes them in
     pure SQL; see ``__spark_entry__`` simhash oracles).
 
-    impl="arrow" (default): one shuffle-free Arrow pass — C-speed md5
-    token hashes, the 64 bit-votes evaluated as one (bits × tokens)
-    matrix with a single ``add.reduceat`` per batch.
-
-    impl="sql": pure-JVM explode + hash-aggregate of 64 conditional sums
-    (map-side combine; shuffle = docs x 8 bytes); the token-hash
-    ``transform`` lambda evaluates interpreted, so this is slower.
+    One shuffle-free Arrow pass: C-speed md5 token hashes, the 64
+    bit-votes evaluated as one (64 × tokens) matrix with a single
+    ``add.reduceat`` per batch.
     """
-    if impl == "arrow":
-        if bits != 64:
-            raise ValueError("arrow simhash supports bits=64")
-        id_field = df.schema[id_col]
-        out_schema = T.StructType(
-            [id_field, T.StructField("simhash", T.LongType())])
+    id_field = df.schema[id_col]
+    out_schema = T.StructType(
+        [id_field, T.StructField("simhash", T.LongType())])
 
-        def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import hashlib
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import hashlib
 
-            np.seterr(over="ignore")
-            shifts = np.arange(64, dtype=np.uint64)
-            for batch in batches:
-                tbl = pa.Table.from_batches([batch])
-                texts = tbl.column(text_col).to_pylist()
-                if not texts:
-                    continue
-                tok_chunks = []
-                for t in texts:
-                    toks = " ".join((t or "").lower().split()).split(" ")
-                    tok_chunks.append(np.frombuffer(
-                        b"".join(
-                            hashlib.md5(
-                                s.encode("utf-8", "surrogatepass")
-                            ).digest()[:8]
-                            for s in toks),
-                        dtype=">u8").astype(np.uint64))
-                starts = np.cumsum(
-                    [0] + [c.size for c in tok_chunks])[:-1]
-                allh = np.concatenate(tok_chunks)
-                counts = np.array([c.size for c in tok_chunks])
-                # (64, tokens) 0/1 matrix; per-doc ones via one reduceat
-                bitmat = ((allh[None, :] >> shifts[:, None])
-                          & np.uint64(1)).astype(np.int32)
-                ones = np.add.reduceat(bitmat, starts, axis=1)
-                set_bits = (2 * ones) > counts[None, :]   # vote > 0
-                sig = np.zeros(len(texts), dtype=np.uint64)
-                for b in range(64):
-                    sig |= set_bits[b].astype(np.uint64) << np.uint64(b)
-                yield pa.RecordBatch.from_arrays(
-                    [tbl.column(id_col).combine_chunks(),
-                     pa.array(sig.astype(np.int64))],
-                    names=[id_col, "simhash"])
+        np.seterr(over="ignore")
+        shifts = np.arange(64, dtype=np.uint64)
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            texts = tbl.column(text_col).to_pylist()
+            if not texts:
+                continue
+            tok_chunks = []
+            for t in texts:
+                toks = " ".join((t or "").lower().split()).split(" ")
+                tok_chunks.append(np.frombuffer(
+                    b"".join(
+                        hashlib.md5(
+                            s.encode("utf-8", "surrogatepass")
+                        ).digest()[:8]
+                        for s in toks),
+                    dtype=">u8").astype(np.uint64))
+            starts = np.cumsum(
+                [0] + [c.size for c in tok_chunks])[:-1]
+            allh = np.concatenate(tok_chunks)
+            counts = np.array([c.size for c in tok_chunks])
+            # (64, tokens) 0/1 matrix; per-doc ones via one reduceat
+            bitmat = ((allh[None, :] >> shifts[:, None])
+                      & np.uint64(1)).astype(np.int32)
+            ones = np.add.reduceat(bitmat, starts, axis=1)
+            set_bits = (2 * ones) > counts[None, :]   # vote > 0
+            sig = np.zeros(len(texts), dtype=np.uint64)
+            for b in range(64):
+                sig |= set_bits[b].astype(np.uint64) << np.uint64(b)
+            yield pa.RecordBatch.from_arrays(
+                [tbl.column(id_col).combine_chunks(),
+                 pa.array(sig.astype(np.int64))],
+                names=[id_col, "simhash"])
 
-        return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
-            gen, out_schema)
-
-    toks = F.split(normalized_text(F.col(text_col)), " ")
-
-    def md5_u64(t: Column) -> Column:
-        # first 16 hex chars of md5 as an UNSIGNED 64-bit value, then
-        # two's-complement folded into a signed long (decimal(20,0) holds
-        # the unsigned range) — identical bits to the arrow impl
-        ud = F.conv(F.substring(F.md5(t), 1, 16), 16, 10).cast(
-            T.DecimalType(20, 0))
-        two63 = F.lit(str(2 ** 63)).cast(T.DecimalType(20, 0))
-        two64 = F.lit(str(2 ** 64)).cast(T.DecimalType(21, 0))
-        return (
-            F.when(ud >= two63, (ud.cast(T.DecimalType(21, 0)) - two64))
-            .otherwise(ud)
-            .cast(T.LongType())
-        )
-
-    ex = ensure_parallelism(df).select(
-        F.col(id_col),
-        F.explode(F.transform(toks, md5_u64)).alias("__h"),
-    )
-    votes = ex.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("__h"), b).bitwiseAND(F.lit(1)) == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"__v{b}")
-            for b in range(bits)
-        ]
-    )
-    sig = None
-    for b in range(bits):
-        # two's complement: setting bit 63 of a signed long == adding -2^63
-        bit_val = -(2 ** 63) if b == 63 else 2 ** b
-        bc = F.when(
-            F.col(f"__v{b}") > 0, F.lit(bit_val).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sig = bc if sig is None else sig + bc
-    return votes.select(F.col(id_col), sig.alias("simhash"))
+    return ensure_parallelism(df.select(id_col, text_col)).mapInArrow(
+        gen, out_schema)
 
 
 def simhash_hamming(a: Column, b: Column) -> Column:
@@ -1078,7 +927,6 @@ def simhash_neardup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash: signatures via
     :func:`simhash_signatures`, pair join via the generic
@@ -1086,7 +934,7 @@ def simhash_neardup_pairs(
 
     Returns (id_a, id_b, hamming) with id_a < id_b, hamming <= max_hamming.
     """
-    sigs = simhash_signatures(df, text_col, id_col, impl=impl)
+    sigs = simhash_signatures(df, text_col, id_col)
     return hamming_neardup_pairs(
         sigs, "simhash", id_col=id_col, max_hamming=max_hamming)
 
@@ -1497,7 +1345,6 @@ def incremental_minhash_dedup(
     bands: int = 16,
     shingle_words: int = 3,
     jaccard_threshold: float = 0.8,
-    impl: str = "arrow",
     strategy: str = "broadcast",
     max_bucket: int = 2048,
 ) -> DataFrame:
@@ -1537,7 +1384,7 @@ def incremental_minhash_dedup(
     idx_cols = {"minhash_sig", "shingles"}
     b_idx = (batch if idx_cols <= set(batch.columns)
              else minhash_index(batch, text_col, id_col, num_hashes,
-                                shingle_words, impl))
+                                shingle_words))
     # The batch index feeds FIVE plan branches (in-batch banding + its
     # two verify joins, the history probe keys, and the batch shingle
     # side): cut its lineage so the minhash pass runs once, not five
@@ -1555,7 +1402,7 @@ def incremental_minhash_dedup(
         # pass that would either run twice or be materialized at
         # history scale (r13; same split minhash_lsh_pairs uses)
         h_sig = minhash_signatures(history, text_col, id_col,
-                                   num_hashes, shingle_words, impl)
+                                   num_hashes, shingle_words)
         h_sh_src = shingle_hash_sets(history, text_col, id_col,
                                      shingle_words)
 
@@ -1618,7 +1465,6 @@ def cross_source_overlap(
     bands: int = 16,
     shingle_words: int = 3,
     jaccard_threshold: float = 0.8,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Near-duplicate LEAKAGE matrix between corpus slices: how many
     verified J >= threshold pairs connect each (slice, slice) cell —
@@ -1633,7 +1479,7 @@ def cross_source_overlap(
     (id, group) projection — broadcast-friendly.
     """
     idx = minhash_index(df, text_col, id_col, num_hashes,
-                        shingle_words, impl)
+                        shingle_words)
     pairs = lsh_pairs_from_index(idx, id_col, num_hashes, bands,
                                  jaccard_threshold)
     side = df.select(F.col(id_col), F.col(group_col))
@@ -1770,7 +1616,6 @@ def minhash_recall_estimate(
     sample_per_mille: int = 10,
     max_sample: int = 20_000,
     band_edges=(0.5, 0.6, 0.7, 0.8, 0.9, 1.0),
-    impl: str = "arrow",
 ) -> DataFrame:
     """Empirical recall of the LSH banding stage, by exact-Jaccard band
     — the tuning tool for ``minhash_dedup`` parameters.
@@ -1842,9 +1687,8 @@ def minhash_recall_estimate(
 
     detected = minhash_lsh_pairs(
         sample, text_col, id_col, num_hashes=num_hashes, bands=bands,
-        shingle_words=shingle_words, jaccard_threshold=edges[0],
-        impl=impl).select("id_a", "id_b",
-                          F.lit(True).alias("__found"))
+        shingle_words=shingle_words, jaccard_threshold=edges[0]
+    ).select("id_a", "id_b", F.lit(True).alias("__found"))
 
     band_idx = None
     for i in range(len(edges) - 1):

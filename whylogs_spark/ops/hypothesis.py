@@ -21,14 +21,13 @@ shuffle (the ``poisson_bootstrap_diff`` shape).
 
 P-values come from scalar special functions (chi2 / F survival) on
 the bounded report via one Arrow batch — the ``with_trend_pvalues``
-pattern — never from per-row Python.  The F survival function is the
-regularized incomplete beta via the standard Lentz continued
-fraction (Abramowitz & Stegun 26.5.8 / 26.6.2).
+pattern — never from per-row Python.  The F survival function is
+``core.drift``'s regularized incomplete beta (Lentz continued
+fraction, Abramowitz & Stegun 26.5.8 / 26.6.2).
 """
 
 from __future__ import annotations
 
-import math
 from typing import Iterator, Sequence
 
 import pandas as pd
@@ -36,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from whylogs_spark.core.drift import chi2_sf
+from whylogs_spark.core.drift import _betainc_reg, chi2_sf
 from whylogs_spark.core.prefix import running_sums
 
 __all__ = [
@@ -44,55 +43,6 @@ __all__ = [
     "mcnemar_test", "cochrans_q", "randomization_test_means",
     "f_sf",
 ]
-
-
-def _betacf(a: float, b: float, x: float) -> float:
-    """Continued fraction for the incomplete beta (Lentz's method)."""
-    tiny = 1e-300
-    qab, qap, qam = a + b, a + 1.0, a - 1.0
-    c, d = 1.0, 1.0 - qab * x / qap
-    if abs(d) < tiny:
-        d = tiny
-    d = 1.0 / d
-    h = d
-    for m in range(1, 300):
-        m2 = 2 * m
-        aa = m * (b - m) * x / ((qam + m2) * (a + m2))
-        d = 1.0 + aa * d
-        if abs(d) < tiny:
-            d = tiny
-        c = 1.0 + aa / c
-        if abs(c) < tiny:
-            c = tiny
-        d = 1.0 / d
-        h *= d * c
-        aa = -(a + m) * (qab + m) * x / ((a + m2) * (qap + m2))
-        d = 1.0 + aa * d
-        if abs(d) < tiny:
-            d = tiny
-        c = 1.0 + aa / c
-        if abs(c) < tiny:
-            c = tiny
-        d = 1.0 / d
-        delta = d * c
-        h *= delta
-        if abs(delta - 1.0) < 1e-14:
-            break
-    return h
-
-
-def _betainc_reg(a: float, b: float, x: float) -> float:
-    """Regularized incomplete beta I_x(a, b)."""
-    if x <= 0.0:
-        return 0.0
-    if x >= 1.0:
-        return 1.0
-    ln_front = (math.lgamma(a + b) - math.lgamma(a) - math.lgamma(b)
-                + a * math.log(x) + b * math.log1p(-x))
-    front = math.exp(ln_front)
-    if x < (a + 1.0) / (a + b + 2.0):
-        return front * _betacf(a, b, x) / a
-    return 1.0 - front * _betacf(b, a, 1.0 - x) / b
 
 
 def f_sf(f: float, d1: float, d2: float) -> float:
