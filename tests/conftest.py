@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -146,7 +147,7 @@ SLOW_TESTS = {
     "test_relations_ranking.py::test_pr_auc_exact_edges",
     "test_streaming.py::test_stateful_streaming_sessionize",
     "test_streaming.py::test_streaming_model_monitor_matches_batch_ece",
-    "test_udf_unicode_embeddings.py::test_profile_store_prune_retention",
+    "test_store.py::test_profile_store_prune_retention",
     "test_udf_unicode_embeddings.py::test_unicode_range_profile",
     "test_weighted_pvalues_qq.py::test_bh_matches_reference",
     "test_asof.py::test_hot_key_buckets_equivalent",
@@ -182,7 +183,7 @@ SLOW_TESTS = {
     "test_streaming.py::test_rolling_sink_merges_to_batch_profile",
     "test_streaming.py::test_rolling_sink_segmented",
     "test_udf_unicode_embeddings.py::test_embedding_drift_identical_and_shifted",
-    "test_udf_unicode_embeddings.py::test_profile_store_roundtrip",
+    "test_store.py::test_profile_store_roundtrip",
     "test_udf_unicode_embeddings.py::test_reference_centroids_and_profile",
     "test_udf_unicode_embeddings.py::test_svd_lsi_residuals",
     "test_wide.py::test_wide_matches_narrow",
@@ -225,6 +226,18 @@ def profile_wide(df, **kwargs):
     with pytest.MonkeyPatch.context() as m:
         m.setattr(MetricConfig, "wide_column_threshold", 1)
         return wsp.profile(df, **kwargs)
+
+
+@contextlib.contextmanager
+def old_writer():
+    """Within the block, ``ProfileStore.write`` writes as it did before
+    the format marker: every root reads as unmarked and holding data,
+    so a write appends its rows as they are and marks nothing."""
+    from whylogs_spark.io import store
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(store, "_root_state", lambda spark, path: False)
+        yield
 
 
 @pytest.fixture(scope="session")

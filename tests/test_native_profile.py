@@ -16,12 +16,12 @@ import whylogs_spark as wsp
 from whylogs_spark.core.plan import Plan, named
 from whylogs_spark.core.planner import plan_dataframe
 from whylogs_spark.core.profiler import (ProfileView, _native_frame,
-                                         merge_profiles)
+                                         merge_profiles, merge_segments)
 from whylogs_spark.core.sketches import FrequentStringsSketch, KllSketch
 from whylogs_spark.io.dsketch import fi_to_ds_bytes, fi_with_null_count
 from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.io.why1 import read_why1, read_why1_rows, write_why1
-from tests.conftest import profile_wide
+from tests.conftest import old_writer, profile_wide
 
 @pytest.fixture(scope="module")
 def frame(spark):
@@ -126,11 +126,14 @@ def test_store_mixing_legacy_and_datasketches_rows(spark, tmp_path):
     assert bytes(mixed[1].get_component("x", "distribution", "kll"))[:4] \
         == b"WSK1"
 
+    # an unmarked store, as the engine wrote before the format marker:
+    # its reads probe for the legacy blobs
     store = ProfileStore(str(tmp_path / "store"))
     dates = []
     for i, v in enumerate(mixed):
         ts = dt.datetime(2024, 3, 1 + i, tzinfo=dt.timezone.utc)
-        store.write(v, "mix", ts)
+        with old_writer():
+            store.write(v, "mix", ts)
         dates.append(ts.date().isoformat())
 
     got = store.get(spark, "mix", dates[0], dates[1])
@@ -205,8 +208,6 @@ def test_store_plain_frequent_items_blobs(spark, tmp_path):
     reads appended the count hold them) reads, collapses segments and
     scores drift like a store written with the counts: the store probe
     finds the plain blobs and appends the count."""
-    from whylogs_spark.core.profiler import merge_segments
-
     days = {1: [("a", i % 2) for i in range(50)]
             + [("b", i % 2) for i in range(30)] + [("c", 0)] * 20,
             2: [("a", 0)] * 10 + [("b", 1)] * 30
@@ -222,8 +223,9 @@ def test_store_plain_frequent_items_blobs(spark, tmp_path):
                 r["b"] = bytes(r["b"])[:-8]
                 assert fi_with_null_count(r["b"]) == r["b"] + bytes(8)
         ts = dt.datetime(2024, 3, day, tzinfo=dt.timezone.utc)
-        plain.write(ProfileView(pa.Table.from_pylist(
-            table, view.table().schema), spark=view.spark), "ds", ts)
+        with old_writer():  # an unmarked store keeps the plain blobs
+            plain.write(ProfileView(pa.Table.from_pylist(
+                table, view.table().schema), spark=view.spark), "ds", ts)
         full.write(view, "ds", ts)
 
     def items(view, segment):
@@ -242,6 +244,27 @@ def test_store_plain_frequent_items_blobs(spark, tmp_path):
             "2024-03-02", by_segment=by_segment) == full.drift_between(
             spark, "ds", "2024-03-01", "2024-03-01", "2024-03-02",
             "2024-03-02", by_segment=by_segment)
+
+
+def test_merge_of_local_views_with_plain_frequent_items_blobs(spark):
+    """Local views whose ``mg`` blobs are plain DataSketches bytes merge:
+    the driver-side check finds them as the store probe does, and the
+    merge appends Spark's null count before ``approx_top_k_combine``
+    reads them."""
+    view = wsp.profile(spark.createDataFrame(
+        [("a",)] * 5 + [("b",)] * 3, "w string"))
+    table = view.table().to_pylist()
+    for r in table:
+        if r["component"] == "mg":
+            r["b"] = bytes(r["b"])[:-8]
+    plain = ProfileView(pa.Table.from_pylist(table, view.table().schema),
+                        spark=view.spark)
+    for merged, k in ((merge_profiles([plain, plain]), 2),
+                      (merge_segments(plain), 1)):
+        items = json.loads(merged.get_component("w", "frequent_items",
+                                                "items"))
+        assert [(i["value"], i["est"]) for i in items] == [
+            ("a", 5 * k), ("b", 3 * k)]
 
 
 def test_merge_of_one_profile_is_that_profile(spark):

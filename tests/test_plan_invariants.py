@@ -18,6 +18,7 @@ from whylogs_spark.core.plan import Plan
 from whylogs_spark.core.profiler import merge_profiles, merge_segments
 from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.ops.graph import pagerank
+from whylogs_spark.streaming.rolling import RollingProfileSink
 from tests.conftest import profile_wide
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "whylogs_spark"
@@ -108,16 +109,24 @@ def test_profile_codegen_tier_runs_in_whole_stage_codegen(spark):
 
 def test_merges_run_no_python_node(spark, tmp_path):
     """Every merge over DataSketches-only profiles is one native
-    program: store reads, ⊕, segment collapse, drift, quantile series
-    and compaction plan no Python node."""
+    program: store writes and reads, ⊕, segment collapse, drift,
+    quantile series, compaction and a rolling sink's read plan no
+    Python node."""
     small = _frame(spark)
     flat = wsp.profile(small)
     seg = wsp.profile(small, segment_by=["seg"])
     store = ProfileStore(str(tmp_path / "store"))
-    for day, hour in ((1, 0), (2, 0), (2, 12), (3, 0)):
+    for day, hour in ((1, 0), (2, 0), (2, 12)):
         store.write(flat, "ds", dt.datetime(2024, 3, day, hour,
                                             tzinfo=dt.timezone.utc))
+    sink = RollingProfileSink(str(tmp_path / "sink"), ts_col="ts",
+                              window="1 day", columns=["x", "s"])
+    for batch_id in (0, 1):
+        sink(small.withColumn("ts", F.timestamp_seconds(
+            F.col("i") * 3600 * 10)), batch_id)
     calls = {
+        "write": lambda: store.write(flat, "ds", dt.datetime(
+            2024, 3, 3, tzinfo=dt.timezone.utc)),
         "get": lambda: store.get(spark, "ds").to_pandas(),
         "merge_profiles": lambda: merge_profiles([flat, flat]).to_pandas(),
         "merge_segments": lambda: merge_segments(seg).to_pandas(),
@@ -127,6 +136,7 @@ def test_merges_run_no_python_node(spark, tmp_path):
         "quantile_series": lambda: store.quantile_series(
             spark, "ds", "x", window=2).collect(),
         "compact": lambda: store.compact(spark, "ds"),
+        "read_profiles": lambda: sink.read_profiles(spark).to_pandas(),
     }
     for name, call in calls.items():
         result, plans = Plan.executed(spark, call)
@@ -135,6 +145,28 @@ def test_merges_run_no_python_node(spark, tmp_path):
             assert not p.python_nodes(), (name, p.names())
         if name == "compact":
             assert result == 1
+
+
+def test_marked_store_reads_launch_two_jobs(spark, tmp_path,
+                                            launched_jobs):
+    """A store this code created is marked as holding DataSketches
+    blobs only, so ``get`` and ``drift_between`` skip the legacy-blob
+    probe: the merge (or the merged-sketch collect) and no more than
+    one job besides."""
+    flat = wsp.profile(_frame(spark))
+    store = ProfileStore(str(tmp_path / "store"))
+    for day in (1, 2, 3):
+        store.write(flat, "ds", dt.datetime(2024, 3, day,
+                                            tzinfo=dt.timezone.utc))
+    calls = {
+        "get": lambda: store.get(spark, "ds").to_pandas(),
+        "drift_between": lambda: store.drift_between(
+            spark, "ds", "2024-03-01", "2024-03-01", "2024-03-02",
+            "2024-03-03"),
+    }
+    for name, call in calls.items():
+        _, jobs = launched_jobs(call)
+        assert 1 <= len(jobs) <= 2, (name, sorted(jobs))
 
 
 def _edge_side(node):

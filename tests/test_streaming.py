@@ -195,6 +195,58 @@ def test_rolling_sink_segmented(spark, events, events_stream_src, tmp_path):
     assert len(got) == len(truth_map)
 
 
+def _sink_counts(view):
+    return {json.loads(r["segment"])["__wstart"]: r["n"]
+            for r in view.df.filter(
+                (F.col("metric") == "counts") & (F.col("component") == "n")
+            ).collect()}
+
+
+def test_rolling_sink_replayed_batch_counts_once(spark, events, tmp_path):
+    """``foreachBatch`` is at-least-once: a micro-batch handed to the
+    sink again replaces its first write instead of counting twice, and
+    the sink marks its new directory."""
+    from whylogs_spark.io.store import MARKER
+
+    path = tmp_path / "profiles"
+    sink = RollingProfileSink(str(path), ts_col="ts", window="1 day",
+                              columns=["value"])
+    first, second = events.randomSplit([0.5, 0.5], seed=3)
+    for batch_id, frame in ((0, first), (1, second), (1, second)):
+        sink(frame, batch_id)
+    assert (path / MARKER).exists()
+    truth = {r["d"]: r["count"] for r in events.groupBy(
+        F.date_trunc("day", F.col("ts")).cast("string").alias("d"))
+        .count().collect()}
+    assert _sink_counts(sink.read_profiles(spark)) == truth
+
+
+def test_rolling_sink_reads_a_directory_of_the_former_layout(spark, events,
+                                                             tmp_path):
+    """A sink directory written before writes carried their time (plain
+    appends, ``src`` an int, no marker) still reads and merges, and a
+    replay written into it by this sink replaces that batch."""
+    path = str(tmp_path / "old_profiles")
+    first, second = events.randomSplit([0.5, 0.5], seed=5)
+    for batch_id, frame in ((0, first), (1, second)):
+        view = wsp.profile(
+            frame.withColumn("__wstart", F.window("ts", "1 day")
+                             .getField("start").cast("string")),
+            segment_by=["__wstart"], columns=["value"])
+        (view.df.withColumn("window_start",
+                            F.get_json_object("segment", "$.__wstart"))
+         .withColumn("src", F.lit(batch_id))
+         .write.mode("append").parquet(path))
+    sink = RollingProfileSink(path, ts_col="ts", window="1 day",
+                              columns=["value"])
+    truth = {r["d"]: r["count"] for r in events.groupBy(
+        F.date_trunc("day", F.col("ts")).cast("string").alias("d"))
+        .count().collect()}
+    assert _sink_counts(sink.read_profiles(spark)) == truth
+    sink(second, 1)
+    assert _sink_counts(sink.read_profiles(spark)) == truth
+
+
 def test_stateful_streaming_sessionize(spark, tmp_path):
     """Closed sessions from the stateful streaming operator must equal
     the batch sessionize() result once the watermark passes every

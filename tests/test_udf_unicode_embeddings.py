@@ -1,4 +1,4 @@
-"""UDF schema, unicode-range, embedding metrics, NLP stats, store,
+"""UDF schema, unicode-range, embedding metrics, NLP stats and
 multimodal plumbing."""
 
 import json
@@ -13,7 +13,6 @@ import whylogs_spark as wsp
 from whylogs_spark.core import embeddings as emb_mod
 from whylogs_spark.core import unicode_range as ur
 from whylogs_spark.core.udf_schema import UdfSchema, UdfSpec, pandas_fn
-from whylogs_spark.io.store import ProfileStore
 from whylogs_spark.ops import multimodal
 
 
@@ -95,28 +94,6 @@ def test_nlp_profile(documents):
     wide = view.to_pandas()
     cols = set(wide["column"])
     assert {"doc_length", "term", "term_length"} <= cols
-
-
-def test_profile_store_roundtrip(spark, lineitem, tmp_path):
-    store = ProfileStore(str(tmp_path / "store"))
-    half_a = lineitem.filter("l_orderkey % 2 = 0")
-    half_b = lineitem.filter("l_orderkey % 2 = 1")
-    import datetime as dt
-
-    store.write(wsp.profile(half_a, columns=["l_quantity"]), "ds1",
-                dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc))
-    store.write(wsp.profile(half_b, columns=["l_quantity"]), "ds1",
-                dt.datetime(2026, 1, 2, tzinfo=dt.timezone.utc))
-    store.write(wsp.profile(half_a, columns=["l_quantity"]), "ds2",
-                dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc))
-
-    assert set(store.list_datasets(spark)) == {"ds1", "ds2"}
-    merged = store.get(spark, "ds1")
-    n = merged.get_component("l_quantity", "counts", "n")
-    assert n == lineitem.count()
-    only_day1 = store.get(spark, "ds1", date_to="2026-01-01")
-    assert only_day1.get_component("l_quantity", "counts", "n") == \
-        half_a.count()
 
 
 def test_multimodal_header_sniff(spark, tmp_path):
@@ -1259,59 +1236,3 @@ def test_embedding_drift_null_elements_raise(spark):
         "id long, embedding array<float>")
     with pytest.raises(ValueError, match="null elements"):
         embedding_drift(tgt, ref)
-
-
-def test_profile_store_prune_retention(spark, lineitem, tmp_path):
-    """prune deletes whole (dataset, date) partitions older than the
-    cutoff — no rewrite of surviving dates — and validates its input."""
-    import datetime as dt
-
-    store = ProfileStore(str(tmp_path / "prune_store"))
-    for day in (1, 2, 3):
-        store.write(
-            wsp.profile(lineitem.limit(100), columns=["l_quantity"]),
-            "ds1", dt.datetime(2026, 1, day, tzinfo=dt.timezone.utc))
-    store.write(
-        wsp.profile(lineitem.limit(50), columns=["l_quantity"]),
-        "ds2", dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc))
-
-    # scoped prune: only ds1's old date goes
-    assert store.prune(spark, "2026-01-02", dataset_id="ds1") == 1
-    left = store._read(spark).select("dataset_id", "date").distinct()
-    got = {(r.dataset_id, str(r.date)) for r in left.collect()}
-    assert got == {("ds1", "2026-01-02"), ("ds1", "2026-01-03"),
-                   ("ds2", "2026-01-01")}
-    # global prune takes ds2's old date too
-    assert store.prune(spark, "2026-01-02") == 1
-    got2 = {(r.dataset_id, str(r.date)) for r in
-            store._read(spark).select("dataset_id", "date")
-            .distinct().collect()}
-    assert got2 == {("ds1", "2026-01-02"), ("ds1", "2026-01-03")}
-    # surviving data still reads as a profile
-    assert store.get(spark, "ds1").get_component(
-        "l_quantity", "counts", "n") == 200
-    with pytest.raises(ValueError, match="ISO date"):
-        store.prune(spark, "yesterday")
-    assert store.prune(spark, "2020-01-01") == 0
-
-
-def test_profile_store_prune_escaped_ids_and_validation(spark,
-                                                        lineitem,
-                                                        tmp_path):
-    """Hive-escaped dataset ids (':' -> %3A on disk) must still prune;
-    invalid dates must raise, not lexicographically over-delete."""
-    import datetime as dt
-
-    store = ProfileStore(str(tmp_path / "esc_store"))
-    for day in (1, 2):
-        store.write(
-            wsp.profile(lineitem.limit(20), columns=["l_quantity"]),
-            "jobs:2024",
-            dt.datetime(2026, 2, day, tzinfo=dt.timezone.utc))
-    assert store.prune(spark, "2026-02-02",
-                       dataset_id="jobs:2024") == 1
-    assert store._read(spark).select("date").distinct().count() == 1
-    with pytest.raises(ValueError, match="valid ISO date"):
-        store.prune(spark, "2026-19-99")
-    with pytest.raises(ValueError, match="valid ISO date"):
-        store.prune(spark, "2026-31-01")

@@ -45,6 +45,7 @@ table — see ``merge_profiles``.
 from __future__ import annotations
 
 import json
+import struct
 from functools import partial, reduce
 from typing import (Dict, Iterable, Iterator, List, NamedTuple, Optional,
                     Sequence, Union)
@@ -497,10 +498,25 @@ _LEGACY_SQL = "substring(b, 1, 4) IN ({}) OR {}".format(
 
 
 def _has_legacy(table: pa.Table) -> bool:
-    """Whether a local profile table holds a legacy sketch blob."""
-    heads = pc.binary_slice(table.column("b"), 0, 4)
-    return bool(pc.any(pc.is_in(heads, value_set=pa.array(
-        _LEGACY_HEADS, pa.binary()))).as_py())
+    """Whether a local profile table holds a blob ``_LEGACY_SQL``
+    matches, checked on the driver: a legacy head, or a frequent-items
+    sketch that ``io.dsketch.fi_with_null_count`` would change (a
+    malformed one reads false, as in SQL)."""
+    from ..io.dsketch import fi_with_null_count
+
+    b = table.column("b")
+    if pc.any(pc.is_in(pc.binary_slice(b, 0, 4), value_set=pa.array(
+            _LEGACY_HEADS, pa.binary()))).as_py():
+        return True
+
+    def plain(blob: bytes) -> bool:
+        try:
+            return fi_with_null_count(blob) != blob
+        except struct.error:
+            return False
+
+    fi = b.filter(pc.equal(pc.binary_slice(b, 2, 3), b"\x0a"))
+    return any(map(plain, fi.to_pylist()))
 
 
 def _legacy_to_ds(batches: Iterator[pa.RecordBatch]
@@ -521,10 +537,13 @@ def _ds_blobs(df: DataFrame, legacy: Optional[bool] = None) -> DataFrame:
     """``df`` with DataSketches ``b`` blobs only, the one input the
     native merges read. Legacy blobs (stores written before profiles
     held Spark's sketches) and plain frequent-items sketches
-    (``_LEGACY_SQL``) are rewritten by one mapInArrow, planned only
-    when ``legacy`` says they exist; when it is None, one job over ``df`` counts them and returns one
-    number per partition. (A ``limit(1)`` scans a multi-file store in
-    several rounds and a global aggregate in two stages, one job each.)"""
+    (``_LEGACY_SQL``) are rewritten by one mapInArrow, planned only when
+    ``legacy`` is true. A caller that knows passes it: a local table's
+    ``_has_legacy``, or False for a store marked as holding DataSketches
+    blobs only (``io.store.MARKER``). When it is None, one job over
+    ``df`` probes for them, returning one count per partition. (A
+    ``limit(1)`` scans a multi-file store in several rounds, and a
+    global aggregate runs in two stages, one job each.)"""
     if legacy is None:
         legacy = df.where(_LEGACY_SQL).select(F.lit(True)) \
             ._jdf.queryExecution().toRdd().count() > 0

@@ -10,6 +10,19 @@ concurrency); queries prune partitions via dataset_id/date predicates —
 Catalyst partition pruning makes "get profiles for dataset X, last 7
 days" a metadata-only scan — and merge the matching rows on read via the
 profile monoid.
+
+Format marker: ``write`` into a new root (missing, or holding no
+``dataset_id=`` partition) also creates the empty file ``MARKER``
+(``_DATASKETCHES``) at the root, as ``RollingProfileSink`` does in its
+directory on its first batch. Its one promise: every ``b`` blob under
+the root is Spark DataSketches bytes, so ``get`` (and ``schema_between``
+and ``auc_between`` through it), ``drift_between``, ``quantile_series``
+and ``compact`` read it with one filesystem call and skip the job that
+probes for legacy ``WSK1``/``WFI1`` or plain frequent-items blobs
+(``profiler._ds_blobs``). A write into a marked root converts such blobs
+first. An unmarked root (one written by an earlier version) keeps the
+probe, and appending to it never marks it. Spark's listing skips the
+``_``-prefixed file, and ``compact`` / ``prune`` leave it in place.
 """
 
 from __future__ import annotations
@@ -25,7 +38,8 @@ from pyspark.sql import types as T
 from ..core.configs import DEFAULT_CONFIG, MetricConfig
 from ..core.planner import fi_merge, kll_merge, kll_quantile
 from ..core.profiler import (PROFILE_SCHEMA, ProfileView, _ds_blobs,
-                             _merge_profile_df)
+                             _has_legacy, _merge_profile_df)
+from .fsio import _fs_and_path
 
 #: parquet codec of every store file: a profile's DataSketches KLL blobs
 #: hold ~1.7x the items of the engine's former sketch, and zstd brings a
@@ -40,6 +54,43 @@ _STORE_SCHEMA = T.StructType(PROFILE_SCHEMA.fields + [
     T.StructField("batch_id", T.StringType()),
     T.StructField("dataset_id", T.StringType()),
     T.StructField("date", T.DateType())])
+
+
+#: the format marker's file name (module docstring)
+MARKER = "_DATASKETCHES"
+
+
+def _marker(spark: SparkSession, path: str):
+    """``(fs, root, marker)``: the Hadoop FileSystem of ``path``, the
+    root and the marker file's path."""
+    fs, root, jvm = _fs_and_path(path, spark)
+    return fs, root, jvm.org.apache.hadoop.fs.Path(root, MARKER)
+
+
+def _blob_probe(spark: SparkSession, path: str) -> Optional[bool]:
+    """The ``legacy`` argument of a read of the root ``path``: False
+    when it is marked (nothing to convert, no probe), else None."""
+    fs, _, marker = _marker(spark, path)
+    return False if fs.exists(marker) else None
+
+
+def _root_state(spark: SparkSession, path: str) -> Optional[bool]:
+    """Whether the root ``path`` is marked: True or False, or None when
+    it is new (missing, or holding hidden files only)."""
+    fs, root, marker = _marker(spark, path)
+    if fs.exists(marker):
+        return True
+    if fs.exists(root) and any(
+            not s.getPath().getName().startswith(("_", "."))
+            for s in fs.listStatus(root)):
+        return False
+    return None
+
+
+def _mark(spark: SparkSession, path: str) -> None:
+    """Create the marker at the root ``path``."""
+    fs, _, marker = _marker(spark, path)
+    fs.create(marker, True).close()
 
 
 def _batch_key() -> F.Column:
@@ -60,9 +111,25 @@ class ProfileStore:
         dataset_id: str,
         dataset_ts: Optional[_dt.datetime] = None,
     ) -> None:
+        """Append ``view`` as one batch of ``dataset_id`` dated
+        ``dataset_ts`` (now when None). The first write into a new root
+        also creates the marker ``MARKER`` (``_DATASKETCHES``): every
+        ``b`` blob under the root is then Spark DataSketches bytes, and
+        reads skip the legacy-blob probe. So a write into a new or
+        marked root converts legacy and plain frequent-items blobs
+        first: a local view's table is checked on the driver, a lazy
+        view is probed with one job. A write into an unmarked root
+        (one written by an earlier version) appends the rows as they
+        are and leaves the root unmarked; its reads keep the probe."""
         ts = dataset_ts or _dt.datetime.now(_dt.timezone.utc)
+        spark = view.spark
+        state = _root_state(spark, self.path)
+        rows = view.df
+        if state is not False:  # keep the marker's promise
+            rows = _ds_blobs(rows, None if view._table is None
+                             else _has_legacy(view._table))
         df = (
-            view.df.withColumn("dataset_id", F.lit(dataset_id))
+            rows.withColumn("dataset_id", F.lit(dataset_id))
             .withColumn("date", F.lit(ts.date().isoformat()))
             .withColumn("dataset_ts", F.lit(ts.isoformat()))
             .withColumn("batch_id", F.lit(uuid.uuid4().hex))
@@ -72,6 +139,8 @@ class ProfileStore:
             .partitionBy("dataset_id", "date")
             .parquet(self.path)
         )
+        if state is None:
+            _mark(spark, self.path)
 
     def _read(self, spark: SparkSession) -> DataFrame:
         return spark.read.schema(_STORE_SCHEMA).parquet(self.path)
@@ -105,8 +174,9 @@ class ProfileStore:
         if not merge:
             return ProfileView(df, self.config)
         batches = df.withColumn("src", F.xxhash64(_batch_key()))
-        return ProfileView(
-            _merge_profile_df(batches, self.config), self.config)
+        return ProfileView(_merge_profile_df(
+            batches, self.config, legacy=_blob_probe(spark, self.path)),
+            self.config)
 
     def list_datasets(self, spark: SparkSession) -> list:
         return [
@@ -173,7 +243,7 @@ class ProfileStore:
             df = df.filter(F.col("segment") == "{}")
         sides = F.array_compact(F.array(
             F.when(in_ref, F.lit("ref")), F.when(in_tgt, F.lit("tgt"))))
-        tagged = _ds_blobs(df).select(
+        tagged = _ds_blobs(df, _blob_probe(spark, self.path)).select(
             F.explode(sides).alias("side"), "segment", "column",
             "component", "b")
         rows = (tagged.groupBy("side", "segment", "column", "component")
@@ -231,7 +301,8 @@ class ProfileStore:
             return 0
         batches = df.filter(F.col("date").isin(list(todo))).withColumn(
             "src", F.xxhash64(_batch_key()))
-        merged = _merge_profile_df(batches, self.config, keys=["date"])
+        merged = _merge_profile_df(batches, self.config, keys=["date"],
+                                   legacy=_blob_probe(spark, self.path))
         # materialize driver-side (profiles are KB-scale) so the write
         # never overwrites files its own plan is reading
         rows = merged.collect()
@@ -278,8 +349,6 @@ class ProfileStore:
             raise ValueError(
                 f"older_than must be a valid ISO date, "
                 f"got {older_than!r}")
-        from .fsio import _fs_and_path
-
         fs, root, _ = _fs_and_path(self.path, spark)
         if not fs.exists(root):
             return 0
@@ -665,7 +734,7 @@ class ProfileStore:
         from pyspark.sql import Window as W
         rn = F.row_number().over(
             W.partitionBy("segment").orderBy("dataset_ts"))
-        base = _ds_blobs(df).select(
+        base = _ds_blobs(df, _blob_probe(spark, self.path)).select(
             "segment", F.to_timestamp("dataset_ts").alias("dataset_ts"),
             "b").withColumn("__rn", rn)
         mx = base.groupBy("segment").agg(F.max("__rn").alias("__mx"))

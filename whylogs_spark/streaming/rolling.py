@@ -20,15 +20,21 @@ Replaces the reference's TimedRollingLogger + Scheduler thread
   monoid, the sink never updates in place — merging at read time with
   ``merge_profiles`` gives the same result as one big profile (the
   reference's merge-on-write SQLiteStore becomes merge-on-read over an
-  append-only Parquet log).
+  append-only Parquet log). ``foreachBatch`` is at-least-once: each
+  write carries its time (``write_ns``), and the read keeps one
+  micro-batch's last write only, so a replayed batch counts once. The
+  sink marks a new directory as a store marks a new root
+  (``io.store.MARKER``), and reads of it skip the legacy-blob probe.
 """
 
 from __future__ import annotations
 
+import time
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..core.configs import DEFAULT_CONFIG, MetricConfig
 from ..core.planner import plan_dataframe
@@ -36,6 +42,16 @@ from ..core.profiler import (
     PROFILE_SCHEMA, ProfileView, _long_structs, _merge_profile_df,
     _native_frame, _segment_json_col, profile,
 )
+from ..io.store import _blob_probe, _mark, _root_state
+
+#: a sink directory's schema: the profile rows, their window, the
+#: micro-batch id and the write's time (null in directories written
+#: before writes carried it). Reading with it launches no
+#: schema-inference job.
+_SINK_SCHEMA = T.StructType(PROFILE_SCHEMA.fields + [
+    T.StructField("window_start", T.StringType()),
+    T.StructField("src", T.LongType()),
+    T.StructField("write_ns", T.LongType())])
 
 
 def streaming_profile(
@@ -125,18 +141,27 @@ class RollingProfileSink:
             view.df.withColumn(
                 "window_start",
                 F.get_json_object("segment", "$.__wstart"))
-            .withColumn("src", F.lit(int(batch_id)))
+            .withColumn("src", F.lit(int(batch_id)).cast("long"))
+            .withColumn("write_ns", F.lit(time.time_ns()))
         )
+        spark = batch_df.sparkSession
+        new = _root_state(spark, self.path) is None
         out.write.mode("append").parquet(self.path)
+        if new:
+            _mark(spark, self.path)
 
     def read_profiles(self, spark: SparkSession) -> ProfileView:
-        """Merge-on-read: one profile row-set per (window, segment)."""
-        raw = spark.read.parquet(self.path)
-        # fold window_start back into the segment key for the merge, then
-        # merge rows across micro-batches (src column pairs moments)
+        """Merge-on-read: one profile row-set per (window, segment).
+        Of a micro-batch written more than once (a replay), only the
+        last write's rows count."""
+        raw = spark.read.schema(_SINK_SCHEMA).parquet(self.path).withColumn(
+            "__last", F.max("write_ns").over(Window.partitionBy("src")))
+        # window_start is already folded into the segment key; the
+        # merge pairs each micro-batch's moments by src
         merged = _merge_profile_df(
-            raw.select(*[f.name for f in PROFILE_SCHEMA.fields], "src"),
-            self.config,
+            raw.where(F.col("write_ns").eqNullSafe(F.col("__last"))).select(
+                *PROFILE_SCHEMA.names, "src"),
+            self.config, legacy=_blob_probe(spark, self.path),
         ).withColumn(
             "window_start", F.get_json_object("segment", "$.__wstart"))
         return ProfileView(merged, self.config)
